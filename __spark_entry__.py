@@ -6,6 +6,15 @@ rollup over geometry derived deterministically from the events table).
 (spark, sf_dir) -> DataFrame callable; ``oracle_sql()`` gives the DuckDB
 equivalent over the same parquet views.
 
+Both are built from one ordered table, ``_REGISTRY`` at the end of this
+file: (query name, oracle SQL builder) pairs, with ``None`` as the builder
+of validate_images_summary, the one query checked on rows only. A query
+function is looked up by its name in this module's globals each time
+``queries()`` is called and is never stored in the table, so a wrapper that
+rebinds the module attribute (perfbench's tracer) is the function that runs.
+Adding a query = defining ``name(spark, sf_dir)`` plus its SQL builder and
+appending one row to ``_REGISTRY``.
+
 Float-determinism rules used throughout (so value hashes match DuckDB):
 - money aggregates go through DECIMAL casts (exact), then cast to double;
 - every trig/geo expression uses the identical IEEE op sequence on DOUBLE
@@ -76,6 +85,58 @@ def _read(
 def _dec_sum(col, scale: str = "decimal(22,6)"):
     """Exact sum: cast each double to decimal first, sum, emit double."""
     return F.sum(col.cast(scale)).cast("double")
+
+
+def _per_user_rows(
+    spark: SparkSession, sf_dir: str, row: Callable[[int], dict], schema: str
+) -> DataFrame:
+    """One synthetic row per distinct events user, built by ``row(user_id)``
+    in a mapInPandas worker; the users are spread over every core first
+    because the per-user encode/decode work dominates these queries."""
+    users = _read(spark, sf_dir, "events").select("user_id").distinct()
+
+    def gen(batches):
+        for pdf in batches:
+            yield pd.DataFrame([row(int(uid)) for uid in pdf["user_id"]])
+
+    return users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
+        gen, schema
+    )
+
+
+def _user_id_of(col: str):
+    """``user_id`` back from a ``u<user_id>`` string id."""
+    return F.substring(col, 2, 20).cast("long").alias("user_id")
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a file stream, 4 files per micro-batch."""
+    schema = ("event_id long, ts timestamp, user_id long, event_type string, "
+              "value double, props string")
+    # the driver's events.parquet is a single file; the file stream source
+    # wants a directory, so stream the sf dir with a name glob
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 4)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+
+
+def _drain(
+    spark: SparkSession, stream: DataFrame, prefix: str, output_mode: str
+) -> DataFrame:
+    """Run ``stream`` to completion with trigger(availableNow) into a memory
+    sink named ``<prefix>_<random hex>``; return the sink's table."""
+    import tempfile
+    import uuid
+
+    from activity_files_spark.streaming.stream_ops import run_available_now
+
+    name = f"{prefix}_{uuid.uuid4().hex[:10]}"
+    q = run_available_now(stream, name, tempfile.mkdtemp(), output_mode=output_mode)
+    q.awaitTermination()
+    return spark.table(name)
 
 
 # ------------------------------------------------------------------ queries
@@ -758,6 +819,24 @@ COVER_Z = 14  # route-cover cell zoom
 COVER_Q = 8  # subcell bits: endpoints snap to 2^-8 of a cell
 
 
+def _tile_segments(ev: DataFrame, seq: bool = False) -> DataFrame:
+    """Each user's trajectory as (x0, y0) -> (x1, y1) segments on the
+    z COVER_Z + COVER_Q subcell lattice, ordered by (ts, event_id); with
+    ``seq`` each segment also carries its 0-based index in that order."""
+    px, py = tile_xy_col(F.col("lat"), F.col("lon"), COVER_Z + COVER_Q)
+    pts = ev.select("user_id", "event_id", "ts", px.alias("x1"), py.alias("y1"))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq_col = [(F.row_number().over(w) - 1).alias("seq")] if seq else []
+    return pts.select(
+        "user_id",
+        *seq_col,
+        F.lag("x1").over(w).alias("x0"),
+        F.lag("y1").over(w).alias("y0"),
+        "x1",
+        "y1",
+    ).where(F.col("x0").isNotNull())
+
+
 def route_cell_cover_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polyline tiling (operators/supercover.py): every z14 tile each
     user's trajectory SEGMENTS pass through — the line twin of point tile
@@ -767,22 +846,12 @@ def route_cell_cover_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after is exact integer crossing enumeration. One lag
     window, one explode (output = the cover itself), map-side-combined
     rollup; no joins."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.supercover import segment_cell_cover
 
     ev = _read(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", _lat_col().alias("lat"), _lon_col().alias("lon")
     )
-    px, py = tile_xy_col(F.col("lat"), F.col("lon"), COVER_Z + COVER_Q)
-    pts = ev.select("user_id", "event_id", "ts", px.alias("x1"), py.alias("y1"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    segs = pts.select(
-        "user_id",
-        F.lag("x1").over(w).alias("x0"),
-        F.lag("y1").over(w).alias("y0"),
-        "x1",
-        "y1",
-    ).where(F.col("x0").isNotNull())
+    segs = _tile_segments(ev)
     cover = segment_cell_cover(segs, q=COVER_Q, key="user_id")
     packed = F.col("cx") * F.lit(1 << COVER_Z) + F.col("cy")
     return (
@@ -840,7 +909,6 @@ def route_crossings_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with bare ids through the distinct exchange, and the refine is the
     strict double-straddle orientation predicate in exact BIGINT — the
     oracle replays the predicate verbatim over brute pairs."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.crossings import segment_crossings
 
     ev = (
@@ -854,17 +922,7 @@ def route_crossings_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             _lon_col().alias("lon"),
         )
     )
-    px, py = tile_xy_col(F.col("lat"), F.col("lon"), COVER_Z + COVER_Q)
-    pts = ev.select("user_id", "event_id", "ts", px.alias("x1"), py.alias("y1"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    segs = pts.select(
-        "user_id",
-        (F.row_number().over(w) - 1).alias("seq"),
-        F.lag("x1").over(w).alias("x0"),
-        F.lag("y1").over(w).alias("y0"),
-        "x1",
-        "y1",
-    ).where(F.col("x0").isNotNull())
+    segs = _tile_segments(ev, seq=True)
     pairs = segment_crossings(segs, q=COVER_Q, key="user_id", seq="seq")
     return (
         pairs.groupBy(
@@ -991,7 +1049,6 @@ def crossing_points_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     route_crossings user decile (XPT_USER_MOD): per-crossing geometry
     output is ~20x the per-pair rollup's, and the gate needs thousands
     of exact points, not millions."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.crossings import segment_crossings
 
     ev = (
@@ -1002,17 +1059,7 @@ def crossing_points_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             _lat_col().alias("lat"), _lon_col().alias("lon"),
         )
     )
-    px, py = tile_xy_col(F.col("lat"), F.col("lon"), COVER_Z + COVER_Q)
-    pts = ev.select("user_id", "event_id", "ts", px.alias("x1"), py.alias("y1"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    segs = pts.select(
-        "user_id",
-        (F.row_number().over(w) - 1).alias("seq"),
-        F.lag("x1").over(w).alias("x0"),
-        F.lag("y1").over(w).alias("y0"),
-        "x1",
-        "y1",
-    ).where(F.col("x0").isNotNull())
+    segs = _tile_segments(ev, seq=True)
     out = segment_crossings(
         segs, q=COVER_Q, key="user_id", seq="seq", with_points=True
     )
@@ -1232,23 +1279,12 @@ def route_simplicity_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     cover-join + in-stage BIGINT refine as route_crossings_pairs, paired
     within the route; the oracle replays the predicate over brute
     same-route pairs."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.crossings import self_intersections
 
     ev = _read(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", _lat_col().alias("lat"), _lon_col().alias("lon")
     )
-    px, py = tile_xy_col(F.col("lat"), F.col("lon"), COVER_Z + COVER_Q)
-    pts = ev.select("user_id", "event_id", "ts", px.alias("x1"), py.alias("y1"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    segs = pts.select(
-        "user_id",
-        (F.row_number().over(w) - 1).alias("seq"),
-        F.lag("x1").over(w).alias("x0"),
-        F.lag("y1").over(w).alias("y0"),
-        "x1",
-        "y1",
-    ).where(F.col("x0").isNotNull())
+    segs = _tile_segments(ev, seq=True)
     hits = (
         self_intersections(segs, q=COVER_Q, key="user_id", seq="seq")
         .groupBy(F.col("key").alias("user_id"))
@@ -2170,23 +2206,10 @@ def stream_cell_cover_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     across micro-batches, so the chunked stream covers exactly the cells
     the batch polyline does — the gate replays the BATCH oracle verbatim,
     proving chunk-boundary state handling, not just the enumeration."""
-    import tempfile
-    import uuid
-
     from activity_files_spark.functions.quadkey import tile_xy_col
-    from activity_files_spark.streaming.stream_ops import (
-        run_available_now,
-        stream_cell_cover,
-    )
+    from activity_files_spark.streaming.stream_ops import stream_cell_cover
 
-    schema = ("event_id long, ts timestamp, user_id long, event_type string, "
-              "value double, props string")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = _events_stream(spark, sf_dir)
     px, py = tile_xy_col(_lat_col(), _lon_col(), COVER_Z + COVER_Q)
     pts = src.select(
         "user_id", "event_id", "ts", px.alias("x"), py.alias("y")
@@ -2194,12 +2217,9 @@ def stream_cell_cover_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     cover = stream_cell_cover(
         pts, q=COVER_Q, key="user_id", ts="ts", tiebreak=["event_id"]
     )
-    name = f"stream_cover_{uuid.uuid4().hex[:10]}"
-    qy = run_available_now(cover, name, tempfile.mkdtemp(), output_mode="append")
-    qy.awaitTermination()
     packed = F.col("cx") * F.lit(1 << COVER_Z) + F.col("cy")
     return (
-        spark.table(name)
+        _drain(spark, cover, "stream_cover", "append")
         .dropDuplicates(["user_id", "cx", "cy"])
         .select("user_id", packed.alias("cell"))
         .groupBy("user_id")
@@ -2329,30 +2349,16 @@ def stream_map_match_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the batch theta-join replay aggregated per segment;
     a hash match proves the streaming plan computes exactly the batch
     answer."""
-    import tempfile
-    import uuid
-
     from activity_files_spark.operators.spatial import snap_to_segments
-    from activity_files_spark.streaming.stream_ops import run_available_now
 
-    schema = ("event_id long, ts timestamp, user_id long, event_type string, "
-              "value double, props string")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = _events_stream(spark, sf_dir)
     pts = src.select("event_id", _lat_col().alias("lat"), _lon_col().alias("lon"))
     hit = snap_to_segments(
         pts, MM_ROUTES, MM_TOL_M, MM_REF_LAT,
         expr_max_segments=16,
     ).select("event_id", "route_id", "seg_idx", "dist_m")
-    name = f"stream_mm_{uuid.uuid4().hex[:10]}"
-    q = run_available_now(hit, name, tempfile.mkdtemp(), output_mode="append")
-    q.awaitTermination()
     return (
-        spark.table(name)
+        _drain(spark, hit, "stream_mm", "append")
         .groupBy("route_id", "seg_idx")
         .agg(
             F.count("*").alias("n_points"),
@@ -2526,6 +2532,57 @@ def _route_near_dups_sql() -> str:
 FRECHET_M = 8  # samples per route for the Fréchet DP (work per pair = m²)
 
 
+def _route_refine(
+    spark: SparkSession, sf_dir: str, refine: Callable, metric: str
+) -> DataFrame:
+    """The route near-dup candidate miner (z17 tile-signature Jaccard, each
+    route's single most similar other route) refined by ``refine`` over
+    FRECHET_M index-resampled points per route; ``metric`` names the
+    refined distance column."""
+    from activity_files_spark.operators.trajectory import (
+        index_resample,
+        route_cells,
+        route_pair_jaccard,
+        top_similar_routes,
+    )
+
+    ev = _read(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id",
+        _lat_col().alias("lat"), _lon_col().alias("lon"),
+    )
+    cells = route_cells(ev, RT_Z, key="user_id").localCheckpoint(eager=True)
+    pairs = route_pair_jaccard(cells, key="user_id")
+    top = top_similar_routes(pairs, k=1).drop("rank")
+    samples = index_resample(
+        ev, FRECHET_M, key="user_id", order_cols=("ts", "event_id")
+    )
+    ref = refine(top, samples, key="user_id")
+    return ref.select(
+        F.col("key").alias("user_id"),
+        F.col("other").alias("similar_user_id"),
+        "n_shared",
+        F.round("jaccard", 6).alias("jaccard"),
+        F.round(metric, 3).alias(metric),
+    )
+
+
+def _route_refine_sql(refine_sql: Callable, metric: str, final: str) -> str:
+    body = refine_sql(
+        "pts", RT_Z, FRECHET_M, key="user_id", order_cols=("ts", "event_id")
+    )
+    return f"""
+    WITH pts AS (
+      SELECT user_id, ts, event_id,
+             {LAT_EXPR_SQL} AS lat, {LON_EXPR_SQL} AS lon
+      FROM events
+    ),
+    {body}
+    SELECT key AS user_id, other AS similar_user_id, n_shared,
+           ROUND(jaccard, 6) AS jaccard, ROUND({metric}, 3) AS {metric}
+    FROM {final}
+    """
+
+
 def frechet_route_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discrete Fréchet refinement of the route near-dup candidates
     (operators/trajectory.py): the same z17 tile-signature miner as
@@ -2539,51 +2596,15 @@ def frechet_route_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself unrolled along anti-diagonals (dp[i][j] depends on diagonals
     k-1/k-2 only -> one generated CTE per diagonal, 2m-1 stages). A hash
     match proves a nontrivial dynamic program end-to-end across engines."""
-    from activity_files_spark.operators.trajectory import (
-        frechet_refine,
-        index_resample,
-        route_cells,
-        route_pair_jaccard,
-        top_similar_routes,
-    )
+    from activity_files_spark.operators.trajectory import frechet_refine
 
-    ev = _read(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        _lat_col().alias("lat"), _lon_col().alias("lon"),
-    )
-    cells = route_cells(ev, RT_Z, key="user_id").localCheckpoint(eager=True)
-    pairs = route_pair_jaccard(cells, key="user_id")
-    top = top_similar_routes(pairs, k=1).drop("rank")
-    samples = index_resample(
-        ev, FRECHET_M, key="user_id", order_cols=("ts", "event_id")
-    )
-    ref = frechet_refine(top, samples, key="user_id")
-    return ref.select(
-        F.col("key").alias("user_id"),
-        F.col("other").alias("similar_user_id"),
-        "n_shared",
-        F.round("jaccard", 6).alias("jaccard"),
-        F.round("frechet_m", 3).alias("frechet_m"),
-    )
+    return _route_refine(spark, sf_dir, frechet_refine, "frechet_m")
 
 
 def _frechet_route_sql() -> str:
     from activity_files_spark.operators.trajectory import frechet_sql
 
-    body = frechet_sql(
-        "pts", RT_Z, FRECHET_M, key="user_id", order_cols=("ts", "event_id")
-    )
-    return f"""
-    WITH pts AS (
-      SELECT user_id, ts, event_id,
-             {LAT_EXPR_SQL} AS lat, {LON_EXPR_SQL} AS lon
-      FROM events
-    ),
-    {body}
-    SELECT key AS user_id, other AS similar_user_id, n_shared,
-           ROUND(jaccard, 6) AS jaccard, ROUND(frechet_m, 3) AS frechet_m
-    FROM fr_final
-    """
+    return _route_refine_sql(frechet_sql, "frechet_m", "fr_final")
 
 
 def dtw_route_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2595,51 +2616,15 @@ def dtw_route_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one detour' from 'parallel road 50 m over'. Each DP cell does one
     addition on scalar-libm haversine values, so the DuckDB oracle's
     anti-diagonal replay is bit-identical; round-to-3 on output only."""
-    from activity_files_spark.operators.trajectory import (
-        dtw_refine,
-        index_resample,
-        route_cells,
-        route_pair_jaccard,
-        top_similar_routes,
-    )
+    from activity_files_spark.operators.trajectory import dtw_refine
 
-    ev = _read(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        _lat_col().alias("lat"), _lon_col().alias("lon"),
-    )
-    cells = route_cells(ev, RT_Z, key="user_id").localCheckpoint(eager=True)
-    pairs = route_pair_jaccard(cells, key="user_id")
-    top = top_similar_routes(pairs, k=1).drop("rank")
-    samples = index_resample(
-        ev, FRECHET_M, key="user_id", order_cols=("ts", "event_id")
-    )
-    ref = dtw_refine(top, samples, key="user_id")
-    return ref.select(
-        F.col("key").alias("user_id"),
-        F.col("other").alias("similar_user_id"),
-        "n_shared",
-        F.round("jaccard", 6).alias("jaccard"),
-        F.round("dtw_m", 3).alias("dtw_m"),
-    )
+    return _route_refine(spark, sf_dir, dtw_refine, "dtw_m")
 
 
 def _dtw_route_sql() -> str:
     from activity_files_spark.operators.trajectory import dtw_sql
 
-    body = dtw_sql(
-        "pts", RT_Z, FRECHET_M, key="user_id", order_cols=("ts", "event_id")
-    )
-    return f"""
-    WITH pts AS (
-      SELECT user_id, ts, event_id,
-             {LAT_EXPR_SQL} AS lat, {LON_EXPR_SQL} AS lon
-      FROM events
-    ),
-    {body}
-    SELECT key AS user_id, other AS similar_user_id, n_shared,
-           ROUND(jaccard, 6) AS jaccard, ROUND(dtw_m, 3) AS dtw_m
-    FROM dt_final
-    """
+    return _route_refine_sql(dtw_sql, "dtw_m", "dt_final")
 
 
 def resample_track(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4065,6 +4050,27 @@ def _rec_select(kind: str, **over):
     ]
 
 
+def _activity_events(spark: SparkSession, sf_dir: str, *cols) -> DataFrame:
+    """The events as one activity per user (``activity_id`` = ``u<user_id>``)
+    with the derived lat/lon, the input of the codec round-trip queries."""
+    return _read(spark, sf_dir, "events").select(
+        F.concat(F.lit("u"), F.col("user_id")).alias("activity_id"),
+        *cols, "event_id", "ts",
+        _lat_col().alias("lat"), _lon_col().alias("lon"),
+    )
+
+
+def _metric_aggs():
+    """Per-activity point count plus the count and sum of the round-tripped
+    ``custom_metric`` channel values."""
+    is_metric = (F.col("kind") == "channel") & (F.col("channel") == "custom_metric")
+    return [
+        F.count(F.when(F.col("kind") == "point", 1)).alias("n_points"),
+        F.count(F.when(is_metric, 1)).alias("n_channels"),
+        F.sum(F.when(is_metric, F.col("value"))).alias("sum_metric"),
+    ]
+
+
 def _roundtrip_metric():
     """Exact 1/16-multiple channel value derived from the floored epoch —
     survives both FIT float64 dev fields and GPX %g text bit-exactly."""
@@ -4092,11 +4098,7 @@ def fit_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from activity_files_spark.sources.fit import fit_encode_records, fit_records
 
-    ev = _read(spark, sf_dir, "events").select(
-        F.concat(F.lit("u"), F.col("user_id")).alias("activity_id"),
-        "event_id", "ts",
-        _lat_col().alias("lat"), _lon_col().alias("lon"),
-    )
+    ev = _activity_events(spark, sf_dir)
     rec = _rec_select
     metric = _roundtrip_metric()
     points = ev.select(*rec(
@@ -4132,12 +4134,7 @@ def fit_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     recs = points.unionByName(chans).unionByName(lengths).unionByName(sets)
     back = fit_records(fit_encode_records(recs))
     agg = back.groupBy("activity_id").agg(
-        F.count(F.when(F.col("kind") == "point", 1)).alias("n_points"),
-        F.count(F.when((F.col("kind") == "channel")
-                       & (F.col("channel") == "custom_metric"), 1)).alias("n_channels"),
-        F.sum(F.when((F.col("kind") == "channel")
-                     & (F.col("channel") == "custom_metric"),
-                     F.col("value"))).alias("sum_metric"),
+        *_metric_aggs(),
         F.count(F.when(F.col("kind") == "length", 1)).alias("n_lengths"),
         F.sum(F.when(F.col("kind") == "length",
                      F.col("attrs")["total_strokes"].cast("long")))
@@ -4150,7 +4147,7 @@ def fit_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("attrs")["weight_kg"].cast("double"))).alias("sum_weight"),
     )
     return agg.select(
-        F.substring("activity_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("activity_id"),
         "n_points", "n_channels", "sum_metric", "n_lengths", "sum_strokes",
         "n_sets", "sum_reps", "sum_weight",
     )
@@ -4184,30 +4181,12 @@ def stream_sessionize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     window OVERLAP, so an exactly-30-min gap closes the session — note the
     boundary differs from the batch sessionize_users query's > rule), and
     session_end is last event + gap."""
-    import tempfile
-    import uuid
+    from activity_files_spark.streaming.stream_ops import stream_sessionize
 
-    from activity_files_spark.streaming.stream_ops import (
-        run_available_now,
-        stream_sessionize,
-    )
-
-    schema = ("event_id long, ts timestamp, user_id long, event_type string, "
-              "value double, props string")
-    # the driver's events.parquet is a single file; the file stream source
-    # wants a directory, so stream the sf dir with a name glob
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = _events_stream(spark, sf_dir)
     agg = stream_sessionize(src, gap="30 minutes", watermark="1 hour",
                             exact_sum=True)
-    name = f"stream_sessions_{uuid.uuid4().hex[:10]}"
-    q = run_available_now(agg, name, tempfile.mkdtemp(), output_mode="complete")
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(spark, agg, "stream_sessions", "complete").select(
         "user_id", "session_start", "session_end", "n_events", "sum_value"
     )
 
@@ -4244,30 +4223,16 @@ def stream_tile_rollup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the epoch-aligned hour bucket (date_trunc) and the integer
     tile math through the quadkey SQL twin, so a hash match proves the
     windowed incremental aggregation matches the batch formula exactly."""
-    import tempfile
-    import uuid
+    from activity_files_spark.streaming.stream_ops import stream_cell_histogram
 
-    from activity_files_spark.streaming.stream_ops import (
-        run_available_now,
-        stream_cell_histogram,
-    )
-
-    schema = ("event_id long, ts timestamp, user_id long, event_type string, "
-              "value double, props string")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = _events_stream(spark, sf_dir)
     pts = src.select(
         "event_id", "ts", _lat_col().alias("lat"), _lon_col().alias("lon")
     )
     roll = stream_cell_histogram(pts, z=12, watermark="1 hour")
-    name = f"stream_tiles_{uuid.uuid4().hex[:10]}"
-    q = run_available_now(roll, name, tempfile.mkdtemp(), output_mode="complete")
-    q.awaitTermination()
-    return spark.table(name).select("window_start", "cell_id", "n_points")
+    return _drain(spark, roll, "stream_tiles", "complete").select(
+        "window_start", "cell_id", "n_points"
+    )
 
 
 def _stream_tile_rollup_sql() -> str:
@@ -4503,11 +4468,7 @@ def gpx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from activity_files_spark.sources.gpx import gpx_encode_records, gpx_records
 
-    ev = _read(spark, sf_dir, "events").select(
-        F.concat(F.lit("u"), F.col("user_id")).alias("activity_id"),
-        "event_id", "ts",
-        _lat_col().alias("lat"), _lon_col().alias("lon"),
-    )
+    ev = _activity_events(spark, sf_dir)
     rec = _rec_select
     metric = _roundtrip_metric()
     points = ev.select(*rec(
@@ -4536,18 +4497,13 @@ def gpx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     xml = gpx_encode_records(recs)
     back = gpx_records(xml)
     agg = back.groupBy("activity_id").agg(
-        F.count(F.when(F.col("kind") == "point", 1)).alias("n_points"),
-        F.count(F.when((F.col("kind") == "channel")
-                       & (F.col("channel") == "custom_metric"), 1)).alias("n_channels"),
-        F.sum(F.when((F.col("kind") == "channel")
-                     & (F.col("channel") == "custom_metric"),
-                     F.col("value"))).alias("sum_metric"),
+        *_metric_aggs(),
         F.count(F.when(F.col("kind") == "waypoint", 1)).alias("n_waypoints"),
         F.count(F.when(F.col("kind") == "route_point", 1)).alias("n_route_points"),
         F.count(F.when(F.col("kind") == "route", 1)).alias("n_routes"),
     )
     return agg.select(
-        F.substring("activity_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("activity_id"),
         "n_points", "n_channels", "sum_metric", "n_waypoints",
         "n_route_points", "n_routes",
     )
@@ -4678,7 +4634,7 @@ def point_edit_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("sum_lon_udeg"),
         F.sum("seq").cast("long").alias("sum_seq"),
     ).select(
-        F.substring("activity_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("activity_id"),
         "n_points", "sum_ts_us", "sum_lat_udeg", "sum_lon_udeg", "sum_seq",
     )
 
@@ -4767,7 +4723,7 @@ def downsample_distance_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_kept"),
         F.sum("event_id").cast("long").alias("sum_event_id"),
     ).select(
-        F.substring("activity_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("activity_id"),
         "n_kept", "sum_event_id",
     )
 
@@ -4821,7 +4777,6 @@ def audio_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact division + IEEE sqrt in both engines — a hash match proves the
     binary codec and the feature kernel end-to-end."""
     import numpy as np
-    import pandas as pd
 
     from activity_files_spark.operators.multimodal import (
         AUDIO_SCHEMA,
@@ -4829,31 +4784,20 @@ def audio_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav,
     )
 
-    users = _read(spark, sf_dir, "events").select("user_id").distinct()
+    t = np.arange(2000, dtype=np.int64)
 
-    def gen(batches):
-        t = np.arange(2000, dtype=np.int64)
-        for pdf in batches:
-            rows = []
-            for uid in pdf["user_id"]:
-                freq = 100 + int(uid) * 7
-                x = ((t * freq) % 16384 - 8192).astype("<i2")
-                rows.append({
-                    "clip_id": f"u{int(uid)}",
-                    "bytes": encode_wav(x[:, None], 8000),
-                    "sample_rate": 8000, "n_samples": 2000, "channels": 1,
-                    "fmt": "wav",
-                })
-            yield pd.DataFrame(rows)
+    def clip(uid):
+        freq = 100 + uid * 7
+        x = ((t * freq) % 16384 - 8192).astype("<i2")
+        return {
+            "clip_id": f"u{uid}",
+            "bytes": encode_wav(x[:, None], 8000),
+            "sample_rate": 8000, "n_samples": 2000, "channels": 1,
+            "fmt": "wav",
+        }
 
-    clips = users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, AUDIO_SCHEMA
-    )
-    feats = audio_features(clips)
-    return feats.select(
-        F.substring("clip_id", 2, 20).cast("long").alias("user_id"),
-        "rms", "peak", "zcr",
-    )
+    feats = audio_features(_per_user_rows(spark, sf_dir, clip, AUDIO_SCHEMA))
+    return feats.select(_user_id_of("clip_id"), "rms", "peak", "zcr")
 
 
 def audio_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4868,7 +4812,6 @@ def audio_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesis lets the oracle replay every sample exactly: a hash match
     proves the full bitstream codec round-trips bit-for-bit."""
     import numpy as np
-    import pandas as pd
 
     from activity_files_spark.codecs.flac import encode_flac
     from activity_files_spark.operators.multimodal import (
@@ -4876,33 +4819,22 @@ def audio_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_features,
     )
 
-    users = _read(spark, sf_dir, "events").select("user_id").distinct()
+    t = np.arange(2000, dtype=np.int64)
+    wob = ((t % 7) - 3) * 100
 
-    def gen(batches):
-        t = np.arange(2000, dtype=np.int64)
-        wob = ((t % 7) - 3) * 100
-        for pdf in batches:
-            rows = []
-            for uid in pdf["user_id"]:
-                freq = 100 + int(uid) * 7
-                left = (t * freq) % 16384 - 8192
-                x = np.stack([left, left - wob], axis=1).astype(np.int16)
-                rows.append({
-                    "clip_id": f"u{int(uid)}",
-                    "bytes": encode_flac(x, 8000),
-                    "sample_rate": 8000, "n_samples": 2000, "channels": 2,
-                    "fmt": "flac",
-                })
-            yield pd.DataFrame(rows)
+    def clip(uid):
+        freq = 100 + uid * 7
+        left = (t * freq) % 16384 - 8192
+        x = np.stack([left, left - wob], axis=1).astype(np.int16)
+        return {
+            "clip_id": f"u{uid}",
+            "bytes": encode_flac(x, 8000),
+            "sample_rate": 8000, "n_samples": 2000, "channels": 2,
+            "fmt": "flac",
+        }
 
-    clips = users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, AUDIO_SCHEMA
-    )
-    feats = audio_features(clips)
-    return feats.select(
-        F.substring("clip_id", 2, 20).cast("long").alias("user_id"),
-        "rms", "peak", "zcr",
-    )
+    feats = audio_features(_per_user_rows(spark, sf_dir, clip, AUDIO_SCHEMA))
+    return feats.select(_user_id_of("clip_id"), "rms", "peak", "zcr")
 
 
 def _audio_flac_sql() -> str:
@@ -4959,7 +4891,6 @@ def audio_ogg_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match proves Ogg framing (CRC-32, lacing, continuation) AND the
     FLAC bitstream round-trip bit-for-bit."""
     import numpy as np
-    import pandas as pd
 
     from activity_files_spark.codecs.ogg import encode_ogg_flac
     from activity_files_spark.operators.multimodal import (
@@ -4967,33 +4898,22 @@ def audio_ogg_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_features,
     )
 
-    users = _read(spark, sf_dir, "events").select("user_id").distinct()
+    t = np.arange(2000, dtype=np.int64)
+    wob = ((t % 5) - 2) * 64
 
-    def gen(batches):
-        t = np.arange(2000, dtype=np.int64)
-        wob = ((t % 5) - 2) * 64
-        for pdf in batches:
-            rows = []
-            for uid in pdf["user_id"]:
-                freq = 137 + int(uid) * 11
-                left = np.abs((t * freq) % 8192 - 4096) - 2048
-                x = np.stack([left, wob - left], axis=1).astype(np.int16)
-                rows.append({
-                    "clip_id": f"u{int(uid)}",
-                    "bytes": encode_ogg_flac(x, 8000, block_size=500),
-                    "sample_rate": 8000, "n_samples": 2000, "channels": 2,
-                    "fmt": "ogg",
-                })
-            yield pd.DataFrame(rows)
+    def clip(uid):
+        freq = 137 + uid * 11
+        left = np.abs((t * freq) % 8192 - 4096) - 2048
+        x = np.stack([left, wob - left], axis=1).astype(np.int16)
+        return {
+            "clip_id": f"u{uid}",
+            "bytes": encode_ogg_flac(x, 8000, block_size=500),
+            "sample_rate": 8000, "n_samples": 2000, "channels": 2,
+            "fmt": "ogg",
+        }
 
-    clips = users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, AUDIO_SCHEMA
-    )
-    feats = audio_features(clips)
-    return feats.select(
-        F.substring("clip_id", 2, 20).cast("long").alias("user_id"),
-        "rms", "peak", "zcr",
-    )
+    feats = audio_features(_per_user_rows(spark, sf_dir, clip, AUDIO_SCHEMA))
+    return feats.select(_user_id_of("clip_id"), "rms", "peak", "zcr")
 
 
 def _audio_ogg_flac_sql() -> str:
@@ -5079,7 +4999,6 @@ def video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     math and sampling stride bit-for-bit. (Real video CODECS remain honest
     stubs; this gates the Spark-side plumbing the north star needs.)"""
     import numpy as np
-    import pandas as pd
 
     from activity_files_spark.operators.multimodal import (
         VIDEO_SCHEMA,
@@ -5087,36 +5006,27 @@ def video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_frames,
     )
 
-    users = _read(spark, sf_dir, "events").select("user_id").distinct()
     w, h, n_frames = 8, 6, 8
+    y, x = np.mgrid[0:h, 0:w]
 
-    def gen(batches):
-        y, x = np.mgrid[0:h, 0:w]
-        for pdf in batches:
-            rows = []
-            for uid in pdf["user_id"]:
-                i = int(uid)
-                frames = [
-                    np.stack(
-                        [(x + f + i) % 256, (y * 3 + f) % 256, (x * y + i) % 256],
-                        axis=-1,
-                    ).astype(np.uint8).tobytes()
-                    for f in range(n_frames)
-                ]
-                rows.append({
-                    "clip_id": f"u{i}", "bytes": b"".join(frames),
-                    "w": w, "h": h, "fps": 10.0, "n_frames": n_frames,
-                    "fmt": "rawrgb",
-                })
-            yield pd.DataFrame(rows)
+    def clip(i):
+        frames = [
+            np.stack(
+                [(x + f + i) % 256, (y * 3 + f) % 256, (x * y + i) % 256],
+                axis=-1,
+            ).astype(np.uint8).tobytes()
+            for f in range(n_frames)
+        ]
+        return {
+            "clip_id": f"u{i}", "bytes": b"".join(frames),
+            "w": w, "h": h, "fps": 10.0, "n_frames": n_frames,
+            "fmt": "rawrgb",
+        }
 
-    clips = users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, VIDEO_SCHEMA
-    )
+    clips = _per_user_rows(spark, sf_dir, clip, VIDEO_SCHEMA)
     stats = frame_stats(sample_frames(clips, every=2))
     return stats.select(
-        F.substring("clip_id", 2, 20).cast("long").alias("user_id"),
-        "frame_idx", "sum_r", "sum_g", "sum_b",
+        _user_id_of("clip_id"), "frame_idx", "sum_r", "sum_g", "sum_b"
     )
 
 
@@ -5151,7 +5061,6 @@ def video_y4m_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame stride, AND the chroma upsample (u(x,y) = u_sub(x//2, y//2))
     bit-for-bit — a hash match proves the real container round-trips."""
     import numpy as np
-    import pandas as pd
 
     from activity_files_spark.operators.multimodal import (
         VIDEO_SCHEMA,
@@ -5160,39 +5069,31 @@ def video_y4m_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_frames,
     )
 
-    users = _read(spark, sf_dir, "events").select("user_id").distinct()
     w, h, n_frames = 8, 6, 6
+    yy, xx = np.mgrid[0:h, 0:w]
+    ys, xs = np.mgrid[0 : h // 2, 0 : w // 2]
 
-    def gen(batches):
-        yy, xx = np.mgrid[0:h, 0:w]
-        ys, xs = np.mgrid[0 : h // 2, 0 : w // 2]
-        for pdf in batches:
-            rows = []
-            for uid in pdf["user_id"]:
-                i = int(uid)
-                y = np.stack(
-                    [(xx + 2 * f + i) % 256 for f in range(n_frames)]
-                ).astype(np.uint8)
-                u = np.stack(
-                    [(xs * 3 + f + i) % 256 for f in range(n_frames)]
-                ).astype(np.uint8)
-                v = np.stack(
-                    [(xs * ys + 2 * i + f) % 256 for f in range(n_frames)]
-                ).astype(np.uint8)
-                rows.append({
-                    "clip_id": f"u{i}",
-                    "bytes": encode_y4m((y, u, v), fps=(10, 1), colorspace="C420jpeg"),
-                    "w": w, "h": h, "fps": 10.0, "n_frames": n_frames,
-                    "fmt": "y4m",
-                })
-            yield pd.DataFrame(rows)
+    def clip(i):
+        y = np.stack(
+            [(xx + 2 * f + i) % 256 for f in range(n_frames)]
+        ).astype(np.uint8)
+        u = np.stack(
+            [(xs * 3 + f + i) % 256 for f in range(n_frames)]
+        ).astype(np.uint8)
+        v = np.stack(
+            [(xs * ys + 2 * i + f) % 256 for f in range(n_frames)]
+        ).astype(np.uint8)
+        return {
+            "clip_id": f"u{i}",
+            "bytes": encode_y4m((y, u, v), fps=(10, 1), colorspace="C420jpeg"),
+            "w": w, "h": h, "fps": 10.0, "n_frames": n_frames,
+            "fmt": "y4m",
+        }
 
-    clips = users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, VIDEO_SCHEMA
-    )
+    clips = _per_user_rows(spark, sf_dir, clip, VIDEO_SCHEMA)
     stats = frame_stats(sample_frames(clips, every=2))
     return stats.select(
-        F.substring("clip_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("clip_id"),
         "frame_idx",
         F.col("sum_r").alias("sum_y"),
         F.col("sum_g").alias("sum_u"),
@@ -5232,7 +5133,6 @@ def video_mp4_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled frame's sums exactly — a hash match proves the box walk and
     the sample-index -> byte-range demux math bit-for-bit."""
     import numpy as np
-    import pandas as pd
 
     from activity_files_spark.codecs.mp4 import encode_mp4_raw
     from activity_files_spark.operators.multimodal import (
@@ -5241,38 +5141,29 @@ def video_mp4_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_frames,
     )
 
-    users = _read(spark, sf_dir, "events").select("user_id").distinct()
     w, h, n_frames = 8, 6, 7
+    yy, xx = np.mgrid[0:h, 0:w]
 
-    def gen(batches):
-        yy, xx = np.mgrid[0:h, 0:w]
-        for pdf in batches:
-            rows = []
-            for uid in pdf["user_id"]:
-                i = int(uid)
-                frames = np.stack([
-                    np.stack(
-                        [(2 * xx + 3 * f + i) % 256, (yy + 5 * f) % 256,
-                         (xx * yy + f + 2 * i) % 256],
-                        axis=-1,
-                    )
-                    for f in range(n_frames)
-                ]).astype(np.uint8)
-                rows.append({
-                    "clip_id": f"u{i}",
-                    "bytes": encode_mp4_raw(frames, fps=(10, 1)),
-                    "w": w, "h": h, "fps": 10.0, "n_frames": n_frames,
-                    "fmt": "mp4",
-                })
-            yield pd.DataFrame(rows)
+    def clip(i):
+        frames = np.stack([
+            np.stack(
+                [(2 * xx + 3 * f + i) % 256, (yy + 5 * f) % 256,
+                 (xx * yy + f + 2 * i) % 256],
+                axis=-1,
+            )
+            for f in range(n_frames)
+        ]).astype(np.uint8)
+        return {
+            "clip_id": f"u{i}",
+            "bytes": encode_mp4_raw(frames, fps=(10, 1)),
+            "w": w, "h": h, "fps": 10.0, "n_frames": n_frames,
+            "fmt": "mp4",
+        }
 
-    clips = users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, VIDEO_SCHEMA
-    )
+    clips = _per_user_rows(spark, sf_dir, clip, VIDEO_SCHEMA)
     stats = frame_stats(sample_frames(clips, every=2))
     return stats.select(
-        F.substring("clip_id", 2, 20).cast("long").alias("user_id"),
-        "frame_idx", "sum_r", "sum_g", "sum_b",
+        _user_id_of("clip_id"), "frame_idx", "sum_r", "sum_g", "sum_b"
     )
 
 
@@ -5309,7 +5200,6 @@ def video_mkv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit — a hash match proves the EBML walk, the lacing split, and
     the timestamp ordering round-trip for real."""
     import numpy as np
-    import pandas as pd
 
     from activity_files_spark.codecs.mkv import encode_mkv
     from activity_files_spark.operators.multimodal import (
@@ -5318,42 +5208,33 @@ def video_mkv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_frames,
     )
 
-    users = _read(spark, sf_dir, "events").select("user_id").distinct()
     w, h, n_frames = 8, 6, 6
+    yy, xx = np.mgrid[0:h, 0:w]
+    ys, xs = np.mgrid[0 : h // 2, 0 : w // 2]
 
-    def gen(batches):
-        yy, xx = np.mgrid[0:h, 0:w]
-        ys, xs = np.mgrid[0 : h // 2, 0 : w // 2]
-        for pdf in batches:
-            rows = []
-            for uid in pdf["user_id"]:
-                i = int(uid)
-                y = np.stack(
-                    [(3 * xx + yy + f + 2 * i) % 256 for f in range(n_frames)]
-                ).astype(np.uint8)
-                u = np.stack(
-                    [(xs + 2 * ys + 3 * f + i) % 256 for f in range(n_frames)]
-                ).astype(np.uint8)
-                v = np.stack(
-                    [(2 * xs + ys * f + i) % 256 for f in range(n_frames)]
-                ).astype(np.uint8)
-                rows.append({
-                    "clip_id": f"u{i}",
-                    "bytes": encode_mkv(
-                        (y, u, v), fps=(10, 1), frames_per_cluster=3,
-                        lacing="xiph",
-                    ),
-                    "w": w, "h": h, "fps": 10.0, "n_frames": n_frames,
-                    "fmt": "mkv",
-                })
-            yield pd.DataFrame(rows)
+    def clip(i):
+        y = np.stack(
+            [(3 * xx + yy + f + 2 * i) % 256 for f in range(n_frames)]
+        ).astype(np.uint8)
+        u = np.stack(
+            [(xs + 2 * ys + 3 * f + i) % 256 for f in range(n_frames)]
+        ).astype(np.uint8)
+        v = np.stack(
+            [(2 * xs + ys * f + i) % 256 for f in range(n_frames)]
+        ).astype(np.uint8)
+        return {
+            "clip_id": f"u{i}",
+            "bytes": encode_mkv(
+                (y, u, v), fps=(10, 1), frames_per_cluster=3, lacing="xiph",
+            ),
+            "w": w, "h": h, "fps": 10.0, "n_frames": n_frames,
+            "fmt": "mkv",
+        }
 
-    clips = users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, VIDEO_SCHEMA
-    )
+    clips = _per_user_rows(spark, sf_dir, clip, VIDEO_SCHEMA)
     stats = frame_stats(sample_frames(clips, every=2))
     return stats.select(
-        F.substring("clip_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("clip_id"),
         "frame_idx",
         F.col("sum_r").alias("sum_y"),
         F.col("sum_g").alias("sum_u"),
@@ -5395,47 +5276,36 @@ def audio_mp3_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly: a hash match proves the frame walk, the CRC polynomial, and
     the Xing/ID3 handling bit-for-bit. PCM payload decode stays the honest
     NotImplementedError boundary (multimodal.py STUB_AUDIO_FMTS)."""
-    import pandas as pd
-
     from activity_files_spark.codecs.mp3 import _CHANNEL_MODES, encode_mp3_frames
     from activity_files_spark.operators.multimodal import (
         AUDIO_SCHEMA,
         mp3_container_stats,
     )
 
-    users = _read(spark, sf_dir, "events").select("user_id").distinct()
     modes = _CHANNEL_MODES  # header-bit ordering lives in the codec table
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for uid in pdf["user_id"]:
-                i = int(uid)
-                n = 6 + i % 5
-                frames = [(1 + (i + 3 * k) % 14, (i + k) % 2) for k in range(n)]
-                data = encode_mp3_frames(
-                    frames,
-                    sample_rate_idx=i % 3,
-                    channel_mode=modes[i % 4],
-                    crc=i % 2 == 0,
-                    id3v2_pad=(i % 7) * 5,
-                    id3v1=i % 3 == 1,
-                    xing_frames=n if i % 2 == 1 else None,
-                    payload_seed=i,
-                )
-                rows.append({
-                    "clip_id": f"u{i}", "bytes": data,
-                    "sample_rate": [44100, 48000, 32000][i % 3],
-                    "n_samples": 1152 * n, "channels": 2, "fmt": "mp3",
-                })
-            yield pd.DataFrame(rows)
+    def clip(i):
+        n = 6 + i % 5
+        frames = [(1 + (i + 3 * k) % 14, (i + k) % 2) for k in range(n)]
+        data = encode_mp3_frames(
+            frames,
+            sample_rate_idx=i % 3,
+            channel_mode=modes[i % 4],
+            crc=i % 2 == 0,
+            id3v2_pad=(i % 7) * 5,
+            id3v1=i % 3 == 1,
+            xing_frames=n if i % 2 == 1 else None,
+            payload_seed=i,
+        )
+        return {
+            "clip_id": f"u{i}", "bytes": data,
+            "sample_rate": [44100, 48000, 32000][i % 3],
+            "n_samples": 1152 * n, "channels": 2, "fmt": "mp3",
+        }
 
-    clips = users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, AUDIO_SCHEMA
-    )
-    stats = mp3_container_stats(clips)
+    stats = mp3_container_stats(_per_user_rows(spark, sf_dir, clip, AUDIO_SCHEMA))
     return stats.select(
-        F.substring("clip_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("clip_id"),
         "n_frames", "samples_total", "audio_bytes", "bitrate_sum_kbps",
         "distinct_bitrates", "sample_rate", "layer", "channel_mode",
         "crc_frames", "crc_ok_frames", "xing_frames", "id3v2_bytes",
@@ -5520,8 +5390,6 @@ def image_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PSNR floors: 30 dB for 4:4:4, 12 dB for 4:2:0 — the sawtooth
     fixtures are chroma-adversarial by design; the strict 40 dB corpus
     gate lives in validate_images_summary at quality 98)."""
-    import pandas as pd
-
     from activity_files_spark.codecs.image import psnr_db
     from activity_files_spark.codecs.jpeg import (
         decode_jpeg as jdec,
@@ -5530,7 +5398,6 @@ def image_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from activity_files_spark.data.images import pixels_for
 
-    users = _read(spark, sf_dir, "events").select("user_id").distinct()
     schema = (
         "user_id long, w int, h int, quality int, dqt_sum_luma long, "
         "dqt_sum_chroma long, restart_interval int, n_restart_markers int, "
@@ -5538,41 +5405,34 @@ def image_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "psnr_ok boolean, shape_ok boolean"
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for uid in pdf["user_id"]:
-                i = int(uid)
-                w = 16 + (i % 4) * 8
-                h = 16 + (i % 3) * 8
-                quality = 90 + (i % 10)
-                sub = "420" if i % 2 else "444"
-                ri = i % 4
-                px = pixels_for(i, w, h)
-                data = jenc(px, quality=quality, subsampling=sub, restart_interval=ri)
-                s = jstats(data)
-                out = jdec(data)
-                p = psnr_db(px, out)
-                rows.append({
-                    "user_id": i,
-                    "w": s["width"],
-                    "h": s["height"],
-                    "quality": quality,
-                    "dqt_sum_luma": s["dqt_sum_luma"],
-                    "dqt_sum_chroma": s["dqt_sum_chroma"],
-                    "restart_interval": s["restart_interval"],
-                    "n_restart_markers": s["n_restart_markers"],
-                    "max_h_sampling": s["max_h_sampling"],
-                    "n_dqt_tables": s["n_dqt_tables"],
-                    "n_dht_tables": s["n_dht_tables"],
-                    "psnr_ok": bool(p >= (12.0 if sub == "420" else 30.0)),
-                    "shape_ok": out.shape == (h, w, 3),
-                })
-            yield pd.DataFrame(rows)
+    def stats(i):
+        w = 16 + (i % 4) * 8
+        h = 16 + (i % 3) * 8
+        quality = 90 + (i % 10)
+        sub = "420" if i % 2 else "444"
+        ri = i % 4
+        px = pixels_for(i, w, h)
+        data = jenc(px, quality=quality, subsampling=sub, restart_interval=ri)
+        s = jstats(data)
+        out = jdec(data)
+        p = psnr_db(px, out)
+        return {
+            "user_id": i,
+            "w": s["width"],
+            "h": s["height"],
+            "quality": quality,
+            "dqt_sum_luma": s["dqt_sum_luma"],
+            "dqt_sum_chroma": s["dqt_sum_chroma"],
+            "restart_interval": s["restart_interval"],
+            "n_restart_markers": s["n_restart_markers"],
+            "max_h_sampling": s["max_h_sampling"],
+            "n_dqt_tables": s["n_dqt_tables"],
+            "n_dht_tables": s["n_dht_tables"],
+            "psnr_ok": bool(p >= (12.0 if sub == "420" else 30.0)),
+            "shape_ok": out.shape == (h, w, 3),
+        }
 
-    return users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, schema
-    )
+    return _per_user_rows(spark, sf_dir, stats, schema)
 
 
 def _image_jpeg_sql() -> str:
@@ -5953,36 +5813,27 @@ def raster_components_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rectangle layout analytically — a hash match proves the CCL
     found exactly the planted components with pixel-exact extents."""
     import numpy as np
-    import pandas as pd
 
     from activity_files_spark.operators.raster import raster_components
 
-    users = _read(spark, sf_dir, "events").select("user_id").distinct()
     w, h = 32, 24
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for uid in pdf["user_id"]:
-                i = int(uid)
-                img = np.full((h, w, 3), 30, dtype=np.uint8)
-                for j in range(1 + i % 3):
-                    x0 = 2 + 10 * j
-                    y0 = 3 + 5 * j + i % 4
-                    rw = 5 + (i + j) % 4
-                    rh = 4 + j % 3
-                    img[y0 : y0 + rh, x0 : x0 + rw] = 200
-                rows.append({
-                    "image_id": f"u{i}", "bytes": img.tobytes(), "w": w, "h": h,
-                })
-            yield pd.DataFrame(rows)
+    def image(i):
+        img = np.full((h, w, 3), 30, dtype=np.uint8)
+        for j in range(1 + i % 3):
+            x0 = 2 + 10 * j
+            y0 = 3 + 5 * j + i % 4
+            rw = 5 + (i + j) % 4
+            rh = 4 + j % 3
+            img[y0 : y0 + rh, x0 : x0 + rw] = 200
+        return {"image_id": f"u{i}", "bytes": img.tobytes(), "w": w, "h": h}
 
-    imgs = users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, "image_id string, bytes binary, w int, h int"
+    imgs = _per_user_rows(
+        spark, sf_dir, image, "image_id string, bytes binary, w int, h int"
     )
     comps = raster_components(imgs, threshold=128)
     return comps.select(
-        F.substring("image_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("image_id"),
         "comp", "area", "min_x", "min_y", "max_x", "max_y", "cx", "cy",
     )
 
@@ -6020,30 +5871,14 @@ def stream_downsample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the kept-set aggregates (count, BIGINT event-id sum, DECIMAL-exact
     value sum) are order-independent, so a hash match proves every keep
     decision matched."""
-    import tempfile
-    import uuid
+    from activity_files_spark.streaming.stream_ops import stream_downsample_time
 
-    from activity_files_spark.streaming.stream_ops import (
-        run_available_now,
-        stream_downsample_time,
-    )
-
-    schema = ("event_id long, ts timestamp, user_id long, event_type string, "
-              "value double, props string")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = _events_stream(spark, sf_dir)
     pts = src.select("user_id", "event_id", "ts", "value")
     kept = stream_downsample_time(
         pts, step_s=600.0, key="user_id", ts="ts", tiebreak=["event_id"]
     )
-    name = f"stream_downsample_{uuid.uuid4().hex[:10]}"
-    q = run_available_now(kept, name, tempfile.mkdtemp(), output_mode="append")
-    q.awaitTermination()
-    return spark.table(name).groupBy("user_id").agg(
+    return _drain(spark, kept, "stream_downsample", "append").groupBy("user_id").agg(
         F.count("*").alias("n_kept"),
         F.sum("event_id").cast("long").alias("sum_event_id"),
         _dec_sum(F.col("value")).alias("sum_value"),
@@ -6096,11 +5931,7 @@ def tcx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from activity_files_spark.sources.tcx import tcx_encode_df, tcx_records
 
-    ev = _read(spark, sf_dir, "events").select(
-        F.concat(F.lit("u"), F.col("user_id")).alias("activity_id"),
-        "event_id", "ts",
-        _lat_col().alias("lat"), _lon_col().alias("lon"),
-    )
+    ev = _activity_events(spark, sf_dir)
     metric = _roundtrip_metric()
     points = ev.select("activity_id", "ts", "lat", "lon",
                        F.lit(None).cast("double").alias("ele"))
@@ -6139,7 +5970,7 @@ def tcx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("distance_m"))).alias("sum_lap_dist"),
     )
     return agg.select(
-        F.substring("activity_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("activity_id"),
         "n_points", "n_hr", "sum_hr", "sum_speed", "sum_power",
         "n_laps", "sum_lap_dist",
     )
@@ -6169,11 +6000,7 @@ def csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     unknown numeric column -> custom channel), and aggregated."""
     from activity_files_spark.sources.csvsrc import csv_encode_text_df, csv_records
 
-    ev = _read(spark, sf_dir, "events").select(
-        F.concat(F.lit("u"), F.col("user_id")).alias("activity_id"),
-        "event_id", "ts",
-        _lat_col().alias("lat"), _lon_col().alias("lon"),
-    )
+    ev = _activity_events(spark, sf_dir)
     metric = _roundtrip_metric()
     points = ev.select("activity_id", "ts", "lat", "lon",
                        F.lit(None).cast("double").alias("ele"))
@@ -6183,16 +6010,11 @@ def csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = csv_encode_text_df(points, chans)
     back = csv_records(docs)
     agg = back.groupBy("activity_id").agg(
-        F.count(F.when(F.col("kind") == "point", 1)).alias("n_points"),
-        F.count(F.when((F.col("kind") == "channel")
-                       & (F.col("channel") == "custom_metric"), 1)).alias("n_channels"),
-        F.sum(F.when((F.col("kind") == "channel")
-                     & (F.col("channel") == "custom_metric"),
-                     F.col("value"))).alias("sum_metric"),
+        *_metric_aggs(),
         F.count(F.when(F.col("kind") == "diag", 1)).alias("n_diags"),
     )
     return agg.select(
-        F.substring("activity_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("activity_id"),
         "n_points", "n_channels", "sum_metric", "n_diags",
     )
 
@@ -6223,11 +6045,7 @@ def geojson_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         geojson_records,
     )
 
-    ev = _read(spark, sf_dir, "events").select(
-        F.concat(F.lit("u"), F.col("user_id")).alias("activity_id"),
-        F.col("user_id"), "event_id", "ts",
-        _lat_col().alias("lat"), _lon_col().alias("lon"),
-    )
+    ev = _activity_events(spark, sf_dir, F.col("user_id"))
     metric = _roundtrip_metric()
     even = ev.filter(F.col("user_id") % 2 == 0)
     odd = ev.filter(F.col("user_id") % 2 == 1)
@@ -6243,16 +6061,11 @@ def geojson_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     back = geojson_records(even_docs.unionByName(odd_docs))
     agg = back.groupBy("activity_id").agg(
-        F.count(F.when(F.col("kind") == "point", 1)).alias("n_points"),
-        F.count(F.when((F.col("kind") == "channel")
-                       & (F.col("channel") == "custom_metric"), 1)).alias("n_channels"),
-        F.sum(F.when((F.col("kind") == "channel")
-                     & (F.col("channel") == "custom_metric"),
-                     F.col("value"))).alias("sum_metric"),
+        *_metric_aggs(),
         F.count(F.when(F.col("kind") == "lap", 1)).alias("n_laps"),
     )
     return agg.select(
-        F.substring("activity_id", 2, 20).cast("long").alias("user_id"),
+        _user_id_of("activity_id"),
         "n_points", "n_channels", "sum_metric", "n_laps",
     )
 
@@ -6760,242 +6573,134 @@ def _od_matrix_sql() -> str:
     """
 
 
+# query name -> oracle SQL builder, in the driver's order; the query
+# function itself is resolved by name in queries() (module docstring)
+_REGISTRY: tuple[tuple[str, Callable[[], str] | None], ...] = (
+    ("q1_pricing_summary", _q1_sql),
+    ("q3_shipping_priority", _q3_sql),
+    ("q5_region_revenue", _q5_sql),
+    ("sort_dedup_last_wins", _sort_dedup_sql),
+    ("sessionize_users", _sessionize_sql),
+    ("smooth_values", _smooth_sql),
+    ("cumdist_track", _cumdist_sql),
+    ("quadkey_cells", _quadkey_sql),
+    ("pip_rect_join", _pip_sql),
+    ("asof_click_purchase", _asof_sql),
+    ("knn_events", _knn_sql),
+    ("dedup_exact_documents", _dedup_exact_sql),
+    ("token_stats_documents", _token_stats_sql),
+    ("cosine_topk_embeddings", _cosine_sql),
+    ("gap_events", _gap_sql),
+    ("tile_assign_images", _tile_assign_sql),
+    ("s2_tile_images", _s2_tile_images_sql),
+    ("image_pip_join", _image_pip_sql),
+    ("image_knn", _image_knn_sql),
+    # no oracle: pixel/codec decode is not SQL-expressible, so the driver
+    # runs a rows-only check and pytest pins it; its SQL-replayable half
+    # (caption/dims/phash presence) is hash-gated via
+    # image_invariants_summary
+    ("validate_images_summary", None),
+    ("minhash_near_dups", _minhash_sql),
+    ("simhash_docs", _simhash_sql),
+    ("lang_quality_docs", _lang_quality_sql),
+    ("embedding_dup_pairs", _embedding_dup_sql),
+    ("lsh_ann_embeddings", _lsh_ann_sql),
+    ("ivf_ann_embeddings", _ivf_ann_sql),
+    ("trim_invalid_points", _trim_invalid_sql),
+    ("lap_splits_track", _lap_splits_sql),
+    ("contiguous_group_events", _contiguous_sql),
+    ("validation_diagnostics", _validation_sql),
+    ("session_summary_users", _session_summary_sql),
+    ("pip_raycast_join", _pip_raycast_sql),
+    ("resample_track", _resample_sql),
+    ("hex_cells", _hex_cells_sql),
+    ("geohash_cells", _geohash_cells_sql),
+    ("s2_cells_events", _s2_cells_sql),
+    ("route_cell_cover_events", _route_cell_cover_sql),
+    ("route_crossings_pairs", _route_crossings_sql),
+    ("region_cover_cells", _region_cover_sql),
+    ("densify_track_points", _densify_sql),
+    ("morans_i_cells", _morans_i_sql),
+    ("gi_star_hotspots", _gi_star_sql),
+    ("route_simplicity_users", _route_simplicity_sql),
+    ("route_fraction_points", _route_fraction_sql),
+    ("emerging_hotspots_cells", _emerging_hotspots_sql),
+    ("region_cover_lookup_events", _region_cover_lookup_sql),
+    ("contact_pairs_events", _contact_pairs_sql),
+    ("elevation_gain_users", _elevation_gain_sql),
+    ("geofence_union_area", _geofence_union_sql),
+    ("geofence_overlap_pairs", _geofence_overlap_sql),
+    ("hll_distinct_users_cells", _hll_distinct_sql),
+    ("theil_sen_cells", _theil_sen_sql),
+    ("route_buffer_cells", _route_buffer_sql),
+    ("sample_events_per_user", _sample_events_sql),
+    ("bloom_semijoin_customers", _bloom_semijoin_sql),
+    ("cms_cell_counts", _cms_cell_sql),
+    ("crossing_points_users", _crossing_points_sql),
+    ("project_points_track", _project_points_sql),
+    ("dataset_split_documents", _dataset_split_sql),
+    ("stream_cell_cover_events", _route_cell_cover_sql),
+    ("shortest_path_cells", _shortest_path_cells_sql),
+    ("map_match_events", _map_match_sql),
+    ("route_near_dups", _route_near_dups_sql),
+    ("spike_filter_events", _spike_filter_sql),
+    ("within_radius_events", _within_radius_sql),
+    ("speed_percentiles_users", _speed_percentiles_sql),
+    ("dwell_sessions_events", _dwell_sessions_sql),
+    ("bearing_turns_track", _bearing_turns_sql),
+    ("zone_length_events", _zone_length_sql),
+    ("resample_distance_track", _resample_distance_sql),
+    ("kmeans_embeddings", _kmeans_sql),
+    ("simplify_track_events", _simplify_track_sql),
+    ("stream_map_match_events", _stream_map_match_sql),
+    ("fit_roundtrip_stats", _fit_roundtrip_sql),
+    ("gpx_roundtrip_stats", _gpx_roundtrip_sql),
+    ("merge_upsert_events", _merge_upsert_sql),
+    ("stream_sessionize_users", _stream_sessionize_sql),
+    ("tcx_roundtrip_stats", _tcx_roundtrip_sql),
+    ("csv_roundtrip_stats", _csv_roundtrip_sql),
+    ("geojson_roundtrip_stats", _geojson_roundtrip_sql),
+    ("stream_downsample_events", _stream_downsample_sql),
+    ("audio_wav_features", _audio_wav_sql),
+    ("audio_flac_features", _audio_flac_sql),
+    ("audio_ogg_flac_features", _audio_ogg_flac_sql),
+    ("downsample_distance_events", _downsample_distance_sql),
+    ("edit_pipeline_events", _edit_pipeline_sql),
+    ("point_edit_events", _point_edit_sql),
+    ("video_frame_stats", _video_frame_sql),
+    ("video_y4m_stats", _video_y4m_sql),
+    ("video_mp4_stats", _video_mp4_sql),
+    ("video_mkv_stats", _video_mkv_sql),
+    ("audio_mp3_stats", _audio_mp3_sql),
+    ("image_jpeg_stats", _image_jpeg_sql),
+    ("frechet_route_refine", _frechet_route_sql),
+    ("dtw_route_refine", _dtw_route_sql),
+    ("dbscan_events", _dbscan_sql),
+    ("stay_points_events", _stay_points_sql),
+    ("convex_hull_routes", _convex_hull_sql),
+    ("hull_metrics_routes", _hull_metrics_sql),
+    ("polyline_routes", _polyline_sql),
+    ("od_matrix_trips", _od_matrix_sql),
+    ("image_invariants_summary", _image_invariants_sql),
+    ("image_histogram_stats", _image_histogram_sql),
+    ("image_gif_stats", _image_gif_sql),
+    ("stream_tile_rollup_cells", _stream_tile_rollup_sql),
+    ("hamming_near_dups_docs", _hamming_near_dups_sql),
+    ("dedup_clusters_docs", _dedup_clusters_sql),
+    ("simhash_near_dups_docs", _simhash_near_dups_sql),
+    ("rasterize_heatmap_tiles", _rasterize_heatmap_sql),
+    ("raster_blur_tiles", _raster_blur_sql),
+    ("contour_heatmap_events", _contour_heatmap_sql),
+    ("raster_components_vectorize", _raster_components_sql),
+    ("raster_pyramid_tiles", _raster_pyramid_sql),
+    ("zonal_stats_polygon", _zonal_stats_sql),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q1_pricing_summary": q1_pricing_summary,
-        "q3_shipping_priority": q3_shipping_priority,
-        "q5_region_revenue": q5_region_revenue,
-        "sort_dedup_last_wins": sort_dedup_last_wins,
-        "sessionize_users": sessionize_users,
-        "smooth_values": smooth_values,
-        "cumdist_track": cumdist_track,
-        "quadkey_cells": quadkey_cells,
-        "pip_rect_join": pip_rect_join,
-        "asof_click_purchase": asof_click_purchase,
-        "knn_events": knn_events,
-        "dedup_exact_documents": dedup_exact_documents,
-        "token_stats_documents": token_stats_documents,
-        "cosine_topk_embeddings": cosine_topk_embeddings,
-        "gap_events": gap_events,
-        "tile_assign_images": tile_assign_images,
-        "s2_tile_images": s2_tile_images,
-        "image_pip_join": image_pip_join,
-        "image_knn": image_knn,
-        "validate_images_summary": validate_images_summary,
-        "minhash_near_dups": minhash_near_dups,
-        "simhash_docs": simhash_docs,
-        "lang_quality_docs": lang_quality_docs,
-        "embedding_dup_pairs": embedding_dup_pairs,
-        "lsh_ann_embeddings": lsh_ann_embeddings,
-        "ivf_ann_embeddings": ivf_ann_embeddings,
-        "trim_invalid_points": trim_invalid_points,
-        "lap_splits_track": lap_splits_track,
-        "contiguous_group_events": contiguous_group_events,
-        "validation_diagnostics": validation_diagnostics,
-        "session_summary_users": session_summary_users,
-        "pip_raycast_join": pip_raycast_join,
-        "resample_track": resample_track,
-        "hex_cells": hex_cells,
-        "geohash_cells": geohash_cells,
-        "s2_cells_events": s2_cells_events,
-        "route_cell_cover_events": route_cell_cover_events,
-        "route_crossings_pairs": route_crossings_pairs,
-        "region_cover_cells": region_cover_cells,
-        "densify_track_points": densify_track_points,
-        "morans_i_cells": morans_i_cells,
-        "gi_star_hotspots": gi_star_hotspots,
-        "route_simplicity_users": route_simplicity_users,
-        "route_fraction_points": route_fraction_points,
-        "emerging_hotspots_cells": emerging_hotspots_cells,
-        "region_cover_lookup_events": region_cover_lookup_events,
-        "contact_pairs_events": contact_pairs_events,
-        "elevation_gain_users": elevation_gain_users,
-        "geofence_union_area": geofence_union_area,
-        "geofence_overlap_pairs": geofence_overlap_pairs,
-        "hll_distinct_users_cells": hll_distinct_users_cells,
-        "theil_sen_cells": theil_sen_cells,
-        "route_buffer_cells": route_buffer_cells,
-        "sample_events_per_user": sample_events_per_user,
-        "bloom_semijoin_customers": bloom_semijoin_customers,
-        "cms_cell_counts": cms_cell_counts,
-        "crossing_points_users": crossing_points_users,
-        "project_points_track": project_points_track,
-        "dataset_split_documents": dataset_split_documents,
-        "stream_cell_cover_events": stream_cell_cover_events,
-        "shortest_path_cells": shortest_path_cells,
-        "map_match_events": map_match_events,
-        "route_near_dups": route_near_dups,
-        "spike_filter_events": spike_filter_events,
-        "within_radius_events": within_radius_events,
-        "speed_percentiles_users": speed_percentiles_users,
-        "dwell_sessions_events": dwell_sessions_events,
-        "bearing_turns_track": bearing_turns_track,
-        "zone_length_events": zone_length_events,
-        "resample_distance_track": resample_distance_track,
-        "kmeans_embeddings": kmeans_embeddings,
-        "simplify_track_events": simplify_track_events,
-        "stream_map_match_events": stream_map_match_events,
-        "fit_roundtrip_stats": fit_roundtrip_stats,
-        "gpx_roundtrip_stats": gpx_roundtrip_stats,
-        "merge_upsert_events": merge_upsert_events,
-        "stream_sessionize_users": stream_sessionize_users,
-        "tcx_roundtrip_stats": tcx_roundtrip_stats,
-        "csv_roundtrip_stats": csv_roundtrip_stats,
-        "geojson_roundtrip_stats": geojson_roundtrip_stats,
-        "stream_downsample_events": stream_downsample_events,
-        "audio_wav_features": audio_wav_features,
-        "audio_flac_features": audio_flac_features,
-        "audio_ogg_flac_features": audio_ogg_flac_features,
-        "downsample_distance_events": downsample_distance_events,
-        "edit_pipeline_events": edit_pipeline_events,
-        "point_edit_events": point_edit_events,
-        "video_frame_stats": video_frame_stats,
-        "video_y4m_stats": video_y4m_stats,
-        "video_mp4_stats": video_mp4_stats,
-        "video_mkv_stats": video_mkv_stats,
-        "audio_mp3_stats": audio_mp3_stats,
-        "image_jpeg_stats": image_jpeg_stats,
-        "frechet_route_refine": frechet_route_refine,
-        "dtw_route_refine": dtw_route_refine,
-        "dbscan_events": dbscan_events,
-        "stay_points_events": stay_points_events,
-        "convex_hull_routes": convex_hull_routes,
-        "hull_metrics_routes": hull_metrics_routes,
-        "polyline_routes": polyline_routes,
-        "od_matrix_trips": od_matrix_trips,
-        "image_invariants_summary": image_invariants_summary,
-        "image_histogram_stats": image_histogram_stats,
-        "image_gif_stats": image_gif_stats,
-        "stream_tile_rollup_cells": stream_tile_rollup_cells,
-        "hamming_near_dups_docs": hamming_near_dups_docs,
-        "dedup_clusters_docs": dedup_clusters_docs,
-        "simhash_near_dups_docs": simhash_near_dups_docs,
-        "rasterize_heatmap_tiles": rasterize_heatmap_tiles,
-        "raster_blur_tiles": raster_blur_tiles,
-        "contour_heatmap_events": contour_heatmap_events,
-        "raster_components_vectorize": raster_components_vectorize,
-        "raster_pyramid_tiles": raster_pyramid_tiles,
-        "zonal_stats_polygon": zonal_stats_polygon,
-    }
+    g = globals()
+    return {name: g[name] for name, _ in _REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "q1_pricing_summary": _q1_sql(),
-        "q3_shipping_priority": _q3_sql(),
-        "q5_region_revenue": _q5_sql(),
-        "sort_dedup_last_wins": _sort_dedup_sql(),
-        "sessionize_users": _sessionize_sql(),
-        "smooth_values": _smooth_sql(),
-        "cumdist_track": _cumdist_sql(),
-        "quadkey_cells": _quadkey_sql(),
-        "pip_rect_join": _pip_sql(),
-        "asof_click_purchase": _asof_sql(),
-        "knn_events": _knn_sql(),
-        "dedup_exact_documents": _dedup_exact_sql(),
-        "token_stats_documents": _token_stats_sql(),
-        "cosine_topk_embeddings": _cosine_sql(),
-        "gap_events": _gap_sql(),
-        "tile_assign_images": _tile_assign_sql(),
-        "s2_tile_images": _s2_tile_images_sql(),
-        "image_pip_join": _image_pip_sql(),
-        "image_knn": _image_knn_sql(),
-        "minhash_near_dups": _minhash_sql(),
-        "simhash_docs": _simhash_sql(),
-        "lang_quality_docs": _lang_quality_sql(),
-        "embedding_dup_pairs": _embedding_dup_sql(),
-        "lsh_ann_embeddings": _lsh_ann_sql(),
-        "ivf_ann_embeddings": _ivf_ann_sql(),
-        "trim_invalid_points": _trim_invalid_sql(),
-        "lap_splits_track": _lap_splits_sql(),
-        "contiguous_group_events": _contiguous_sql(),
-        "validation_diagnostics": _validation_sql(),
-        "session_summary_users": _session_summary_sql(),
-        "pip_raycast_join": _pip_raycast_sql(),
-        "resample_track": _resample_sql(),
-        "hex_cells": _hex_cells_sql(),
-        "geohash_cells": _geohash_cells_sql(),
-        "s2_cells_events": _s2_cells_sql(),
-        "route_cell_cover_events": _route_cell_cover_sql(),
-        "route_crossings_pairs": _route_crossings_sql(),
-        "region_cover_cells": _region_cover_sql(),
-        "densify_track_points": _densify_sql(),
-        "morans_i_cells": _morans_i_sql(),
-        "gi_star_hotspots": _gi_star_sql(),
-        "route_simplicity_users": _route_simplicity_sql(),
-        "route_fraction_points": _route_fraction_sql(),
-        "emerging_hotspots_cells": _emerging_hotspots_sql(),
-        "region_cover_lookup_events": _region_cover_lookup_sql(),
-        "contact_pairs_events": _contact_pairs_sql(),
-        "elevation_gain_users": _elevation_gain_sql(),
-        "geofence_union_area": _geofence_union_sql(),
-        "geofence_overlap_pairs": _geofence_overlap_sql(),
-        "hll_distinct_users_cells": _hll_distinct_sql(),
-        "theil_sen_cells": _theil_sen_sql(),
-        "route_buffer_cells": _route_buffer_sql(),
-        "sample_events_per_user": _sample_events_sql(),
-        "bloom_semijoin_customers": _bloom_semijoin_sql(),
-        "cms_cell_counts": _cms_cell_sql(),
-        "crossing_points_users": _crossing_points_sql(),
-        "project_points_track": _project_points_sql(),
-        "dataset_split_documents": _dataset_split_sql(),
-        "stream_cell_cover_events": _route_cell_cover_sql(),
-        "shortest_path_cells": _shortest_path_cells_sql(),
-        "map_match_events": _map_match_sql(),
-        "route_near_dups": _route_near_dups_sql(),
-        "spike_filter_events": _spike_filter_sql(),
-        "within_radius_events": _within_radius_sql(),
-        "speed_percentiles_users": _speed_percentiles_sql(),
-        "dwell_sessions_events": _dwell_sessions_sql(),
-        "bearing_turns_track": _bearing_turns_sql(),
-        "zone_length_events": _zone_length_sql(),
-        "resample_distance_track": _resample_distance_sql(),
-        "kmeans_embeddings": _kmeans_sql(),
-        "simplify_track_events": _simplify_track_sql(),
-        "stream_map_match_events": _stream_map_match_sql(),
-        "fit_roundtrip_stats": _fit_roundtrip_sql(),
-        "gpx_roundtrip_stats": _gpx_roundtrip_sql(),
-        "merge_upsert_events": _merge_upsert_sql(),
-        "stream_sessionize_users": _stream_sessionize_sql(),
-        "tcx_roundtrip_stats": _tcx_roundtrip_sql(),
-        "csv_roundtrip_stats": _csv_roundtrip_sql(),
-        "geojson_roundtrip_stats": _geojson_roundtrip_sql(),
-        "stream_downsample_events": _stream_downsample_sql(),
-        "audio_wav_features": _audio_wav_sql(),
-        "audio_flac_features": _audio_flac_sql(),
-        "audio_ogg_flac_features": _audio_ogg_flac_sql(),
-        "downsample_distance_events": _downsample_distance_sql(),
-        "edit_pipeline_events": _edit_pipeline_sql(),
-        "point_edit_events": _point_edit_sql(),
-        "video_frame_stats": _video_frame_sql(),
-        "video_y4m_stats": _video_y4m_sql(),
-        "video_mp4_stats": _video_mp4_sql(),
-        "video_mkv_stats": _video_mkv_sql(),
-        "audio_mp3_stats": _audio_mp3_sql(),
-        "image_jpeg_stats": _image_jpeg_sql(),
-        "frechet_route_refine": _frechet_route_sql(),
-        "dtw_route_refine": _dtw_route_sql(),
-        "dbscan_events": _dbscan_sql(),
-        "stay_points_events": _stay_points_sql(),
-        "convex_hull_routes": _convex_hull_sql(),
-        "hull_metrics_routes": _hull_metrics_sql(),
-        "polyline_routes": _polyline_sql(),
-        "od_matrix_trips": _od_matrix_sql(),
-        "image_invariants_summary": _image_invariants_sql(),
-        "image_histogram_stats": _image_histogram_sql(),
-        "image_gif_stats": _image_gif_sql(),
-        "stream_tile_rollup_cells": _stream_tile_rollup_sql(),
-        "hamming_near_dups_docs": _hamming_near_dups_sql(),
-        "dedup_clusters_docs": _dedup_clusters_sql(),
-        "simhash_near_dups_docs": _simhash_near_dups_sql(),
-        "rasterize_heatmap_tiles": _rasterize_heatmap_sql(),
-        "raster_blur_tiles": _raster_blur_sql(),
-        "contour_heatmap_events": _contour_heatmap_sql(),
-        "raster_components_vectorize": _raster_components_sql(),
-        "raster_pyramid_tiles": _raster_pyramid_sql(),
-        "zonal_stats_polygon": _zonal_stats_sql(),
-        # validate_images_summary: intentionally no oracle (pixel/codec
-        # decode is not SQL-expressible) -> driver rows-only check; pytest
-        # pins it. Its SQL-replayable half (caption/dims/phash presence) IS
-        # hash-gated via image_invariants_summary above.
-    }
+    return {name: sql() for name, sql in _REGISTRY if sql is not None}

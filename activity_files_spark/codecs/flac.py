@@ -221,10 +221,6 @@ def _zigzag(res: np.ndarray) -> np.ndarray:
     return np.where(r >= 0, r << 1, (-r << 1) - 1)
 
 
-def _unzigzag(u: int) -> int:
-    return (u >> 1) if (u & 1) == 0 else -((u + 1) >> 1)
-
-
 def _rice_write_z(w: _BitWriter, z: np.ndarray, param: int) -> None:
     """Write already-zigzagged residuals (computed once per subframe)."""
     for u in z:

@@ -132,7 +132,3 @@ def hex_center_py(cell_id: int) -> tuple[float, float]:
     x = s * SQRT3 * (q + r / 2.0)
     y = s * 1.5 * r
     return y, x
-
-
-def hex_ladder_py(lat: float, lon: float, resolutions=(4, 6, 8)) -> list[int]:
-    return [hex_cell_py(lat, lon, z) for z in resolutions]

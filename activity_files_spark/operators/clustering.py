@@ -50,10 +50,7 @@ def _explode_dims(emb: DataFrame, dim: int, id_col: str, vec_col: str) -> DataFr
     # 3.6 -> 2.1 s at sf0.1, bit-identical output). Width is the session
     # shuffle knob, the same scale-parameterised value any groupBy used.
     spark = emb.sparkSession
-    try:
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # noqa: BLE001
-        nparts = spark.sparkContext.defaultParallelism
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return (
         emb.select(
             F.col(id_col).alias("id"),

@@ -101,37 +101,9 @@ def crop(df: DataFrame, start, end, ts: str = "ts") -> DataFrame:
     return df.filter((F.col(ts) >= F.lit(start)) & (F.col(ts) <= F.lit(end)))
 
 
-def clip_laps(laps: DataFrame, start, end) -> DataFrame:
-    """Clip lap intervals to [start, end]; drop laps fully outside."""
-    return (
-        laps.filter((F.col("end_ts") >= F.lit(start)) & (F.col("start_ts") <= F.lit(end)))
-        .withColumn("start_ts", F.greatest(F.col("start_ts"), F.lit(start).cast("timestamp")))
-        .withColumn("end_ts", F.least(F.col("end_ts"), F.lit(end).cast("timestamp")))
-    )
-
-
 def delete_range(df: DataFrame, start, end, ts: str = "ts") -> DataFrame:
     """Remove inclusive range, keep timeline gap (raw_editor.dart:367-405)."""
     return df.filter((F.col(ts) < F.lit(start)) | (F.col(ts) > F.lit(end)))
-
-
-def delete_range_intervals(laps: DataFrame, start, end) -> DataFrame:
-    """Interval-relation CASE for deleteRange on laps (raw_editor.dart:822-851):
-    drop-inside, clip-straddle, keep-spanning/outside."""
-    s, e = F.lit(start).cast("timestamp"), F.lit(end).cast("timestamp")
-    inside = (F.col("start_ts") >= s) & (F.col("end_ts") <= e)
-    out = laps.filter(~inside)
-    # clip a lap that straddles either boundary (a lap spanning the whole
-    # deleted range keeps both outer pieces in the reference => keep as-is
-    # minus the range; we clip to the nearer boundary on each side)
-    out = out.withColumn(
-        "start_ts",
-        F.when((F.col("start_ts") >= s) & (F.col("start_ts") <= e), e).otherwise(F.col("start_ts")),
-    ).withColumn(
-        "end_ts",
-        F.when((F.col("end_ts") >= s) & (F.col("end_ts") <= e), s).otherwise(F.col("end_ts")),
-    )
-    return out
 
 
 def largest_contiguous_group(

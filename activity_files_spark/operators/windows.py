@@ -87,28 +87,6 @@ def detect_gaps(
     )
 
 
-def ordering_diagnostics(
-    df: DataFrame, key: str = "activity_id", ts: str = "ts", order: str = "seq"
-) -> DataFrame:
-    """Out-of-order / duplicate-ts diagnostics (validation.dart:357-371).
-
-    Emits (key, seq, code) rows: 'validation.point_order' when ts < previous
-    in input order, 'validation.duplicate_timestamp' when equal.
-    """
-    w = Window.partitionBy(key).orderBy(order)
-    prev = F.lag(ts).over(w)
-    return (
-        df.withColumn("_prev", prev)
-        .withColumn(
-            "code",
-            F.when(F.col(ts) < F.col("_prev"), "validation.point_order")
-            .when(F.col(ts) == F.col("_prev"), "validation.duplicate_timestamp"),
-        )
-        .filter(F.col("code").isNotNull())
-        .select(key, order, "code")
-    )
-
-
 def mark_laps_by_distance(
     points: DataFrame,
     split_m,

@@ -21,11 +21,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
-    bench harnesses can pin parallelism; on a real cluster pass ``None`` and
-    let spark-submit supply the master.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: this
+    machine's core count) so bench harnesses can pin parallelism; on a real
+    cluster pass ``None`` and let spark-submit supply the master.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -53,19 +53,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Register the driver's parquet tables as temp views; return dict of DFs."""
-    names = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    out = {}
-    for n in names:
-        path = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(n)
-            out[n] = df
-    return out

@@ -338,10 +338,6 @@ _CHANNEL_TO_TPX = {
 }
 
 
-def _fmt_coord(v: float) -> str:
-    return f"{v:.6f}".rstrip("0").rstrip(".") if v == v else ""
-
-
 GPX_NAMESPACES = {
     "1.1": "http://www.topografix.com/GPX/1/1",
     "1.0": "http://www.topografix.com/GPX/1/0",

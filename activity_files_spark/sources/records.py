@@ -180,19 +180,6 @@ def waypoints_of(records: DataFrame) -> DataFrame:
     )
 
 
-def routes_of(records: DataFrame) -> DataFrame:
-    return records.filter(F.col("kind") == "route").select(
-        "activity_id", F.col("lap_id").alias("route_id"), "attrs"
-    )
-
-
-def route_points_of(records: DataFrame) -> DataFrame:
-    return records.filter(F.col("kind") == "route_point").select(
-        "activity_id", F.col("lap_id").alias("route_id"), "seq", "ts",
-        "lat", "lon", "ele", "attrs"
-    )
-
-
 def meta_of(records: DataFrame) -> DataFrame:
     return records.filter(F.col("kind") == "meta").select("activity_id", "attrs")
 

@@ -23,7 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 REPS = int(os.environ.get("BENCH_EXTRA_REPS", "3"))
 TAG = os.environ.get("BENCH_EXTRA_TAG", "before")
 PLAN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")

@@ -67,6 +67,15 @@ def test_query_matches_oracle(spark, duck, name):
     assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
 
 
+def test_every_oracle_pairs_with_a_query():
+    # a mistyped or dropped oracle key would silently turn its query into a
+    # rows-only check; only the pixel-decode summary is meant to be one
+    names = set(entry_mod.queries())
+    oracles = set(entry_mod.oracle_sql())
+    assert oracles <= names, sorted(oracles - names)
+    assert names - oracles == {"validate_images_summary"}
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -34,9 +34,6 @@ FORBIDDEN = (
     "BatchEvalPython",  # row-at-a-time Python UDF; Arrow nodes are fine
 )
 
-# Queries whose construction RUNS a job by necessity (streaming memory-sink
-# twins, capped query-side collects); they still end as a DataFrame whose
-# plan we lint, but building them is slower — keep the set documented.
 _QUERY_NAMES = sorted(E.queries())
 
 
@@ -63,7 +60,7 @@ def test_plan_has_no_forbidden_nodes(plans, name):
 
 
 def test_query_surface_has_not_shrunk(plans):
-    # a moving floor rather than a tautology: queries() is a literal dict,
-    # so comparing two calls of it can never fail — instead pin the round-5
-    # surface size so an accidental deregistration trips the gate
-    assert len(plans) >= 52
+    # a moving floor rather than a tautology: queries() is built from one
+    # fixed table, so comparing two calls of it can never fail — instead pin
+    # the current surface size so an accidental deregistration trips the gate
+    assert len(plans) >= 114
