@@ -4027,29 +4027,6 @@ def _image_invariants_sql() -> str:
     """
 
 
-RECORD_COLS = ["seq", "ts", "lat", "lon", "ele", "channel", "value", "lap_id",
-               "start_ts", "end_ts", "distance_m", "sport", "attrs"]
-
-
-def _rec_select(kind: str, **over):
-    """Column list for one record-stream kind over the unified RECORD_SCHEMA
-    (shared by the fit/gpx round-trip query builders): null-typed defaults
-    for every column, overridden per kind."""
-    nul = lambda t: F.lit(None).cast(t)  # noqa: E731
-    base = {
-        "seq": nul("long"), "lat": nul("double"), "lon": nul("double"),
-        "ele": nul("double"), "channel": nul("string"), "value": nul("double"),
-        "lap_id": nul("int"), "start_ts": nul("timestamp"),
-        "end_ts": nul("timestamp"), "distance_m": nul("double"),
-        "sport": nul("string"), "attrs": nul("map<string,string>"),
-        "ts": nul("timestamp"),
-    }
-    base.update(over)
-    return [F.col("activity_id"), F.lit(kind).alias("kind")] + [
-        base[c].alias(c) for c in RECORD_COLS
-    ]
-
-
 def _activity_events(spark: SparkSession, sf_dir: str, *cols) -> DataFrame:
     """The events as one activity per user (``activity_id`` = ``u<user_id>``)
     with the derived lat/lon, the input of the codec round-trip queries."""
@@ -4080,6 +4057,20 @@ def _roundtrip_metric():
             .cast("double") / F.lit(16.0))
 
 
+def _metric_track(ev: DataFrame) -> DataFrame:
+    """Record stream of one point (seq = event_id) and one ``custom_metric``
+    channel sample per event: the track of the FIT and GPX round-trips."""
+    from activity_files_spark.sources.records import as_records
+
+    points = as_records(ev.select(
+        "activity_id", F.col("event_id").alias("seq"), "ts", "lat", "lon",
+    ), "point")
+    return points.unionByName(as_records(ev.select(
+        "activity_id", "ts",
+        F.lit("custom_metric").alias("channel"), _roundtrip_metric().alias("value"),
+    ), "channel"))
+
+
 def fit_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4/S9 FIT full-profile round-trip, driver-gated: per user, build a
     synthetic activity from the events table (points + a developer-field
@@ -4097,41 +4088,32 @@ def fit_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     weight = (event_id % 160) / 16
     """
     from activity_files_spark.sources.fit import fit_encode_records, fit_records
+    from activity_files_spark.sources.records import as_records
 
     ev = _activity_events(spark, sf_dir)
-    rec = _rec_select
-    metric = _roundtrip_metric()
-    points = ev.select(*rec(
-        "point", seq=F.col("event_id"), ts=F.col("ts"),
-        lat=F.col("lat"), lon=F.col("lon"),
-    ))
-    chans = ev.select(*rec(
-        "channel", ts=F.col("ts"),
-        channel=F.lit("custom_metric"), value=metric,
-    ))
-    lengths = ev.filter(F.col("event_id") % 5 == 0).select(*rec(
-        "length", start_ts=F.col("ts"),
-        end_ts=F.col("ts") + F.expr("INTERVAL 30 SECONDS"),
-        attrs=F.create_map(
+    lengths = as_records(ev.filter(F.col("event_id") % 5 == 0).select(
+        "activity_id", F.col("ts").alias("start_ts"),
+        (F.col("ts") + F.expr("INTERVAL 30 SECONDS")).alias("end_ts"),
+        F.create_map(
             F.lit("total_elapsed_s"), F.lit("30.0"),
             F.lit("total_strokes"), (F.col("event_id") % 40).cast("string"),
             F.lit("swim_stroke"), (F.col("event_id") % 7).cast("string"),
             F.lit("length_type"), F.lit("1"),
-        ),
-    ))
-    sets = ev.filter(F.col("event_id") % 7 == 0).select(*rec(
-        "set", start_ts=F.col("ts"),
-        end_ts=F.col("ts") + F.expr("INTERVAL 45 SECONDS"),
-        attrs=F.create_map(
+        ).alias("attrs"),
+    ), "length")
+    sets = as_records(ev.filter(F.col("event_id") % 7 == 0).select(
+        "activity_id", F.col("ts").alias("start_ts"),
+        (F.col("ts") + F.expr("INTERVAL 45 SECONDS")).alias("end_ts"),
+        F.create_map(
             F.lit("duration_s"), F.lit("45.0"),
             F.lit("repetitions"), (F.col("event_id") % 20).cast("string"),
             F.lit("weight_kg"),
             ((F.col("event_id") % 160).cast("double") / F.lit(16.0)).cast("string"),
             F.lit("set_type"), F.lit("1"),
             F.lit("category"), (F.col("event_id") % 30).cast("string"),
-        ),
-    ))
-    recs = points.unionByName(chans).unionByName(lengths).unionByName(sets)
+        ).alias("attrs"),
+    ), "set")
+    recs = _metric_track(ev).unionByName(lengths).unionByName(sets)
     back = fit_records(fit_encode_records(recs))
     agg = back.groupBy("activity_id").agg(
         *_metric_aggs(),
@@ -4467,33 +4449,23 @@ def gpx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     waypoint for event_id % 9 == 0; route point for event_id % 6 == 0.
     """
     from activity_files_spark.sources.gpx import gpx_encode_records, gpx_records
+    from activity_files_spark.sources.records import as_records
 
     ev = _activity_events(spark, sf_dir)
-    rec = _rec_select
-    metric = _roundtrip_metric()
-    points = ev.select(*rec(
-        "point", seq=F.col("event_id"), ts=F.col("ts"),
-        lat=F.col("lat"), lon=F.col("lon"),
-    ))
-    chans = ev.select(*rec(
-        "channel", ts=F.col("ts"),
-        channel=F.lit("custom_metric"), value=metric,
-    ))
-    wpts = ev.filter(F.col("event_id") % 9 == 0).select(*rec(
-        "waypoint", seq=F.col("event_id"), ts=F.col("ts"),
-        lat=F.col("lat"), lon=F.col("lon"),
-        attrs=F.create_map(F.lit("name"),
-                           F.concat(F.lit("wp_"), F.col("event_id"))),
-    ))
-    rpts = ev.filter(F.col("event_id") % 6 == 0).select(*rec(
-        "route_point", seq=F.col("event_id"), lap_id=F.lit(0).cast("int"),
-        lat=F.col("lat"), lon=F.col("lon"),
-    ))
-    routes = ev.select("activity_id").distinct().select(
-        *rec("route", lap_id=F.lit(0).cast("int"),
-             attrs=F.create_map(F.lit("name"), F.lit("planned")))
-    )
-    recs = points.unionByName(chans).unionByName(wpts).unionByName(rpts).unionByName(routes)
+    wpts = as_records(ev.filter(F.col("event_id") % 9 == 0).select(
+        "activity_id", F.col("event_id").alias("seq"), "ts", "lat", "lon",
+        F.create_map(F.lit("name"),
+                     F.concat(F.lit("wp_"), F.col("event_id"))).alias("attrs"),
+    ), "waypoint")
+    rpts = as_records(ev.filter(F.col("event_id") % 6 == 0).select(
+        "activity_id", F.col("event_id").alias("seq"),
+        F.lit(0).cast("int").alias("lap_id"), "lat", "lon",
+    ), "route_point")
+    routes = as_records(ev.select("activity_id").distinct().select(
+        "activity_id", F.lit(0).cast("int").alias("lap_id"),
+        F.create_map(F.lit("name"), F.lit("planned")).alias("attrs"),
+    ), "route")
+    recs = _metric_track(ev).unionByName(wpts).unionByName(rpts).unionByName(routes)
     xml = gpx_encode_records(recs)
     back = gpx_records(xml)
     agg = back.groupBy("activity_id").agg(
@@ -5915,8 +5887,8 @@ def tcx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3/S8 TCX full-document round-trip, driver-gated (reference contract:
     test/parsers/tcx_lossless_test.dart): per user, build an activity from
     events (points + heart-rate/speed/power channels + one lap spanning the
-    track), encode it to REAL TCX XML (tcx_encode_df: per-lap Track windows,
-    HeartRateBpm wrapper, TPX Speed/Watts extension), parse it back
+    track), encode it to REAL TCX XML (tcx_encode_records: per-lap Track
+    windows, HeartRateBpm wrapper, TPX Speed/Watts extension), parse it back
     (tcx_records), and aggregate what survived. The oracle computes the same
     aggregates arithmetically — a hash match proves the XML encoder/parser
     round-trips points, wrapped/extension channels, and lap metadata exactly.
@@ -5929,12 +5901,12 @@ def tcx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                    <= 6 significant digits so %g prints it exactly)
       lap distance_m = user_id                (int-valued double)
     """
-    from activity_files_spark.sources.tcx import tcx_encode_df, tcx_records
+    from activity_files_spark.sources.records import as_records
+    from activity_files_spark.sources.tcx import tcx_encode_records, tcx_records
 
     ev = _activity_events(spark, sf_dir)
     metric = _roundtrip_metric()
-    points = ev.select("activity_id", "ts", "lat", "lon",
-                       F.lit(None).cast("double").alias("ele"))
+    points = as_records(ev.select("activity_id", "ts", "lat", "lon"), "point")
     chans = ev.select(
         "activity_id", "ts",
         F.explode(F.array(
@@ -5950,7 +5922,11 @@ def tcx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts"),
         F.max(F.substring("activity_id", 2, 20).cast("double")).alias("distance_m"),
     )
-    xml = tcx_encode_df(points, chans, laps, sport="Running")
+    xml = tcx_encode_records(
+        points.unionByName(as_records(chans, "channel"))
+        .unionByName(as_records(laps, "lap")),
+        sport="Running",
+    )
     back = tcx_records(xml, xml_col="xml")
     agg = back.groupBy("activity_id").agg(
         F.count(F.when(F.col("kind") == "point", 1)).alias("n_points"),
@@ -6040,25 +6016,26 @@ def geojson_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-point channels, LineStrings recover the track and emit one lap
     (times present on first/last coordinate)."""
     from activity_files_spark.sources.geojson import (
-        geojson_encode_df,
-        geojson_encode_points_df,
+        geojson_encode_points_records,
+        geojson_encode_records,
         geojson_records,
     )
+    from activity_files_spark.sources.records import as_records
 
     ev = _activity_events(spark, sf_dir, F.col("user_id"))
     metric = _roundtrip_metric()
     even = ev.filter(F.col("user_id") % 2 == 0)
     odd = ev.filter(F.col("user_id") % 2 == 1)
     pts_cols = ["activity_id", "ts", "lat", "lon"]
-    even_docs = geojson_encode_points_df(
-        even.select(*pts_cols, F.lit(None).cast("double").alias("ele")),
-        even.select("activity_id", "ts",
-                    F.lit("custom_metric").alias("channel"),
-                    metric.alias("value")),
+    even_docs = geojson_encode_points_records(
+        as_records(even.select(*pts_cols), "point").unionByName(as_records(
+            even.select("activity_id", "ts",
+                        F.lit("custom_metric").alias("channel"),
+                        metric.alias("value")),
+            "channel",
+        ))
     )
-    odd_docs = geojson_encode_df(
-        odd.select(*pts_cols, F.lit(None).cast("double").alias("ele"))
-    )
+    odd_docs = geojson_encode_records(as_records(odd.select(*pts_cols), "point"))
     back = geojson_records(even_docs.unionByName(odd_docs))
     agg = back.groupBy("activity_id").agg(
         *_metric_aggs(),

@@ -41,7 +41,7 @@ def _load_records(spark, args):
     from activity_files_spark.sources.fit import fit_records
     from activity_files_spark.sources.geojson import geojson_records
     from activity_files_spark.sources.gpx import gpx_records
-    from activity_files_spark.sources.records import RECORD_SCHEMA
+    from activity_files_spark.sources.records import as_records
     from activity_files_spark.sources.tcx import tcx_records
 
     files = spark.read.format("binaryFile").load(args.input).select(
@@ -84,52 +84,27 @@ def _load_records(spark, args):
     # undetectable payloads become diagnostics, never silent drops
     unknown = files.filter(F.col("fmt").isNull()).select(
         F.col("activity_id"),
-        F.lit("diag").alias("kind"),
         F.create_map(
             F.lit("code"), F.lit("detect.unknown_format"),
             F.lit("severity"), F.lit("error"),
             F.lit("message"), F.lit("format not detectable"),
         ).alias("attrs"),
     )
-    spark = files.sparkSession
-    empty = spark.createDataFrame([], RECORD_SCHEMA)
-    parts.append(empty.unionByName(unknown, allowMissingColumns=True))
+    parts.append(as_records(unknown, "diag"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
 
 
-_STREAM_NULLS = {
-    "seq": "long", "ts": "timestamp", "lat": "double", "lon": "double",
-    "ele": "double", "channel": "string", "value": "double",
-    "lap_id": "int", "start_ts": "timestamp", "end_ts": "timestamp",
-    "distance_m": "double", "sport": "string",
-}
-
-
-def _widen_stream(df, kind: str):
-    """Split-table frame -> unified record-stream shape (missing columns
-    null-typed) so processed points/channels can rejoin raw stream rows."""
-    out = df.withColumn("kind", F.lit(kind))
-    for c, t in _STREAM_NULLS.items():
-        if c not in out.columns:
-            out = out.withColumn(c, F.lit(None).cast(t))
-    if "attrs" not in out.columns:
-        out = out.withColumn("attrs", F.lit(None).cast("map<string,string>"))
-    return out.select("activity_id", "kind", *_STREAM_NULLS.keys(), "attrs")
-
-
 def cmd_convert(spark, args) -> int:
     from activity_files_spark.operators.normalize import sort_dedup, trim_invalid
-    from activity_files_spark.sources.gpx import gpx_encode_df
     from activity_files_spark.sources.records import (
+        as_records,
         channels_of,
         laps_of,
-        meta_of,
         points_of,
     )
-    from activity_files_spark.sources.tcx import tcx_encode_df
 
     records = _load_records(spark, args).cache()
     autofix_diags = None
@@ -195,42 +170,42 @@ def cmd_convert(spark, args) -> int:
         event_rows.select("activity_id", "ts", "channel", "value")
     )
 
+    # one record stream for every encoder; GPX keeps no laps and the
+    # GeoJSON LineString no channels, so those two take a prefix of it
+    pts = as_records(points, "point")
+    track = pts.unionByName(as_records(channels, "channel"))
+    stream = track.unionByName(as_records(laps, "lap"))
     if args.to_fmt == "gpx":
         # GPX keeps no lap structure (lossy.laps_dropped reports it), but
         # standalone waypoints, routes, and metadata survive gpx -> gpx:
         # the normalized points/channels rejoin the source stream's
-        # waypoint/route/meta records through the lossless record-stream
-        # encoder (reference gpx_encoder.dart:125-130 writes wpt/rte
-        # before tracks)
+        # waypoint/route/meta records (reference gpx_encoder.dart:125-130
+        # writes wpt/rte before tracks)
         from activity_files_spark.sources.gpx import gpx_encode_records
 
-        stream = _widen_stream(points, "point").unionByName(
-            _widen_stream(channels, "channel")
-        ).unionByName(
-            records.filter(
-                F.col("kind").isin("waypoint", "route", "route_point", "meta")
-            )
-        )
         enc = gpx_encode_records(
-            stream,
+            track.unionByName(records.filter(
+                F.col("kind").isin("waypoint", "route", "route_point", "meta")
+            )),
             version=getattr(args, "gpx_version", "1.1"),
             coord_dp=getattr(args, "precision_latlon", 6),
             ele_dp=getattr(args, "precision_ele", 2),
         )
         payload_col = "xml"
     elif args.to_fmt == "tcx":
-        enc = tcx_encode_df(points, channels, laps,
-                            version=getattr(args, "tcx_version", "2"))
+        from activity_files_spark.sources.tcx import tcx_encode_records
+
+        enc = tcx_encode_records(stream, version=getattr(args, "tcx_version", "2"))
         payload_col = "xml"
     elif args.to_fmt == "geojson":
-        from activity_files_spark.sources.geojson import geojson_encode_df
+        from activity_files_spark.sources.geojson import geojson_encode_records
 
-        enc = geojson_encode_df(points)
+        enc = geojson_encode_records(pts)
         payload_col = "text"
     elif args.to_fmt == "fit":
-        from activity_files_spark.sources.fit import fit_encode_df
+        from activity_files_spark.sources.fit import fit_encode_records
 
-        enc = fit_encode_df(points, channels, laps)
+        enc = fit_encode_records(stream)
         payload_col = "payload"
     elif args.to_fmt == "csv":
         from activity_files_spark.sources.csvsrc import csv_encode_text_df

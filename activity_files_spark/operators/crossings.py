@@ -49,11 +49,7 @@ def _cell_partitions(df: DataFrame) -> int:
     configured shuffle width (the per-deployment scale knob), NOT a local
     constant — AQE's byte-based coalescing would otherwise serialize a
     join whose cost is candidate pairs, not bytes."""
-    spark = df.sparkSession
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # noqa: BLE001
-        return spark.sparkContext.defaultParallelism
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
 def _orient(px, py, qx, qy, ax, ay) -> Column:

@@ -40,12 +40,8 @@ def grouped_apply(
     pdf: kernel(pdf), schema)`` — same per-group frames in, same rows out,
     one Python/Arrow round-trip per partition instead of per group."""
     keys = [key] if isinstance(key, str) else list(key)
-    spark = df.sparkSession
     if nparts is None:
-        try:
-            nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:  # noqa: BLE001
-            nparts = spark.sparkContext.defaultParallelism
+        nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     def part(batches):
         import pandas as pd

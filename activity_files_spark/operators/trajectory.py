@@ -584,11 +584,7 @@ def stay_points(
             return
         yield pd.DataFrame(recs, columns=cols)
 
-    spark = pts.sparkSession
-    try:
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # noqa: BLE001
-        nparts = spark.sparkContext.defaultParallelism
+    nparts = int(pts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     src = (
         pts.select(key, seq, id_col, tss, lat, lon)
         .repartition(nparts, key)

@@ -241,13 +241,10 @@ def csv_encode_text_df(points: DataFrame, channels: DataFrame) -> DataFrame:
     # global orderBy (a full extra shuffle+sort) would be wasted work
     wide = _csv_wide(points, channels)
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         buf = _io.StringIO()
         pdf.sort_values("timestamp", kind="stable").to_csv(buf, index=False)
-        return pd.DataFrame([{"activity_id": key[0], "text": buf.getvalue()}])
+        return pd.DataFrame([{"activity_id": pdf["activity_id"].iloc[0],
+                              "text": buf.getvalue()}])
 
-    return grouped_apply(
-        wide, "activity_id",
-        lambda g: kernel((g["activity_id"].iloc[0],), g),
-        "activity_id string, text string",
-    )
+    return grouped_apply(wide, "activity_id", kernel, "activity_id string, text string")

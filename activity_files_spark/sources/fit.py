@@ -1967,59 +1967,15 @@ def fit_encode_records(records: DataFrame) -> DataFrame:
     float64 developer-field write-back), laps, swim lengths (101),
     strength sets (225), events (21), and the session/file_id metadata —
     so decode -> encode -> decode round-trips every record kind
-    (fit_encoder.dart message sequence). One applyInPandas over
+    (fit_encoder.dart message sequence). One grouped_apply over
     activity_id; each activity is an independent unit of parallelism.
     The record block is written vectorized (:func:`_encode_activity_pdf`:
     pivot-aligned channels + one numpy structured-array write) and shares
     the scalar :func:`encode_fit`'s message-framing helpers, so both paths
     emit byte-identical payloads."""
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame([
-            {"activity_id": key[0], "payload": _encode_activity_pdf(key[0], pdf)}
-        ])
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        aid = pdf["activity_id"].iloc[0]
+        return pd.DataFrame([{"activity_id": aid, "payload": _encode_activity_pdf(aid, pdf)}])
 
-    return grouped_apply(
-        records, "activity_id",
-        lambda g: kernel((g["activity_id"].iloc[0],), g),
-        "activity_id string, payload binary",
-    )
-
-
-def fit_encode_df(
-    points: DataFrame, channels: DataFrame | None = None, laps: DataFrame | None = None
-) -> DataFrame:
-    """Per-activity FIT payloads from split points/channels/laps tables
-    (CLI path) — normalized to the unified record stream and delegated to
-    :func:`fit_encode_records`."""
-    from pyspark.sql import functions as F
-
-    nulls = {
-        "seq": "long", "ts": "timestamp", "lat": "double", "lon": "double",
-        "ele": "double", "channel": "string", "value": "double",
-        "lap_id": "int", "start_ts": "timestamp", "end_ts": "timestamp",
-        "distance_m": "double", "sport": "string",
-    }
-
-    def widen(df: DataFrame, kind: str) -> DataFrame:
-        out = df.withColumn("kind", F.lit(kind))
-        for c, t in nulls.items():
-            if c not in out.columns:
-                out = out.withColumn(c, F.lit(None).cast(t))
-        if "attrs" not in out.columns:
-            out = out.withColumn("attrs", F.lit(None).cast("map<string,string>"))
-        return out.select(
-            "activity_id", "kind", *nulls.keys(), "attrs"
-        )
-
-    u = widen(points.select("activity_id", "ts", "lat", "lon", "ele"), "point")
-    if channels is not None:
-        u = u.unionByName(
-            widen(channels.select("activity_id", "channel", "ts", "value"), "channel")
-        )
-    if laps is not None:
-        cols = ["activity_id", "start_ts", "end_ts", "distance_m"] + (
-            ["lap_id"] if "lap_id" in laps.columns else []
-        ) + (["sport"] if "sport" in laps.columns else [])
-        u = u.unionByName(widen(laps.select(*cols), "lap"))
-    return fit_encode_records(u)
+    return grouped_apply(records, "activity_id", kernel, "activity_id string, payload binary")

@@ -217,20 +217,23 @@ def encode_geojson(points: list[dict], meta: dict | None = None) -> str:
     return json.dumps(doc, sort_keys=True)
 
 
-def geojson_encode_df(points: DataFrame) -> DataFrame:
-    from activity_files_spark.sources.records import fast_records
+def geojson_encode_records(records: DataFrame) -> DataFrame:
+    """Unified record stream (RECORD_SCHEMA) -> per-activity LineString
+    documents over the point rows."""
+    from activity_files_spark.sources.records import sorted_kind_idx, take_records
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        aid = key[0]
-        cols = ["ts", "lat", "lon", "ele"]
-        pts = fast_records(pdf.sort_values("ts", kind="stable"), cols)
-        return pd.DataFrame([{"activity_id": aid, "text": encode_geojson(pts)}])
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        kind = pdf["kind"].to_numpy()
+        pts = take_records(
+            pdf, sorted_kind_idx(pdf, kind, "point", ["ts"]),
+            ["ts", "lat", "lon", "ele"],
+        )
+        return pd.DataFrame([{"activity_id": pdf["activity_id"].iloc[0],
+                              "text": encode_geojson(pts)}])
 
-    return grouped_apply(
-        points.select("activity_id", "ts", "lat", "lon", "ele"), "activity_id",
-        lambda g: kernel((g["activity_id"].iloc[0],), g),
-        "activity_id string, text string",
-    )
+    # only the fields the kernel reads cross into Python (see tcx_encode_records)
+    used = records.select("activity_id", "kind", "ts", "lat", "lon", "ele")
+    return grouped_apply(used, "activity_id", kernel, "activity_id string, text string")
 
 
 def encode_geojson_points(
@@ -257,56 +260,28 @@ def encode_geojson_points(
     return json.dumps({"type": "FeatureCollection", "features": feats}, sort_keys=True)
 
 
-def geojson_encode_points_df(points: DataFrame, channels: DataFrame | None = None) -> DataFrame:
-    """Per-activity Points-variant documents (round-trips through the
-    Point-collection parser, including channels)."""
-    from pyspark.sql import functions as F
-
+def geojson_encode_points_records(records: DataFrame) -> DataFrame:
+    """Unified record stream (RECORD_SCHEMA) -> per-activity Points-variant
+    documents (round-trips through the Point-collection parser, including
+    channels)."""
     from activity_files_spark.sources.gpx import _ts_key
-
-    p2 = (
-        points.select("activity_id", "ts", "lat", "lon", "ele")
-        .withColumn("channel", F.lit(None).cast("string"))
-        .withColumn("value", F.lit(None).cast("double"))
+    from activity_files_spark.sources.records import (
+        channel_map,
+        sorted_kind_idx,
+        take_records,
     )
-    if channels is not None:
-        c2 = channels.select(
-            "activity_id", "ts",
-            F.lit(None).cast("double").alias("lat"),
-            F.lit(None).cast("double").alias("lon"),
-            F.lit(None).cast("double").alias("ele"),
-            "channel", "value",
-        )
-        u = p2.unionByName(c2)
-    else:
-        u = p2
 
-    from activity_files_spark.sources.records import sorted_kind_idx, take_records
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        aid = key[0]
-        is_ch = pdf["channel"].notna().to_numpy()
-        # reuse the kind-index helper by mapping the boolean discriminator
-        kindish = np.where(is_ch, "c", "p")
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        kind = pdf["kind"].to_numpy()
         pts = take_records(
-            pdf, sorted_kind_idx(pdf, kindish, "p", ["ts"]),
+            pdf, sorted_kind_idx(pdf, kind, "point", ["ts"]),
             ["ts", "lat", "lon", "ele"],
         )
-        ch_idx = np.nonzero(is_ch)[0]
-        chmap: dict = {}
-        for ts, cname, v in zip(
-            pdf["ts"].take(ch_idx).tolist(),
-            pdf["channel"].take(ch_idx).tolist(),
-            pdf["value"].take(ch_idx).tolist(),
-        ):
-            chmap.setdefault(_ts_key(ts), {})[cname] = v
-        return pd.DataFrame([{"activity_id": aid,
+        chmap = channel_map(pdf, kind, _ts_key)
+        return pd.DataFrame([{"activity_id": pdf["activity_id"].iloc[0],
                               "text": encode_geojson_points(pts, chmap)}])
 
-    return grouped_apply(
-        u, "activity_id",
-        lambda g: kernel((g["activity_id"].iloc[0],), g),
-        "activity_id string, text string",
+    used = records.select(
+        "activity_id", "kind", "ts", "lat", "lon", "ele", "channel", "value",
     )
+    return grouped_apply(used, "activity_id", kernel, "activity_id string, text string")

@@ -513,68 +513,6 @@ def _xml_escape(s: str) -> str:
     )
 
 
-def gpx_encode_df(
-    points: DataFrame,
-    channels: DataFrame | None = None,
-    version: str = "1.1",
-    coord_dp: int = 6,
-    ele_dp: int = 2,
-) -> DataFrame:
-    """Group points (+channels) per activity -> (activity_id, xml).
-
-    applyInPandas over the activity key: the whole activity lands in one
-    Arrow batch (reference model: one file per activity, <= 64 MB). Channels
-    ride along as long-format rows in the same union and are split back out
-    in the kernel (exact-ts association, encoder_utils.dart:9-19).
-    """
-    from pyspark.sql import functions as F
-
-    p2 = (
-        points.select("activity_id", "seq", "ts", "lat", "lon", "ele")
-        .withColumn("channel", F.lit(None).cast("string"))
-        .withColumn("value", F.lit(None).cast("double"))
-    )
-    if channels is not None:
-        c2 = channels.select(
-            "activity_id",
-            F.lit(None).cast("long").alias("seq"),
-            "ts",
-            F.lit(None).cast("double").alias("lat"),
-            F.lit(None).cast("double").alias("lon"),
-            F.lit(None).cast("double").alias("ele"),
-            "channel",
-            "value",
-        )
-        u = p2.unionByName(c2)
-    else:
-        u = p2
-
-    from activity_files_spark.sources.records import fast_records
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        aid = key[0]
-        is_ch = pdf["channel"].notna().to_numpy()
-        pt_cols = ["seq", "ts", "lat", "lon", "ele"]
-        pts = fast_records(
-            pdf.loc[~is_ch, pt_cols].sort_values("ts", kind="stable"), pt_cols
-        )
-        ch_pd = pdf.loc[is_ch, ["ts", "channel", "value"]]
-        chmap: dict = {}
-        for ts, cname, v in zip(
-            ch_pd["ts"].tolist(), ch_pd["channel"].tolist(), ch_pd["value"].tolist()
-        ):
-            chmap.setdefault(_ts_key(ts), {})[cname] = v
-        xml = encode_gpx(pts, chmap, version=version,
-                         coord_dp=coord_dp, ele_dp=ele_dp)
-        return pd.DataFrame([{"activity_id": aid, "xml": xml}])
-
-    return grouped_apply(
-        u, "activity_id",
-        lambda g: kernel((g["activity_id"].iloc[0],), g),
-        "activity_id string, xml string",
-    )
-
-
 def gpx_encode_records(
     records: DataFrame,
     version: str = "1.1",
@@ -593,14 +531,13 @@ def gpx_encode_records(
         take_records,
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        aid = key[0]
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         kind = pdf["kind"].to_numpy()
         pt_cols = ["seq", "ts", "lat", "lon", "ele", "attrs"]
         pts = take_records(
             pdf, sorted_kind_idx(pdf, kind, "point", ["ts", "seq"]), pt_cols
         )
-        chmap, _ = channel_map(pdf, kind, _ts_key)
+        chmap = channel_map(pdf, kind, _ts_key)
         wps = take_records(
             pdf, sorted_kind_idx(pdf, kind, "waypoint", ["seq"]), pt_cols
         )
@@ -623,10 +560,6 @@ def gpx_encode_records(
         meta = meta_attrs(pdf, kind)
         xml = encode_gpx(pts, chmap, meta=meta, waypoints=wps, routes=routes,
                          version=version, coord_dp=coord_dp, ele_dp=ele_dp)
-        return pd.DataFrame([{"activity_id": aid, "xml": xml}])
+        return pd.DataFrame([{"activity_id": pdf["activity_id"].iloc[0], "xml": xml}])
 
-    return grouped_apply(
-        records, "activity_id",
-        lambda g: kernel((g["activity_id"].iloc[0],), g),
-        "activity_id string, xml string",
-    )
+    return grouped_apply(records, "activity_id", kernel, "activity_id string, xml string")

@@ -28,17 +28,30 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-RECORD_SCHEMA = (
-    "activity_id string, kind string, seq long, ts timestamp, "
-    "lat double, lon double, ele double, channel string, value double, "
-    "lap_id int, start_ts timestamp, end_ts timestamp, distance_m double, "
-    "sport string, attrs map<string,string>"
-)
+# the record stream's fields and Spark types, declared once
+RECORD_TYPES = {
+    "activity_id": "string", "kind": "string", "seq": "long",
+    "ts": "timestamp", "lat": "double", "lon": "double", "ele": "double",
+    "channel": "string", "value": "double", "lap_id": "int",
+    "start_ts": "timestamp", "end_ts": "timestamp", "distance_m": "double",
+    "sport": "string", "attrs": "map<string,string>",
+}
 
-RECORD_FIELDS = [
-    "activity_id", "kind", "seq", "ts", "lat", "lon", "ele", "channel",
-    "value", "lap_id", "start_ts", "end_ts", "distance_m", "sport", "attrs",
-]
+RECORD_FIELDS = list(RECORD_TYPES)
+
+RECORD_SCHEMA = ", ".join(f"{c} {t}" for c, t in RECORD_TYPES.items())
+
+
+def as_records(df: DataFrame, kind: str) -> DataFrame:
+    """Widen a split-table frame (points, channels, laps, ...) to the record
+    stream: ``df``'s record-field columns are kept, ``kind`` is set, and
+    every other field is a typed null, in RECORD_FIELDS order."""
+    return df.select(*(
+        F.lit(kind).alias(c) if c == "kind"
+        else F.col(c) if c in df.columns
+        else F.lit(None).cast(t).alias(c)
+        for c, t in RECORD_TYPES.items()
+    ))
 
 
 def records_frame(rows: list[dict]) -> pd.DataFrame:
@@ -66,16 +79,6 @@ def normalize_records(df: pd.DataFrame) -> pd.DataFrame:
     for c in ("activity_id", "kind", "channel", "sport"):
         df[c] = df[c].apply(lambda v: v if isinstance(v, str) else None)
     return df
-
-
-def fast_records(pdf: pd.DataFrame, cols: list[str]) -> list[dict]:
-    """list-of-dicts over selected columns via vectorized Series.tolist() —
-    ~10x pandas to_dict('records')/itertuples on small mixed-dtype frames
-    (those materialize every cell through per-row indexing). datetime64
-    cells come back as pd.Timestamp/NaT, numeric NaN as float('nan') —
-    the same cell values to_dict('records') produces."""
-    data = [pdf[c].tolist() for c in cols]
-    return [dict(zip(cols, vals)) for vals in zip(*data)]
 
 
 # --- numpy-first group-kernel helpers -----------------------------------
@@ -113,34 +116,31 @@ def sorted_kind_idx(pdf: pd.DataFrame, kind_arr, kind: str, keys: list[str]):
 
 
 def take_records(pdf: pd.DataFrame, idx, cols: list[str]) -> list[dict]:
-    """:func:`fast_records` over a positional row subset, without the
-    intermediate sliced frame."""
+    """list-of-dicts over a positional row subset and selected columns via
+    vectorized Series.take().tolist() — ~10x pandas to_dict('records') on
+    small mixed-dtype frames. datetime64 cells come back as
+    pd.Timestamp/NaT, numeric NaN as float('nan'), the same cell values
+    to_dict('records') produces."""
     if len(idx) == 0:
         return []
     data = [pdf[c].take(idx).tolist() for c in cols]
     return [dict(zip(cols, vals)) for vals in zip(*data)]
 
 
-def channel_map(pdf: pd.DataFrame, kind_arr, ts_key_fn, event_channel=None):
-    """(chmap, events) from the channel rows: chmap maps ts_key_fn(ts) ->
-    {channel: value} with last-encounter-wins on duplicates; rows whose
-    channel equals ``event_channel`` are split into the events list."""
+def channel_map(pdf: pd.DataFrame, kind_arr, ts_key_fn) -> dict:
+    """ts_key_fn(ts) -> {channel: value} over the channel rows, with
+    last-encounter-wins on duplicates."""
     import numpy as np
 
     idx = np.nonzero(kind_arr == "channel")[0]
     chmap: dict = {}
-    events: list[dict] = []
-    if len(idx) == 0:
-        return chmap, events
-    ts_l = pdf["ts"].take(idx).tolist()
-    cn_l = pdf["channel"].take(idx).tolist()
-    v_l = pdf["value"].take(idx).tolist()
-    for t, c, v in zip(ts_l, cn_l, v_l):
-        if event_channel is not None and c == event_channel:
-            events.append({"ts": t, "value": v})
-        else:
-            chmap.setdefault(ts_key_fn(t), {})[c] = v
-    return chmap, events
+    for t, c, v in zip(
+        pdf["ts"].take(idx).tolist(),
+        pdf["channel"].take(idx).tolist(),
+        pdf["value"].take(idx).tolist(),
+    ):
+        chmap.setdefault(ts_key_fn(t), {})[c] = v
+    return chmap
 
 
 def meta_attrs(pdf: pd.DataFrame, kind_arr) -> dict:

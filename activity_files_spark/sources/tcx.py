@@ -272,87 +272,36 @@ def encode_tcx(points, channels_by_ts, laps, sport: str = "Running",
     return buf.getvalue()
 
 
-def tcx_encode_df(
-    points: DataFrame, channels: DataFrame | None = None, laps: DataFrame | None = None,
-    sport: str = "Running", version: str = "2",
+def tcx_encode_records(
+    records: DataFrame, sport: str = "Running", version: str = "2",
 ) -> DataFrame:
-    """Per-activity TCX documents (same union+kernel shape as gpx_encode_df)."""
-    from pyspark.sql import functions as F
-
+    """Unified record stream (RECORD_SCHEMA) -> per-activity TCX documents:
+    points, channels and laps; other record kinds are ignored."""
     from activity_files_spark.sources.gpx import _ts_key
-
-    p2 = (
-        points.select("activity_id", "ts", "lat", "lon", "ele")
-        .withColumn("channel", F.lit(None).cast("string"))
-        .withColumn("value", F.lit(None).cast("double"))
-        .withColumn("_kind", F.lit("p"))
-        .withColumn("start_ts", F.lit(None).cast("timestamp"))
-        .withColumn("end_ts", F.lit(None).cast("timestamp"))
-        .withColumn("distance_m", F.lit(None).cast("double"))
-    )
-    parts = [p2]
-    if channels is not None:
-        parts.append(
-            channels.select(
-                "activity_id", "ts",
-                F.lit(None).cast("double").alias("lat"),
-                F.lit(None).cast("double").alias("lon"),
-                F.lit(None).cast("double").alias("ele"),
-                "channel", "value",
-            ).withColumn("_kind", F.lit("c"))
-            .withColumn("start_ts", F.lit(None).cast("timestamp"))
-            .withColumn("end_ts", F.lit(None).cast("timestamp"))
-            .withColumn("distance_m", F.lit(None).cast("double"))
-        )
-    if laps is not None:
-        parts.append(
-            laps.select(
-                "activity_id",
-                F.lit(None).cast("timestamp").alias("ts"),
-                F.lit(None).cast("double").alias("lat"),
-                F.lit(None).cast("double").alias("lon"),
-                F.lit(None).cast("double").alias("ele"),
-                F.lit(None).cast("string").alias("channel"),
-                F.lit(None).cast("double").alias("value"),
-                F.lit("l").alias("_kind"),
-                "start_ts", "end_ts", "distance_m",
-            )
-        )
-    u = parts[0]
-    for x in parts[1:]:
-        u = u.unionByName(x)
-
     from activity_files_spark.sources.records import (
         channel_map,
         sorted_kind_idx,
         take_records,
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        aid = key[0]
-        kind = pdf["_kind"].to_numpy()
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        kind = pdf["kind"].to_numpy()
         pts = take_records(
-            pdf, sorted_kind_idx(pdf, kind, "p", ["ts"]),
+            pdf, sorted_kind_idx(pdf, kind, "point", ["ts"]),
             ["ts", "lat", "lon", "ele"],
         )
-        # the _kind discriminator uses "c" for channel rows
-        ch_idx = sorted_kind_idx(pdf, kind, "c", [])
-        chmap: dict = {}
-        for ts, cname, v in zip(
-            pdf["ts"].take(ch_idx).tolist(),
-            pdf["channel"].take(ch_idx).tolist(),
-            pdf["value"].take(ch_idx).tolist(),
-        ):
-            chmap.setdefault(_ts_key(ts), {})[cname] = v
+        chmap = channel_map(pdf, kind, _ts_key)
         lp = take_records(
-            pdf, sorted_kind_idx(pdf, kind, "l", ["start_ts"]),
+            pdf, sorted_kind_idx(pdf, kind, "lap", ["start_ts"]),
             ["start_ts", "end_ts", "distance_m"],
         )
         xml = encode_tcx(pts, chmap, lp, sport=sport, version=version)
-        return pd.DataFrame([{"activity_id": aid, "xml": xml}])
+        return pd.DataFrame([{"activity_id": pdf["activity_id"].iloc[0], "xml": xml}])
 
-    return grouped_apply(
-        u, "activity_id",
-        lambda g: kernel((g["activity_id"].iloc[0],), g),
-        "activity_id string, xml string",
+    # ship only the fields the kernel reads: every unused stream column
+    # (null or not) still pays the Arrow -> pandas conversion per row
+    used = records.select(
+        "activity_id", "kind", "ts", "lat", "lon", "ele", "channel", "value",
+        "start_ts", "end_ts", "distance_m",
     )
+    return grouped_apply(used, "activity_id", kernel, "activity_id string, xml string")

@@ -366,6 +366,38 @@ def test_cli_convert_gpx_precision_options(spark, tmp_path):
     assert "<ele>1600.5</ele>" in out
 
 
+@pytest.mark.parametrize("fmt", ["gpx", "tcx", "geojson", "fit", "csv"])
+def test_cli_convert_every_format_reads_back(spark, tmp_path, fmt):
+    """Every `convert --to` branch encodes the fixture's points, and the
+    target format's own parser reads them back."""
+    from activity_files_spark.cli import main
+    from activity_files_spark.sources.csvsrc import csv_records
+    from activity_files_spark.sources.fit import fit_records
+    from activity_files_spark.sources.geojson import geojson_records
+    from activity_files_spark.sources.gpx import gpx_records
+    from activity_files_spark.sources.records import points_of
+    from activity_files_spark.sources.tcx import tcx_records
+    from tests.test_sources_roundtrip import EXPECTED_PTS, SAMPLE_GPX
+
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "a.gpx").write_text(SAMPLE_GPX)
+    out = str(tmp_path / "out")
+    rc = main(["convert", "--input", str(d), "--from", "auto", "--to", fmt,
+               "--output", out])
+    assert rc == 0
+    parse = {"gpx": gpx_records, "tcx": tcx_records, "geojson": geojson_records,
+             "fit": fit_records, "csv": csv_records}[fmt]
+    # each parser's default payload column is the one its encoder writes
+    rows = points_of(parse(spark.read.parquet(out))).collect()
+    got = sorted(((r["lat"], r["lon"], r["ele"], str(r["ts"])) for r in rows),
+                 key=lambda t: t[3])
+    assert len(got) == len(EXPECTED_PTS)
+    for g, e in zip(got, EXPECTED_PTS):
+        # FIT stores lat/lon as semicircles: equal to ~1e-7 degrees
+        assert g[:3] == pytest.approx(e[:3], abs=1e-6) and g[3] == e[3]
+
+
 def test_snap_channels_to_points_tolerance(spark):
     """Encoder channel association (channel_mapper.dart): a clock-skewed HR
     sample within tolerance snaps to the nearest point ts; one beyond

@@ -12,12 +12,13 @@ from activity_files_spark.sources.fit import (
     FIT_EPOCH_UNIX,
     encode_fit,
     fit_crc16,
-    fit_encode_df,
+    fit_encode_records,
     fit_records,
     parse_fit,
     _sanitize_dev_name,
 )
 from activity_files_spark.sources.records import (
+    as_records,
     channels_of,
     diagnostics_of,
     laps_of,
@@ -126,7 +127,9 @@ def test_fit_spark_roundtrip(spark):
         [("act_000", p["ts"], "heart_rate", float(h)) for p, h in zip(PTS, [140, 142, 145])],
         "activity_id string, ts timestamp, channel string, value double",
     )
-    enc = fit_encode_df(pts_df, ch_df).collect()
+    enc = fit_encode_records(
+        as_records(pts_df, "point").unionByName(as_records(ch_df, "channel"))
+    ).collect()
     assert len(enc) == 1
     files = spark.createDataFrame(
         [("act_000", bytes(enc[0]["payload"]))], "activity_id string, payload binary"

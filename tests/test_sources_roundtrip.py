@@ -10,20 +10,21 @@ from pyspark.sql import functions as F
 
 from activity_files_spark.sources.csvsrc import csv_encode_df, read_csv_activities
 from activity_files_spark.sources.geojson import (
-    geojson_encode_df,
+    geojson_encode_records,
     geojson_geofences,
     geojson_records,
     parse_geojson,
 )
-from activity_files_spark.sources.gpx import gpx_encode_df, gpx_records, parse_gpx
+from activity_files_spark.sources.gpx import gpx_encode_records, gpx_records, parse_gpx
 from activity_files_spark.sources.records import (
+    as_records,
     channels_of,
     diagnostics_of,
     laps_of,
     points_of,
     waypoints_of,
 )
-from activity_files_spark.sources.tcx import parse_tcx, tcx_encode_df, tcx_records
+from activity_files_spark.sources.tcx import parse_tcx, tcx_encode_records, tcx_records
 
 SAMPLE_GPX = """<?xml version="1.0" encoding="UTF-8"?>
 <gpx version="1.1" creator="test" xmlns="http://www.topografix.com/GPX/1/1"
@@ -127,7 +128,10 @@ def test_gpx_parse_canonical(spark, gpx_df):
 
 def test_gpx_roundtrip_lossless(spark, gpx_df):
     rec = gpx_records(gpx_df).cache()
-    xml2 = gpx_encode_df(points_of(rec), channels_of(rec)).collect()[0]["xml"]
+    xml2 = gpx_encode_records(
+        as_records(points_of(rec), "point")
+        .unionByName(as_records(channels_of(rec), "channel"))
+    ).collect()[0]["xml"]
     rec2 = gpx_records(
         spark.createDataFrame([("act_000", xml2)], "activity_id string, xml string")
     ).cache()
@@ -172,8 +176,11 @@ def test_tcx_parse_canonical(spark):
 def test_tcx_roundtrip_lossless(spark):
     df = spark.createDataFrame([("act_000", SAMPLE_TCX)], "activity_id string, xml string")
     rec = tcx_records(df).cache()
-    xml2 = tcx_encode_df(
-        points_of(rec), channels_of(rec), laps_of(rec), sport="Running"
+    xml2 = tcx_encode_records(
+        as_records(points_of(rec), "point")
+        .unionByName(as_records(channels_of(rec), "channel"))
+        .unionByName(as_records(laps_of(rec), "lap")),
+        sport="Running",
     ).collect()[0]["xml"]
     rec2 = tcx_records(
         spark.createDataFrame([("act_000", xml2)], "activity_id string, xml string")
@@ -194,7 +201,9 @@ def test_geojson_linestring_with_times(spark):
 def test_geojson_roundtrip(spark):
     df = spark.createDataFrame([("act_000", SAMPLE_GEOJSON)], "activity_id string, text string")
     rec = geojson_records(df).cache()
-    text2 = geojson_encode_df(points_of(rec)).collect()[0]["text"]
+    text2 = geojson_encode_records(
+        as_records(points_of(rec), "point")
+    ).collect()[0]["text"]
     rec2 = geojson_records(
         spark.createDataFrame([("act_000", text2)], "activity_id string, text string")
     )
@@ -284,13 +293,16 @@ def test_gpx_encoder_waypoints(spark):
 
 
 def test_geojson_points_variant_roundtrip(spark):
-    from activity_files_spark.sources.geojson import geojson_encode_points_df
+    from activity_files_spark.sources.geojson import geojson_encode_points_records
 
     df = spark.createDataFrame([("act_000", SAMPLE_GPX)], "activity_id string, xml string")
     from activity_files_spark.sources.gpx import gpx_records
 
     rec = gpx_records(df).cache()
-    text = geojson_encode_points_df(points_of(rec), channels_of(rec)).collect()[0]["text"]
+    text = geojson_encode_points_records(
+        as_records(points_of(rec), "point")
+        .unionByName(as_records(channels_of(rec), "channel"))
+    ).collect()[0]["text"]
     rec2 = geojson_records(
         spark.createDataFrame([("act_000", text)], "activity_id string, text string")
     ).cache()
@@ -403,6 +415,40 @@ def test_gpx_extension_tree_preserved_roundtrip():
     assert routes2[0]["attrs"]["name"] == "Morning commute"
     assert rpts2 == [(0, 40.0, -105.0, 1600.0), (1, 40.1, -105.1, 1610.5),
                      (2, 40.2, -105.2, None)]
+
+
+def test_as_records_widens_split_tables(spark):
+    """as_records: point, channel and lap tables widen to exactly
+    RECORD_SCHEMA, and the split-table extractors return the input rows."""
+    from activity_files_spark.sources.records import RECORD_SCHEMA
+
+    t0, t1 = datetime(2024, 3, 1, 10, 0, 0), datetime(2024, 3, 1, 10, 0, 10)
+    pts = spark.createDataFrame(
+        [("a", 0, t0, 40.0, -105.0, 1600.0, {"k": "v"}),
+         ("a", 1, t1, 40.0005, -105.0005, None, None)],
+        "activity_id string, seq long, ts timestamp, lat double, lon double, "
+        "ele double, attrs map<string,string>",
+    )
+    chs = spark.createDataFrame(
+        [("a", "heart_rate", t0, 140.0), ("a", "cadence", t1, 84.0)],
+        "activity_id string, channel string, ts timestamp, value double",
+    )
+    laps = spark.createDataFrame(
+        [("a", 0, t0, t1, 70.0, "running", {"calories": "12"})],
+        "activity_id string, lap_id int, start_ts timestamp, end_ts timestamp, "
+        "distance_m double, sport string, attrs map<string,string>",
+    )
+    want = [(f.name, f.dataType) for f in spark.createDataFrame([], RECORD_SCHEMA).schema]
+    stream = None
+    for df, kind, split in ((pts, "point", points_of), (chs, "channel", channels_of),
+                            (laps, "lap", laps_of)):
+        w = as_records(df, kind)
+        assert [(f.name, f.dataType) for f in w.schema] == want
+        assert split(w).collect() == df.collect()
+        stream = w if stream is None else stream.unionByName(w)
+    assert sorted(points_of(stream).collect()) == sorted(pts.collect())
+    assert sorted(channels_of(stream).collect()) == sorted(chs.collect())
+    assert laps_of(stream).collect() == laps.collect()
 
 
 def test_gpx_encode_records_stream(spark):
