@@ -866,7 +866,6 @@ def route_cell_cover_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _route_cell_cover_sql() -> str:
-    from activity_files_spark.functions.quadkey import tile_xy_sql
     from activity_files_spark.operators.supercover import segment_cover_sql
 
     x, y = tile_xy_sql("lat", "lon", COVER_Z + COVER_Q)
@@ -937,7 +936,6 @@ def route_crossings_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _route_crossings_sql() -> str:
-    from activity_files_spark.functions.quadkey import tile_xy_sql
     from activity_files_spark.operators.crossings import proper_cross_sql
 
     x, y = tile_xy_sql("lat", "lon", COVER_Z + COVER_Q)
@@ -1071,7 +1069,6 @@ def crossing_points_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _crossing_points_sql() -> str:
-    from activity_files_spark.functions.quadkey import tile_xy_sql
     from activity_files_spark.operators.crossings import proper_cross_sql
 
     x, y = tile_xy_sql("lat", "lon", COVER_Z + COVER_Q)
@@ -1125,7 +1122,6 @@ def densify_track_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers on the mercator lattice (a haversine-derived ceil would flip
     on a 1-ulp trig divergence); the lerp is the identical IEEE tree in
     both engines, so interpolated coordinates hash-gate bit-for-bit."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.densify import densify_tracks
 
     ev = _read(spark, sf_dir, "events").select(
@@ -1163,7 +1159,6 @@ def densify_track_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _densify_sql() -> str:
-    from activity_files_spark.functions.quadkey import tile_xy_sql
     from activity_files_spark.operators.densify import densify_sql
 
     x, y = tile_xy_sql("lat", "lon", COVER_Z + COVER_Q)
@@ -1199,7 +1194,6 @@ def morans_i_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the z14 cell counts — queen contiguity, exact integer expansion
     (N²P - 2NST + WS²) / (W(N·SS - S²)), one final int→double division,
     so the statistic itself hash-gates bit-for-bit."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.autocorr import morans_i
 
     ev = _read(spark, sf_dir, "events").select(
@@ -1215,7 +1209,6 @@ def morans_i_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _morans_i_sql() -> str:
-    from activity_files_spark.functions.quadkey import tile_xy_sql
     from activity_files_spark.operators.autocorr import morans_i_sql
 
     x, y = tile_xy_sql("lat", "lon", MORAN_Z)
@@ -1238,7 +1231,6 @@ def gi_star_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-scores of the queen+self neighborhood sum — the LOCAL companion of
     morans_i_cells. Every term under the sqrt is exact BIGINT; the float
     tail is one fixed expression tree, so z-scores hash-gate bit-for-bit."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.autocorr import getis_ord_gi_star
 
     ev = _read(spark, sf_dir, "events").select(
@@ -1254,7 +1246,6 @@ def gi_star_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gi_star_sql() -> str:
-    from activity_files_spark.functions.quadkey import tile_xy_sql
     from activity_files_spark.operators.autocorr import getis_ord_gi_star_sql
 
     x, y = tile_xy_sql("lat", "lon", MORAN_Z)
@@ -1307,7 +1298,6 @@ def route_simplicity_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _route_simplicity_sql() -> str:
-    from activity_files_spark.functions.quadkey import tile_xy_sql
     from activity_files_spark.operators.crossings import proper_cross_sql
 
     x, y = tile_xy_sql("lat", "lon", COVER_Z + COVER_Q)
@@ -1359,7 +1349,6 @@ def route_fraction_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     all exact BIGINT — a haversine cumsum would flip brackets between
     DuckDB's segment-tree and Spark's sequential window summation. The
     lerp is the fixed IEEE tail, bit-identical across engines."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.densify import line_interpolate_points
 
     ev = _read(spark, sf_dir, "events").select(
@@ -1382,7 +1371,6 @@ def route_fraction_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _route_fraction_sql() -> str:
-    from activity_files_spark.functions.quadkey import tile_xy_sql
     from activity_files_spark.operators.densify import line_interpolate_sql
 
     x, y = tile_xy_sql("lat", "lon", COVER_Z + COVER_Q)
@@ -1412,7 +1400,6 @@ def emerging_hotspots_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     series — S is a pure integer of sign comparisons over bit-identical
     doubles, so the rising/falling classification can never sit on an
     engine-dependent boundary."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.autocorr import (
         getis_ord_gi_star,
         mann_kendall_trend,
@@ -1455,7 +1442,6 @@ def emerging_hotspots_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emerging_hotspots_sql() -> str:
-    from activity_files_spark.functions.quadkey import tile_xy_sql
     from activity_files_spark.operators.autocorr import getis_ord_gi_star_sql
 
     x, y = tile_xy_sql("lat", "lon", MORAN_Z)
@@ -1571,7 +1557,6 @@ def region_cover_lookup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves: the cover rows are the pushed-down range predicates; the
     9-way ancestor explode stands in for the interleaved-key range scan
     a real index would do."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.coverer import region_quad_cover
 
     rects = _qc_rects(_read(spark, sf_dir, "nation"))
@@ -1620,7 +1605,6 @@ def region_cover_lookup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _region_cover_lookup_sql() -> str:
     """Independent oracle: DIRECT rect containment on the z_max lattice —
     deliberately NOT a replay of the quadtree cover."""
-    from activity_files_spark.functions.quadkey import tile_xy_sql
 
     x, y = tile_xy_sql("lat", "lon", QC_ZMAX)
     return f"""
@@ -1883,7 +1867,6 @@ def route_buffer_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct, then y), the oracle the one-shot (2r+1)^2 square expansion,
     so the hash gate checks the separability argument itself. Cell-id
     sums pin the exact buffered cell SET, not just counts."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.operators.raster import dilate_cells
 
     z, r = 15, 2
@@ -1909,7 +1892,6 @@ def route_buffer_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _route_buffer_sql() -> str:
-    from activity_files_spark.functions.quadkey import tile_xy_sql
     from activity_files_spark.operators.raster import dilate_cells_sql
 
     z, r = 15, 2
@@ -2206,7 +2188,6 @@ def stream_cell_cover_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     across micro-batches, so the chunked stream covers exactly the cells
     the batch polyline does — the gate replays the BATCH oracle verbatim,
     proving chunk-boundary state handling, not just the enumeration."""
-    from activity_files_spark.functions.quadkey import tile_xy_col
     from activity_files_spark.streaming.stream_ops import stream_cell_cover
 
     src = _events_stream(spark, sf_dir)
@@ -6257,7 +6238,6 @@ def hull_metrics_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
     polygon-centroid numerator sums. All edge terms are plain IEEE
     multiplies (plus the bit-identical haversine twin), summed through the
     decimal-exact discipline, so the oracle replays every edge."""
-    from activity_files_spark.functions.geo import haversine_m
     from activity_files_spark.operators.hull import convex_hull
 
     pts = _hull_spiral_pts(spark, sf_dir)
@@ -6306,7 +6286,6 @@ def hull_metrics_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hull_metrics_sql() -> str:
-    from activity_files_spark.functions.geo import haversine_sql
     from activity_files_spark.operators.hull import convex_hull_sql
 
     body = convex_hull_sql("spiral")

@@ -26,6 +26,8 @@ import struct
 
 import numpy as np
 
+from activity_files_spark.codecs.crc import flac_crc8, flac_crc16
+
 _FIXED_COEFS = {
     0: [],
     1: [1],
@@ -33,49 +35,6 @@ _FIXED_COEFS = {
     3: [3, -3, 1],
     4: [4, -6, 4, -1],
 }
-
-
-# ---------------------------------------------------------------------------
-# CRCs (polynomials fixed by the FLAC spec)
-# ---------------------------------------------------------------------------
-
-
-def _make_crc8_table():
-    tbl = []
-    for b in range(256):
-        c = b
-        for _ in range(8):
-            c = ((c << 1) ^ 0x07) & 0xFF if c & 0x80 else (c << 1) & 0xFF
-        tbl.append(c)
-    return tbl
-
-
-def _make_crc16_table():
-    tbl = []
-    for b in range(256):
-        c = b << 8
-        for _ in range(8):
-            c = ((c << 1) ^ 0x8005) & 0xFFFF if c & 0x8000 else (c << 1) & 0xFFFF
-        tbl.append(c)
-    return tbl
-
-
-_CRC8 = _make_crc8_table()
-_CRC16 = _make_crc16_table()
-
-
-def flac_crc8(data: bytes) -> int:
-    c = 0
-    for b in data:
-        c = _CRC8[c ^ b]
-    return c
-
-
-def flac_crc16(data: bytes) -> int:
-    c = 0
-    for b in data:
-        c = _CRC16[((c >> 8) ^ b) & 0xFF] ^ ((c << 8) & 0xFFFF)
-    return c
 
 
 # ---------------------------------------------------------------------------

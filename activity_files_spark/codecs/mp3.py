@@ -43,6 +43,8 @@ import struct
 
 import numpy as np
 
+from activity_files_spark.codecs.crc import crc16_mpeg
+
 # bitrate tables in kbit/s, header index 1..14 (0 = free, 15 = invalid)
 _BITRATES = {
     # (version_group, layer): V1 = MPEG1, V2 = MPEG2 & 2.5
@@ -89,18 +91,6 @@ def side_info_length(version: str, channel_mode: str) -> int:
     if version == "MPEG1":
         return 17 if channel_mode == "mono" else 32
     return 9 if channel_mode == "mono" else 17
-
-
-def crc16_mpeg(data: bytes, init: int = 0xFFFF) -> int:
-    """CRC-16 with poly 0x8005, MSB-first, init 0xFFFF, no final xor —
-    the MPEG audio protection polynomial (same generator as FIT's CRC but
-    opposite bit order; cf. sources/fit.py)."""
-    crc = init
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005 if crc & 0x8000 else crc << 1) & 0xFFFF
-    return crc
 
 
 def _parse_header(word: int) -> dict | None:

@@ -21,7 +21,7 @@ an exact multiple of 255 bytes therefore ends with a 0 lacing value); a
 page that fills all 255 segments mid-packet continues on the next page.
 The CRC is the unreflected CRC-32/POSIX-style polynomial 0x04C11DB7 with
 zero init and zero xor-out, computed over the page with the CRC field
-zeroed.
+zeroed (codecs/crc.py runs it through zlib over bit-reversed bytes).
 
 FLAC-to-Ogg mapping: the first packet (alone on the BOS page) is
   0x7F "FLAC" major minor n_header_packets(2 BE) "fLaC" STREAMINFO-block
@@ -38,87 +38,12 @@ import struct
 
 import numpy as np
 
+from activity_files_spark.codecs.crc import ogg_crc
 from activity_files_spark.codecs.flac import (
     encode_frames,
     parse_flac,
     streaminfo_block,
 )
-
-_MAX_PAGE_PAYLOAD = 255 * 255  # 255 lacing values of 255 bytes
-
-
-def _make_ogg_crc_table() -> np.ndarray:
-    tbl = np.zeros(256, dtype=np.uint32)
-    for i in range(256):
-        r = i << 24
-        for _ in range(8):
-            r = ((r << 1) ^ 0x04C11DB7) if r & 0x80000000 else (r << 1)
-            r &= 0xFFFFFFFF
-        tbl[i] = r
-    return tbl
-
-
-_CRC_TABLE = _make_ogg_crc_table()
-_CRC_LIST = [int(x) for x in _CRC_TABLE]  # python ints for the scalar loop
-
-_CRC_ROW_W = 64  # vectorized row width (bytes per numpy column pass)
-_crc_shift_tables: tuple | None = None
-
-
-def _crc_shift_w():
-    """Tables for the GF(2)-linear map L = "advance the CRC-32 state past
-    _CRC_ROW_W zero bytes", decomposed per state byte (linearity):
-    L(s) = t0[s & 0xFF] ^ t1[(s >> 8) & 0xFF] ^ t2[(s >> 16) & 0xFF] ^
-    t3[s >> 24]. Same construction as the FIT CRC-16 bulk path
-    (sources/fit.py), flipped to the MSB-first polynomial."""
-    global _crc_shift_tables
-    if _crc_shift_tables is None:
-        tbl = _CRC_LIST
-
-        def zeros_update(s: int) -> int:
-            for _ in range(_CRC_ROW_W):
-                s = ((s << 8) & 0xFFFFFFFF) ^ tbl[(s >> 24) & 0xFF]
-            return s
-
-        _crc_shift_tables = tuple(
-            [zeros_update(b << (8 * k)) for b in range(256)] for k in range(4)
-        )
-    return _crc_shift_tables
-
-
-def ogg_crc(data: bytes) -> int:
-    """Unreflected CRC-32 poly 0x04C11DB7, init 0, xorout 0 (RFC 3533).
-
-    Pages run up to ~65 KB, so beyond a few hundred bytes the bulk path
-    computes 64-byte-row CRCs simultaneously with numpy column passes and
-    chains rows through the precomputed zero-advance map — bit-identical
-    to the byte loop (property-tested against a bit-at-a-time reference)."""
-    crc = 0
-    n = len(data)
-    if n < 4 * _CRC_ROW_W:
-        tbl = _CRC_LIST
-        for b in data:
-            crc = ((crc << 8) & 0xFFFFFFFF) ^ tbl[((crc >> 24) ^ b) & 0xFF]
-        return crc
-    rows = n // _CRC_ROW_W
-    a = np.frombuffer(data, np.uint8, rows * _CRC_ROW_W).reshape(rows, _CRC_ROW_W)
-    tbl32 = _CRC_TABLE
-    y = np.zeros(rows, np.uint32)
-    for c in range(_CRC_ROW_W):
-        y = ((y << np.uint32(8)) ^ tbl32[((y >> np.uint32(24)) ^ a[:, c]) & 0xFF])
-    t0, t1, t2, t3 = _crc_shift_w()
-    for ry in y.tolist():
-        crc = (
-            t0[crc & 0xFF]
-            ^ t1[(crc >> 8) & 0xFF]
-            ^ t2[(crc >> 16) & 0xFF]
-            ^ t3[crc >> 24]
-            ^ ry
-        )
-    tbl = _CRC_LIST
-    for b in data[rows * _CRC_ROW_W :]:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ tbl[((crc >> 24) ^ b) & 0xFF]
-    return crc
 
 
 def _emit_page(

@@ -70,30 +70,35 @@ def quadkey_np(lat: np.ndarray, lon: np.ndarray, z: int) -> np.ndarray:
     return out
 
 
-def _tile_xy_col(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
-    n = 1 << z
+def mercator_xy01_col(lat: Column, lon: Column) -> tuple[Column, Column]:
+    """Unit-square web-mercator projection (x01, y01) as Column
+    expressions, latitude clamped to +-MAX_LAT; tile indexes at any zoom
+    derive from it with :func:`tile_index_col`."""
     lat_c = F.greatest(F.least(lat, F.lit(MAX_LAT)), F.lit(-MAX_LAT))
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))).cast("long")
+    x01 = (lon + F.lit(180.0)) / F.lit(360.0)
     sin_lat = F.sin(lat_c * F.lit(math.pi) / F.lit(180.0))
-    y = F.floor(
-        (
-            F.lit(0.5)
-            - F.log((F.lit(1.0) + sin_lat) / (F.lit(1.0) - sin_lat)) / F.lit(4.0 * math.pi)
-        )
-        * F.lit(float(n))
-    ).cast("long")
-    clamp = lambda c: F.greatest(F.least(c, F.lit(n - 1)), F.lit(0))  # noqa: E731
-    return clamp(x), clamp(y)
+    y01 = F.lit(0.5) - F.log(
+        (F.lit(1.0) + sin_lat) / (F.lit(1.0) - sin_lat)
+    ) / F.lit(4.0 * math.pi)
+    return x01, y01
+
+
+def tile_index_col(v01: Column, z: int) -> Column:
+    """floor(v01 * 2^z) clamped to [0, 2^z - 1], as a long Column."""
+    n = 1 << z
+    t = F.floor(v01 * F.lit(float(n))).cast("long")
+    return F.greatest(F.least(t, F.lit(n - 1)), F.lit(0))
 
 
 def tile_xy_col(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
     """Native Column expressions for (tile_x, tile_y) at zoom z."""
-    return _tile_xy_col(lat, lon, z)
+    x01, y01 = mercator_xy01_col(lat, lon)
+    return tile_index_col(x01, z), tile_index_col(y01, z)
 
 
 def quadkey_col(lat: Column, lon: Column, z: int) -> Column:
     """Quadkey string as a pure Column expression (2z bit-ops, codegen'd)."""
-    x, y = _tile_xy_col(lat, lon, z)
+    x, y = tile_xy_col(lat, lon, z)
     digits = []
     for i in range(z, 0, -1):
         d = (
@@ -146,7 +151,7 @@ def cell_id_py(lat: float, lon: float, z: int) -> int:
 
 def cell_id_col(lat: Column, lon: Column, z: int) -> Column:
     """Packed-long cell id as a native Column expression."""
-    x, y = _tile_xy_col(lat, lon, z)
+    x, y = tile_xy_col(lat, lon, z)
     return F.shiftleft(x, z).bitwiseOR(y)
 
 

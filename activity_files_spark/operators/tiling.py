@@ -21,8 +21,6 @@ At 10^12 rows the tile_assign output is written partitioned by
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -30,35 +28,21 @@ from pyspark.sql import functions as F
 
 from activity_files_spark.codecs.image import LOSSLESS_FMTS, decode, phash64, psnr_db
 from activity_files_spark.functions.quadkey import (
-    MAX_LAT,
+    mercator_xy01_col,
     quadkey_from_cell_id_col,
+    tile_index_col,
 )
 
 PSNR_GATE_DB = 40.0
 
 
-def _mercator_xy01(lat, lon):
-    """Shared unit-square web-mercator projection (Column expressions)."""
-    lat_c = F.greatest(F.least(lat, F.lit(MAX_LAT)), F.lit(-MAX_LAT))
-    x01 = (lon + F.lit(180.0)) / F.lit(360.0)
-    sin_lat = F.sin(lat_c * F.lit(math.pi) / F.lit(180.0))
-    y01 = F.lit(0.5) - F.log(
-        (F.lit(1.0) + sin_lat) / (F.lit(1.0) - sin_lat)
-    ) / F.lit(4.0 * math.pi)
-    return x01, y01
-
-
 def ladder_cell_ids(lat, lon, resolutions: list[int]) -> list:
     """Packed cell-id Columns for every resolution from ONE projection."""
-    x01, y01 = _mercator_xy01(lat, lon)
-    cols = []
-    for z in resolutions:
-        n = 1 << z
-        clamp = lambda c: F.greatest(F.least(c, F.lit(n - 1)), F.lit(0))  # noqa: E731
-        x = clamp(F.floor(x01 * F.lit(float(n))).cast("long"))
-        y = clamp(F.floor(y01 * F.lit(float(n))).cast("long"))
-        cols.append(F.shiftleft(x, z).bitwiseOR(y))
-    return cols
+    x01, y01 = mercator_xy01_col(lat, lon)
+    return [
+        F.shiftleft(tile_index_col(x01, z), z).bitwiseOR(tile_index_col(y01, z))
+        for z in resolutions
+    ]
 
 
 def tile_assign(

@@ -2,8 +2,10 @@
 
 Decoder semantics from the reference (lib/src/parse/fit_parser.dart):
 - 12/14-byte header with data_size + ".FIT" magic + optional header CRC;
-  trailing file CRC-16 (nibble-table algorithm, lib/src/fit/fit_crc.dart:7-46
-  — the public FIT SDK checksum)
+  trailing file CRC-16 (the public FIT SDK checksum; the engine's
+  implementation is codecs/crc.py, and the reference's nibble-table
+  algorithm, lib/src/fit/fit_crc.dart:7-46, stays here as _crc16_scalar
+  to test it against)
 - definition/data record state machine (fit_parser.dart:235-340), little/big
   endian per definition, compressed-timestamp headers with 5-bit rollover
   (fit_parser.dart:1134-1142)
@@ -38,18 +40,20 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from activity_files_spark.codecs.crc import fit_crc16
+from activity_files_spark.operators.grouped import grouped_apply
 from activity_files_spark.sources.records import RECORD_SCHEMA, records_frame
 
 FIT_EPOCH_UNIX = 631_065_600
 FIT_TS_MAX = 1_924_992_000
 SEMI_TO_DEG = 180.0 / 2_147_483_648.0
 
-# FIT CRC-16 nibble table (public FIT SDK algorithm; fit_crc.dart:7-46)
+# FIT CRC-16 nibble table (public FIT SDK algorithm; fit_crc.dart:7-46),
+# kept as the reference twin of codecs.crc.fit_crc16
 _CRC_TABLE = [
     0x0000, 0xCC01, 0xD801, 0x1400, 0xF001, 0x3C00, 0x2800, 0xE401,
     0xA001, 0x6C00, 0x7800, 0xB401, 0x5000, 0x9C01, 0x8801, 0x4400,
 ]
-from activity_files_spark.operators.grouped import grouped_apply
 
 
 def _crc16_scalar(data: bytes, crc: int = 0) -> int:
@@ -61,63 +65,6 @@ def _crc16_scalar(data: bytes, crc: int = 0) -> int:
         tmp = _CRC_TABLE[crc & 0xF]
         crc = (crc >> 4) & 0x0FFF
         crc = crc ^ tmp ^ _CRC_TABLE[(b >> 4) & 0xF]
-    return crc
-
-
-# single-byte-update table: T[x] = CRC of the byte x from state 0; the
-# nibble algorithm is CRC-16/ARC, whose byte-wise update is
-# crc' = (crc >> 8) ^ T[(crc ^ byte) & 0xFF]
-_CRC_BYTE_TABLE = [_crc16_scalar(bytes([b])) for b in range(256)]
-
-_CRC_ROW_W = 64  # vectorized row width (bytes per numpy column pass)
-_crc_shift_tables: tuple | None = None
-
-
-def _crc_shift_w():
-    """Lookup tables for the GF(2)-linear map L = "advance the CRC state
-    past _CRC_ROW_W zero bytes": L(s) = lo[s & 0xFF] ^ hi[s >> 8]
-    (linearity lets a 2^16-state map decompose into two 256-entry tables)."""
-    global _crc_shift_tables
-    if _crc_shift_tables is None:
-        def zeros_update(s: int) -> int:
-            for _ in range(_CRC_ROW_W):
-                s = (s >> 8) ^ _CRC_BYTE_TABLE[s & 0xFF]
-            return s
-
-        _crc_shift_tables = (
-            [zeros_update(b) for b in range(256)],
-            [zeros_update(b << 8) for b in range(256)],
-        )
-    return _crc_shift_tables
-
-
-def fit_crc16(data: bytes, crc: int = 0) -> int:
-    """FIT CRC-16 (the public FIT SDK checksum). For payloads beyond a few
-    hundred bytes the per-byte python loop dominated whole-file encode AND
-    decode (~0.25 us/byte), so the bulk path exploits CRC linearity over
-    GF(2): rows of 64 bytes get their CRCs computed SIMULTANEOUSLY by 64
-    numpy column passes (state vector of n/64 lanes), then one table-driven
-    fold chains rows via crc(A||B) = L(crc(A)) ^ crc(B) with L = the
-    precomputed 64-zero-byte advance. ~100x the scalar loop; bit-identical
-    (property-tested against the nibble reference)."""
-    n = len(data)
-    if n < 4 * _CRC_ROW_W:
-        t = _CRC_BYTE_TABLE
-        for b in data:
-            crc = (crc >> 8) ^ t[(crc ^ b) & 0xFF]
-        return crc
-    rows = n // _CRC_ROW_W
-    a = np.frombuffer(data, np.uint8, rows * _CRC_ROW_W).reshape(rows, _CRC_ROW_W)
-    tbl = np.array(_CRC_BYTE_TABLE, np.uint16)
-    y = np.zeros(rows, np.uint16)
-    for c in range(_CRC_ROW_W):
-        y = tbl[(y ^ a[:, c]) & 0xFF] ^ (y >> 8)
-    lo, hi = _crc_shift_w()
-    for ry in y.tolist():
-        crc = lo[crc & 0xFF] ^ hi[crc >> 8] ^ ry
-    t = _CRC_BYTE_TABLE
-    for b in data[rows * _CRC_ROW_W:]:
-        crc = (crc >> 8) ^ t[(crc ^ b) & 0xFF]
     return crc
 
 
@@ -1451,7 +1398,6 @@ NATIVE_RECORD_CHANNELS = frozenset(
 )
 
 SPORT_IDS_INV = {v: k for k, v in SPORTS.items()}
-SWIM_STROKE_IDS = {v: k for k, v in SWIM_STROKES.items()}
 
 
 def _fit_secs(ts) -> int:

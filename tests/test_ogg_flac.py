@@ -228,7 +228,7 @@ def test_ogg_crc_known_vector():
 
     for v in (b"", b"123456789", b"OggS" + bytes(30)):
         assert ogg_crc(v) == bitwise(v)
-    # bulk numpy path (>=256 bytes) + row-fold + tail, vs the bit loop
+    # longer pages (single and multi-row lengths), vs the bit loop
     rng = np.random.default_rng(42)
     for n in (255, 256, 257, 64 * 9, 64 * 9 + 17, 5000):
         v = rng.integers(0, 256, n, dtype=np.uint8).tobytes()

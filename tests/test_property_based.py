@@ -212,10 +212,12 @@ def test_ivf_assignment_tiebreak_is_lower_centroid(vecs):
 def test_fit_crc16_vectorized_matches_nibble_reference(data, init):
     """The GF(2)-linear bulk CRC path (numpy row lanes + shift-table fold)
     must be bit-identical to the reference nibble-table loop for any data
-    and any incoming state — padded past the 256-byte bulk threshold so
-    both row math and the tail loop are exercised."""
+    and any incoming state — padded past the bulk threshold so both row
+    math and the tail loop are exercised."""
+    from activity_files_spark.codecs.crc import BULK_MIN_BYTES
     from activity_files_spark.sources.fit import _crc16_scalar, fit_crc16
 
     assert fit_crc16(data, init) == _crc16_scalar(data, init)
-    big = data * (1024 // max(1, len(data)) + 1)
+    n = BULK_MIN_BYTES + 17  # whole rows through the fold, 17 tail bytes
+    big = ((data or b"\x00") * (n // max(1, len(data)) + 1))[:n]
     assert fit_crc16(big, init) == _crc16_scalar(big, init)
