@@ -41,6 +41,7 @@ from activity_files_spark.functions.quadkey import (
     tile_xy_sql,
 )
 from activity_files_spark.operators.asof import asof_join
+from activity_files_spark.operators.materialize import materialize
 from activity_files_spark.operators.windows import sessionize_gap, smooth
 
 # ------------------------------------------------------------------ helpers
@@ -1418,11 +1419,11 @@ def emerging_hotspots_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket", "cx", "cy")
         .agg(F.count("*").alias("x"))
     )
-    scored = getis_ord_gi_star(cells, by=("bucket",)).where(
-        ~F.isnan("z")  # single-cell months have an undefined z (0/0)
-    ).localCheckpoint(eager=False)  # feeds the MK pair self-join (x2), the
-    # bucket counts, and zsum — lazily materialized once by the job instead
-    # of re-running the whole Gi* subtree four times (16-scan plan; r06)
+    # single-cell months have an undefined z (0/0)
+    gi = getis_ord_gi_star(cells, by=("bucket",)).where(~F.isnan("z"))
+    # feeds the MK pair self-join (x2), the bucket counts, and zsum — lazy,
+    # instead of re-running the whole Gi* subtree four times (16-scan plan; r06)
+    scored = materialize(gi, eager=False)
     mk = mann_kendall_trend(scored, by=("cx", "cy"), t="bucket", v="z")
     zsum = scored.groupBy("cx", "cy").agg(
         F.sum(F.floor(F.col("z") * F.lit(1000000.0)).cast("long")).alias(
@@ -2453,38 +2454,25 @@ def route_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _read(spark, sf_dir, "events").select(
         "user_id", _lat_col().alias("lat"), _lon_col().alias("lon")
     )
-    # materialize each signature stage once (localCheckpoint = the query-
-    # level stand-in for the production bucketed layout write): the cell
-    # sets feed the self-join twice, the count join twice, and the refine
-    # product twice — recomputing the scan+distinct for each consumer
-    # multiplies the dominant cost of this query. The two zoom tiers are
-    # independent jobs, so materialize them from a 2-thread pool (the
-    # scheduler back-fills one job's straggler tail with the other's
-    # tasks); each checkpoint alone is a blocking driver action
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_c = pool.submit(
-            lambda: route_cells(ev, RT_Z, key="user_id").localCheckpoint(eager=True)
-        )
-        f_r = pool.submit(
-            lambda: route_cells(ev, RT_REFINE_Z, key="user_id").localCheckpoint(
-                eager=True
-            )
-        )
-        cells, cells_r = f_c.result(), f_r.result()
+    # materialize each signature stage once (the query-level stand-in for
+    # the production bucketed layout write): the cell sets feed the
+    # self-join twice, the count join twice, and the refine product twice —
+    # recomputing the scan+distinct for each consumer multiplies the
+    # dominant cost of this query
+    cells, cells_r = materialize(
+        route_cells(ev, RT_Z, key="user_id"),
+        route_cells(ev, RT_REFINE_Z, key="user_id"),
+        eager=True,
+    )
     pairs = route_pair_jaccard(cells, key="user_id")
     # the winner-pair table (1 row/route) feeds BOTH Hausdorff direction
     # products and the final join — without a checkpoint the whole
     # pair-mining subtree (cell self-join + count joins + ranking window)
-    # executes three times in the one job (92-Exchange plan). Lazy
-    # localCheckpoint: materialized by the job itself (no extra blocking
-    # action), locally neutral (parallel stages absorbed the recompute on
-    # an idle box) but a 3x -> 1x algorithmic-work cut that holds on a
-    # busy cluster at scale (r06 third pass).
-    top = (
-        top_similar_routes(pairs, k=1).drop("rank").localCheckpoint(eager=False)
-    )
+    # executes three times in the one job (92-Exchange plan). Lazy: locally
+    # neutral (parallel stages absorbed the recompute on an idle box) but a
+    # 3x -> 1x algorithmic-work cut that holds on a busy cluster at scale
+    # (r06 third pass).
+    top = materialize(top_similar_routes(pairs, k=1).drop("rank"), eager=False)
     ref = hausdorff_refine(top, cells_r, RT_REFINE_Z, key="user_id")
     return ref.select(
         F.col("key").alias("user_id"),
@@ -2531,7 +2519,7 @@ def _route_refine(
         "user_id", "ts", "event_id",
         _lat_col().alias("lat"), _lon_col().alias("lon"),
     )
-    cells = route_cells(ev, RT_Z, key="user_id").localCheckpoint(eager=True)
+    cells = materialize(route_cells(ev, RT_Z, key="user_id"), eager=True)
     pairs = route_pair_jaccard(cells, key="user_id")
     top = top_similar_routes(pairs, k=1).drop("rank")
     samples = index_resample(

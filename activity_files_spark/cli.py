@@ -24,6 +24,8 @@ import sys
 
 from pyspark.sql import functions as F
 
+from activity_files_spark.operators.materialize import materialize
+
 
 # accepted --encoding names -> JVM charset (reference: Dart Encoding names)
 _CHARSETS = {
@@ -106,7 +108,7 @@ def cmd_convert(spark, args) -> int:
         points_of,
     )
 
-    records = _load_records(spark, args).cache()
+    records = materialize(_load_records(spark, args), eager=False)
     autofix_diags = None
     if getattr(args, "autofix", False):
         # the reference's declarative pipeline (facade:1472-1501): request ->
@@ -148,9 +150,9 @@ def cmd_convert(spark, args) -> int:
                          ("temperature", "temp_max_delta"))
         if getattr(args, attr, None) is not None
     }
-    # channel-name set from the CACHED records (not the heavy post-autofix
-    # plan), plus the channels autofix recomputes; timer events are punctual
-    # markers, not samples — they bypass snapping untouched
+    # channel-name set from the materialized records (not the heavy
+    # post-autofix plan), plus the channels autofix recomputes; timer events
+    # are punctual markers, not samples — they bypass snapping untouched
     names = {
         r["channel"]
         for r in records.filter(F.col("kind") == "channel")
@@ -215,9 +217,9 @@ def cmd_convert(spark, args) -> int:
     else:
         print(f"unsupported --to {args.to_fmt}", file=sys.stderr)
         return 2
-    # cache: the write, the count, the report write, and the counts collect
-    # would otherwise each re-execute the full (autofix) pipeline
-    enc = enc.select("activity_id", F.col(payload_col)).cache()
+    # the write, the count, the report write, and the counts collect would
+    # otherwise each re-execute the full (autofix) pipeline
+    enc = materialize(enc.select("activity_id", F.col(payload_col)), eager=False)
     enc.write.mode("overwrite").parquet(args.output)
     # target-format loss accounting (facade.dart:299-382): what the source
     # carried that `--to` cannot represent is reported, never silent
@@ -226,7 +228,7 @@ def cmd_convert(spark, args) -> int:
     diags = lossy_diagnostics(records, args.to_fmt)
     if autofix_diags is not None:
         diags = diags.unionByName(autofix_diags)
-    diags = diags.cache()
+    diags = materialize(diags, eager=False)
     if getattr(args, "report", None):
         diags.write.mode("overwrite").parquet(args.report)
     counts = {
@@ -237,8 +239,6 @@ def cmd_convert(spark, args) -> int:
         "converted": enc.count(), "to": args.to_fmt, "output": args.output,
         "diagnostics": counts,
     }))
-    enc.unpersist()
-    diags.unpersist()
     return 0
 
 
@@ -251,7 +251,7 @@ def cmd_validate(spark, args) -> int:
         points_of,
     )
 
-    records = _load_records(spark, args).cache()
+    records = materialize(_load_records(spark, args), eager=False)
     diags = validate_all(
         points_of(records), channels_of(records), laps_of(records),
         gap_warn_s=getattr(args, "gap_threshold", 300.0),

@@ -29,6 +29,7 @@ from activity_files_spark.functions.geo import haversine_m, lerp
 
 DEFAULT_TOLERANCE_S = 5.0  # encoder_options.dart:22
 from activity_files_spark.operators.grouped import grouped_apply
+from activity_files_spark.operators.materialize import materialize
 
 
 def asof_join(
@@ -470,12 +471,12 @@ def resample_by_distance(
         ),
         F.lit(0.0),
     )
-    pts = (
+    # the cumdist window feeds both the grid envelope and the union side —
+    # lazy, so the window pass runs once (r06)
+    pts = materialize(
         points.withColumn("_d", F.sum(step).over(wc))
-        .withColumn("_seq", F.row_number().over(w).cast("long"))
-        # the cumdist window feeds both the grid envelope and the union
-        # side — lazy checkpoint so the window pass runs once (r06)
-        .localCheckpoint(eager=False)
+        .withColumn("_seq", F.row_number().over(w).cast("long")),
+        eager=False,
     )
     env = pts.groupBy(key).agg(F.max("_d").alias("_total"))
     grid = env.select(

@@ -54,6 +54,7 @@ from activity_files_spark.operators.graph import (
     connected_components,
     connected_components_sql,
 )
+from activity_files_spark.operators.materialize import materialize
 
 # meters per degree of latitude at the WGS84 minimum (equator) — using the
 # MINIMUM keeps the cell side >= eps at every latitude; longitude shrinks
@@ -137,20 +138,15 @@ def dbscan(
     )
     # the pair list feeds degree counting, the core-core edge list, and
     # the border attach — compute it once
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = materialize(pairs, eager=True)
     deg = pairs.groupBy(F.col("ia").alias("_id")).agg(F.count("*").alias("_deg"))
-    flags = (
-        pts.select(F.col(id_col).alias("_id"))
-        .join(deg, "_id", "left")
-        .select(
-            "_id",
-            (F.coalesce(F.col("_deg"), F.lit(0)) + F.lit(1) >= F.lit(min_pts)).alias(
-                "_core"
-            ),
-        )
-        # four consumers (both core-edge sides, border attach, final roles)
-        # would each re-run the degree join — materialize once (r06)
-        .localCheckpoint(eager=True)
+    core = F.coalesce(F.col("_deg"), F.lit(0)) + F.lit(1) >= F.lit(min_pts)
+    # four consumers (both core-edge sides, border attach, final roles)
+    # would each re-run the degree join — materialize once (r06)
+    flags = materialize(
+        pts.select(F.col(id_col).alias("_id")).join(deg, "_id", "left")
+        .select("_id", core.alias("_core")),
+        eager=True,
     )
     core_ids = flags.where("_core").select("_id")
     core_edges = (

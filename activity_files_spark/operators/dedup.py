@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from activity_files_spark.operators.materialize import materialize
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the lowest-id row per exact text hash."""
@@ -143,13 +145,10 @@ def near_dup_pairs(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """MinHash -> banded LSH -> exact-Jaccard verify (>= threshold)."""
-    # lazy checkpoint (r06): the distinct shingle set feeds the signature
-    # build AND three arms of the Jaccard verify — without it the full
-    # tokenize+md5 shingling re-executes per reference (4 scans in the r05
-    # plan). Computed once on first use, nothing runs at plan-build time.
-    sh = shingles(df, n=n, text_col=text_col, id_col=id_col).localCheckpoint(
-        eager=False
-    )
+    # lazy (r06): the distinct shingle set feeds the signature build AND
+    # three arms of the Jaccard verify — without it the full tokenize+md5
+    # shingling re-executes per reference (4 scans in the r05 plan)
+    sh = materialize(shingles(df, n=n, text_col=text_col, id_col=id_col), eager=False)
     sig = minhash_signature(sh, k=bands * rows_per_band, id_col=id_col)
     cand = lsh_candidate_pairs(sig, bands, rows_per_band, id_col=id_col)
     return jaccard_pairs(cand, sh, id_col=id_col).filter(F.col("jaccard") >= threshold)
@@ -291,11 +290,10 @@ def hamming_near_dup_pairs(
     # the code table feeds the band explode (twice, via both join sides)
     # and both code re-attach joins — four executions of whatever subtree
     # produced the codes (for simhash input, four runs of the Arrow
-    # bit-vote kernel; 32 parquet scans in the planted-corpus plan). Lazy
-    # localCheckpoint: materialized by the consuming job itself, 4x -> 1x
-    # upstream work; measured 0.71->0.57 / 1.36->1.13 s at sf0.1 on the
-    # two doc queries with bit-identical pairs (r06)
-    codes = df.select(F.col(id_col), F.col(code_col)).localCheckpoint(eager=False)
+    # bit-vote kernel; 32 parquet scans in the planted-corpus plan). Lazy:
+    # 4x -> 1x upstream work; measured 0.71->0.57 / 1.36->1.13 s at sf0.1
+    # on the two doc queries with bit-identical pairs (r06)
+    codes = materialize(df.select(F.col(id_col), F.col(code_col)), eager=False)
     bands = codes.select(
         id_col,
         F.explode(F.array(*[

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from activity_files_spark.operators.materialize import materialize
+
 
 def connected_components(
     edges: DataFrame,
@@ -58,12 +60,12 @@ def connected_components(
     # checkpoint the symmetrized edge list ONCE: it feeds every round's
     # neighbor join, and without this the upstream pair-mining pipeline
     # would be recomputed per round
-    sym = sym.distinct().localCheckpoint(eager=True)
+    sym = materialize(sym.distinct(), eager=True)
     labels = (
         sym.select(F.col("a").alias("node")).distinct()
         .withColumn("label", F.col("node"))
     )
-    labels = labels.localCheckpoint(eager=True)
+    labels = materialize(labels, eager=True)
     # no initial label-sum action: round 1 always lowers the sum for any
     # nonempty edge set (each edge's larger endpoint takes a smaller
     # label), so an initial-sum early exit can never fire — a sentinel
@@ -94,11 +96,9 @@ def connected_components(
                 F.least(F.col("label"), F.coalesce(F.col("plabel"), F.col("label"))).alias("label"),
             )
         )
-        # lazy checkpoint: the convergence-sum action on the next line is
-        # the round's single job and materializes the checkpoint as it
-        # runs — an eager checkpoint here would spend a second blocking
-        # job per round on the same rows
-        labels = jumped.localCheckpoint(eager=False)
+        # lazy: the convergence-sum action on the next line is the round's
+        # single job — eager would spend a second blocking job per round
+        labels = materialize(jumped, eager=False)
         cur_sum = labels.agg(F.sum("label")).first()[0]
         if cur_sum == prev_sum:
             break
@@ -146,7 +146,7 @@ def shortest_paths(
 ) -> DataFrame:
     """Single/multi-source shortest path distances by ``rounds``
     Bellman-Ford relaxations, each round's (tiny) distance table
-    lineage-truncated with ``localCheckpoint`` exactly like
+    lineage-truncated with ``materialize`` exactly like
     connected_components — a lazy unroll is impossible here because every
     round references the previous table TWICE (carry + relax), which makes
     an uncheckpointed plan tree grow 2^rounds.
@@ -172,21 +172,13 @@ def shortest_paths(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    # the edge table and the source-distance seed are independent inputs;
-    # materialize both from a 2-thread pool so their (blocking) checkpoint
-    # jobs overlap instead of running back to back (guide §2.6 shape —
-    # both typically re-derive from the same upstream scan, and the
-    # scheduler back-fills one job's tail with the other's tasks)
-    from concurrent.futures import ThreadPoolExecutor
-
+    # the edge table and the source-distance seed are independent inputs,
+    # typically re-derived from the same upstream scan: overlap them
     e_plan = edges.select(
         F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), F.col(w).alias("e_w")
     )
     d_plan = sources.select("node").withColumn("dist", F.lit(0).cast("long"))
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_e = pool.submit(lambda: e_plan.localCheckpoint(eager=True))
-        f_d = pool.submit(lambda: d_plan.localCheckpoint(eager=True))
-        e, dist = f_e.result(), f_d.result()
+    e, dist = materialize(e_plan, d_plan, eager=True)
     prev = dist
     for _ in range(rounds):
         relax = e.join(dist, e["e_src"] == dist["node"]).select(
@@ -194,11 +186,9 @@ def shortest_paths(
             (F.col("dist") + F.col("e_w")).cast("long").alias("dist"),
         )
         prev = dist
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+        dist = materialize(
+            dist.unionByName(relax).groupBy("node").agg(F.min("dist").alias("dist")),
+            eager=True,
         )
     return dist.join(
         prev.select(F.col("node"), F.col("dist").alias("prev_dist")),
@@ -219,7 +209,7 @@ def shortest_paths_sql(
     p = prefix
     # MATERIALIZED is load-bearing: every round references the previous
     # round TWICE (carry + relax); inlined CTEs would expand 2^rounds —
-    # the SQL-side twin of the localCheckpoint in shortest_paths
+    # the SQL-side twin of the per-round materialize in shortest_paths
     ctes = [
         f"{p}_d0 AS MATERIALIZED (SELECT node, CAST(0 AS BIGINT) AS dist "
         f"FROM {sources_cte})"

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from activity_files_spark.operators.materialize import materialize
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -422,11 +424,10 @@ def cosine_dup_pairs_lsh(
     b_vecs = items.select(F.col(i_id).alias("id_b"), F.col(vec).alias("_vb"))
     # ONE signature kernel pass serves both join sides (r06 — the kernel is
     # deterministic, so the b-side signatures were an identical recompute);
-    # lazy checkpoint so the two references don't re-run the Arrow matmul
-    sig = (
-        lsh_signature(a_vecs, "_va", dim, n_planes, n_tables)
-        .select("tbl", "bucket", "id_a")
-        .localCheckpoint(eager=False)
+    # lazy, so the two references don't re-run the Arrow matmul
+    sig = materialize(
+        lsh_signature(a_vecs, "_va", dim, n_planes, n_tables).select("tbl", "bucket", "id_a"),
+        eager=False,
     )
     # bucket self-join + dedup on bare id pairs (vectors stripped from the
     # candidate exchanges — a pair colliding in many tables would otherwise

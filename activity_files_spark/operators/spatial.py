@@ -39,6 +39,7 @@ from activity_files_spark.functions.quadkey import (
     tile_xy_col,
     tile_xy_py,
 )
+from activity_files_spark.operators.materialize import materialize
 
 EARTH_CIRCUM_M = 40_075_016.686
 
@@ -379,7 +380,7 @@ def knn_join(
             .select(q_id, p_id, "dist_m", "_qlat")
         )
         acc = cand_new if acc is None else acc.unionByName(cand_new)
-        acc = acc.localCheckpoint(eager=False)  # cut the growing lineage
+        acc = materialize(acc, eager=False)  # cut the growing lineage
         wk = Window.partitionBy(q_id).orderBy(F.col("dist_m").asc(), F.col(p_id).asc())
         topk = acc.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= k)
         # resolution check: k-th distance within the guaranteed radius
@@ -394,7 +395,9 @@ def knn_join(
         ).select(q_id)
         if r == max_ring:
             done_ids = stats.select(q_id)  # accept best-effort at the cap
-        done_ids = done_ids.cache()
+        # read by this round's two joins, the isEmpty check and the next
+        # round's candidate filter
+        done_ids = materialize(done_ids, eager=False)
         part = topk.join(F.broadcast(done_ids), q_id, "left_semi").select(
             q_id, p_id, "dist_m", "rank"
         )

@@ -33,7 +33,7 @@ def get_spark(
         # (rule of thumb: ~2-3x total executor cores, or rely on AQE coalesce)
         try:
             shuffle_partitions = int(master.split("[")[1].rstrip("]").replace("*", cpus))
-        except Exception:
+        except (IndexError, ValueError):  # yarn, local, local-cluster[...]
             shuffle_partitions = 32
 
     builder = (

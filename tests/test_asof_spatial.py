@@ -168,6 +168,22 @@ def test_knn_matches_brute_force(spark):
     assert fast == brute
 
 
+def test_knn_join_leaves_no_cache_entries(spark):
+    # every ring round's resolved-id table used to be .cache()d and never
+    # unpersisted, pinning entries in the session's CacheManager per call
+    pts = spark.createDataFrame(
+        [(f"p{i}", 40.0 + i * 0.001, -105.0) for i in range(50)],
+        "point_id string, lat double, lon double",
+    )
+    qs = spark.createDataFrame(
+        [(f"q{i}", 40.0 + i * 0.01, -105.0005) for i in range(5)],
+        "query_id string, lat double, lon double",
+    )
+    spark.catalog.clearCache()
+    assert len(knn_join(qs, pts, k=3, z=14).collect()) == 15
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_cell_encode_column(spark):
     from activity_files_spark.functions.quadkey import quadkey_py
 
