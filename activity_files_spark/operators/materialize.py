@@ -30,11 +30,14 @@ def materialize(*dfs: DataFrame, eager: bool):
     """``localCheckpoint`` each frame; one frame in returns one frame,
     several return a tuple in input order."""
     if eager and len(dfs) > 1:
+        # pinned threads (pyspark's default) get a wrapper; with
+        # PYSPARK_PIN_THREAD=false pyspark returns the session itself, and
+        # the plain method is the target
+        session = dfs[0].sparkSession
+        wrap = inheritable_thread_target(session)
+        fns = [df.localCheckpoint if wrap is session else wrap(df.localCheckpoint) for df in dfs]
         with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-            futures = [
-                pool.submit(inheritable_thread_target(df.sparkSession)(df.localCheckpoint), True)
-                for df in dfs
-            ]
+            futures = [pool.submit(fn, True) for fn in fns]
             out = tuple(f.result() for f in futures)
     else:
         out = tuple(df.localCheckpoint(eager=eager) for df in dfs)

@@ -7,6 +7,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from activity_files_spark.operators import materialize as M
 from activity_files_spark.operators.materialize import materialize
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
@@ -47,19 +48,30 @@ def test_lazy_runs_no_job_and_keeps_rows(spark):
 def test_eager_single_frame_runs_its_job_before_returning(spark):
     df = _narrow(spark, 40, 5)
     out, jobs = _jobs_in(spark, "materialize-eager1", lambda: materialize(df, eager=True))
-    assert len(jobs) >= 1
+    assert len(jobs) == 1
     assert all(j.status == "SUCCEEDED" for j in jobs)
     assert sorted(out.collect()) == sorted(df.collect())
 
 
 def test_eager_frames_keep_input_order_and_caller_job_group(spark):
     a = _narrow(spark, 30, 2)
-    b = spark.range(12).groupBy((F.col("id") % 4).alias("k")).agg(F.count("*").alias("n"))
+    b = _narrow(spark, 12, 9).withColumnRenamed("y", "z")
     (ca, cb), jobs = _jobs_in(spark, "materialize-eager2", lambda: materialize(a, b, eager=True))
-    # both pool checkpoints ran under the caller's group and were done on return
-    assert len(jobs) >= 2
+    # one job per narrow frame: both pool checkpoints ran under the caller's
+    # group and were done on return
+    assert len(jobs) == 2
     assert all(j.status == "SUCCEEDED" for j in jobs)
-    assert ca.columns == ["id", "y"] and cb.columns == ["k", "n"]
+    assert ca.columns == ["id", "y"] and cb.columns == ["id", "z"]
+    assert sorted(ca.collect()) == sorted(a.collect())
+    assert sorted(cb.collect()) == sorted(b.collect())
+
+
+def test_eager_frames_without_pinned_threads(spark, monkeypatch):
+    # with PYSPARK_PIN_THREAD=false, inheritable_thread_target returns its
+    # argument unchanged: here, the session
+    monkeypatch.setattr(M, "inheritable_thread_target", lambda f: f)
+    a, b = _narrow(spark, 8, 2), _narrow(spark, 6, 3)
+    ca, cb = materialize(a, b, eager=True)
     assert sorted(ca.collect()) == sorted(a.collect())
     assert sorted(cb.collect()) == sorted(b.collect())
 
