@@ -129,14 +129,19 @@ def _drain(
 ) -> DataFrame:
     """Run ``stream`` to completion with trigger(availableNow) into a memory
     sink named ``<prefix>_<random hex>``; return the sink's table."""
+    import shutil
     import tempfile
     import uuid
 
     from activity_files_spark.streaming.stream_ops import run_available_now
 
     name = f"{prefix}_{uuid.uuid4().hex[:10]}"
-    q = run_available_now(stream, name, tempfile.mkdtemp(), output_mode=output_mode)
-    q.awaitTermination()
+    checkpoint = tempfile.mkdtemp()
+    try:
+        run_available_now(stream, name, checkpoint, output_mode=output_mode).awaitTermination()
+    finally:
+        # the memory sink holds the rows; the checkpoint is not read again
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.table(name)
 
 

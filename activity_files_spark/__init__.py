@@ -10,4 +10,6 @@ raster tiling over image+caption tables.
 Everything here is built on public PySpark APIs only.
 """
 
+from activity_files_spark import _zipimport  # noqa: F401  (lazy zip invalidation in workers)
+
 __version__ = "0.1.0"

@@ -13,6 +13,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def usable_cpus() -> int:
+    """CPUs this process may run on (honours ``taskset``/cpuset pinning)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count()
+
+
 def get_spark(
     app_name: str = "activity_files_spark",
     master: str | None = None,
@@ -21,11 +28,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: this
-    machine's core count) so bench harnesses can pin parallelism; on a real
-    cluster pass ``None`` and let spark-submit supply the master.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    CPUs this process may run on) so bench harnesses can pin parallelism; on
+    a real cluster pass ``None`` and let spark-submit supply the master.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(usable_cpus()))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -28,8 +28,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from activity_files_spark.session import usable_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", usable_cpus()))
 MULT = int(os.environ.get("SPARK_GRAFT_BENCH_MULT", "64"))
 
 HEADLINE = [
