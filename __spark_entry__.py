@@ -4050,7 +4050,7 @@ def fit_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic activity from the events table (points + a developer-field
     channel + swim lengths + strength sets, all derived arithmetically from
     event_id/ts), encode it to REAL FIT binary (fit_encode_records), decode
-    it back (fit_records), and aggregate counts/sums of what survived. The
+    it back (decode_records), and aggregate counts/sums of what survived. The
     oracle computes the same aggregates directly from the arithmetic — so a
     hash match proves the binary encoder/decoder round-trips every record
     kind bit-exactly (dev-field float64s, scale-16 weights, stroke enums).
@@ -4061,7 +4061,8 @@ def fit_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       set    for event_id % 7 == 0: reps = event_id % 20,
                                     weight = (event_id % 160) / 16
     """
-    from activity_files_spark.sources.fit import fit_encode_records, fit_records
+    from activity_files_spark.sources.decode import decode_records
+    from activity_files_spark.sources.fit import fit_encode_records
     from activity_files_spark.sources.records import as_records
 
     ev = _activity_events(spark, sf_dir)
@@ -4088,7 +4089,7 @@ def fit_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("attrs"),
     ), "set")
     recs = _metric_track(ev).unionByName(lengths).unionByName(sets)
-    back = fit_records(fit_encode_records(recs))
+    back = decode_records(fit_encode_records(recs), fmt="fit")
     agg = back.groupBy("activity_id").agg(
         *_metric_aggs(),
         F.count(F.when(F.col("kind") == "length", 1)).alias("n_lengths"),
@@ -4413,7 +4414,7 @@ def gpx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2/S7 GPX full-document round-trip, driver-gated: per user, build a
     synthetic activity from events (track points + a custom TPX channel +
     waypoints + a route), encode it to REAL GPX XML (gpx_encode_records),
-    parse it back (gpx_records), and aggregate what survived. The oracle
+    parse it back (decode_records), and aggregate what survived. The oracle
     computes the same aggregates arithmetically, so a hash match proves the
     XML encoder/parser round-trips points, channels (%g-formatted exact
     1/16-multiples), waypoints, and <rte> routes.
@@ -4422,7 +4423,8 @@ def gpx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     significant digits -> %g prints and float() reparses bit-exactly);
     waypoint for event_id % 9 == 0; route point for event_id % 6 == 0.
     """
-    from activity_files_spark.sources.gpx import gpx_encode_records, gpx_records
+    from activity_files_spark.sources.decode import decode_records
+    from activity_files_spark.sources.gpx import gpx_encode_records
     from activity_files_spark.sources.records import as_records
 
     ev = _activity_events(spark, sf_dir)
@@ -4441,7 +4443,7 @@ def gpx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), "route")
     recs = _metric_track(ev).unionByName(wpts).unionByName(rpts).unionByName(routes)
     xml = gpx_encode_records(recs)
-    back = gpx_records(xml)
+    back = decode_records(xml, fmt="gpx", payload_col="xml")
     agg = back.groupBy("activity_id").agg(
         *_metric_aggs(),
         F.count(F.when(F.col("kind") == "waypoint", 1)).alias("n_waypoints"),
@@ -5863,7 +5865,7 @@ def tcx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     events (points + heart-rate/speed/power channels + one lap spanning the
     track), encode it to REAL TCX XML (tcx_encode_records: per-lap Track
     windows, HeartRateBpm wrapper, TPX Speed/Watts extension), parse it back
-    (tcx_records), and aggregate what survived. The oracle computes the same
+    (decode_records), and aggregate what survived. The oracle computes the same
     aggregates arithmetically — a hash match proves the XML encoder/parser
     round-trips points, wrapped/extension channels, and lap metadata exactly.
 
@@ -5875,8 +5877,9 @@ def tcx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                    <= 6 significant digits so %g prints it exactly)
       lap distance_m = user_id                (int-valued double)
     """
+    from activity_files_spark.sources.decode import decode_records
     from activity_files_spark.sources.records import as_records
-    from activity_files_spark.sources.tcx import tcx_encode_records, tcx_records
+    from activity_files_spark.sources.tcx import tcx_encode_records
 
     ev = _activity_events(spark, sf_dir)
     metric = _roundtrip_metric()
@@ -5901,7 +5904,7 @@ def tcx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(as_records(laps, "lap")),
         sport="Running",
     )
-    back = tcx_records(xml, xml_col="xml")
+    back = decode_records(xml, fmt="tcx", payload_col="xml")
     agg = back.groupBy("activity_id").agg(
         F.count(F.when(F.col("kind") == "point", 1)).alias("n_points"),
         F.count(F.when((F.col("kind") == "channel")
@@ -5946,9 +5949,10 @@ def csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     test/formats/csv_geojson_roundtrip_test.dart): per user, points + a
     custom channel are pivoted to the wide 11-column layout, serialized to
     one CSV document per activity (csv_encode_text_df — shortest-roundtrip
-    float repr), parsed back through the payload parser (csv_records,
+    float repr), parsed back through the payload parser (decode_records,
     unknown numeric column -> custom channel), and aggregated."""
-    from activity_files_spark.sources.csvsrc import csv_encode_text_df, csv_records
+    from activity_files_spark.sources.csvsrc import csv_encode_text_df
+    from activity_files_spark.sources.decode import decode_records
 
     ev = _activity_events(spark, sf_dir)
     metric = _roundtrip_metric()
@@ -5958,7 +5962,7 @@ def csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.lit("custom_metric").alias("channel"),
                       metric.alias("value"))
     docs = csv_encode_text_df(points, chans)
-    back = csv_records(docs)
+    back = decode_records(docs, fmt="csv", payload_col="text")
     agg = back.groupBy("activity_id").agg(
         *_metric_aggs(),
         F.count(F.when(F.col("kind") == "diag", 1)).alias("n_diags"),
@@ -5985,14 +5989,14 @@ def geojson_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6/S11 GeoJSON round-trip, driver-gated: even users encode as the
     Points variant (one Point feature per trackpoint, channel values as
     numeric properties), odd users as the LineString variant
-    (coordinateProperties.times); both parse back through geojson_records.
+    (coordinateProperties.times); both parse back through decode_records.
     A hash match proves both document shapes round-trip: Points recover
     per-point channels, LineStrings recover the track and emit one lap
     (times present on first/last coordinate)."""
+    from activity_files_spark.sources.decode import decode_records
     from activity_files_spark.sources.geojson import (
         geojson_encode_points_records,
         geojson_encode_records,
-        geojson_records,
     )
     from activity_files_spark.sources.records import as_records
 
@@ -6010,7 +6014,9 @@ def geojson_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
     )
     odd_docs = geojson_encode_records(as_records(odd.select(*pts_cols), "point"))
-    back = geojson_records(even_docs.unionByName(odd_docs))
+    back = decode_records(
+        even_docs.unionByName(odd_docs), fmt="geojson", payload_col="text"
+    )
     agg = back.groupBy("activity_id").agg(
         *_metric_aggs(),
         F.count(F.when(F.col("kind") == "lap", 1)).alias("n_laps"),

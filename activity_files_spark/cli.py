@@ -27,76 +27,34 @@ from pyspark.sql import functions as F
 from activity_files_spark.operators.materialize import materialize
 
 
-# accepted --encoding names -> JVM charset (reference: Dart Encoding names)
+# accepted --encoding names -> Python codec (reference: Dart Encoding
+# names); a BOM in the payload overrides the choice (detect.decode_text)
 _CHARSETS = {
-    "utf8": "UTF-8", "utf-8": "UTF-8",
-    "latin1": "ISO-8859-1", "iso-8859-1": "ISO-8859-1",
-    "ascii": "US-ASCII",
-    "utf16": "UTF-16", "utf-16": "UTF-16",
-    "utf16le": "UTF-16LE", "utf16be": "UTF-16BE",
+    "utf8": "utf-8", "utf-8": "utf-8",
+    "latin1": "iso-8859-1", "iso-8859-1": "iso-8859-1",
+    "ascii": "ascii",
+    # BOM-less UTF-16 is big-endian, as the JVM's UTF-16 charset reads it
+    "utf16": "utf-16-be", "utf-16": "utf-16-be",
+    "utf16le": "utf-16-le", "utf16be": "utf-16-be",
 }
 
 
 def _load_records(spark, args):
-    from activity_files_spark.sources.csvsrc import csv_records
-    from activity_files_spark.sources.detect import detect_format_df
-    from activity_files_spark.sources.fit import fit_records
-    from activity_files_spark.sources.geojson import geojson_records
-    from activity_files_spark.sources.gpx import gpx_records
-    from activity_files_spark.sources.records import as_records
-    from activity_files_spark.sources.tcx import tcx_records
+    """Read every input file once and decode it into the record stream:
+    ``--from`` or per-file detection picks the parser, ``--encoding``
+    decodes text formats without a BOM (FIT is binary, unaffected)."""
+    from activity_files_spark.sources.decode import decode_records
 
-    files = spark.read.format("binaryFile").load(args.input).select(
-        F.col("path").alias("activity_id"), F.col("content").alias("payload")
-    )
-    if args.from_fmt == "auto":
-        files = detect_format_df(files, payload_col="payload", path_col="activity_id")
-    else:
-        files = files.withColumn("fmt", F.lit(args.from_fmt))
-    # --encoding: text decode for GPX/TCX/CSV/GeoJSON inputs (reference
-    # bin/activity_files.dart 'encoding' option; FIT is binary, unaffected).
-    # Native F.decode keeps the conversion JVM-side.
     charset = _CHARSETS.get((getattr(args, "encoding", "utf8") or "utf8").lower())
     if charset is None:
         raise SystemExit(
             f"unsupported --encoding (choose from {sorted(_CHARSETS)})"
         )
-    # BOM-priority decode (facade _parseBytesWithBom parity): a UTF-16/32/8
-    # BOM always wins over --encoding; UTF-32 rows (outside Spark's decode
-    # charset set) take a vectorized Arrow fallback, everything else stays
-    # JVM-side
-    from activity_files_spark.sources.detect import (
-        decode_text_col,
-        decode_text_utf32_df,
-        has_utf32_bom_col,
+    files = spark.read.format("binaryFile").load(args.input).select(
+        F.col("path").alias("activity_id"), F.col("content").alias("payload")
     )
-
-    is32 = has_utf32_bom_col(F.col("payload"))
-    decoded = decode_text_col(F.col("payload"), charset)
-    text = files.filter(~is32).withColumn("xml", decoded).withColumn("text", decoded)
-    t32 = decode_text_utf32_df(files.filter(is32), out_col="text")
-    text = text.unionByName(t32.withColumn("xml", F.col("text")))
-    parts = [
-        gpx_records(text.filter(F.col("fmt") == "gpx"), id_col="activity_id", xml_col="xml"),
-        tcx_records(text.filter(F.col("fmt") == "tcx"), id_col="activity_id", xml_col="xml"),
-        geojson_records(text.filter(F.col("fmt") == "geojson"), id_col="activity_id", text_col="text"),
-        csv_records(text.filter(F.col("fmt") == "csv"), id_col="activity_id", text_col="text"),
-        fit_records(files.filter(F.col("fmt") == "fit"), id_col="activity_id"),
-    ]
-    # undetectable payloads become diagnostics, never silent drops
-    unknown = files.filter(F.col("fmt").isNull()).select(
-        F.col("activity_id"),
-        F.create_map(
-            F.lit("code"), F.lit("detect.unknown_format"),
-            F.lit("severity"), F.lit("error"),
-            F.lit("message"), F.lit("format not detectable"),
-        ).alias("attrs"),
-    )
-    parts.append(as_records(unknown, "diag"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    fmt = None if args.from_fmt == "auto" else args.from_fmt
+    return decode_records(files, fmt=fmt, charset=charset)
 
 
 def cmd_convert(spark, args) -> int:

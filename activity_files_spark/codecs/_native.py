@@ -9,11 +9,11 @@ with the system compiler at first use and calls it through ctypes: one
 16-bit-LUT probe per symbol, sign-extended magnitude bits, coefficients
 written straight into the per-component zigzag arrays.
 
-Everything is best-effort: if there is no compiler, the build fails, or
-``AFS_NATIVE=0`` is set, callers fall back to the bit-identical
-pure-Python/numpy path in ``jpeg._decode_segment``, which remains the
-reference implementation and is property-tested against this one
-(``tests/test_jpeg.py``).
+Everything is best-effort: if there is no compiler or the build fails,
+callers fall back to the bit-identical pure-Python/numpy path in
+``jpeg._decode_segment``, which remains the reference implementation and is
+property-tested against this one (``tests/test_jpeg.py`` forces it by
+setting ``_lib = False``).
 
 The .so is cached in the system temp dir keyed by a hash of the C
 source, so the many Spark python workers on one box compile at most
@@ -169,11 +169,8 @@ def chase_lib():
     """The compiled kernel, or None when unavailable (callers fall back)."""
     global _lib
     if _lib is None:
-        if os.environ.get("AFS_NATIVE", "1") != "1":
+        try:
+            _lib = _build()
+        except Exception:
             _lib = False
-        else:
-            try:
-                _lib = _build()
-            except Exception:
-                _lib = False
     return _lib or None

@@ -683,7 +683,7 @@ def _decode_segment(seg: bytes, comps, luts, zz_arrays, fill_pos):
     When the box has a C compiler the whole walk runs in the compiled
     kernel (:mod:`._native`) — one LUT probe per symbol, coefficients
     written directly into the zigzag arrays; this python path is the
-    bit-identical reference fallback (``AFS_NATIVE=0`` forces it).
+    bit-identical reference fallback.
     """
     unstuffed = seg.replace(b"\xff\x00", b"\xff")
     total_bits = len(unstuffed) * 8

@@ -31,13 +31,23 @@ from pyspark.sql import functions as F
 MAX_LAT = 85.05112878
 
 
-def tile_xy_py(lat: float, lon: float, z: int) -> tuple[int, int]:
+def merc_px_py(lat: float, lon: float, z: int) -> tuple[float, float]:
+    """CONTINUOUS web-mercator coordinates in tile units at zoom ``z``
+    (pixel units when ``z`` is a pixel zoom): :func:`tile_xy_py` before its
+    floor and clamp. The one Python projection; polygon rasterization
+    ray-casts in this frame."""
     lat = min(max(lat, -MAX_LAT), MAX_LAT)
-    n = 1 << z
-    x = int(math.floor((lon + 180.0) / 360.0 * n))
+    scale = float(1 << z)
+    x = (lon + 180.0) / 360.0 * scale
     sin_lat = math.sin(lat * math.pi / 180.0)
-    y = int(math.floor((0.5 - math.log((1.0 + sin_lat) / (1.0 - sin_lat)) / (4.0 * math.pi)) * n))
-    return min(max(x, 0), n - 1), min(max(y, 0), n - 1)
+    y = (0.5 - math.log((1.0 + sin_lat) / (1.0 - sin_lat)) / (4.0 * math.pi)) * scale
+    return x, y
+
+
+def tile_xy_py(lat: float, lon: float, z: int) -> tuple[int, int]:
+    n = 1 << z
+    x, y = merc_px_py(lat, lon, z)
+    return min(max(math.floor(x), 0), n - 1), min(max(math.floor(y), 0), n - 1)
 
 
 def quadkey_py(lat: float, lon: float, z: int) -> str:

@@ -95,6 +95,31 @@ def asof_join(
     return matched.select(*p_cols, out)
 
 
+def _nearest_within(pt, st, sv, tol: float):
+    """Per probe time in ``pt``: the value in ``sv`` of the nearest sample
+    time in sorted ``st`` within ``tol`` seconds, else NaN; smallest |dt|
+    wins and the earlier sample wins a tie (channel_mapper.dart:203)."""
+    import numpy as np
+
+    if len(st) == 0 or len(pt) == 0:
+        return np.full(len(pt), np.nan)
+    sv = np.asarray(sv, dtype="float64")
+    idx = np.searchsorted(st, pt, side="right")
+    prev_i = np.clip(idx - 1, 0, len(st) - 1)
+    next_i = np.clip(idx, 0, len(st) - 1)
+    d_prev = np.where(idx - 1 >= 0, pt - st[prev_i], np.inf)
+    d_next = np.where(idx < len(st), st[next_i] - pt, np.inf)
+    take_prev = d_prev <= d_next  # earlier wins ties
+    best_d = np.where(take_prev, d_prev, d_next)
+    best_v = np.where(take_prev, sv[prev_i], sv[next_i])
+    return np.where(best_d <= tol, best_v, np.nan)
+
+
+def _epoch_s(series):
+    """datetime64 Series -> float epoch seconds (microsecond grain)."""
+    return series.values.astype("datetime64[us]").astype("int64") / 1e6
+
+
 def asof_join_pandas(
     probes: DataFrame,
     samples: DataFrame,
@@ -110,7 +135,6 @@ def asof_join_pandas(
     the building block where many channels map to wide columns at once
     (state never crosses an activity boundary — natural partition key).
     """
-    import numpy as np
     import pandas as pd
 
     p_cols = probes.columns
@@ -128,21 +152,9 @@ def asof_join_pandas(
         pr = pdf[pdf["_side"] == 1].sort_values(ts, kind="stable")
         sm = pdf[(pdf["_side"] == 0) & pdf["_sval"].notna()].sort_values(ts, kind="stable")
         res = pr[[c for c in p_cols]].copy()
-        if len(sm) == 0 or len(pr) == 0:
-            res[out] = np.nan
-            return res
-        st = sm[ts].values.astype("datetime64[us]").astype("int64") / 1e6
-        sv = sm["_sval"].values
-        pt = pr[ts].values.astype("datetime64[us]").astype("int64") / 1e6
-        idx = np.searchsorted(st, pt, side="right")
-        prev_i = np.clip(idx - 1, 0, len(st) - 1)
-        next_i = np.clip(idx, 0, len(st) - 1)
-        d_prev = np.where(idx - 1 >= 0, pt - st[prev_i], np.inf)
-        d_next = np.where(idx < len(st), st[next_i] - pt, np.inf)
-        take_prev = d_prev <= d_next  # earlier wins ties
-        best_d = np.where(take_prev, d_prev, d_next)
-        best_v = np.where(take_prev, sv[prev_i], sv[next_i])
-        res[out] = np.where(best_d <= tolerance_s, best_v, np.nan)
+        res[out] = _nearest_within(
+            _epoch_s(pr[ts]), _epoch_s(sm[ts]), sm["_sval"].values, tolerance_s
+        )
         return res
 
     return grouped_apply(merged, key, kernel, out_schema)
@@ -168,7 +180,6 @@ def asof_channels_wide(
     Plan: ONE cogroup shuffle on ``key`` (not one join per channel); the
     kernel runs a searchsorted pass per channel inside the activity group.
     """
-    import numpy as np
     import pandas as pd
 
     tolerances = tolerances or {}
@@ -181,25 +192,14 @@ def asof_channels_wide(
     def kernel(pr: pd.DataFrame, ch: pd.DataFrame) -> pd.DataFrame:
         pr = pr.sort_values(ts, kind="stable")
         res = pr[[c for c in p_cols]].copy()
-        pt = pr[ts].values.astype("datetime64[us]").astype("int64") / 1e6
+        pt = _epoch_s(pr[ts])
         for cname in channel_names:
             sm = ch[(ch[channel_col] == cname) & ch[value].notna()].sort_values(
                 ts, kind="stable"
             )
-            if len(sm) == 0 or len(pr) == 0:
-                res[cname] = np.nan
-                continue
-            st = sm[ts].values.astype("datetime64[us]").astype("int64") / 1e6
-            sv = sm[value].values.astype("float64")
-            idx = np.searchsorted(st, pt, side="right")
-            prev_i = np.clip(idx - 1, 0, len(st) - 1)
-            next_i = np.clip(idx, 0, len(st) - 1)
-            d_prev = np.where(idx - 1 >= 0, pt - st[prev_i], np.inf)
-            d_next = np.where(idx < len(st), st[next_i] - pt, np.inf)
-            take_prev = d_prev <= d_next  # earlier wins ties
-            best_d = np.where(take_prev, d_prev, d_next)
-            best_v = np.where(take_prev, sv[prev_i], sv[next_i])
-            res[cname] = np.where(best_d <= tol[cname], best_v, np.nan)
+            res[cname] = _nearest_within(
+                pt, _epoch_s(sm[ts]), sm[value].values, tol[cname]
+            )
         return res
 
     return probes.groupBy(key).cogroup(
@@ -342,7 +342,6 @@ def map_channels_wide_kernel(
     per channel inside the group). The scale path for wide encoder-side
     mappings; semantics identical to :func:`map_channels_wide`
     (nearest-within-tolerance, earlier wins ties, per-channel overrides)."""
-    import numpy as np
     import pandas as pd
 
     tol = dict(DEFAULT_CHANNEL_TOLERANCES)
@@ -364,24 +363,14 @@ def map_channels_wide_kernel(
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pr = pdf[pdf["_side"] == 1].sort_values(ts, kind="stable")
         res = pr[[col for col in p_cols]].copy()
-        pt = pr[ts].values.astype("datetime64[us]").astype("int64") / 1e6
+        pt = _epoch_s(pr[ts])
         for ch in channel_names:
             sm = pdf[(pdf["_side"] == 0) & (pdf["_ch"] == ch) & pdf["_cv"].notna()]
             sm = sm.sort_values(ts, kind="stable")
-            if len(sm) == 0 or len(pr) == 0:
-                res[ch] = np.nan
-                continue
-            st = sm[ts].values.astype("datetime64[us]").astype("int64") / 1e6
-            sv = sm["_cv"].values
-            idx = np.searchsorted(st, pt, side="right")
-            prev_i = np.clip(idx - 1, 0, len(st) - 1)
-            next_i = np.clip(idx, 0, len(st) - 1)
-            d_prev = np.where(idx - 1 >= 0, pt - st[prev_i], np.inf)
-            d_next = np.where(idx < len(st), st[next_i] - pt, np.inf)
-            take_prev = d_prev <= d_next  # earlier wins ties
-            best_d = np.where(take_prev, d_prev, d_next)
-            best_v = np.where(take_prev, sv[prev_i], sv[next_i])
-            res[ch] = np.where(best_d <= tol.get(ch, DEFAULT_TOLERANCE_S), best_v, np.nan)
+            res[ch] = _nearest_within(
+                pt, _epoch_s(sm[ts]), sm["_cv"].values,
+                tol.get(ch, DEFAULT_TOLERANCE_S),
+            )
         return res
 
     return grouped_apply(merged, key, kernel, out_schema)

@@ -433,23 +433,6 @@ def contour_segments_sql(sparse_cte: str, threshold: int = 1) -> str:
     """
 
 
-def merc_px_py(lat: float, lon: float, zp: int) -> tuple[float, float]:
-    """CONTINUOUS web-mercator pixel coordinates at pixel-zoom ``zp``
-    (tile_xy_py without the floor): the coordinate frame polygon
-    rasterization ray-casts in. Same operation sequence as
-    functions/quadkey.py so all four engine twins stay bit-identical."""
-    import math
-
-    from activity_files_spark.functions.quadkey import MAX_LAT
-
-    lat = min(max(lat, -MAX_LAT), MAX_LAT)
-    scale = float(1 << zp)
-    x = (lon + 180.0) / 360.0 * scale
-    sin_lat = math.sin(lat * math.pi / 180.0)
-    y = (0.5 - math.log((1.0 + sin_lat) / (1.0 - sin_lat)) / (4.0 * math.pi)) * scale
-    return x, y
-
-
 def polygon_mask_pixels(spark, ring: list[tuple[float, float]], z: int, p: int = 8) -> DataFrame:
     """Vector→raster for POLYGONS: -> (tile_id long, px int, py int) — one
     row per pixel whose center lies inside the (lon, lat) ring, across the
@@ -457,13 +440,14 @@ def polygon_mask_pixels(spark, ring: list[tuple[float, float]], z: int, p: int =
     geofence-mask / label-raster job).
 
     The even-odd ray cast runs in web-mercator PIXEL space: ring vertices
-    are forward-transformed once (:func:`merc_px_py` — sin/ln only, the
+    are forward-transformed once (``quadkey.merc_px_py`` — sin/ln only, the
     chain proven bit-identical across engines by the quadkey twins) and
     pixel centers are exact floats (integer + 0.5), so the refine is pure
     sub/mul/div/add/compare — no inverse mercator, no transcendentals in
     the hot loop, bit-replayable in SQL. The plan is Column-only (cover
     rows -> two sequence explodes -> codegen'd XOR chain of per-edge
     crossing tests), embarrassingly parallel, zero shuffle."""
+    from activity_files_spark.functions.quadkey import merc_px_py
     from activity_files_spark.operators.spatial import polygon_cover_tiles
 
     side = 1 << p

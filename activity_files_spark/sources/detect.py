@@ -1,4 +1,4 @@
-"""Format auto-detection (S1).
+"""Format auto-detection and BOM-priority text decoding (S1).
 
 Reference semantics (activity_files_facade.dart:1707-1729, 1866-2049):
 extension map first, then content sniff of a bounded prefix (128 KiB):
@@ -6,20 +6,15 @@ XML root element -> gpx/tcx, GeoJSON markers, CSV header heuristic
 (timestamp+latitude+longitude), FIT magic (binary or base64), BOM-aware
 text decode (facade:2051-2126).
 
-Spark: a dispatch column over binaryFile/text sources —
-``detect_format_py`` is the kernel; ``detect_format_df`` applies it as a
-vectorized pandas UDF over the payload prefix.
+``detect_format_py`` names the format of one payload and ``decode_text`` is
+the one BOM-priority decoder; both run per file inside
+:func:`activity_files_spark.sources.decode.decode_records`.
 """
 
 from __future__ import annotations
 
 import base64
 import binascii
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 SNIFF_BYTES = 128 * 1024  # facade:30
 
@@ -31,18 +26,19 @@ EXTENSION_MAP = {
 _BOMS = [
     (b"\xff\xfe\x00\x00", "utf-32-le"), (b"\x00\x00\xfe\xff", "utf-32-be"),
     (b"\xff\xfe", "utf-16-le"), (b"\xfe\xff", "utf-16-be"),
-    (b"\xef\xbb\xbf", "utf-8-sig"),
+    (b"\xef\xbb\xbf", "utf-8"),
 ]
 
 
-def _decode_prefix(data: bytes) -> str:
-    for bom, enc in _BOMS:
-        if data.startswith(bom):
-            try:
-                return data.decode(enc, "replace")
-            except (UnicodeDecodeError, LookupError):
-                break
-    return data.decode("utf-8", "replace")
+def decode_text(data: bytes, charset: str = "utf-8") -> str:
+    """BOM-priority decode (facade:2051-2126 `_parseBytesWithBom`): a
+    UTF-32/16/8 BOM always wins over ``charset``, which applies only to
+    payloads without one. Undecodable bytes become U+FFFD, never an
+    exception, and exactly one leading U+FEFF is stripped (a second one is
+    document content)."""
+    enc = next((e for bom, e in _BOMS if data.startswith(bom)), charset)
+    text = data.decode(enc, "replace")
+    return text[1:] if text.startswith("\ufeff") else text
 
 
 def detect_format_py(payload: bytes, filename: str | None = None) -> str | None:
@@ -54,7 +50,7 @@ def detect_format_py(payload: bytes, filename: str | None = None) -> str | None:
     head = payload[:SNIFF_BYTES]
     if len(head) >= 12 and head[0] in (12, 14) and head[8:12] == b".FIT":
         return "fit"
-    text = _decode_prefix(head).lstrip("﻿ \t\r\n")
+    text = decode_text(head).lstrip("\ufeff \t\r\n")
     low = text[:4096].lower()
     if low.startswith("<?xml") or low.startswith("<"):
         if "<gpx" in low:
@@ -79,73 +75,3 @@ def detect_format_py(payload: bytes, filename: str | None = None) -> str | None:
         except (binascii.Error, ValueError):
             pass
     return None
-
-
-def detect_format_df(
-    files: DataFrame, payload_col: str = "payload", path_col: str | None = "path"
-) -> DataFrame:
-    """Add a `fmt` column via a vectorized pandas UDF over payload prefixes."""
-
-    @F.pandas_udf(StringType())
-    def _detect(payload: pd.Series, path: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                detect_format_py(bytes(b) if b is not None else b"", p)
-                for b, p in zip(payload, path)
-            ]
-        )
-
-    path_expr = F.col(path_col) if path_col and path_col in files.columns else F.lit(None).cast("string")
-    return files.withColumn("fmt", _detect(F.col(payload_col), path_expr))
-
-
-def decode_text_col(payload_col, default_charset: str = "UTF-8"):
-    """BOM-priority JVM-side text decode (reference parity:
-    activity_files_facade.dart:2051-2126 `_parseBytesWithBom` — a BOM always
-    wins over the caller's declared encoding). UTF-16 LE/BE and UTF-8 BOMs
-    decode natively via a `F.decode` CASE on the payload prefix; rows with
-    no BOM use ``default_charset``. The decoded BOM code point (U+FEFF) is
-    stripped. UTF-32 is NOT handled here (Spark's `decode` charset set has
-    no UTF-32) — route those rows through :func:`decode_text_utf32_df`.
-    """
-    b = payload_col if not isinstance(payload_col, str) else F.col(payload_col)
-    p2 = F.substring(b, 1, 2)
-    p3 = F.substring(b, 1, 3)
-    decoded = (
-        F.when(p2 == F.lit(b"\xff\xfe"), F.decode(b, "UTF-16LE"))
-        .when(p2 == F.lit(b"\xfe\xff"), F.decode(b, "UTF-16BE"))
-        .when(p3 == F.lit(b"\xef\xbb\xbf"), F.decode(b, "UTF-8"))
-        .otherwise(F.decode(b, default_charset))
-    )
-    return F.regexp_replace(decoded, "^﻿", "")
-
-
-def has_utf32_bom_col(payload_col):
-    """Column predicate: payload starts with a UTF-32 LE/BE BOM. These BOMs
-    must be checked BEFORE the UTF-16 prefixes (FF FE 00 00 starts with the
-    UTF-16LE mark)."""
-    b = payload_col if not isinstance(payload_col, str) else F.col(payload_col)
-    p4 = F.substring(b, 1, 4)
-    return (p4 == F.lit(b"\xff\xfe\x00\x00")) | (p4 == F.lit(b"\x00\x00\xfe\xff"))
-
-
-def decode_text_utf32_df(
-    files: DataFrame, payload_col: str = "payload", out_col: str = "text"
-) -> DataFrame:
-    """Arrow-vectorized UTF-32 decode for the (rare) BOM'd UTF-32 rows the
-    JVM path can't handle; callers filter with :func:`has_utf32_bom_col`
-    first, so this kernel only ever sees a handful of rows."""
-
-    @F.pandas_udf(StringType())
-    def _decode32(payload: pd.Series) -> pd.Series:
-        out = []
-        for b in payload:
-            data = bytes(b) if b is not None else b""
-            enc = "utf-32-le" if data[:4] == b"\xff\xfe\x00\x00" else "utf-32-be"
-            s = data.decode(enc, "replace")
-            # strip exactly ONE decoded BOM, matching the JVM branch's
-            # regexp '^﻿' (a second U+FEFF is document content)
-            out.append(s[1:] if s.startswith("﻿") else s)
-        return pd.Series(out)
-
-    return files.withColumn(out_col, _decode32(F.col(payload_col)))

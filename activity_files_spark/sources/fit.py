@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame
 
 from activity_files_spark.codecs.crc import fit_crc16
 from activity_files_spark.operators.grouped import grouped_apply
-from activity_files_spark.sources.records import RECORD_SCHEMA, records_frame
 
 FIT_EPOCH_UNIX = 631_065_600
 FIT_TS_MAX = 1_924_992_000
@@ -558,8 +557,8 @@ def parse_fit(
 ) -> list[dict]:
     """``integrity`` selects the reference's integrity gates
     (integrity_mode.dart:7-55): 'strict' raises ValueError on the first
-    integrity issue (fail-fast for trusted pipelines — inside fit_records
-    this aborts the Spark job), 'report' (default) emits diag records and
+    integrity issue (fail-fast for trusted pipelines), 'report' (default,
+    the mode ``decode.decode_records`` runs) emits diag records and
     continues best-effort, 'silent' suppresses integrity diags entirely.
     With ``collect_stats`` (report mode), the meta record carries
     integrity.* counters (integrity_mode.dart:57-124)."""
@@ -1161,26 +1160,6 @@ def _sanitize_dev_name(name: str, didx: int, fnum: int) -> str:
     if not s or s[0].isdigit():
         return f"fit_dev_{didx}_{fnum}"
     return s
-
-
-def fit_records(
-    files: DataFrame,
-    id_col: str = "activity_id",
-    bin_col: str = "payload",
-    integrity: str = "report",
-) -> DataFrame:
-    """(activity_id, payload binary) rows -> record stream. ``integrity``
-    as in :func:`parse_fit`; 'strict' makes the first corrupted file abort
-    the Spark job (fail-fast gate, integrity_mode.dart:10-12)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for aid, payload in zip(pdf[id_col], pdf[bin_col]):
-                rows.extend(parse_fit(aid, bytes(payload), integrity=integrity))
-            yield records_frame(rows)
-
-    return files.mapInPandas(kernel, RECORD_SCHEMA)
 
 
 # ------------------------------------------------------------------ encoder

@@ -27,7 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from activity_files_spark.sources.gpx import _iso, _parse_time
-from activity_files_spark.sources.records import RECORD_SCHEMA, records_frame
 from activity_files_spark.operators.grouped import grouped_apply
 
 
@@ -142,21 +141,6 @@ def _coord_record(activity_id, c, seq, ts):
             pass
     return {"activity_id": activity_id, "kind": "point", "seq": seq, "ts": ts,
             "lat": lat, "lon": lon, "ele": ele, "attrs": None}
-
-
-def geojson_records(
-    files: DataFrame, id_col: str = "activity_id", text_col: str = "text"
-) -> DataFrame:
-    def kernel(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for aid, txt in zip(pdf[id_col], pdf[text_col]):
-                rows.extend(
-                    r for r in parse_geojson(aid, txt) if r.get("kind") != "geofence"
-                )
-            yield records_frame(rows)
-
-    return files.mapInPandas(kernel, RECORD_SCHEMA)
 
 
 def geojson_geofences(

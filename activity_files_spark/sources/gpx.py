@@ -35,7 +35,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from activity_files_spark.functions.geo import haversine_m_py
-from activity_files_spark.sources.records import RECORD_SCHEMA, records_frame
 
 # gpx_parser.dart:34-46 — TrackPointExtension tag -> channel id
 TPX_CHANNELS = {
@@ -314,19 +313,6 @@ def _num_text(node) -> float | None:
         return float(txt)
     except ValueError:
         return None
-
-
-def gpx_records(files: DataFrame, id_col: str = "activity_id", xml_col: str = "xml") -> DataFrame:
-    """(activity_id, xml) rows -> record stream (mapInPandas Arrow kernel)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for aid, xml in zip(pdf[id_col], pdf[xml_col]):
-                rows.extend(parse_gpx(aid, xml))
-            yield records_frame(rows)
-
-    return files.mapInPandas(kernel, RECORD_SCHEMA)
 
 
 # ------------------------------------------------------------------ encoder

@@ -25,7 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from activity_files_spark.sources.gpx import _local, _parse_time, _xml_escape
-from activity_files_spark.sources.records import RECORD_SCHEMA, records_frame
 
 TPX_TCX_CHANNELS = {"speed": "speed", "watts": "power", "runcadence": "cadence"}
 from activity_files_spark.operators.grouped import grouped_apply
@@ -188,17 +187,6 @@ def _ch(activity_id: str, channel: str, ts, text: str) -> dict | None:
                 "channel": channel, "ts": ts, "value": float(text)}
     except ValueError:
         return None
-
-
-def tcx_records(files: DataFrame, id_col: str = "activity_id", xml_col: str = "xml") -> DataFrame:
-    def kernel(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for aid, xml in zip(pdf[id_col], pdf[xml_col]):
-                rows.extend(parse_tcx(aid, xml))
-            yield records_frame(rows)
-
-    return files.mapInPandas(kernel, RECORD_SCHEMA)
 
 
 # ------------------------------------------------------------------ encoder

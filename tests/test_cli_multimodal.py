@@ -371,12 +371,8 @@ def test_cli_convert_every_format_reads_back(spark, tmp_path, fmt):
     """Every `convert --to` branch encodes the fixture's points, and the
     target format's own parser reads them back."""
     from activity_files_spark.cli import main
-    from activity_files_spark.sources.csvsrc import csv_records
-    from activity_files_spark.sources.fit import fit_records
-    from activity_files_spark.sources.geojson import geojson_records
-    from activity_files_spark.sources.gpx import gpx_records
+    from activity_files_spark.sources.decode import decode_records
     from activity_files_spark.sources.records import points_of
-    from activity_files_spark.sources.tcx import tcx_records
     from tests.test_sources_roundtrip import EXPECTED_PTS, SAMPLE_GPX
 
     d = tmp_path / "in"
@@ -386,16 +382,40 @@ def test_cli_convert_every_format_reads_back(spark, tmp_path, fmt):
     rc = main(["convert", "--input", str(d), "--from", "auto", "--to", fmt,
                "--output", out])
     assert rc == 0
-    parse = {"gpx": gpx_records, "tcx": tcx_records, "geojson": geojson_records,
-             "fit": fit_records, "csv": csv_records}[fmt]
-    # each parser's default payload column is the one its encoder writes
-    rows = points_of(parse(spark.read.parquet(out))).collect()
+    # the payload column each encoder writes
+    col = {"gpx": "xml", "tcx": "xml", "geojson": "text", "fit": "payload",
+           "csv": "text"}[fmt]
+    back = decode_records(spark.read.parquet(out), fmt=fmt, payload_col=col)
+    rows = points_of(back).collect()
     got = sorted(((r["lat"], r["lon"], r["ele"], str(r["ts"])) for r in rows),
                  key=lambda t: t[3])
     assert len(got) == len(EXPECTED_PTS)
     for g, e in zip(got, EXPECTED_PTS):
         # FIT stores lat/lon as semicircles: equal to ~1e-7 degrees
         assert g[:3] == pytest.approx(e[:3], abs=1e-6) and g[3] == e[3]
+
+
+def test_cli_loader_reads_each_file_once(spark, tmp_path):
+    """The CLI loader scans its input once and decodes every file in one
+    Python pass: one binaryFile scan, one MapInPandas, no per-column Arrow
+    UDFs, whatever mix of formats the directory holds."""
+    import argparse
+
+    from activity_files_spark.cli import _load_records
+    from tests.test_sources_roundtrip import SAMPLE_GPX, SAMPLE_TCX
+
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "a.gpx").write_text(SAMPLE_GPX)
+    (d / "b.tcx").write_text(SAMPLE_TCX)
+    rec = _load_records(spark, argparse.Namespace(
+        input=str(d), from_fmt="auto", encoding="utf8"))
+    assert rec.filter(F.col("kind") == "point").count() == 6
+    rec.collect()
+    plan = rec._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan binaryFile") == 1
+    assert plan.count("MapInPandas") == 1
+    assert "ArrowEvalPython" not in plan
 
 
 def test_snap_channels_to_points_tolerance(spark):

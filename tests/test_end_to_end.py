@@ -13,7 +13,7 @@ from activity_files_spark.functions.quadkey import quadkey_py
 from activity_files_spark.operators.normalize import sort_dedup, trim_invalid
 from activity_files_spark.operators.spatial import knn_join, knn_join_brute, pip_join
 from activity_files_spark.operators.tiling import tile_assign, validate_images
-from activity_files_spark.sources.gpx import gpx_records
+from activity_files_spark.sources.decode import decode_records
 from activity_files_spark.sources.records import points_of
 
 
@@ -31,8 +31,9 @@ DIRTY_GPX = """<?xml version="1.0"?>
 
 def test_gpx_to_pip_to_knn_slice(spark):
     # 1. parse (whole-file Arrow kernel)
-    rec = gpx_records(
-        spark.createDataFrame([("act_000", DIRTY_GPX)], "activity_id string, xml string")
+    rec = decode_records(
+        spark.createDataFrame([("act_000", DIRTY_GPX)], "activity_id string, xml string"),
+        fmt="gpx", payload_col="xml",
     ).cache()
     raw_pts = points_of(rec)
     assert raw_pts.count() == 5

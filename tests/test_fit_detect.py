@@ -7,13 +7,13 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from activity_files_spark.sources.detect import detect_format_df, detect_format_py
+from activity_files_spark.sources.decode import decode_records
+from activity_files_spark.sources.detect import detect_format_py
 from activity_files_spark.sources.fit import (
     FIT_EPOCH_UNIX,
     encode_fit,
     fit_crc16,
     fit_encode_records,
-    fit_records,
     parse_fit,
     _sanitize_dev_name,
 )
@@ -134,7 +134,7 @@ def test_fit_spark_roundtrip(spark):
     files = spark.createDataFrame(
         [("act_000", bytes(enc[0]["payload"]))], "activity_id string, payload binary"
     )
-    rec = fit_records(files).cache()
+    rec = decode_records(files, fmt="fit").cache()
     assert points_of(rec).count() == 3
     hr = sorted(r["value"] for r in channels_of(rec).filter(F.col("channel") == "heart_rate").collect())
     assert hr == [140.0, 142.0, 145.0]
@@ -158,16 +158,23 @@ def test_detect_format():
     assert detect_format_py(b"random noise 1234") is None
 
 
-def test_detect_format_df(spark):
+def test_decode_records_detects_format(spark):
+    """fmt=None: each row is parsed as the format detected from its payload
+    and path; an undetectable payload becomes a diag record."""
     fit = encode_fit(PTS, {}, [])
     rows = [
         ("a.bin", b"<gpx/>"),
         ("b.bin", fit),
         ("c.csv", b"x"),  # extension wins
+        ("d.bin", b"random noise 1234"),
     ]
-    df = spark.createDataFrame(rows, "path string, payload binary")
-    got = {r["path"]: r["fmt"] for r in detect_format_df(df).collect()}
+    df = spark.createDataFrame(rows, "activity_id string, payload binary")
+    rec = decode_records(df)
+    got = {r["activity_id"]: r["attrs"]["format"]
+           for r in rec.filter(F.col("kind") == "meta").collect()}
     assert got == {"a.bin": "gpx", "b.bin": "fit", "c.csv": "csv"}
+    diags = [(r["activity_id"], r["attrs"]["code"]) for r in diagnostics_of(rec).collect()]
+    assert diags == [("d.bin", "detect.unknown_format")]
 
 
 def test_fit_array_valued_fields_never_throw():
@@ -336,7 +343,7 @@ def test_fit_encode_records_full_stream(spark):
     ))
     rec_df = spark.createDataFrame(records_frame(rows), RECORD_SCHEMA)
     payloads = fit_encode_records(rec_df)
-    back = fit_records(payloads)
+    back = decode_records(payloads, fmt="fit")
     b = [r.asDict(recursive=True) for r in back.collect()]
     for kind, n in [("point", 3), ("lap", 1), ("length", 1), ("set", 1)]:
         assert sum(1 for r in b if r["kind"] == kind) == n, kind
@@ -378,16 +385,11 @@ def test_fit_integrity_modes(spark):
     with pytest.raises(ValueError, match="integrity must be"):
         parse_fit("a", bytes(good), integrity="nope")
 
-    # strict mode aborts the Spark job through fit_records
+    # the Spark decode runs report mode: the same file decodes, never throws
     files = spark.createDataFrame(
         [("a", bytes(good))], "activity_id string, payload binary"
     )
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import PythonException
-    with pytest.raises((Py4JJavaError, PythonException, Exception)):
-        fit_records(files, integrity="strict").collect()
-    # report mode on the same file succeeds
-    assert fit_records(files, integrity="report").count() > 0
+    assert decode_records(files, fmt="fit").count() > 0
 
 
 def test_fit_string_truncation_char_boundary():
@@ -419,7 +421,7 @@ def test_fit_encode_null_timestamps_and_event_values(spark):
     """Review regressions: NaT timestamps on lengths/sets/laps and null/
     out-of-range event values must encode as invalid sentinels, not crash
     the kernel (pandas nulls arrive as NaT/NaN through to_dict)."""
-    from activity_files_spark.sources.fit import fit_encode_records, fit_records
+    from activity_files_spark.sources.fit import fit_encode_records
     from activity_files_spark.sources.records import records_frame, RECORD_SCHEMA
 
     rows = [
@@ -439,7 +441,8 @@ def test_fit_encode_null_timestamps_and_event_values(spark):
          "ts": datetime(2024, 3, 1, 10, 0, 10), "value": 300.0},
     ]
     rec_df = spark.createDataFrame(records_frame(rows), RECORD_SCHEMA)
-    back = [r.asDict() for r in fit_records(fit_encode_records(rec_df)).collect()]
+    back = decode_records(fit_encode_records(rec_df), fmt="fit")
+    back = [r.asDict() for r in back.collect()]
     assert sum(1 for r in back if r["kind"] == "point") == 1  # null-ts dropped
     # length survives: end falls back to start+elapsed on decode
     lens = [r for r in back if r["kind"] == "length"]

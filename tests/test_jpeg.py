@@ -148,22 +148,13 @@ def test_property_roundtrip_never_crashes(w, h, seed, sub, ri):
 
 def _decode_pure_python(data):
     """Force the pure-python reference walk regardless of the compiled
-    kernel's availability, restoring the dispatch state afterwards."""
-    import os
-
+    kernel's availability (``_lib = False`` is the kernel-unavailable
+    state), restoring the dispatch state afterwards."""
     from activity_files_spark.codecs import _native
 
-    saved_lib, saved_env = _native._lib, os.environ.get("AFS_NATIVE")
-    os.environ["AFS_NATIVE"] = "0"
-    _native._lib = None
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(_native, "_lib", False)
         return decode_jpeg(data)
-    finally:
-        _native._lib = saved_lib
-        if saved_env is None:
-            os.environ.pop("AFS_NATIVE", None)
-        else:
-            os.environ["AFS_NATIVE"] = saved_env
 
 
 def test_native_kernel_available():

@@ -495,7 +495,7 @@ def test_fit_device_info_sensor_does_not_override_creator():
 
 
 def test_gpx_multi_track_concatenates(spark):
-    from activity_files_spark.sources.gpx import gpx_records
+    from activity_files_spark.sources.decode import decode_records
     from activity_files_spark.sources.records import laps_of, points_of
 
     xml = """<?xml version="1.0"?><gpx version="1.1" creator="t"
@@ -508,8 +508,9 @@ def test_gpx_multi_track_concatenates(spark):
         <trkpt lat="41.0" lon="-106.0"><time>2024-03-01T11:00:00Z</time></trkpt>
       </trkseg></trk>
     </gpx>"""
-    rec = gpx_records(
-        spark.createDataFrame([("m", xml)], "activity_id string, xml string")
+    rec = decode_records(
+        spark.createDataFrame([("m", xml)], "activity_id string, xml string"),
+        fmt="gpx", payload_col="xml",
     ).cache()
     pts = points_of(rec).orderBy("seq").collect()
     assert len(pts) == 3

@@ -125,11 +125,12 @@ GPX10 = """<?xml version="1.0"?>
 
 
 def test_gpx_10_dialect(spark):
-    from activity_files_spark.sources.gpx import gpx_records
+    from activity_files_spark.sources.decode import decode_records
     from activity_files_spark.sources.records import meta_of, points_of
 
-    rec = gpx_records(
-        spark.createDataFrame([("v10", GPX10)], "activity_id string, xml string")
+    rec = decode_records(
+        spark.createDataFrame([("v10", GPX10)], "activity_id string, xml string"),
+        fmt="gpx", payload_col="xml",
     ).cache()
     pts = points_of(rec).orderBy("seq").collect()
     assert len(pts) == 2 and pts[0]["ele"] == 1600.0
@@ -150,11 +151,12 @@ TCX_V1 = """<?xml version="1.0"?>
 
 
 def test_tcx_v1_dialect(spark):
+    from activity_files_spark.sources.decode import decode_records
     from activity_files_spark.sources.records import laps_of, points_of
-    from activity_files_spark.sources.tcx import tcx_records
 
-    rec = tcx_records(
-        spark.createDataFrame([("v1", TCX_V1)], "activity_id string, xml string")
+    rec = decode_records(
+        spark.createDataFrame([("v1", TCX_V1)], "activity_id string, xml string"),
+        fmt="tcx", payload_col="xml",
     ).cache()
     assert points_of(rec).count() == 1
     lap = laps_of(rec).collect()[0]

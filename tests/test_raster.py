@@ -210,10 +210,8 @@ def test_polygon_mask_matches_raycast_golden(spark):
     # the distributed Column XOR chain must agree with the pure-python
     # even-odd ray cast evaluated at every pixel center in mercator pixel
     # space — over the full bbox cover, inside and outside alike
-    from activity_files_spark.operators.raster import (
-        merc_px_py,
-        polygon_mask_pixels,
-    )
+    from activity_files_spark.functions.quadkey import merc_px_py
+    from activity_files_spark.operators.raster import polygon_mask_pixels
     from activity_files_spark.operators.spatial import (
         polygon_cover_tiles,
         ray_cast_py,

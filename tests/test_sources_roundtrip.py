@@ -8,14 +8,14 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from activity_files_spark.sources.csvsrc import csv_encode_df, read_csv_activities
+from activity_files_spark.sources.csvsrc import csv_encode_df
+from activity_files_spark.sources.decode import decode_records
 from activity_files_spark.sources.geojson import (
     geojson_encode_records,
     geojson_geofences,
-    geojson_records,
     parse_geojson,
 )
-from activity_files_spark.sources.gpx import gpx_encode_records, gpx_records, parse_gpx
+from activity_files_spark.sources.gpx import gpx_encode_records, parse_gpx
 from activity_files_spark.sources.records import (
     as_records,
     channels_of,
@@ -24,7 +24,7 @@ from activity_files_spark.sources.records import (
     points_of,
     waypoints_of,
 )
-from activity_files_spark.sources.tcx import parse_tcx, tcx_encode_records, tcx_records
+from activity_files_spark.sources.tcx import parse_tcx, tcx_encode_records
 
 SAMPLE_GPX = """<?xml version="1.0" encoding="UTF-8"?>
 <gpx version="1.1" creator="test" xmlns="http://www.topografix.com/GPX/1/1"
@@ -114,7 +114,7 @@ def gpx_df(spark):
 
 
 def test_gpx_parse_canonical(spark, gpx_df):
-    rec = gpx_records(gpx_df).cache()
+    rec = decode_records(gpx_df, fmt="gpx", payload_col="xml").cache()
     check_points(points_of(rec).collect())
     check_channels(channels_of(rec).collect())
     laps = laps_of(rec).collect()
@@ -127,13 +127,14 @@ def test_gpx_parse_canonical(spark, gpx_df):
 
 
 def test_gpx_roundtrip_lossless(spark, gpx_df):
-    rec = gpx_records(gpx_df).cache()
+    rec = decode_records(gpx_df, fmt="gpx", payload_col="xml").cache()
     xml2 = gpx_encode_records(
         as_records(points_of(rec), "point")
         .unionByName(as_records(channels_of(rec), "channel"))
     ).collect()[0]["xml"]
-    rec2 = gpx_records(
-        spark.createDataFrame([("act_000", xml2)], "activity_id string, xml string")
+    rec2 = decode_records(
+        spark.createDataFrame([("act_000", xml2)], "activity_id string, xml string"),
+        fmt="gpx", payload_col="xml",
     ).cache()
     check_points(points_of(rec2).collect())
     check_channels(channels_of(rec2).collect())
@@ -144,7 +145,7 @@ def test_gpx_malformed_is_diag_not_crash(spark):
         [("bad", "<gpx><unclosed"), ("badpt", '<gpx><trk><trkseg><trkpt lat="x" lon="y"/></trkseg></trk></gpx>')],
         "activity_id string, xml string",
     )
-    rec = gpx_records(df).cache()
+    rec = decode_records(df, fmt="gpx", payload_col="xml").cache()
     diags = {r["activity_id"]: dict(r["attrs"]) for r in diagnostics_of(rec).collect()}
     assert diags["bad"]["code"] == "parse.gpx.malformed"
     assert diags["badpt"]["code"] == "parse.gpx.bad_point"
@@ -153,7 +154,7 @@ def test_gpx_malformed_is_diag_not_crash(spark):
 
 def test_tcx_parse_canonical(spark):
     df = spark.createDataFrame([("act_000", SAMPLE_TCX)], "activity_id string, xml string")
-    rec = tcx_records(df).cache()
+    rec = decode_records(df, fmt="tcx", payload_col="xml").cache()
     check_points(points_of(rec).collect())
     check_channels(channels_of(rec).collect())
     dist = sorted(
@@ -175,15 +176,16 @@ def test_tcx_parse_canonical(spark):
 
 def test_tcx_roundtrip_lossless(spark):
     df = spark.createDataFrame([("act_000", SAMPLE_TCX)], "activity_id string, xml string")
-    rec = tcx_records(df).cache()
+    rec = decode_records(df, fmt="tcx", payload_col="xml").cache()
     xml2 = tcx_encode_records(
         as_records(points_of(rec), "point")
         .unionByName(as_records(channels_of(rec), "channel"))
         .unionByName(as_records(laps_of(rec), "lap")),
         sport="Running",
     ).collect()[0]["xml"]
-    rec2 = tcx_records(
-        spark.createDataFrame([("act_000", xml2)], "activity_id string, xml string")
+    rec2 = decode_records(
+        spark.createDataFrame([("act_000", xml2)], "activity_id string, xml string"),
+        fmt="tcx", payload_col="xml",
     ).cache()
     check_points(points_of(rec2).collect())
     check_channels(channels_of(rec2).collect())
@@ -192,7 +194,7 @@ def test_tcx_roundtrip_lossless(spark):
 
 def test_geojson_linestring_with_times(spark):
     df = spark.createDataFrame([("act_000", SAMPLE_GEOJSON)], "activity_id string, text string")
-    rec = geojson_records(df).cache()
+    rec = decode_records(df, fmt="geojson", payload_col="text").cache()
     check_points(points_of(rec).collect())
     laps = laps_of(rec).collect()
     assert len(laps) == 1 and str(laps[0]["start_ts"]) == "2024-03-01 10:00:00"
@@ -200,12 +202,13 @@ def test_geojson_linestring_with_times(spark):
 
 def test_geojson_roundtrip(spark):
     df = spark.createDataFrame([("act_000", SAMPLE_GEOJSON)], "activity_id string, text string")
-    rec = geojson_records(df).cache()
+    rec = decode_records(df, fmt="geojson", payload_col="text").cache()
     text2 = geojson_encode_records(
         as_records(points_of(rec), "point")
     ).collect()[0]["text"]
-    rec2 = geojson_records(
-        spark.createDataFrame([("act_000", text2)], "activity_id string, text string")
+    rec2 = decode_records(
+        spark.createDataFrame([("act_000", text2)], "activity_id string, text string"),
+        fmt="geojson", payload_col="text",
     )
     check_points(points_of(rec2).collect())
 
@@ -235,7 +238,7 @@ def test_geojson_polygon_geofence_and_holes_diag(spark):
     assert len(gf) == 1
     assert len(gf[0]["ring"]) == 5
     assert gf[0]["ring"][0]["lon"] == -105.0008
-    rec = geojson_records(df)
+    rec = decode_records(df, fmt="geojson", payload_col="text")
     diags = [dict(r["attrs"]) for r in diagnostics_of(rec).collect()]
     assert any(d["code"] == "geojson.polygon_holes_dropped" for d in diags)
 
@@ -249,22 +252,26 @@ def test_csv_roundtrip_with_custom_channel(spark, tmp_path):
     )
     p = tmp_path / "a.csv"
     p.write_text(csv)
-    tables = read_csv_activities(spark, str(p), activity_id="act_000")
-    check_points(tables["points"].collect())
-    ch = tables["channels"]
+    files = spark.read.format("binaryFile").load(str(p)).select(
+        F.lit("act_000").alias("activity_id"), F.col("content").alias("payload")
+    )
+    rec = decode_records(files, fmt="csv").cache()
+    points = points_of(rec)
+    check_points(points.collect())
+    ch = channels_of(rec)
     check_channels(ch.collect())
     custom = sorted(r["value"] for r in ch.filter(F.col("channel") == "my_sensor").collect())
     assert custom == [1.5, 2.5, 3.5]
-    wide = csv_encode_df(tables["points"], ch)
+    wide = csv_encode_df(points, ch)
     assert "my_sensor" in wide.columns  # sorted extra channel column
     rows = wide.orderBy("timestamp").collect()
     assert rows[0]["heart_rate"] == 140.0 and rows[2]["my_sensor"] == 3.5
 
 
 def test_gpx_10_encoder_dialect_and_precision(spark, gpx_df):
-    from activity_files_spark.sources.gpx import encode_gpx, gpx_records
+    from activity_files_spark.sources.gpx import encode_gpx
 
-    rec = gpx_records(gpx_df).cache()
+    rec = decode_records(gpx_df, fmt="gpx", payload_col="xml").cache()
     pts = sorted(
         (r.asDict() for r in points_of(rec).collect()), key=lambda r: r["seq"]
     )
@@ -274,8 +281,9 @@ def test_gpx_10_encoder_dialect_and_precision(spark, gpx_df):
     assert "<ele>1601</ele>" in xml10  # 0 dp
     assert "gpxtpx" not in xml10  # no TPX namespace in the 1.0 dialect
     # still reparses losslessly at the reduced precision
-    rec2 = gpx_records(
-        spark.createDataFrame([("v10", xml10)], "activity_id string, xml string")
+    rec2 = decode_records(
+        spark.createDataFrame([("v10", xml10)], "activity_id string, xml string"),
+        fmt="gpx", payload_col="xml",
     )
     assert points_of(rec2).count() == 3
 
@@ -296,15 +304,14 @@ def test_geojson_points_variant_roundtrip(spark):
     from activity_files_spark.sources.geojson import geojson_encode_points_records
 
     df = spark.createDataFrame([("act_000", SAMPLE_GPX)], "activity_id string, xml string")
-    from activity_files_spark.sources.gpx import gpx_records
-
-    rec = gpx_records(df).cache()
+    rec = decode_records(df, fmt="gpx", payload_col="xml").cache()
     text = geojson_encode_points_records(
         as_records(points_of(rec), "point")
         .unionByName(as_records(channels_of(rec), "channel"))
     ).collect()[0]["text"]
-    rec2 = geojson_records(
-        spark.createDataFrame([("act_000", text)], "activity_id string, text string")
+    rec2 = decode_records(
+        spark.createDataFrame([("act_000", text)], "activity_id string, text string"),
+        fmt="geojson", payload_col="text",
     ).cache()
     check_points(points_of(rec2).collect())
     check_channels(channels_of(rec2).collect())
@@ -454,7 +461,7 @@ def test_as_records_widens_split_tables(spark):
 def test_gpx_encode_records_stream(spark):
     """gpx_encode_records: the unified stream (points/channels/waypoints/
     routes/meta) encodes per activity and re-parses identically."""
-    from activity_files_spark.sources.gpx import gpx_encode_records, gpx_records
+    from activity_files_spark.sources.gpx import gpx_encode_records
     from activity_files_spark.sources.records import records_frame, RECORD_SCHEMA
 
     rows = parse_gpx("a1", GPX_ROUTE_EXT)
