@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import partial
 
 import pandas as pd
 
@@ -2506,15 +2507,14 @@ def _route_near_dups_sql() -> str:
 FRECHET_M = 8  # samples per route for the Fréchet DP (work per pair = m²)
 
 
-def _route_refine(
-    spark: SparkSession, sf_dir: str, refine: Callable, metric: str
-) -> DataFrame:
+def _route_refine(spark: SparkSession, sf_dir: str, metric: str) -> DataFrame:
     """The route near-dup candidate miner (z17 tile-signature Jaccard, each
-    route's single most similar other route) refined by ``refine`` over
-    FRECHET_M index-resampled points per route; ``metric`` names the
-    refined distance column."""
+    route's single most similar other route) refined by the lattice
+    ``metric`` over FRECHET_M index-resampled points per route."""
     from activity_files_spark.operators.trajectory import (
+        LATTICE_METRICS,
         index_resample,
+        lattice_refine,
         route_cells,
         route_pair_jaccard,
         top_similar_routes,
@@ -2530,19 +2530,23 @@ def _route_refine(
     samples = index_resample(
         ev, FRECHET_M, key="user_id", order_cols=("ts", "event_id")
     )
-    ref = refine(top, samples, key="user_id")
+    ref = lattice_refine(metric, top, samples, key="user_id")
+    column = LATTICE_METRICS[metric].column
     return ref.select(
         F.col("key").alias("user_id"),
         F.col("other").alias("similar_user_id"),
         "n_shared",
         F.round("jaccard", 6).alias("jaccard"),
-        F.round(metric, 3).alias(metric),
+        F.round(column, 3).alias(column),
     )
 
 
-def _route_refine_sql(refine_sql: Callable, metric: str, final: str) -> str:
-    body = refine_sql(
-        "pts", RT_Z, FRECHET_M, key="user_id", order_cols=("ts", "event_id")
+def _route_refine_sql(metric: str) -> str:
+    from activity_files_spark.operators.trajectory import LATTICE_METRICS, lattice_sql
+
+    lm = LATTICE_METRICS[metric]
+    body = lattice_sql(
+        metric, "pts", RT_Z, FRECHET_M, key="user_id", order_cols=("ts", "event_id")
     )
     return f"""
     WITH pts AS (
@@ -2552,8 +2556,8 @@ def _route_refine_sql(refine_sql: Callable, metric: str, final: str) -> str:
     ),
     {body}
     SELECT key AS user_id, other AS similar_user_id, n_shared,
-           ROUND(jaccard, 6) AS jaccard, ROUND({metric}, 3) AS {metric}
-    FROM {final}
+           ROUND(jaccard, 6) AS jaccard, ROUND({lm.column}, 3) AS {lm.column}
+    FROM {lm.prefix}_final
     """
 
 
@@ -2570,35 +2574,20 @@ def frechet_route_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself unrolled along anti-diagonals (dp[i][j] depends on diagonals
     k-1/k-2 only -> one generated CTE per diagonal, 2m-1 stages). A hash
     match proves a nontrivial dynamic program end-to-end across engines."""
-    from activity_files_spark.operators.trajectory import frechet_refine
-
-    return _route_refine(spark, sf_dir, frechet_refine, "frechet_m")
-
-
-def _frechet_route_sql() -> str:
-    from activity_files_spark.operators.trajectory import frechet_sql
-
-    return _route_refine_sql(frechet_sql, "frechet_m", "fr_final")
+    return _route_refine(spark, sf_dir, "frechet")
 
 
 def dtw_route_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DTW refinement of the route near-dup candidates
-    (operators/trajectory.py dtw_refine): same candidate miner and 8-point
-    index resample as frechet_route_refine, but the metric is the ELASTIC
-    alignment cost (Sakoe & Chiba) — Fréchet reports the single worst
-    matched pair, DTW sums every matched pair, so it separates 'same route
-    with one detour' from 'parallel road 50 m over'. Each DP cell does one
-    addition on scalar-libm haversine values, so the DuckDB oracle's
-    anti-diagonal replay is bit-identical; round-to-3 on output only."""
-    from activity_files_spark.operators.trajectory import dtw_refine
-
-    return _route_refine(spark, sf_dir, dtw_refine, "dtw_m")
-
-
-def _dtw_route_sql() -> str:
-    from activity_files_spark.operators.trajectory import dtw_sql
-
-    return _route_refine_sql(dtw_sql, "dtw_m", "dt_final")
+    (operators/trajectory.py LATTICE_METRICS["dtw"]): same candidate miner
+    and 8-point index resample as frechet_route_refine, but the metric is
+    the ELASTIC alignment cost (Sakoe & Chiba) — Fréchet reports the single
+    worst matched pair, DTW sums every matched pair, so it separates 'same
+    route with one detour' from 'parallel road 50 m over'. Each DP cell
+    does one addition on scalar-libm haversine values, so the DuckDB
+    oracle's anti-diagonal replay is bit-identical; round-to-3 on output
+    only."""
+    return _route_refine(spark, sf_dir, "dtw")
 
 
 def resample_track(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6628,8 +6617,8 @@ _REGISTRY: tuple[tuple[str, Callable[[], str] | None], ...] = (
     ("video_mkv_stats", _video_mkv_sql),
     ("audio_mp3_stats", _audio_mp3_sql),
     ("image_jpeg_stats", _image_jpeg_sql),
-    ("frechet_route_refine", _frechet_route_sql),
-    ("dtw_route_refine", _dtw_route_sql),
+    ("frechet_route_refine", partial(_route_refine_sql, "frechet")),
+    ("dtw_route_refine", partial(_route_refine_sql, "dtw")),
     ("dbscan_events", _dbscan_sql),
     ("stay_points_events", _stay_points_sql),
     ("convex_hull_routes", _convex_hull_sql),

@@ -14,9 +14,7 @@ No image libraries exist in this container (no PIL/cv2), so:
 - **jpeg**: REAL baseline JPEG (ITU T.81 SOF0, Annex-K tables — see
   :mod:`activity_files_spark.codecs.jpeg`) at quality 98 / 4:4:4, which
   holds the pipeline's PSNR >= 40 dB lossy invariant even on the
-  adversarial sawtooth fixtures (measured worst case 43.0 dB). The
-  round-4 `FAKEJPG1` stand-in is still *decodable* (legacy payloads in
-  cached tables), but everything encoded from round 5 on is a standard
+  adversarial sawtooth fixtures (measured worst case 43.0 dB): a standard
   JFIF bitstream any external decoder can read.
 
 Metrics:
@@ -31,11 +29,6 @@ import struct
 import zlib
 
 import numpy as np
-
-FAKE_JPEG_MAGIC = b"FAKEJPG1"
-_QUANT_BITS = 6  # 6-bit quantization: max err 2 -> PSNR floor 20*log10(255/2)=42.1 dB,
-# so the >=40 dB invariant holds for EVERY image (hypothesis found that 5-bit
-# quantization can dip to 36 dB on pathological single-pixel images)
 
 
 # ------------------------------------------------------------------ BMP
@@ -155,33 +148,12 @@ def encode_jpeg(px: np.ndarray) -> bytes:
     return _enc(px, quality=JPEG_QUALITY, subsampling="444")
 
 
-def encode_fake_jpeg(px: np.ndarray) -> bytes:
-    """Round-4 FAKEJPG1 stand-in (6-bit quant + zlib), kept for the legacy
-    decode path and its tests; no pipeline encodes this anymore."""
-    h, w, _ = px.shape
-    q = (px.astype(np.uint16) >> (8 - _QUANT_BITS)).astype(np.uint8)
-    return (
-        FAKE_JPEG_MAGIC
-        + struct.pack("<II", w, h)
-        + zlib.compress(q.tobytes(), 6)
-    )
-
-
 def decode_jpeg(data: bytes) -> np.ndarray:
-    if data[:2] == b"\xff\xd8":
-        from activity_files_spark.codecs.jpeg import decode_jpeg as _dec
+    if data[:2] != b"\xff\xd8":
+        raise ValueError("not a JFIF bitstream")
+    from activity_files_spark.codecs.jpeg import decode_jpeg as _dec
 
-        return _dec(data)
-    if data[: len(FAKE_JPEG_MAGIC)] != FAKE_JPEG_MAGIC:
-        raise ValueError("neither a JFIF bitstream nor a FAKEJPG1 payload")
-    w, h = struct.unpack_from("<II", data, len(FAKE_JPEG_MAGIC))
-    q = np.frombuffer(
-        zlib.decompress(data[len(FAKE_JPEG_MAGIC) + 8 :]), dtype=np.uint8
-    ).reshape(h, w, 3)
-    # dequantize to bin centers: mid-bin reconstruction (max err 2 at 6 bits)
-    return ((q.astype(np.uint16) << (8 - _QUANT_BITS)) | (1 << (7 - _QUANT_BITS))).astype(
-        np.uint8
-    )
+    return _dec(data)
 
 
 # ------------------------------------------------------------------ dispatch

@@ -1,10 +1,9 @@
 """Real baseline JPEG (ITU T.81, SOF0 sequential Huffman) in pure numpy.
 
-This replaces the round-4 ``FAKEJPG1`` deterministic stand-in: the ``jpeg``
-slot of the image+caption table (BASELINE.json input_hint) now carries real
-JFIF bitstreams that any standard decoder (libjpeg, PIL, browsers) can read.
-No image library exists in this container, so both directions are
-implemented from the public spec:
+The ``jpeg`` slot of the image+caption table (BASELINE.json input_hint)
+carries real JFIF bitstreams that any standard decoder (libjpeg, PIL,
+browsers) can read. No image library exists in this container, so both
+directions are implemented from the public spec:
 
 - **Encoder** (:func:`encode_jpeg`): RGB -> JFIF YCbCr (BT.601 full range),
   optional 4:2:0 box subsampling, 8x8 orthonormal DCT (identical to the

@@ -10,9 +10,8 @@ but moves the group loop INSIDE one mapInPandas pass per partition:
 - ``repartition(nparts, key)`` guarantees each key lands wholly in one
   partition (the same contract the groupBy shuffle gave) and pins an
   explicit width so the compute-heavy kernel stage cannot be coalesced
-  down to a serial partition; ``nparts`` defaults to the session's
-  configured shuffle width — the per-deployment scale knob, not a local
-  constant.
+  down to a serial partition; ``nparts`` is the session's configured
+  shuffle width — the per-deployment scale knob, not a local constant.
 - the partition's Arrow batches are concatenated (a key split across
   batches is re-joined), pandas ``groupby`` re-forms the groups, and ONE
   output frame per partition crosses back over the Arrow boundary.
@@ -34,14 +33,12 @@ def grouped_apply(
     key: str | list[str],
     kernel: Callable,
     schema: str,
-    nparts: int | None = None,
 ) -> DataFrame:
     """Drop-in replacement for ``df.groupBy(key).applyInPandas(lambda _k,
     pdf: kernel(pdf), schema)`` — same per-group frames in, same rows out,
     one Python/Arrow round-trip per partition instead of per group."""
     keys = [key] if isinstance(key, str) else list(key)
-    if nparts is None:
-        nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     def part(batches):
         import pandas as pd

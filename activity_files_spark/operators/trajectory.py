@@ -1,6 +1,6 @@
 """Trajectory similarity: route cell signatures, exact cell-Jaccard pair
-mining, top-k most-similar-route selection, and cell-snapped symmetric
-Hausdorff refinement.
+mining, top-k most-similar-route selection, cell-snapped symmetric
+Hausdorff refinement and order-aware Fréchet/DTW refinement.
 
 Not in the reference (which parses one activity file at a time and never
 compares tracks); this is the route-dedup twin of the document near-dup
@@ -32,11 +32,20 @@ Plan shapes, 100 TB first:
   the approximation error vs point-level Hausdorff is at most one cell
   diagonal on each side. Aggregation is min-then-max — order-independent
   exact comparisons, one partial-agg shuffle per direction.
+- **Order-aware refine** (:func:`lattice_refine`): discrete Fréchet or DTW
+  over <= m index-resampled samples per route (:func:`index_resample`).
+  The two metrics differ only in the cell recurrence, one entry each in
+  :data:`LATTICE_METRICS`; they share one Python DP
+  (:func:`lattice_distance`), one Arrow kernel and one anti-diagonal SQL
+  unroll (:func:`lattice_sql`).
 """
 
 from __future__ import annotations
 
 import math
+import operator
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -250,7 +259,7 @@ def route_similarity_sql(
     """
 
 
-# ----------------------------------------------------- discrete Fréchet
+# ---------------------------------- route refinement: Fréchet and DTW
 
 def index_resample(
     points: DataFrame, m: int, key: str = "user_id",
@@ -284,11 +293,85 @@ def index_resample(
     )
 
 
-def frechet_refine(pairs: DataFrame, samples: DataFrame, key: str = "user_id") -> DataFrame:
-    """Discrete Fréchet distance (meters) for each (key, other) pair over
-    index-resampled route samples — the ORDER-AWARE trajectory metric
-    (Hausdorff ignores traversal direction; Fréchet is the dog-leash
-    distance, the standard for 'same route, same direction').
+_DP_INF = 1e308  # missing-predecessor sentinel, spelled 1e308 in the SQL twin
+# (NOT inf: both engines absorb d + 1e308 -> 1e308 identically, and
+# COALESCE/LEAST stay total)
+
+
+class LatticeMetric(NamedTuple):
+    """One route-shape metric over the (i, j) lattice of two routes'
+    samples: each cell is ``combine(d(i, j), best)``, ``best`` being the
+    least of its (i-1, j), (i, j-1) and (i-1, j-1) predecessors."""
+
+    combine: Callable[[float, float], float]
+    # the same recurrence in SQL over g.d, p1.val, p2.val and {p3} (the
+    # diagonal predecessor); its text, whitespace included, is part of the
+    # pinned oracle digest
+    sql: str
+    prefix: str  # CTE prefix of the SQL twin, whose result is {prefix}_final
+    column: str  # output column (meters)
+
+
+LATTICE_METRICS = {
+    # Discrete Fréchet (Eiter & Mannila 1994), the dog-leash distance: the
+    # worst matched pair. Pure max/min, no arithmetic on dp values.
+    "frechet": LatticeMetric(
+        combine=max,
+        sql="""GREATEST(g.d, LEAST(COALESCE(p1.val, 1e308),
+                                 COALESCE(p2.val, 1e308), {p3}))""",
+        prefix="fr",
+        column="frechet_m",
+    ),
+    # DTW (Sakoe & Chiba 1978), the cumulative alignment cost: sums every
+    # matched pair, so it separates 'same route with one detour' from
+    # 'parallel road 50 m over', which Fréchet scores identically. ONE
+    # addition per cell, in a fixed order — no reassociation.
+    "dtw": LatticeMetric(
+        combine=operator.add,
+        sql="""g.d + LEAST(COALESCE(p1.val, 1e308),
+                         COALESCE(p2.val, 1e308), {p3})""",
+        prefix="dt",
+        column="dtw_m",
+    ),
+}
+
+
+def lattice_distance(
+    metric: str, pa: list, pb: list, dist, band: int | None = None
+) -> float:
+    """O(|a|·|b|) DP of ``metric`` over point lists ``pa``/``pb``:
+    dp[i][j] = combine(d(i,j), min(dp[i-1][j], dp[i][j-1], dp[i-1][j-1])),
+    dp[0][0] = d(0,0), a missing predecessor counting as the sentinel.
+    ``band``: Sakoe-Chiba radius — cells with |i-j| > band stay at the
+    sentinel (the classic O(m·band) pruning; None = full grid). Every cell
+    combines ``dist`` outputs with one max or one addition, so exactness
+    reduces to exactness of ``dist``."""
+    combine = LATTICE_METRICS[metric].combine
+    na, nb = len(pa), len(pb)
+    dp = [[_DP_INF] * nb for _ in range(na)]
+    for i in range(na):
+        for j in range(nb):
+            if band is not None and abs(i - j) > band:
+                continue
+            d = dist(pa[i][0], pa[i][1], pb[j][0], pb[j][1])
+            if i == 0 and j == 0:
+                dp[0][0] = d
+                continue
+            best = min(
+                dp[i - 1][j] if i else _DP_INF,
+                dp[i][j - 1] if j else _DP_INF,
+                dp[i - 1][j - 1] if i and j else _DP_INF,
+            )
+            dp[i][j] = combine(d, best)
+    return dp[na - 1][nb - 1]
+
+
+def lattice_refine(
+    metric: str, pairs: DataFrame, samples: DataFrame, key: str = "user_id"
+) -> DataFrame:
+    """``metric`` (meters) for each (key, other) pair over index-resampled
+    route samples — the ORDER-AWARE refine (Hausdorff ignores traversal
+    direction; both lattice metrics walk the two routes in order).
 
     ``pairs``: (key, other, n_shared, jaccard) — e.g. top_similar_routes.
     ``samples``: (key, i, lat, lon) from :func:`index_resample` (i 0-based
@@ -297,18 +380,19 @@ def frechet_refine(pairs: DataFrame, samples: DataFrame, key: str = "user_id") -
     Plan: one groupBy packs each route's samples into an ordered array
     (<= m structs, a few hundred bytes — cheap to shuffle), two equi-joins
     attach both arrays to each pair, and an Arrow kernel runs the O(m²)
-    dynamic program per pair. Distances use the scalar libm haversine
-    twin (geo.haversine_m_exact), so every cell of the DP — and therefore
-    the max/min lattice result — is bit-identical to the DuckDB oracle's
-    anti-diagonal SQL replay. At 10^12 points the per-pair cost is a
-    constant m² regardless of track length; the pair count is bounded by
-    the candidate miner upstream.
+    :func:`lattice_distance` per pair. Distances use the scalar libm
+    haversine twin (geo.haversine_m_exact), so every cell of the DP is
+    bit-identical to the DuckDB oracle's anti-diagonal SQL replay
+    (:func:`lattice_sql`). At 10^12 points the per-pair cost is a constant
+    m² regardless of track length; the pair count is bounded by the
+    candidate miner upstream.
 
-    Output: pairs + ``frechet_m``."""
+    Output: pairs + the metric's column."""
     import pandas as pd
 
     from activity_files_spark.functions.geo import haversine_m_exact
 
+    column = LATTICE_METRICS[metric].column
     agg = samples.groupBy(key).agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("i"), F.col("lat"), F.col("lon")))
@@ -321,7 +405,7 @@ def frechet_refine(pairs: DataFrame, samples: DataFrame, key: str = "user_id") -
     schema = (
         f"key {joined.schema['key'].dataType.simpleString()}, "
         f"other {joined.schema['other'].dataType.simpleString()}, "
-        "n_shared long, jaccard double, frechet_m double"
+        f"n_shared long, jaccard double, {column} double"
     )
 
     def kernel(batches):
@@ -335,53 +419,35 @@ def frechet_refine(pairs: DataFrame, samples: DataFrame, key: str = "user_id") -
                     "other": row.other,
                     "n_shared": row.n_shared,
                     "jaccard": row.jaccard,
-                    "frechet_m": discrete_frechet(pa, pb, haversine_m_exact),
+                    column: lattice_distance(metric, pa, pb, haversine_m_exact),
                 })
             yield pd.DataFrame(recs)
 
     return joined.mapInPandas(kernel, schema)
 
 
-def discrete_frechet(pa: list, pb: list, dist) -> float:
-    """Classic O(|a|·|b|) coupled-distance DP (Eiter & Mannila 1994):
-    dp[i][j] = max(d(i,j), min(dp[i-1][j], dp[i][j-1], dp[i-1][j-1])).
-    Pure max/min lattice over the pairwise distances — no arithmetic on
-    the dp values, so exactness reduces to exactness of ``dist``."""
-    na, nb = len(pa), len(pb)
-    d = [[dist(pa[i][0], pa[i][1], pb[j][0], pb[j][1]) for j in range(nb)]
-         for i in range(na)]
-    dp = [[0.0] * nb for _ in range(na)]
-    dp[0][0] = d[0][0]
-    for i in range(1, na):
-        dp[i][0] = max(d[i][0], dp[i - 1][0])
-    for j in range(1, nb):
-        dp[0][j] = max(d[0][j], dp[0][j - 1])
-    for i in range(1, na):
-        for j in range(1, nb):
-            dp[i][j] = max(d[i][j], min(dp[i - 1][j], dp[i][j - 1], dp[i - 1][j - 1]))
-    return dp[na - 1][nb - 1]
-
-
-def frechet_sql(pts_cte: str, z: int, m: int, key: str = "user_id",
+def lattice_sql(metric: str, pts_cte: str, z: int, m: int, key: str = "user_id",
                 order_cols: tuple = ("ts",)) -> str:
     """DuckDB oracle body for route_cells -> route_pair_jaccard ->
-    top_similar_routes(1) -> index_resample(m) -> frechet_refine, over a
-    CTE named ``pts_cte`` with columns (key, order_cols..., lat, lon).
+    top_similar_routes(1) -> index_resample(m) -> lattice_refine(metric),
+    over a CTE named ``pts_cte`` with columns (key, order_cols..., lat, lon).
 
     The DP has a same-row data dependency (dp[i][j] needs dp[i][j-1]), so
     it cannot be one windowed pass — but along ANTI-DIAGONALS (k = i + j)
     every cell depends only on diagonals k-1 and k-2. This builder emits
     one python-generated CTE per diagonal (2m-1 stages), each a 3-way
-    LEFT JOIN against the two previous stages with the exact
-    GREATEST(d, LEAST(...)) recurrence; missing-boundary predecessors
-    coalesce to +huge so LEAST ignores them. Binds CTEs fr_* and
-    ``fr_final`` (key, other, n_shared, jaccard, frechet_m); reuses the
-    rc_* candidate CTEs from route_similarity_sql."""
+    LEFT JOIN against the two previous stages with the metric's exact
+    recurrence; missing-boundary predecessors coalesce to +huge so LEAST
+    ignores them. Binds CTEs {prefix}_* and ``{prefix}_final`` (key,
+    other, n_shared, jaccard, metric column); reuses the rc_* candidate
+    CTEs from route_similarity_sql."""
+    lm = LATTICE_METRICS[metric]
+    p = lm.prefix
     body = route_similarity_sql(pts_cte, z, k=1, key=key)
     order = ", ".join(order_cols)
     hav = haversine_sql("a.lat", "a.lon", "b.lat", "b.lon")
     stages = []
-    prev, prev2 = "fr_dp_0", None
+    prev, prev2 = f"{p}_dp_0", None
     for kdiag in range(1, 2 * m - 1):
         p3 = (
             f"""LEFT JOIN {prev2} p3 ON p3.key = g.key AND p3.other = g.other
@@ -391,11 +457,10 @@ def frechet_sql(pts_cte: str, z: int, m: int, key: str = "user_id",
         )
         p3val = "COALESCE(p3.val, 1e308)" if prev2 else "1e308"
         stages.append(f"""
-    fr_dp_{kdiag} AS MATERIALIZED (
+    {p}_dp_{kdiag} AS MATERIALIZED (
       SELECT g.key, g.other, g.i, g.j,
-             GREATEST(g.d, LEAST(COALESCE(p1.val, 1e308),
-                                 COALESCE(p2.val, 1e308), {p3val})) AS val
-      FROM fr_grid g
+             {lm.sql.format(p3=p3val)} AS val
+      FROM {p}_grid g
       LEFT JOIN {prev} p1 ON p1.key = g.key AND p1.other = g.other
            AND p1.i = g.i - 1 AND p1.j = g.j
       LEFT JOIN {prev} p2 ON p2.key = g.key AND p2.other = g.other
@@ -403,46 +468,46 @@ def frechet_sql(pts_cte: str, z: int, m: int, key: str = "user_id",
       {p3}
       WHERE g.i + g.j = {kdiag}
     )""")
-        prev2, prev = prev, f"fr_dp_{kdiag}"
+        prev2, prev = prev, f"{p}_dp_{kdiag}"
     union = "\n      UNION ALL\n      ".join(
-        f"SELECT * FROM fr_dp_{k2}" for k2 in range(2 * m - 1)
+        f"SELECT * FROM {p}_dp_{k2}" for k2 in range(2 * m - 1)
     )
     return f"""{body},
-    fr_ranked AS MATERIALIZED (
+    {p}_ranked AS MATERIALIZED (
       SELECT {key} AS key, lat, lon,
              ROW_NUMBER() OVER (PARTITION BY {key} ORDER BY {order}) AS rn,
              COUNT(*) OVER (PARTITION BY {key}) AS n
       FROM {pts_cte}
     ),
-    fr_samp AS MATERIALIZED (
-      SELECT key, (rn - 1) * {m} // n AS idx, lat, lon, rn FROM fr_ranked
+    {p}_samp AS MATERIALIZED (
+      SELECT key, (rn - 1) * {m} // n AS idx, lat, lon, rn FROM {p}_ranked
       QUALIFY ROW_NUMBER() OVER (
         PARTITION BY key, (rn - 1) * {m} // n ORDER BY rn) = 1
     ),
-    fr_idx AS MATERIALIZED (
+    {p}_idx AS MATERIALIZED (
       SELECT key,
              ROW_NUMBER() OVER (PARTITION BY key ORDER BY idx) - 1 AS i,
              lat, lon
-      FROM fr_samp
+      FROM {p}_samp
     ),
-    fr_len AS MATERIALIZED (SELECT key, COUNT(*) AS n FROM fr_idx GROUP BY key),
-    fr_grid AS MATERIALIZED (
+    {p}_len AS MATERIALIZED (SELECT key, COUNT(*) AS n FROM {p}_idx GROUP BY key),
+    {p}_grid AS MATERIALIZED (
       SELECT t.key, t.other, a.i AS i, b.i AS j, {hav} AS d
       FROM rc_top t
-      JOIN fr_idx a ON a.key = t.key
-      JOIN fr_idx b ON b.key = t.other
+      JOIN {p}_idx a ON a.key = t.key
+      JOIN {p}_idx b ON b.key = t.other
     ),
-    fr_dp_0 AS MATERIALIZED (
-      SELECT key, other, i, j, d AS val FROM fr_grid WHERE i = 0 AND j = 0
+    {p}_dp_0 AS MATERIALIZED (
+      SELECT key, other, i, j, d AS val FROM {p}_grid WHERE i = 0 AND j = 0
     ),{",".join(stages)},
-    fr_all AS MATERIALIZED (
+    {p}_all AS MATERIALIZED (
       {union}
     ),
-    fr_final AS MATERIALIZED (
-      SELECT f.key, f.other, t.n_shared, t.jaccard, f.val AS frechet_m
-      FROM fr_all f
-      JOIN fr_len na ON na.key = f.key
-      JOIN fr_len nb ON nb.key = f.other
+    {p}_final AS MATERIALIZED (
+      SELECT f.key, f.other, t.n_shared, t.jaccard, f.val AS {lm.column}
+      FROM {p}_all f
+      JOIN {p}_len na ON na.key = f.key
+      JOIN {p}_len nb ON nb.key = f.other
       JOIN rc_top t ON t.key = f.key AND t.other = f.other
       WHERE f.i = na.n - 1 AND f.j = nb.n - 1
     )
@@ -662,168 +727,6 @@ def stay_points_sql(
     """
 
 
-_DTW_INF = 1e308  # sentinel shared with the SQL twin (NOT inf: both engines
-# absorb d + 1e308 -> 1e308 identically, and COALESCE/LEAST stay total)
-
-
-def dtw_distance(pa: list, pb: list, dist, band: int | None = None) -> float:
-    """Dynamic Time Warping cost (Sakoe & Chiba 1978): the CUMULATIVE
-    alignment cost dp[i][j] = d(i,j) + min(dp[i-1][j], dp[i][j-1],
-    dp[i-1][j-1]) — the elastic-matching complement of the Fréchet
-    max/min lattice (Fréchet reports the worst matched pair; DTW sums
-    every matched pair, so it separates 'same route with one detour'
-    from 'parallel road 50 m over' which Fréchet scores identically).
-    ``band``: Sakoe-Chiba radius — cells with |i-j| > band are forbidden
-    (the classic O(m·band) pruning; None = full grid). Each cell performs
-    exactly ONE addition on ``dist`` outputs, in a fixed order, so
-    exactness reduces to exactness of ``dist`` — no reassociation."""
-    na, nb = len(pa), len(pb)
-    dp = [[_DTW_INF] * nb for _ in range(na)]
-    for i in range(na):
-        for j in range(nb):
-            if band is not None and abs(i - j) > band:
-                continue
-            d = dist(pa[i][0], pa[i][1], pb[j][0], pb[j][1])
-            if i == 0 and j == 0:
-                dp[i][j] = d
-                continue
-            best = _DTW_INF
-            if i > 0 and dp[i - 1][j] < best:
-                best = dp[i - 1][j]
-            if j > 0 and dp[i][j - 1] < best:
-                best = dp[i][j - 1]
-            if i > 0 and j > 0 and dp[i - 1][j - 1] < best:
-                best = dp[i - 1][j - 1]
-            dp[i][j] = d + best
-    return dp[na - 1][nb - 1]
-
-
-def dtw_refine(
-    pairs: DataFrame, samples: DataFrame, key: str = "user_id",
-    band: int | None = None,
-) -> DataFrame:
-    """DTW alignment cost (meters) for each (key, other) pair over
-    index-resampled route samples — same plan shape as
-    :func:`frechet_refine` (pack-array groupBy, two equi-joins, O(m²)
-    Arrow kernel per pair with the scalar libm haversine twin).
-    Output: pairs + ``dtw_m``."""
-    import pandas as pd
-
-    from activity_files_spark.functions.geo import haversine_m_exact
-
-    agg = samples.groupBy(key).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("i"), F.col("lat"), F.col("lon")))
-        ).alias("pts")
-    )
-    a = agg.select(F.col(key).alias("key"), F.col("pts").alias("pts_a"))
-    b = agg.select(F.col(key).alias("other"), F.col("pts").alias("pts_b"))
-    joined = pairs.join(a, "key").join(b, "other")
-
-    schema = (
-        f"key {joined.schema['key'].dataType.simpleString()}, "
-        f"other {joined.schema['other'].dataType.simpleString()}, "
-        "n_shared long, jaccard double, dtw_m double"
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for row in pdf.itertuples(index=False):
-                pa = [(p["lat"], p["lon"]) for p in row.pts_a]
-                pb = [(p["lat"], p["lon"]) for p in row.pts_b]
-                recs.append({
-                    "key": row.key,
-                    "other": row.other,
-                    "n_shared": row.n_shared,
-                    "jaccard": row.jaccard,
-                    "dtw_m": dtw_distance(pa, pb, haversine_m_exact, band=band),
-                })
-            yield pd.DataFrame(recs)
-
-    return joined.mapInPandas(kernel, schema)
-
-
-def dtw_sql(pts_cte: str, z: int, m: int, key: str = "user_id",
-            order_cols: tuple = ("ts",), band: int | None = None) -> str:
-    """DuckDB oracle body for the DTW pipeline (candidates -> resample ->
-    DTW), same anti-diagonal unroll as :func:`frechet_sql` but with the
-    ADDITIVE recurrence ``d + LEAST(...)`` (one addition per cell, same
-    operand values -> bit-identical) and the optional Sakoe-Chiba band
-    filter on the grid. Binds CTEs dt_* and ``dt_final``."""
-    body = route_similarity_sql(pts_cte, z, k=1, key=key)
-    order = ", ".join(order_cols)
-    hav = haversine_sql("a.lat", "a.lon", "b.lat", "b.lon")
-    band_pred = f" AND ABS(a.i - b.i) <= {int(band)}" if band is not None else ""
-    stages = []
-    prev, prev2 = "dt_dp_0", None
-    for kdiag in range(1, 2 * m - 1):
-        p3 = (
-            f"""LEFT JOIN {prev2} p3 ON p3.key = g.key AND p3.other = g.other
-           AND p3.i = g.i - 1 AND p3.j = g.j - 1"""
-            if prev2
-            else ""
-        )
-        p3val = "COALESCE(p3.val, 1e308)" if prev2 else "1e308"
-        stages.append(f"""
-    dt_dp_{kdiag} AS MATERIALIZED (
-      SELECT g.key, g.other, g.i, g.j,
-             g.d + LEAST(COALESCE(p1.val, 1e308),
-                         COALESCE(p2.val, 1e308), {p3val}) AS val
-      FROM dt_grid g
-      LEFT JOIN {prev} p1 ON p1.key = g.key AND p1.other = g.other
-           AND p1.i = g.i - 1 AND p1.j = g.j
-      LEFT JOIN {prev} p2 ON p2.key = g.key AND p2.other = g.other
-           AND p2.i = g.i AND p2.j = g.j - 1
-      {p3}
-      WHERE g.i + g.j = {kdiag}
-    )""")
-        prev2, prev = prev, f"dt_dp_{kdiag}"
-    union = "\n      UNION ALL\n      ".join(
-        f"SELECT * FROM dt_dp_{k2}" for k2 in range(2 * m - 1)
-    )
-    return f"""{body},
-    dt_ranked AS MATERIALIZED (
-      SELECT {key} AS key, lat, lon,
-             ROW_NUMBER() OVER (PARTITION BY {key} ORDER BY {order}) AS rn,
-             COUNT(*) OVER (PARTITION BY {key}) AS n
-      FROM {pts_cte}
-    ),
-    dt_samp AS MATERIALIZED (
-      SELECT key, (rn - 1) * {m} // n AS idx, lat, lon, rn FROM dt_ranked
-      QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY key, (rn - 1) * {m} // n ORDER BY rn) = 1
-    ),
-    dt_idx AS MATERIALIZED (
-      SELECT key,
-             ROW_NUMBER() OVER (PARTITION BY key ORDER BY idx) - 1 AS i,
-             lat, lon
-      FROM dt_samp
-    ),
-    dt_len AS MATERIALIZED (SELECT key, COUNT(*) AS n FROM dt_idx GROUP BY key),
-    dt_grid AS MATERIALIZED (
-      SELECT t.key, t.other, a.i AS i, b.i AS j, {hav} AS d
-      FROM rc_top t
-      JOIN dt_idx a ON a.key = t.key
-      JOIN dt_idx b ON b.key = t.other{band_pred}
-    ),
-    dt_dp_0 AS MATERIALIZED (
-      SELECT key, other, i, j, d AS val FROM dt_grid WHERE i = 0 AND j = 0
-    ),{",".join(stages)},
-    dt_all AS MATERIALIZED (
-      {union}
-    ),
-    dt_final AS MATERIALIZED (
-      SELECT f.key, f.other, t.n_shared, t.jaccard, f.val AS dtw_m
-      FROM dt_all f
-      JOIN dt_len na ON na.key = f.key
-      JOIN dt_len nb ON nb.key = f.other
-      JOIN rc_top t ON t.key = f.key AND t.other = f.other
-      WHERE f.i = na.n - 1 AND f.j = nb.n - 1
-    )
-    """
-
-
 __all__ = [
     "route_cells",
     "route_pair_jaccard",
@@ -832,12 +735,10 @@ __all__ = [
     "tile_center_sql",
     "route_similarity_sql",
     "index_resample",
-    "frechet_refine",
-    "discrete_frechet",
-    "frechet_sql",
-    "dtw_distance",
-    "dtw_refine",
-    "dtw_sql",
+    "LATTICE_METRICS",
+    "lattice_distance",
+    "lattice_refine",
+    "lattice_sql",
     "stay_points",
     "stay_points_sql",
 ]

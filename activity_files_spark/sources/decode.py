@@ -48,7 +48,7 @@ PARSERS = {
 
 
 def _parse_payload(activity_id: str, payload, fmt: str | None, charset: str):
-    fmt = fmt or detect_format_py(payload, activity_id)
+    fmt = fmt or detect_format_py(payload, activity_id, charset)
     if fmt is None:
         return [{"activity_id": activity_id, "kind": "diag",
                  "attrs": {"code": "detect.unknown_format", "severity": "error",

@@ -41,8 +41,13 @@ def decode_text(data: bytes, charset: str = "utf-8") -> str:
     return text[1:] if text.startswith("\ufeff") else text
 
 
-def detect_format_py(payload: bytes, filename: str | None = None) -> str | None:
-    """Return one of gpx/tcx/fit/csv/geojson, or None if undetectable."""
+def detect_format_py(
+    payload: bytes, filename: str | None = None, charset: str = "utf-8"
+) -> str | None:
+    """Return one of gpx/tcx/fit/csv/geojson, or None if undetectable.
+    The FIT magic is checked on the raw bytes; the text sniffs read the
+    prefix through :func:`decode_text`, so a BOM wins and ``charset``
+    applies to BOM-less text."""
     if filename:
         for ext, fmt in EXTENSION_MAP.items():
             if filename.lower().endswith(ext):
@@ -50,7 +55,7 @@ def detect_format_py(payload: bytes, filename: str | None = None) -> str | None:
     head = payload[:SNIFF_BYTES]
     if len(head) >= 12 and head[0] in (12, 14) and head[8:12] == b".FIT":
         return "fit"
-    text = decode_text(head).lstrip("\ufeff \t\r\n")
+    text = decode_text(head, charset).lstrip("\ufeff \t\r\n")
     low = text[:4096].lower()
     if low.startswith("<?xml") or low.startswith("<"):
         if "<gpx" in low:

@@ -360,9 +360,9 @@ def _images_parquet(spark, n: int, cpus: int, dims=None, tag: str = "") -> str:
     measured jobs read a real columnar source (pruning/pushdown apply).
     The cache key includes the generator version so codec changes invalidate
     stale tables (the stored phash depends on the codec bits)."""
-    from activity_files_spark.codecs.image import _QUANT_BITS, PHASH_VERSION
+    from activity_files_spark.codecs.image import PHASH_VERSION
 
-    path = os.path.join(IMG_CACHE_DIR, f"images_v{_QUANT_BITS}p{PHASH_VERSION}{tag}_{n}.parquet")
+    path = os.path.join(IMG_CACHE_DIR, f"images_p{PHASH_VERSION}{tag}_{n}.parquet")
     if not os.path.exists(path):
         from activity_files_spark.data.images import synth_images
 

@@ -7,9 +7,9 @@ import math
 
 from activity_files_spark.functions.geo import haversine_m_exact
 from activity_files_spark.operators.trajectory import (
-    dtw_distance,
-    dtw_refine,
     index_resample,
+    lattice_distance,
+    lattice_refine,
 )
 
 
@@ -42,22 +42,22 @@ def _cloud(n, seed):
 def test_dtw_matches_brute_recursion():
     for na, nb, seed in [(8, 8, 1), (5, 9, 2), (9, 4, 3), (1, 6, 4), (1, 1, 5)]:
         pa, pb = _cloud(na, seed), _cloud(nb, seed + 10)
-        assert dtw_distance(pa, pb, _euclid) == _brute_dtw(pa, pb, _euclid)
+        assert lattice_distance("dtw", pa, pb, _euclid) == _brute_dtw(pa, pb, _euclid)
 
 
 def test_dtw_identical_routes_zero():
     pa = _cloud(10, 7)
-    assert dtw_distance(pa, pa, _euclid) == 0.0
+    assert lattice_distance("dtw", pa, pa, _euclid) == 0.0
 
 
 def test_dtw_band_limits_paths():
     pa = _cloud(8, 1)
     pb = _cloud(8, 11)
-    full = dtw_distance(pa, pb, _euclid)
-    banded = dtw_distance(pa, pb, _euclid, band=1)
+    full = lattice_distance("dtw", pa, pb, _euclid)
+    banded = lattice_distance("dtw", pa, pb, _euclid, band=1)
     assert banded >= full  # band only removes alignment options
     # band narrower than the length gap -> no valid path
-    assert dtw_distance(_cloud(8, 1), _cloud(3, 2), _euclid, band=2) >= 1e308
+    assert lattice_distance("dtw", _cloud(8, 1), _cloud(3, 2), _euclid, band=2) >= 1e308
 
 
 def test_dtw_refine_spark_matches_kernel(spark):
@@ -70,12 +70,12 @@ def test_dtw_refine_spark_matches_kernel(spark):
         [(1, 2, 5, 0.5)], "key long, other long, n_shared long, jaccard double"
     )
     samples = index_resample(pts, 8, key="user_id", order_cols=("event_id",))
-    got = dtw_refine(pairs, samples, key="user_id").collect()
+    got = lattice_refine("dtw", pairs, samples, key="user_id").collect()
     assert len(got) == 1
     samp = {
         u: [(r.lat, r.lon) for r in sorted(
             samples.where(f"user_id = {u}").collect(), key=lambda r: r.i)]
         for u in (1, 2)
     }
-    want = dtw_distance(samp[1], samp[2], haversine_m_exact)
+    want = lattice_distance("dtw", samp[1], samp[2], haversine_m_exact)
     assert got[0].dtw_m == want

@@ -187,3 +187,18 @@ def test_bomless_utf16_encoding_is_big_endian(spark, tmp_path):
     rec = _load(spark, p, encoding="utf16")
     pts = points_of(rec).orderBy("seq").collect()
     assert len(pts) == 2 and pts[0]["ele"] == 1600.5
+
+
+def test_bomless_utf16_detects_under_declared_charset(spark):
+    """An extension-less UTF-16 payload without a BOM is sniffed through
+    the declared charset, not as UTF-8, and parses to the UTF-8 file's
+    points."""
+    def points(payload, charset):
+        rec = decode_records(_files(spark, payload), charset=charset)
+        return [(r["seq"], r["ts"], r["lat"], r["lon"], r["ele"])
+                for r in points_of(rec).orderBy("seq").collect()]
+
+    want = points(GPX.encode("utf-8"), "utf-8")
+    assert len(want) == 2
+    for charset in ("utf-16-be", "utf-16-le"):
+        assert points(GPX.encode(charset), charset) == want

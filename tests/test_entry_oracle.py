@@ -3,6 +3,8 @@ runs on Spark at sf0.001 and must match its oracle_sql() under DuckDB —
 same row count, same column set, exactly equal values (floats bit-equal,
 which the engine guarantees by using identical IEEE op sequences)."""
 
+import hashlib
+import json
 import math
 import os
 
@@ -74,6 +76,17 @@ def test_every_oracle_pairs_with_a_query():
     oracles = set(entry_mod.oracle_sql())
     assert oracles <= names, sorted(oracles - names)
     assert names - oracles == {"validate_images_summary"}
+
+
+# sha256 of the oracle SQL of every query (113 oracles, 114 queries). The
+# oracles are the correctness contract: only a change that declares an
+# oracle correctness fix may move this value, and it says so.
+ORACLE_SQL_SHA256 = "1ebcbf687f0f2a80a0d79c82b18726d8f2c3b88ad72fd010dc13a81b6c1e4616"
+
+
+def test_oracle_sql_digest_is_pinned():
+    blob = json.dumps(entry_mod.oracle_sql(), sort_keys=True).encode()
+    assert hashlib.sha256(blob).hexdigest() == ORACLE_SQL_SHA256
 
 
 def test_entry_smoke(spark):

@@ -68,17 +68,11 @@ def test_jpeg_lossy_psnr_gate():
     assert encode_jpeg(px) == encode_jpeg(px)
 
 
-def test_legacy_fake_jpeg_payloads_still_decode():
-    from activity_files_spark.codecs.image import encode_fake_jpeg
-
-    px = rand_px(48, 64)
-    got = decode_jpeg(encode_fake_jpeg(px))
-    assert psnr_db(px, got) >= 40.0
-
-
 def test_jpeg_garbage_app0_raises():
     with pytest.raises((ValueError, NotImplementedError)):
         decode_jpeg(b"\xff\xd8\xff\xe0" + b"\x00" * 32)
+    with pytest.raises(ValueError):  # no SOI marker: not a JFIF bitstream
+        decode_jpeg(b"FAKEJPG1" + b"\x00" * 32)
 
 
 def test_psnr_identical_inf():

@@ -121,26 +121,19 @@ def _asof_reference(probes, samples, tol):
     ),
 )
 def test_asof_numpy_kernel_matches_reference(probe_ts, samples):
-    """The numpy searchsorted kernel (the exact code inside
-    asof_join_pandas) agrees with a brute-force oracle, including the
-    earlier-wins tie rule, on arbitrary integer timelines."""
+    """The numpy searchsorted kernel every as-of join runs
+    (operators.asof._nearest_within) agrees with a brute-force oracle,
+    including the earlier-wins tie rule, on arbitrary integer timelines."""
+    from activity_files_spark.operators.asof import _nearest_within
+
     tol = 5.0
     st_arr = np.array(sorted(t for t, _ in samples), dtype=np.float64)
     sv_arr = np.array([v for t, v in sorted(samples)], dtype=np.float64)
     pt_arr = np.array(sorted(probe_ts), dtype=np.float64)
-    if len(st_arr) == 0:
-        return
-    idx = np.searchsorted(st_arr, pt_arr, side="right")
-    prev_i = np.clip(idx - 1, 0, len(st_arr) - 1)
-    next_i = np.clip(idx, 0, len(st_arr) - 1)
-    d_prev = np.where(idx - 1 >= 0, pt_arr - st_arr[prev_i], np.inf)
-    d_next = np.where(idx < len(st_arr), st_arr[next_i] - pt_arr, np.inf)
-    take_prev = d_prev <= d_next
-    best_d = np.where(take_prev, d_prev, d_next)
-    best_v = np.where(take_prev, sv_arr[prev_i], sv_arr[next_i])
+    best_v = _nearest_within(pt_arr, st_arr, sv_arr, tol)
     got = {
-        float(p): (None if d > tol else float(v))
-        for p, d, v in zip(pt_arr, best_d, best_v)
+        float(p): (None if np.isnan(v) else float(v))
+        for p, v in zip(pt_arr, best_v)
     }
     want = _asof_reference([float(p) for p in pt_arr],
                            [(float(t), float(v)) for t, v in samples], tol)

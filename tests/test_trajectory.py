@@ -144,14 +144,14 @@ def test_discrete_frechet_matches_recursive_definition():
     import random
 
     from activity_files_spark.functions.geo import haversine_m_exact
-    from activity_files_spark.operators.trajectory import discrete_frechet
+    from activity_files_spark.operators.trajectory import lattice_distance
 
     rng = random.Random(7)
     for _ in range(20):
         na, nb = rng.randint(1, 9), rng.randint(1, 9)
         pa = [(40 + rng.random(), -105 - rng.random()) for _ in range(na)]
         pb = [(40 + rng.random(), -105 - rng.random()) for _ in range(nb)]
-        got = discrete_frechet(pa, pb, haversine_m_exact)
+        got = lattice_distance("frechet", pa, pb, haversine_m_exact)
         assert got == _frechet_brute(tuple(pa), tuple(pb), haversine_m_exact)
 
 
@@ -160,12 +160,12 @@ def test_discrete_frechet_order_awareness():
     reverse share the same point set (Hausdorff 0) but walking them as
     sequences forces the leash across the whole track."""
     from activity_files_spark.functions.geo import haversine_m_exact
-    from activity_files_spark.operators.trajectory import discrete_frechet
+    from activity_files_spark.operators.trajectory import lattice_distance
 
     pa = [(40.0 + 0.001 * i, -105.0) for i in range(10)]
     pb = list(reversed(pa))
-    same = discrete_frechet(pa, pa, haversine_m_exact)
-    rev = discrete_frechet(pa, pb, haversine_m_exact)
+    same = lattice_distance("frechet", pa, pa, haversine_m_exact)
+    rev = lattice_distance("frechet", pa, pb, haversine_m_exact)
     assert same == 0.0
     assert rev > haversine_m_exact(*pa[0], *pa[-1]) * 0.4
 
@@ -191,9 +191,9 @@ def test_index_resample_bounds_and_order(spark):
 def test_frechet_refine_spark_matches_python(spark):
     from activity_files_spark.functions.geo import haversine_m_exact
     from activity_files_spark.operators.trajectory import (
-        discrete_frechet,
-        frechet_refine,
         index_resample,
+        lattice_distance,
+        lattice_refine,
     )
 
     rows = [("a", float(i), 40.0 + 0.01 * i, -105.0) for i in range(20)]
@@ -203,7 +203,7 @@ def test_frechet_refine_spark_matches_python(spark):
     pairs = spark.createDataFrame(
         [("a", "b", 3, 0.5)], "key string, other string, n_shared long, jaccard double"
     )
-    got = frechet_refine(pairs, samples, key="user_id").collect()
+    got = lattice_refine("frechet", pairs, samples, key="user_id").collect()
     assert len(got) == 1
     samp = {
         k: [(r["lat"], r["lon"]) for r in sorted(v, key=lambda r: r["i"])]
@@ -212,5 +212,5 @@ def test_frechet_refine_spark_matches_python(spark):
             ("b", [r for r in samples.collect() if r["user_id"] == "b"]),
         )
     }
-    expect = discrete_frechet(samp["a"], samp["b"], haversine_m_exact)
+    expect = lattice_distance("frechet", samp["a"], samp["b"], haversine_m_exact)
     assert got[0]["frechet_m"] == expect
