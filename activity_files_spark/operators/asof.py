@@ -6,12 +6,16 @@ Reference semantics (lib/src/channel_mapper.dart:97-230):
   later candidate — channel_mapper.dart:203)
 - per-channel tolerance overrides (encoder_options.dart:22-26)
 
-Two implementations:
-- :func:`asof_join` — native Catalyst plan (union + running last/first over a
-  window). Zero Python; one shuffle on (key, channel); whole-stage codegen.
-  This is the production path at scale.
-- :func:`asof_join_pandas` — Arrow/pandas kernel (numpy searchsorted per
-  activity×channel group) used to cross-check semantics in tests.
+The machinery is written once per execution style:
+- native: :func:`_bracket` (union of target and source rows + running
+  last/first over one window order). :func:`asof_join` picks the nearest
+  bracket end within tolerance; :func:`resample_linear` and
+  :func:`resample_by_distance` lerp between the bracket ends (:func:`_lerp_pick`).
+  Zero Python; whole-stage codegen. The production path at scale.
+- Arrow: :func:`_channel_kernel`, one per-activity kernel that runs the
+  numpy :func:`_nearest_within` once per channel. :func:`asof_channels_wide`
+  runs it per cogroup group (:func:`asof_join_pandas` is its one-channel
+  call); :func:`snap_channels_to_points` runs it per partition.
 
 Resampling (lib/src/transforms/transform_utils.dart:3-199): fixed-step grid
 from min→max ts (end-inclusive), linear interpolation for continuous values,
@@ -20,7 +24,9 @@ nearest-within-tolerance for discrete ones.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from activity_files_spark.functions.time import ts_seconds
@@ -30,6 +36,63 @@ from activity_files_spark.functions.geo import haversine_m, lerp
 DEFAULT_TOLERANCE_S = 5.0  # encoder_options.dart:22
 from activity_files_spark.operators.grouped import grouped_apply
 from activity_files_spark.operators.materialize import materialize
+
+
+def _bracket(
+    targets: DataFrame,
+    sources: DataFrame,
+    key: str,
+    axis: str,
+    cols: list[str],
+    pick: Callable[[Column, Column, Column, Column, Column], Column],
+    tiebreak: str | None = None,
+) -> DataFrame:
+    """The running bracket every native tolerance join and resampler uses.
+
+    ``targets`` (probes or grid points) and ``sources`` are unioned and
+    ordered within ``key`` by (``axis``, side, ``tiebreak`` NULLS FIRST),
+    sources before targets at an equal axis value — so an equal-axis source
+    is a target's "previous" candidate. Per column ``c`` of ``cols``, the
+    running previous and next (axis, value) are taken only from source rows
+    whose ``c`` is non-null (gating the axis AND the value on it, so the two
+    can never desync: a null-valued sample must not lend its time to an
+    older value), and ``c`` becomes ``pick(prev_axis, prev_value,
+    next_axis, next_value, axis)``. Returns the target rows.
+
+    Plan shape: target columns ride THROUGH the union (source rows carry
+    nulls), so the whole join is one shuffle on ``key`` and one sort; each
+    column adds four running windows over that sort — no join-back.
+    """
+    u = targets.withColumn("_side", F.lit(1)).unionByName(
+        sources.withColumn("_side", F.lit(0)), allowMissingColumns=True
+    )
+    # NULLS FIRST explicitly: Spark and DuckDB default opposite
+    order = [F.col(axis).asc(), F.col("_side").asc()] + (
+        [F.col(tiebreak).asc_nulls_first()] if tiebreak else []
+    )
+    wb = Window.partitionBy(key).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
+    wf = Window.partitionBy(key).orderBy(*order).rowsBetween(0, Window.unboundedFollowing)
+    for c in cols:
+        has_v = (F.col("_side") == 0) & F.col(c).isNotNull()
+        src_a = F.when(has_v, F.col(axis))
+        src_v = F.when(has_v, F.col(c))
+        u = (
+            u.withColumn("_pa", F.last(src_a, ignorenulls=True).over(wb))
+            .withColumn("_na", F.first(src_a, ignorenulls=True).over(wf))
+            .withColumn("_pv", F.last(src_v, ignorenulls=True).over(wb))
+            .withColumn("_nv", F.first(src_v, ignorenulls=True).over(wf))
+            .withColumn(
+                c, pick(F.col("_pa"), F.col("_pv"), F.col("_na"), F.col("_nv"), F.col(axis))
+            )
+            .drop("_pa", "_na", "_pv", "_nv")
+        )
+    return u.filter(F.col("_side") == 1)
+
+
+def _lerp_pick(pa: Column, pv: Column, na: Column, nv: Column, a: Column) -> Column:
+    """Resampling pick (transform_utils.dart:35-72): the lerp between the
+    bracket ends, or the one end that exists."""
+    return F.when(pa.isNull(), nv).when(na.isNull(), pv).otherwise(lerp(pa, na, pv, nv, a))
 
 
 def asof_join(
@@ -44,55 +107,24 @@ def asof_join(
     """Nearest-within-tolerance as-of join, native Catalyst plan.
 
     Returns ``probes`` columns + ``out`` (matched sample value or null).
-    Plan shape: probe columns ride THROUGH the union (sample rows carry
-    nulls), so the whole join is one shuffle on ``key`` + one window pass —
-    no join-back. Samples at the exact probe ts sort before the probe row
-    (``_is_probe`` ascending) so an equal-ts sample is seen as the
-    "previous" candidate — Δ=0, always wins; earlier wins ties
-    (channel_mapper.dart:203).
+    A sample at the exact probe ts is the "previous" candidate — Δ=0,
+    always wins; earlier wins ties (channel_mapper.dart:203).
     """
-    p_cols = probes.columns
-    p = (
-        probes.withColumn("_t", ts_seconds(F.col(ts)))
-        .withColumn("_sv", F.lit(None).cast("double"))
-        .withColumn("_is_probe", F.lit(1))
-    )
+
+    def nearest(pt, pv, nt, nv, t):
+        d_prev = t - pt
+        d_next = nt - t
+        pick_prev = pt.isNotNull() & (nt.isNull() | (d_prev <= d_next))  # earlier wins ties
+        return F.when(pick_prev & (d_prev <= tolerance_s), pv).when(
+            ~pick_prev & nt.isNotNull() & (d_next <= tolerance_s), nv
+        )
+
+    p = probes.withColumn("_t", ts_seconds(F.col(ts)))
     s = samples.select(
-        F.col(key),
-        ts_seconds(F.col(ts)).alias("_t"),
-        F.col(value).cast("double").alias("_sv"),
-        F.lit(0).alias("_is_probe"),
+        F.col(key), ts_seconds(F.col(ts)).alias("_t"), F.col(value).cast("double").alias("_sv")
     )
-    u = p.unionByName(s, allowMissingColumns=True)
-    order = [F.col("_t").asc(), F.col("_is_probe").asc()]
-    wb = Window.partitionBy(key).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-    wf = Window.partitionBy(key).orderBy(*order).rowsBetween(0, Window.unboundedFollowing)
-    # a null-valued sample row is NOT a usable sample: gate BOTH the time and
-    # the value on value-non-null so _pt/_pv can never desync (a desync would
-    # pass the tolerance gate with a time from one sample and a value from an
-    # older one)
-    is_sample = (F.col("_is_probe") == 0) & F.col("_sv").isNotNull()
-    sample_t = F.when(is_sample, F.col("_t"))
-    sample_v = F.when(is_sample, F.col("_sv"))
-    enriched = (
-        u.withColumn("_pt", F.last(sample_t, ignorenulls=True).over(wb))
-        .withColumn("_pv", F.last(sample_v, ignorenulls=True).over(wb))
-        .withColumn("_nt", F.first(sample_t, ignorenulls=True).over(wf))
-        .withColumn("_nv", F.first(sample_v, ignorenulls=True).over(wf))
-        .filter(F.col("_is_probe") == 1)
-    )
-    d_prev = F.col("_t") - F.col("_pt")
-    d_next = F.col("_nt") - F.col("_t")
-    pick_prev = F.col("_pt").isNotNull() & (
-        F.col("_nt").isNull() | (d_prev <= d_next)  # earlier wins ties
-    )
-    matched = enriched.withColumn(
-        out,
-        F.when(pick_prev & (d_prev <= tolerance_s), F.col("_pv")).when(
-            ~pick_prev & F.col("_nt").isNotNull() & (d_next <= tolerance_s), F.col("_nv")
-        ),
-    )
-    return matched.select(*p_cols, out)
+    matched = _bracket(p, s, key, "_t", ["_sv"], nearest)
+    return matched.select(*probes.columns, F.col("_sv").alias(out))
 
 
 def _nearest_within(pt, st, sv, tol: float):
@@ -115,9 +147,9 @@ def _nearest_within(pt, st, sv, tol: float):
     return np.where(best_d <= tol, best_v, np.nan)
 
 
-def _epoch_s(series):
-    """datetime64 Series -> float epoch seconds (microsecond grain)."""
-    return series.values.astype("datetime64[us]").astype("int64") / 1e6
+def _epoch_s(times):
+    """datetime64 array -> float epoch seconds (microsecond grain)."""
+    return times.astype("datetime64[us]").astype("int64") / 1e6
 
 
 def asof_join_pandas(
@@ -129,82 +161,120 @@ def asof_join_pandas(
     tolerance_s: float = DEFAULT_TOLERANCE_S,
     out: str = "value",
 ) -> DataFrame:
-    """Arrow-kernel as-of join: numpy searchsorted per activity group.
+    """Arrow twin of :func:`asof_join`: the one-channel call of
+    :func:`asof_channels_wide` (same semantics; used for cross-checks)."""
+    chans = samples.select(key, ts, F.lit(out).alias("channel"), F.col(value).alias("value"))
+    return asof_channels_wide(probes, chans, {out: tolerance_s}, key=key, ts=ts)
 
-    Exact same semantics as :func:`asof_join`; used for cross-checks and as
-    the building block where many channels map to wide columns at once
-    (state never crosses an activity boundary — natural partition key).
-    """
+
+def _channel_kernel(
+    probes: DataFrame,
+    channels: DataFrame,
+    tolerances: dict[str, float],
+    key: str,
+    ts: str,
+):
+    """The one per-activity channel kernel both shapes run: returns the
+    channel side (channels outside ``tolerances`` dropped, so before any
+    shuffle), ``kernel(probe_rows, channel_rows)`` for one activity, and
+    its output DDL schema. The kernel reads its inputs column by column,
+    so they may be pandas frames or dicts of numpy columns; it works on
+    numpy arrays throughout, because pandas' per-call overhead, not the
+    search, dominates an activity of a few dozen points."""
+    import numpy as np
     import pandas as pd
 
     p_cols = probes.columns
-    probes_t = probes.withColumn("_side", F.lit(1))
-    samples_t = samples.select(
-        F.col(key), F.col(ts), F.col(value).cast("double").alias("_sval")
-    ).withColumn("_side", F.lit(0))
-    merged = probes_t.unionByName(samples_t, allowMissingColumns=True)
-
+    # channel names are data-derived (CSV headers): backtick-escape them so a
+    # metacharacter in a header can't break the DDL schema string
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in probes.schema.fields
-    ) + f", `{out}` double"
+    ) + "".join(", `{}` double".format(ch.replace("`", "``")) for ch in tolerances)
+    # fresh attributes for the columns the channel side shares with the
+    # probes: when both derive from one record stream (the CLI), a shared key
+    # attribute makes the cogroup an ambiguous self-join, and a later
+    # self-join's rewrite can give both sides one `ts` attribute, so the
+    # channel frame arrives without its times
+    chans = channels.filter(F.col("channel").isin(list(tolerances))).select(
+        F.col(key).alias(key), F.col(ts).alias("_st"), "channel",
+        F.col("value").cast("double").alias("value"),
+    )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pr = pdf[pdf["_side"] == 1].sort_values(ts, kind="stable")
-        sm = pdf[(pdf["_side"] == 0) & pdf["_sval"].notna()].sort_values(ts, kind="stable")
-        res = pr[[c for c in p_cols]].copy()
-        res[out] = _nearest_within(
-            _epoch_s(pr[ts]), _epoch_s(sm[ts]), sm["_sval"].values, tolerance_s
-        )
-        return res
+    def kernel(pr, ch) -> pd.DataFrame:
+        p_ts = np.asarray(pr[ts])
+        order = np.argsort(p_ts, kind="stable")  # NaT last, as sort_values
+        res = {c: np.asarray(pr[c])[order] for c in p_cols}
+        pt = _epoch_s(p_ts[order])
+        names = np.asarray(ch["channel"])
+        vals = np.asarray(ch["value"], dtype="float64")
+        st = np.asarray(ch["_st"])
+        for name, tol in tolerances.items():
+            m = (names == name) & ~np.isnan(vals)
+            so = np.argsort(st[m], kind="stable")
+            res[name] = _nearest_within(pt, _epoch_s(st[m][so]), vals[m][so], tol)
+        return pd.DataFrame(res)
 
-    return grouped_apply(merged, key, kernel, out_schema)
+    return chans, kernel, out_schema
 
 
 def asof_channels_wide(
     probes: DataFrame,
     channels: DataFrame,
-    channel_names: list[str],
-    tolerances: dict[str, float] | None = None,
-    default_tolerance_s: float = DEFAULT_TOLERANCE_S,
+    tolerances: dict[str, float],
     key: str = "activity_id",
     ts: str = "ts",
-    channel_col: str = "channel",
-    value: str = "value",
 ) -> DataFrame:
-    """Wide multi-channel as-of join with PER-CHANNEL tolerance overrides —
-    the reference's maxDeltaPerChannel / maxDeltaFor option
-    (encoder_options.dart:22-42): each channel maps to one output column,
-    its samples matched nearest-within-its-own-tolerance (earlier wins
-    ties, channel_mapper.dart:203).
+    """Wide multi-channel as-of join: each channel of the resolved
+    ``tolerances`` map (``{channel: seconds}``, the reference's
+    maxDeltaPerChannel after defaults, encoder_options.dart:22-42) becomes
+    one double column of the probe rows, its samples matched
+    nearest-within-its-own-tolerance (earlier wins ties,
+    channel_mapper.dart:203). ``channels`` is long format
+    (key, ts, channel, value).
 
-    Plan: ONE cogroup shuffle on ``key`` (not one join per channel); the
-    kernel runs a searchsorted pass per channel inside the activity group.
+    Plan: a cogroup on ``key`` that exchanges both sides (neither on inputs
+    bucketed on ``key``); :func:`_channel_kernel` holds one activity at a
+    time and runs one :func:`_nearest_within` pass per channel. Each group
+    is one Arrow round trip, so on many short activities
+    :func:`_asof_channels_per_partition` is the cheaper shape.
     """
-    import pandas as pd
+    chans, kernel, out_schema = _channel_kernel(probes, channels, tolerances, key, ts)
+    return probes.groupBy(key).cogroup(chans.groupBy(key)).applyInPandas(kernel, out_schema)
 
-    tolerances = tolerances or {}
-    tol = {c: float(tolerances.get(c, default_tolerance_s)) for c in channel_names}
+
+def _asof_channels_per_partition(
+    probes: DataFrame,
+    channels: DataFrame,
+    tolerances: dict[str, float],
+    key: str,
+    ts: str,
+) -> DataFrame:
+    """:func:`asof_channels_wide` in the :func:`grouped_apply` shape: the
+    probe and channel rows are unioned and run through the same
+    :func:`_channel_kernel` one partition at a time — one Arrow round trip
+    per partition, not per activity. On a directory of many short
+    activities the cogroup pays a round trip per activity, and AQE
+    coalesces the small groups into a few serial partitions: `cli convert`
+    of 2,001 files of 50 points took a median 35.3 s of wall time through
+    the cogroup and 31.7 s through this shape (6 runs each, 4 cores).
+    Probe columns are null on the channel rows of the union, so an integer
+    probe column other than the key crosses into pandas as float64 and
+    back by an unchecked cast: exact only below 2**53."""
+    chans, kernel, out_schema = _channel_kernel(probes, channels, tolerances, key, ts)
+    merged = probes.withColumn("_side", F.lit(1)).unionByName(
+        chans.withColumn("_side", F.lit(0)), allowMissingColumns=True
+    )
     p_cols = probes.columns
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in probes.schema.fields
-    ) + "".join(f", `{c}` double" for c in channel_names)
 
-    def kernel(pr: pd.DataFrame, ch: pd.DataFrame) -> pd.DataFrame:
-        pr = pr.sort_values(ts, kind="stable")
-        res = pr[[c for c in p_cols]].copy()
-        pt = _epoch_s(pr[ts])
-        for cname in channel_names:
-            sm = ch[(ch[channel_col] == cname) & ch[value].notna()].sort_values(
-                ts, kind="stable"
-            )
-            res[cname] = _nearest_within(
-                pt, _epoch_s(sm[ts]), sm[value].values, tol[cname]
-            )
-        return res
+    def per_activity(pdf):
+        is_probe = pdf["_side"].values == 1
+        # column arrays, not frame copies: the kernel only reads columns
+        return kernel(
+            {c: pdf[c].values[is_probe] for c in p_cols},
+            {c: pdf[c].values[~is_probe] for c in ("_st", "channel", "value")},
+        )
 
-    return probes.groupBy(key).cogroup(
-        channels.select(key, ts, channel_col, value).groupBy(key)
-    ).applyInPandas(lambda p, c: kernel(p, c), out_schema)
+    return grouped_apply(merged, key, per_activity, out_schema)
 
 
 def exact_ts_join(
@@ -252,41 +322,12 @@ def resample_linear(
     """Resample continuous columns onto a fixed grid with linear interpolation
     (transform_utils.dart:35-72): bracket [lower, upper] → time-factor lerp.
 
-    Native plan: union grid+points, running last/first per column, lerp.
+    Native plan: :func:`_bracket` of the grid over the points on the epoch
+    seconds axis, then :func:`_lerp_pick`.
     """
-    grid = resample_grid(points, step_s, key, ts)
-    g = grid.withColumn("_is_grid", F.lit(1))
-    p = points.select(key, ts, *cols).withColumn("_is_grid", F.lit(0))
-    u = g.unionByName(p, allowMissingColumns=True).withColumn(
-        "_t", ts_seconds(F.col(ts))
-    )
-    order = [F.col("_t").asc(), F.col("_is_grid").asc()]
-    wb = Window.partitionBy(key).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-    wf = Window.partitionBy(key).orderBy(*order).rowsBetween(0, Window.unboundedFollowing)
-    out = u
-    for c in cols:
-        # bracket times are tracked PER COLUMN gated on that column being
-        # non-null, so a point with a null value in one column cannot desync
-        # that column's lerp bracket
-        has_v = (F.col("_is_grid") == 0) & F.col(c).isNotNull()
-        src_t = F.when(has_v, F.col("_t"))
-        src_v = F.when(has_v, F.col(c))
-        out = (
-            out.withColumn("_pt", F.last(src_t, ignorenulls=True).over(wb))
-            .withColumn("_nt", F.first(src_t, ignorenulls=True).over(wf))
-            .withColumn("_pv", F.last(src_v, ignorenulls=True).over(wb))
-            .withColumn("_nv", F.first(src_v, ignorenulls=True).over(wf))
-            .withColumn(
-                c,
-                F.when(F.col("_pt").isNull(), F.col("_nv"))
-                .when(F.col("_nt").isNull(), F.col("_pv"))
-                .otherwise(
-                    lerp(F.col("_pt"), F.col("_nt"), F.col("_pv"), F.col("_nv"), F.col("_t"))
-                ),
-            )
-            .drop("_pt", "_nt", "_pv", "_nv")
-        )
-    return out.filter(F.col("_is_grid") == 1).select(key, ts, *cols)
+    grid = resample_grid(points, step_s, key, ts).withColumn("_t", ts_seconds(F.col(ts)))
+    pts = points.select(key, ts, *cols).withColumn("_t", ts_seconds(F.col(ts)))
+    return _bracket(grid, pts, key, "_t", cols, _lerp_pick).select(key, ts, *cols)
 
 
 # per-channel tolerance overrides (encoder_options.dart:22-26, 41-42)
@@ -309,16 +350,13 @@ def map_channels_wide(
     ts: str = "ts",
 ) -> DataFrame:
     """Map several long-format channels onto probe rows as wide columns,
-    each with its own nearest-tolerance as-of join (the encoder-side channel
-    mapping, channel_mapper.dart:97-230 with per-channel overrides).
+    each with its own nearest-tolerance as-of join (the as-of join's channel
+    mapping, channel_mapper.dart:97-230, with the J1 per-channel defaults
+    :data:`DEFAULT_CHANNEL_TOLERANCES` under ``tolerances`` overrides).
 
-    NOTE: this runs one union+window pass per channel (N shuffles for N
-    channels); when mapping many channels at 100 TB, prefer a single
-    applyInPandas pass per activity (asof_join_pandas's kernel generalizes
-    to all channels in one groupBy) — acceptable here because encoder-side
-    channel sets are small (<10)."""
-    tol = dict(DEFAULT_CHANNEL_TOLERANCES)
-    tol.update(tolerances or {})
+    The native reference: one union+window pass per channel (N shuffles for
+    N channels). :func:`asof_channels_wide` maps them all in one shuffle."""
+    tol = {**DEFAULT_CHANNEL_TOLERANCES, **(tolerances or {})}
     out = probes
     for ch in channel_names:
         stream = channels.filter(F.col("channel") == ch).select(key, ts, "value")
@@ -327,53 +365,6 @@ def map_channels_wide(
             tolerance_s=tol.get(ch, DEFAULT_TOLERANCE_S), out=ch,
         )
     return out
-
-
-def map_channels_wide_kernel(
-    probes: DataFrame,
-    channels: DataFrame,
-    channel_names: list[str],
-    tolerances: dict[str, float] | None = None,
-    key: str = "activity_id",
-    ts: str = "ts",
-) -> DataFrame:
-    """Single-pass wide channel mapping: ONE shuffle on ``key`` and one
-    Arrow kernel maps every channel onto the probe rows (numpy searchsorted
-    per channel inside the group). The scale path for wide encoder-side
-    mappings; semantics identical to :func:`map_channels_wide`
-    (nearest-within-tolerance, earlier wins ties, per-channel overrides)."""
-    import pandas as pd
-
-    tol = dict(DEFAULT_CHANNEL_TOLERANCES)
-    tol.update(tolerances or {})
-    p_cols = probes.columns
-    p = probes.withColumn("_side", F.lit(1))
-    c = channels.filter(F.col("channel").isin(channel_names)).select(
-        F.col(key), F.col(ts), F.col("channel").alias("_ch"),
-        F.col("value").cast("double").alias("_cv"),
-    ).withColumn("_side", F.lit(0))
-    merged = p.unionByName(c, allowMissingColumns=True)
-
-    # channel names are data-derived (CSV headers): backtick-escape them so a
-    # metacharacter in a header can't break the DDL schema string
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in probes.schema.fields
-    ) + "".join(", `{}` double".format(ch.replace("`", "``")) for ch in channel_names)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pr = pdf[pdf["_side"] == 1].sort_values(ts, kind="stable")
-        res = pr[[col for col in p_cols]].copy()
-        pt = _epoch_s(pr[ts])
-        for ch in channel_names:
-            sm = pdf[(pdf["_side"] == 0) & (pdf["_ch"] == ch) & pdf["_cv"].notna()]
-            sm = sm.sort_values(ts, kind="stable")
-            res[ch] = _nearest_within(
-                pt, _epoch_s(sm[ts]), sm["_cv"].values,
-                tol.get(ch, DEFAULT_TOLERANCE_S),
-            )
-        return res
-
-    return grouped_apply(merged, key, kernel, out_schema)
 
 
 def snap_channels_to_points(
@@ -395,13 +386,14 @@ def snap_channels_to_points(
 
     The uniform ``default_tol_s`` (5 s) deliberately mirrors the reference
     ENCODER contract (EncoderOptions: defaultMaxDelta 5 s, per-channel map
-    EMPTY by default) and therefore overrides the as-of JOIN operator's own
-    DEFAULT_CHANNEL_TOLERANCES — those belong to J1, not the encoders.
+    EMPTY by default), so the as-of JOIN operator's own
+    DEFAULT_CHANNEL_TOLERANCES (J1) do not apply here.
 
     ``channel_names``: pass the (cheaply known) distinct channel set to
     avoid an extra distinct+collect pass over the channel pipeline.
 
-    One shuffle (the wide kernel) + an explode melt; no per-row Python and
+    One shuffle (the channel kernel, run per partition: the CLI's inputs
+    may be many short activities) + an explode melt; no per-row Python and
     no SQL-string interpolation of data-derived channel names."""
     names = channel_names if channel_names is not None else sorted(
         r["channel"] for r in channels.select("channel").distinct().collect()
@@ -409,11 +401,8 @@ def snap_channels_to_points(
     names = sorted(names)
     if not names:
         return channels
-    tol = {n: default_tol_s for n in names}
-    tol.update(tolerances or {})
-    wide = map_channels_wide_kernel(
-        points.select(key, ts), channels, names, tolerances=tol, key=key, ts=ts
-    )
+    tol = {n: (tolerances or {}).get(n, default_tol_s) for n in names}
+    wide = _asof_channels_per_partition(points.select(key, ts), channels, tol, key, ts)
     pairs = F.array(*[
         F.struct(F.lit(n).alias("channel"), wide[n].alias("value")) for n in names
     ])
@@ -446,10 +435,10 @@ def resample_by_distance(
 
     Plan: one window pass builds the running haversine cumdist (sequential
     ROWS sum — deterministic doubles in any engine), the per-activity grid
-    is sequence(0, floor(total/step)) exploded map-side, and the
-    union + running last/first + lerp machinery mirrors resample_linear on
-    the ``_d`` axis. Output: key, grid index ``k``, ``d_m``, interpolated
-    ``cols``.
+    is sequence(0, floor(total/step)) exploded map-side, and
+    :func:`_bracket` + :func:`_lerp_pick` interpolate it as in
+    resample_linear, on the ``_d`` axis. Output: key, grid index ``k``,
+    ``d_m``, interpolated ``cols``.
     """
     order0 = [ts, tiebreak] if tiebreak else [ts]
     w = Window.partitionBy(key).orderBy(*order0)
@@ -474,37 +463,7 @@ def resample_by_distance(
             F.sequence(F.lit(0), F.floor(F.col("_total") / F.lit(step_m)).cast("int"))
         ).alias("k"),
     ).withColumn("_d", F.col("k").cast("double") * F.lit(step_m))
-    g = grid.withColumn("_is_grid", F.lit(1))
-    p = pts.select(key, "_d", "_seq", *cols).withColumn("_is_grid", F.lit(0))
-    u = g.unionByName(p, allowMissingColumns=True)
-    # _seq breaks ties among points sharing one cumdist (zero-length
-    # steps); NULLS FIRST explicitly — Spark and DuckDB default opposite
-    order = [
-        F.col("_d").asc(), F.col("_is_grid").asc(),
-        F.col("_seq").asc_nulls_first(),
-    ]
-    wb = Window.partitionBy(key).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-    wf = Window.partitionBy(key).orderBy(*order).rowsBetween(0, Window.unboundedFollowing)
-    out = u
-    for c in cols:
-        has_v = (F.col("_is_grid") == 0) & F.col(c).isNotNull()
-        src_d = F.when(has_v, F.col("_d"))
-        src_v = F.when(has_v, F.col(c))
-        out = (
-            out.withColumn("_pd", F.last(src_d, ignorenulls=True).over(wb))
-            .withColumn("_nd", F.first(src_d, ignorenulls=True).over(wf))
-            .withColumn("_pv", F.last(src_v, ignorenulls=True).over(wb))
-            .withColumn("_nv", F.first(src_v, ignorenulls=True).over(wf))
-            .withColumn(
-                c,
-                F.when(F.col("_pd").isNull(), F.col("_nv"))
-                .when(F.col("_nd").isNull(), F.col("_pv"))
-                .otherwise(
-                    lerp(F.col("_pd"), F.col("_nd"), F.col("_pv"), F.col("_nv"), F.col("_d"))
-                ),
-            )
-            .drop("_pd", "_nd", "_pv", "_nv")
-        )
-    return out.filter(F.col("_is_grid") == 1).select(
-        key, "k", F.col("_d").alias("d_m"), *cols
-    )
+    pts = pts.select(key, "_d", "_seq", *cols)
+    # _seq breaks ties among points sharing one cumdist (zero-length steps)
+    out = _bracket(grid, pts, key, "_d", cols, _lerp_pick, tiebreak="_seq")
+    return out.select(key, "k", F.col("_d").alias("d_m"), *cols)

@@ -15,7 +15,11 @@ without lineage, so losing an executor fails the query instead of
 recomputing it. They are not pinned in the CacheManager the way
 ``.cache()`` entries are: nothing unpersists them, and they hold executor
 storage until the frame is garbage-collected and the context cleaner
-drops them.
+drops them. Under AQE (the session default) a checkpoint also drops its
+partitioning: its ``LogicalRDD`` reports ``UnknownPartitioning(0)``, so two
+checkpoints hash-partitioned on one key still get an Exchange on both sides
+when joined on it. A co-partitioned join or iteration cannot rely on a
+checkpointed frame's layout.
 """
 
 from __future__ import annotations

@@ -31,6 +31,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _output_metrics(path: str) -> dict:
@@ -82,7 +83,15 @@ class Manifest:
         )
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._output_path(stage))
+        """The committed output, read with the schema the stage recorded: no
+        footer-inference job, and partition keys keep their written types
+        (a digit-string key would otherwise come back as an int). Manifests
+        from before ``schema_json`` was recorded are read by inference."""
+        reader = self.spark.read
+        schema = ((self.stage_info(stage) or {}).get("lineage") or {}).get("schema_json")
+        if schema:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(self._output_path(stage))
 
     def stage_info(self, stage: str) -> dict | None:
         mp = self._manifest_path(stage)
@@ -122,7 +131,7 @@ class Manifest:
             "lineage": {
                 "inputs": inputs or [],
                 "config": config or {},
-                "schema": df.schema.simpleString(),
+                "schema_json": df.schema.json(),
             },
             "metrics": metrics,
             "duration_s": round(time.monotonic() - t0, 3),

@@ -226,10 +226,7 @@ def test_asof_channels_wide_per_channel_tolerance(spark):
         *[("a", "power", datetime(2024, 3, 1, 10, 0, 10 * i + 8), 200.0 + i) for i in range(4)],
     ]
     chans = spark.createDataFrame(ch, "activity_id string, channel string, ts timestamp, value double")
-    wide = asof_channels_wide(
-        probes, chans, ["heart_rate", "power"],
-        tolerances={"heart_rate": 5.0, "power": 2.0},
-    )
+    wide = asof_channels_wide(probes, chans, {"heart_rate": 5.0, "power": 2.0})
     rows = {r["seq"]: r for r in wide.collect()}
     # hr within 3s <= 5s tolerance everywhere
     assert [rows[i]["heart_rate"] for i in range(5)] == [100.0 + i for i in range(5)]

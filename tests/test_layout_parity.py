@@ -41,7 +41,9 @@ def test_bucketed_asof_cogroup_has_no_shuffle(spark):
     as-of path (not just equi-joins): points and channels bucketed on
     activity_id feed asof_channels_wide's FlatMapCoGroupsInPandas with no
     Exchange on either side — bucketing satisfies the cogroup's clustered
-    distribution, leaving only within-partition sorts."""
+    distribution, leaving only within-partition sorts. asof_channels_wide is
+    the one Arrow channel kernel: asof_join_pandas and the CLI's
+    snap_channels_to_points run through it."""
     from activity_files_spark.operators.asof import asof_channels_wide
 
     for t in ("pts_asof_b", "ch_asof_b"):
@@ -59,8 +61,7 @@ def test_bucketed_asof_cogroup_has_no_shuffle(spark):
     write_bucketed(pts, "pts_asof_b", "activity_id", n_buckets=8)
     write_bucketed(ch, "ch_asof_b", "activity_id", n_buckets=8)
     out = asof_channels_wide(
-        spark.table("pts_asof_b"), spark.table("ch_asof_b"),
-        ["heart_rate"], default_tolerance_s=5.0,
+        spark.table("pts_asof_b"), spark.table("ch_asof_b"), {"heart_rate": 5.0},
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from activity_files_spark.data.images import synth_images
 from activity_files_spark.operators.tiling import tile_assign
 from activity_files_spark.plans.manifest import Manifest
+from tests.test_materialize import _jobs_in
 
 
 @pytest.fixture
@@ -34,7 +35,8 @@ def test_stage_records_metrics_and_lineage(spark, mdir):
     assert info["metrics"]["n_files"] >= 1
     assert all(v["rows"] >= 0 for v in info["metrics"]["files"].values())
     assert info["lineage"]["inputs"] == ["synthetic:12"]
-    assert "image_id" in info["lineage"]["schema"]
+    schema = json.loads(info["lineage"]["schema_json"])
+    assert "image_id" in [f["name"] for f in schema["fields"]]
     assert calls["n"] == 1
 
 
@@ -113,3 +115,36 @@ def test_multi_stage_pipeline_deterministic(spark, mdir):
     ja = json.load(open(os.path.join(mdir + "_a", "tiles.json")))
     jb = json.load(open(os.path.join(mdir + "_b", "tiles.json")))
     assert ja["metrics"]["rows"] == jb["metrics"]["rows"] == 15
+
+
+def test_digit_string_partition_key_round_trips(spark, mdir):
+    """A stage partitioned by a digit-string column (a quadkey prefix) reads
+    back as the string it was written, leading zeros kept, on commit and on
+    resume: the stage's output is read with its recorded schema, not by
+    partition-value inference (which types '0123' as the int 123)."""
+    df = spark.createDataFrame([("0123", 1), ("0301", 2)], "qk_prefix string, n long")
+    first = Manifest(spark, mdir).run_stage("by_prefix", lambda: df, partition_by=["qk_prefix"])
+    resumed = Manifest(spark, mdir).run_stage("by_prefix", lambda: df, partition_by=["qk_prefix"])
+    for out in (first, resumed):
+        # a partitioned read's column order: data columns, then partition keys
+        assert out.schema.simpleString() == "struct<n:bigint,qk_prefix:string>"
+        assert sorted((r["qk_prefix"], r["n"]) for r in out.collect()) == [("0123", 1), ("0301", 2)]
+
+
+def test_run_stage_runs_only_the_write_jobs(spark, mdir, tmp_path):
+    """Committing a stage whose build reads nothing costs exactly the jobs of
+    a plain parquet write of the same frame: re-reading the committed output
+    runs no schema-inference job."""
+
+    def build():
+        return spark.range(20).select("id", (F.col("id") % 3).alias("k"))
+
+    _, plain = _jobs_in(
+        spark, "manifest-plain-write",
+        lambda: build().write.mode("overwrite").parquet(str(tmp_path / "plain")),
+    )
+    _, staged = _jobs_in(
+        spark, "manifest-run-stage", lambda: Manifest(spark, mdir).run_stage("s", build)
+    )
+    assert len(plain) >= 1
+    assert len(staged) == len(plain)

@@ -102,3 +102,38 @@ def test_materialization_policy_lives_in_one_module():
     ]
     assert offenders == []
     assert POLICY.search(HELPER.read_text())
+
+
+def _copartitioned_join_exchanges(spark, aqe: str) -> tuple[int, str]:
+    """Checkpoint two frames hash-partitioned on ``k`` and hash-join them on
+    ``k`` with ``spark.sql.adaptive.enabled`` set to ``aqe``: (Exchanges in
+    the join's plan, partitioning the first checkpoint reports)."""
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        a = spark.range(100).select((F.col("id") % 10).alias("k"), F.col("id").alias("a"))
+        b = spark.range(50).select((F.col("id") % 10).alias("k"), F.col("id").alias("b"))
+        ca, cb = materialize(a.repartition(8, "k"), b.repartition(8, "k"), eager=True)
+        j = ca.join(cb.hint("shuffle_hash"), "k")
+        plan = j._jdf.queryExecution().executedPlan().toString()
+        assert j.count() == 500
+        part = ca._jdf.queryExecution().executedPlan().outputPartitioning().toString()
+        return plan.count("Exchange"), part
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+
+
+def test_checkpoint_under_aqe_drops_partitioning(spark):
+    """Today's behaviour, not a wish: under AQE a checkpoint's LogicalRDD
+    reports UnknownPartitioning(0), so a join of two checkpoints that were
+    both hash-partitioned on the key still shuffles both sides; without AQE
+    it keeps the partitioning and the join needs no Exchange. If a Spark
+    upgrade makes this test fail, that is good news: co-partitioned rounds
+    over checkpoints become possible, and the trade-off note in
+    operators/materialize.py's docstring should be removed with this test."""
+    n_aqe, part_aqe = _copartitioned_join_exchanges(spark, "true")
+    assert n_aqe == 2
+    assert part_aqe == "UnknownPartitioning(0)"
+    n_plain, part_plain = _copartitioned_join_exchanges(spark, "false")
+    assert n_plain == 0
+    assert part_plain.startswith("hashpartitioning(k")

@@ -165,7 +165,12 @@ def test_tcx_v1_dialect(spark):
 
 
 def test_map_channels_wide_kernel_matches_native(spark):
-    from activity_files_spark.operators.asof import map_channels_wide_kernel
+    """The one channel kernel, given map_channels_wide's resolved J1
+    tolerances, maps the same values as the native per-channel plan."""
+    from activity_files_spark.operators.asof import (
+        DEFAULT_CHANNEL_TOLERANCES,
+        asof_channels_wide,
+    )
 
     probes = spark.createDataFrame(
         [("a", ts(f"2024-03-01T10:00:{i:02d}")) for i in range(0, 30, 10)],
@@ -182,7 +187,8 @@ def test_map_channels_wide_kernel_matches_native(spark):
     )
     names = ["heart_rate", "temperature", "power"]
     native = {str(r["ts"]): r for r in map_channels_wide(probes, channels, names).collect()}
-    kern = {str(r["ts"]): r for r in map_channels_wide_kernel(probes, channels, names).collect()}
+    tol = {n: DEFAULT_CHANNEL_TOLERANCES[n] for n in names}
+    kern = {str(r["ts"]): r for r in asof_channels_wide(probes, channels, tol).collect()}
     for k in native:
         for ch in names:
             nv, kv = native[k][ch], kern[k][ch]

@@ -1,14 +1,18 @@
 """Property-based tests (hypothesis): the pure-python goldens are the
 specification; randomized inputs probe edge cases the fixtures miss.
 
-Spark is deliberately absent here — these pin the KERNEL semantics
+Spark is absent here except in one test — these pin the KERNEL semantics
 (the four-way implementation parity tests in test_functions/test_hexgrid
-already prove the Column/SQL twins equal the goldens)."""
+already prove the Column/SQL twins equal the goldens). The exception,
+test_asof_native_matches_channel_kernel, draws inputs for the two as-of
+engines (the native window plan and the Arrow channel kernel) and needs a
+session to run them."""
 
 import math
+from datetime import datetime, timedelta
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from activity_files_spark.codecs.image import (
@@ -138,6 +142,101 @@ def test_asof_numpy_kernel_matches_reference(probe_ts, samples):
     want = _asof_reference([float(p) for p in pt_arr],
                            [(float(t), float(v)) for t, v in samples], tol)
     assert got == want
+
+
+_CHANNELS = ("heart_rate", "power", "temperature")
+_T0 = datetime(2024, 3, 1, 10, 0, 0)
+
+# one activity: probe seconds, and per channel (second, value) samples — a
+# repeated second repeats its value or carries a null one, so the nearest
+# usable sample's value is well defined even at duplicate timestamps
+_activity_st = st.tuples(
+    st.lists(st.integers(min_value=0, max_value=60), min_size=1, max_size=8),
+    st.tuples(*[
+        st.lists(
+            st.tuples(st.integers(min_value=0, max_value=60),
+                      st.sampled_from(["value", "null", "dup", "dup_null"])),
+            max_size=8,
+        )
+        for _ in _CHANNELS
+    ]),
+)
+
+
+def _samples_of(drawn, channel):
+    """(second, value) rows of one drawn channel: value is a function of
+    (channel, second); "dup" rows repeat their sample, "*null" rows add a
+    null-valued one at the same second."""
+    rows = []
+    for t, kind in drawn:
+        v = float(100 * (_CHANNELS.index(channel) + 1) + t)
+        rows.append((t, None if kind == "null" else v))
+        if kind.startswith("dup"):
+            rows.append((t, None if kind == "dup_null" else v))
+    return rows
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    st.lists(_activity_st, min_size=1, max_size=3),
+    st.tuples(*[st.sampled_from([0.0, 1.0, 2.0, 5.0]) for _ in _CHANNELS]),
+)
+# an exact tie on every channel: samples 2 s before and after the probe
+@example(
+    [([10], tuple([(8, "value"), (12, "value")] for _ in _CHANNELS))],
+    (2.0, 5.0, 1.0),
+)
+def test_asof_native_matches_channel_kernel(spark, activities, tols):
+    """The native as-of join (operators.asof.asof_join, run once per channel)
+    and the one Arrow channel kernel, in both its shapes (asof_channels_wide's
+    cogroup and the per-partition shape snap_channels_to_points uses), map
+    the same value onto every probe — on drawn timelines with exact ties, duplicate sample
+    timestamps, null-valued samples and a different tolerance per channel —
+    and both equal the brute-force nearest-within-tolerance oracle."""
+    from pyspark.sql import functions as F
+
+    from activity_files_spark.operators.asof import (
+        _asof_channels_per_partition,
+        asof_channels_wide,
+        asof_join,
+    )
+
+    tolerances = dict(zip(_CHANNELS, tols))
+    probe_rows, channel_rows = [], []
+    for a, (probe_s, drawn) in enumerate(activities):
+        aid = f"a{a}"
+        probe_rows += [(aid, i, _T0 + timedelta(seconds=t)) for i, t in enumerate(probe_s)]
+        for ch, d in zip(_CHANNELS, drawn):
+            channel_rows += [(aid, ch, _T0 + timedelta(seconds=t), v) for t, v in _samples_of(d, ch)]
+    probes = spark.createDataFrame(probe_rows, "activity_id string, seq long, ts timestamp")
+    channels = spark.createDataFrame(
+        channel_rows, "activity_id string, channel string, ts timestamp, value double"
+    )
+
+    native = probes
+    for ch in _CHANNELS:
+        stream = channels.filter(F.col("channel") == ch).select("activity_id", "ts", "value")
+        native = asof_join(native, stream, tolerance_s=tolerances[ch], out=ch)
+    kernel = asof_channels_wide(probes, channels, tolerances)
+    per_partition = _asof_channels_per_partition(
+        probes, channels, tolerances, "activity_id", "ts"
+    )
+
+    def mapped(df):
+        return {
+            (r["activity_id"], r["seq"], ch): (None if r[ch] is None or r[ch] != r[ch] else r[ch])
+            for r in df.collect() for ch in _CHANNELS
+        }
+
+    got_native, got_kernel = mapped(native), mapped(kernel)
+    assert got_native == got_kernel == mapped(per_partition)
+    for a, (probe_s, drawn) in enumerate(activities):
+        for ch, d in zip(_CHANNELS, drawn):
+            usable = [(float(t), v) for t, v in _samples_of(d, ch) if v is not None]
+            want = _asof_reference([float(t) for t in probe_s], usable, tolerances[ch])
+            for i, t in enumerate(probe_s):
+                assert got_native[(f"a{a}", i, ch)] == want[float(t)], (a, i, ch)
 
 
 # ---------------------------------------------------------------- integer ANN
