@@ -25,7 +25,7 @@ Float-determinism rules used throughout (so value hashes match DuckDB):
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from functools import partial
 
 import pandas as pd
@@ -42,6 +42,7 @@ from activity_files_spark.functions.quadkey import (
     tile_xy_sql,
 )
 from activity_files_spark.operators.asof import asof_join
+from activity_files_spark.operators.kernels import Kernel, map_kernels
 from activity_files_spark.operators.materialize import materialize
 from activity_files_spark.operators.windows import sessionize_gap, smooth
 
@@ -90,19 +91,27 @@ def _dec_sum(col, scale: str = "decimal(22,6)"):
 
 
 def _per_user_rows(
-    spark: SparkSession, sf_dir: str, row: Callable[[int], dict], schema: str
+    spark: SparkSession,
+    sf_dir: str,
+    row: Callable[[int], dict],
+    schema: str,
+    then: Sequence[Kernel] = (),
 ) -> DataFrame:
     """One synthetic row per distinct events user, built by ``row(user_id)``
     in a mapInPandas worker; the users are spread over every core first
-    because the per-user encode/decode work dominates these queries."""
+    because the per-user encode/decode work dominates these queries.
+    ``then``: kernels that consume the rows in the same mapInPandas
+    (operators/kernels.py), so the decode costs no second Python worker."""
     users = _read(spark, sf_dir, "events").select("user_id").distinct()
 
     def gen(batches):
         for pdf in batches:
             yield pd.DataFrame([row(int(uid)) for uid in pdf["user_id"]])
 
-    return users.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, schema
+    return map_kernels(
+        users.repartition(spark.sparkContext.defaultParallelism),
+        Kernel(gen, schema),
+        *then,
     )
 
 
@@ -3697,36 +3706,32 @@ def s2_tile_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     image lands in exactly one Hilbert cell per level {8, 12}, rolled up
     per cell with image-index sums — the layout/rollup key a 10^12-image
     Iceberg table would bucket by (see the shuffle-free bucketed proof in
-    tests/test_layout_parity.py). Cell ids via the libm-exact Arrow kernel
-    (s2.py trig rule); the oracle replays the cube-face + s-t + Hilbert
-    CTE chain from the deterministic fixture grid."""
+    tests/test_layout_parity.py). Cell ids at both levels come from the
+    libm-exact numpy kernel (s2.py trig rule) chained behind the image
+    generator, in one mapInPandas; the oracle replays the cube-face + s-t +
+    Hilbert CTE chain from the deterministic fixture grid."""
     from activity_files_spark.data.images import synth_images
     from activity_files_spark.functions.s2 import s2_cellid_np, s2_token_col
 
-    def s2_at(lv: int):
-        @F.pandas_udf("long")
-        def f(lat: pd.Series, lon: pd.Series) -> pd.Series:
-            return pd.Series(
-                s2_cellid_np(lat.to_numpy(), lon.to_numpy(), lv, trig="libm")
-            )
+    def cells(batches):
+        for pdf in batches:
+            lat, lon = pdf["lat"].to_numpy(), pdf["lon"].to_numpy()
+            yield pd.concat([
+                pd.DataFrame({
+                    "level": lv,
+                    "s2_id": s2_cellid_np(lat, lon, lv, trig="libm"),
+                    "image_id": pdf["image_id"].to_numpy(),
+                })
+                for lv in (8, 12)
+            ])
 
-        return f
-
-    imgs = synth_images(spark, N_IMAGES_CORRECTNESS, partitions=8).select(
-        "image_id", "lat", "lon"
+    un = synth_images(
+        spark, N_IMAGES_CORRECTNESS, partitions=8,
+        then=[Kernel(cells, "level int, s2_id long, image_id string")],
     )
     idx = F.substring("image_id", 5, 12).cast("long")
-    per_level = [
-        imgs.select(
-            F.lit(lv).alias("level"),
-            s2_at(lv)("lat", "lon").alias("s2_id"),
-            idx.alias("img_idx"),
-        )
-        for lv in (8, 12)
-    ]
-    un = per_level[0].unionByName(per_level[1])
     agg = un.groupBy("level", "s2_id").agg(
-        F.count("*").alias("n_images"), F.sum("img_idx").alias("img_idx_sum")
+        F.count("*").alias("n_images"), F.sum(idx).alias("img_idx_sum")
     )
     return agg.withColumn("s2_token", s2_token_col(F.col("s2_id")))
 
@@ -3832,11 +3837,13 @@ def validate_images_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest pins the per-row semantics. The SQL-replayable half (caption
     equality, dimensions, phash presence) is hash-gated separately by
     :func:`image_invariants_summary`."""
-    from activity_files_spark.data.images import synth_images
-    from activity_files_spark.operators.tiling import validate_images
+    from activity_files_spark.data.images import IMAGE_SCHEMA, synth_images
+    from activity_files_spark.operators.tiling import validate_images_kernel
 
-    imgs = synth_images(spark, N_IMAGES_CORRECTNESS, partitions=8)
-    diag = validate_images(imgs)
+    diag = synth_images(
+        spark, N_IMAGES_CORRECTNESS, partitions=8,
+        then=[validate_images_kernel(IMAGE_SCHEMA)],
+    )
     return diag.groupBy("fmt").agg(
         F.count("*").alias("n_images"),
         F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("n_ok"),
@@ -3853,13 +3860,17 @@ def image_histogram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((y*cy + x*cx + i*ci) mod 256 over the pixel grid) with no decoder at
     all: encode -> PNG/BMP bitstream -> decode must reproduce the closed
     form bit-for-bit to hash-match."""
-    from activity_files_spark.data.images import synth_images
-    from activity_files_spark.operators.tiling import image_channel_stats
+    from activity_files_spark.data.images import IMAGE_SCHEMA, synth_images
+    from activity_files_spark.operators.tiling import image_channel_stats_kernel
 
-    imgs = synth_images(spark, N_IMAGES_CORRECTNESS, partitions=8).where(
-        F.col("fmt") != "jpeg"
+    def lossless(batches):  # SQL's fmt != 'jpeg': a null fmt is dropped too
+        for pdf in batches:
+            yield pdf[pdf["fmt"].notna() & (pdf["fmt"] != "jpeg")]
+
+    return synth_images(
+        spark, N_IMAGES_CORRECTNESS, partitions=8,
+        then=[Kernel(lossless, IMAGE_SCHEMA), image_channel_stats_kernel()],
     )
-    return image_channel_stats(imgs)
 
 
 def _image_histogram_sql() -> str:
@@ -3947,11 +3958,14 @@ def image_invariants_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     phash-presence counts per fmt, with min/max caption strings so the
     oracle re-derives the CONTENT (the caption embeds the z12 quadkey,
     replayed through the quadkey SQL twin) — not just the counts."""
-    from activity_files_spark.data.images import synth_images
-    from activity_files_spark.operators.tiling import validate_images
+    from activity_files_spark.data.images import IMAGE_SCHEMA, synth_images
+    from activity_files_spark.operators.tiling import validate_images_kernel
 
-    imgs = synth_images(spark, N_IMAGES_CORRECTNESS, partitions=8)
-    diag = validate_images(imgs, passthrough=("caption", "w", "h", "phash"))
+    diag = synth_images(
+        spark, N_IMAGES_CORRECTNESS, partitions=8,
+        then=[validate_images_kernel(
+            IMAGE_SCHEMA, passthrough=("caption", "w", "h", "phash"))],
+    )
     return diag.groupBy("fmt").agg(
         F.count("*").alias("n_images"),
         F.sum(F.when(F.col("caption_ok"), 1).otherwise(0)).alias("n_caption_ok"),
@@ -4717,7 +4731,7 @@ def audio_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from activity_files_spark.operators.multimodal import (
         AUDIO_SCHEMA,
-        audio_features,
+        audio_features_kernel,
         encode_wav,
     )
 
@@ -4733,7 +4747,9 @@ def audio_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fmt": "wav",
         }
 
-    feats = audio_features(_per_user_rows(spark, sf_dir, clip, AUDIO_SCHEMA))
+    feats = _per_user_rows(
+        spark, sf_dir, clip, AUDIO_SCHEMA, then=[audio_features_kernel()]
+    )
     return feats.select(_user_id_of("clip_id"), "rms", "peak", "zcr")
 
 
@@ -4753,7 +4769,7 @@ def audio_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from activity_files_spark.codecs.flac import encode_flac
     from activity_files_spark.operators.multimodal import (
         AUDIO_SCHEMA,
-        audio_features,
+        audio_features_kernel,
     )
 
     t = np.arange(2000, dtype=np.int64)
@@ -4770,7 +4786,9 @@ def audio_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fmt": "flac",
         }
 
-    feats = audio_features(_per_user_rows(spark, sf_dir, clip, AUDIO_SCHEMA))
+    feats = _per_user_rows(
+        spark, sf_dir, clip, AUDIO_SCHEMA, then=[audio_features_kernel()]
+    )
     return feats.select(_user_id_of("clip_id"), "rms", "peak", "zcr")
 
 
@@ -4832,7 +4850,7 @@ def audio_ogg_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from activity_files_spark.codecs.ogg import encode_ogg_flac
     from activity_files_spark.operators.multimodal import (
         AUDIO_SCHEMA,
-        audio_features,
+        audio_features_kernel,
     )
 
     t = np.arange(2000, dtype=np.int64)
@@ -4849,7 +4867,9 @@ def audio_ogg_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fmt": "ogg",
         }
 
-    feats = audio_features(_per_user_rows(spark, sf_dir, clip, AUDIO_SCHEMA))
+    feats = _per_user_rows(
+        spark, sf_dir, clip, AUDIO_SCHEMA, then=[audio_features_kernel()]
+    )
     return feats.select(_user_id_of("clip_id"), "rms", "peak", "zcr")
 
 
@@ -4939,8 +4959,8 @@ def video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from activity_files_spark.operators.multimodal import (
         VIDEO_SCHEMA,
-        frame_stats,
-        sample_frames,
+        frame_stats_kernel,
+        sample_frames_kernel,
     )
 
     w, h, n_frames = 8, 6, 8
@@ -4960,8 +4980,10 @@ def video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fmt": "rawrgb",
         }
 
-    clips = _per_user_rows(spark, sf_dir, clip, VIDEO_SCHEMA)
-    stats = frame_stats(sample_frames(clips, every=2))
+    stats = _per_user_rows(
+        spark, sf_dir, clip, VIDEO_SCHEMA,
+        then=[sample_frames_kernel(every=2), frame_stats_kernel()],
+    )
     return stats.select(
         _user_id_of("clip_id"), "frame_idx", "sum_r", "sum_g", "sum_b"
     )
@@ -5002,8 +5024,8 @@ def video_y4m_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from activity_files_spark.operators.multimodal import (
         VIDEO_SCHEMA,
         encode_y4m,
-        frame_stats,
-        sample_frames,
+        frame_stats_kernel,
+        sample_frames_kernel,
     )
 
     w, h, n_frames = 8, 6, 6
@@ -5027,8 +5049,10 @@ def video_y4m_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fmt": "y4m",
         }
 
-    clips = _per_user_rows(spark, sf_dir, clip, VIDEO_SCHEMA)
-    stats = frame_stats(sample_frames(clips, every=2))
+    stats = _per_user_rows(
+        spark, sf_dir, clip, VIDEO_SCHEMA,
+        then=[sample_frames_kernel(every=2), frame_stats_kernel()],
+    )
     return stats.select(
         _user_id_of("clip_id"),
         "frame_idx",
@@ -5074,8 +5098,8 @@ def video_mp4_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from activity_files_spark.codecs.mp4 import encode_mp4_raw
     from activity_files_spark.operators.multimodal import (
         VIDEO_SCHEMA,
-        frame_stats,
-        sample_frames,
+        frame_stats_kernel,
+        sample_frames_kernel,
     )
 
     w, h, n_frames = 8, 6, 7
@@ -5097,8 +5121,10 @@ def video_mp4_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fmt": "mp4",
         }
 
-    clips = _per_user_rows(spark, sf_dir, clip, VIDEO_SCHEMA)
-    stats = frame_stats(sample_frames(clips, every=2))
+    stats = _per_user_rows(
+        spark, sf_dir, clip, VIDEO_SCHEMA,
+        then=[sample_frames_kernel(every=2), frame_stats_kernel()],
+    )
     return stats.select(
         _user_id_of("clip_id"), "frame_idx", "sum_r", "sum_g", "sum_b"
     )
@@ -5141,8 +5167,8 @@ def video_mkv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from activity_files_spark.codecs.mkv import encode_mkv
     from activity_files_spark.operators.multimodal import (
         VIDEO_SCHEMA,
-        frame_stats,
-        sample_frames,
+        frame_stats_kernel,
+        sample_frames_kernel,
     )
 
     w, h, n_frames = 8, 6, 6
@@ -5168,8 +5194,10 @@ def video_mkv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fmt": "mkv",
         }
 
-    clips = _per_user_rows(spark, sf_dir, clip, VIDEO_SCHEMA)
-    stats = frame_stats(sample_frames(clips, every=2))
+    stats = _per_user_rows(
+        spark, sf_dir, clip, VIDEO_SCHEMA,
+        then=[sample_frames_kernel(every=2), frame_stats_kernel()],
+    )
     return stats.select(
         _user_id_of("clip_id"),
         "frame_idx",
@@ -5216,7 +5244,7 @@ def audio_mp3_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from activity_files_spark.codecs.mp3 import _CHANNEL_MODES, encode_mp3_frames
     from activity_files_spark.operators.multimodal import (
         AUDIO_SCHEMA,
-        mp3_container_stats,
+        mp3_container_stats_kernel,
     )
 
     modes = _CHANNEL_MODES  # header-bit ordering lives in the codec table
@@ -5240,7 +5268,9 @@ def audio_mp3_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_samples": 1152 * n, "channels": 2, "fmt": "mp3",
         }
 
-    stats = mp3_container_stats(_per_user_rows(spark, sf_dir, clip, AUDIO_SCHEMA))
+    stats = _per_user_rows(
+        spark, sf_dir, clip, AUDIO_SCHEMA, then=[mp3_container_stats_kernel()]
+    )
     return stats.select(
         _user_id_of("clip_id"),
         "n_frames", "samples_total", "audio_bytes", "bitrate_sum_kbps",
@@ -5751,7 +5781,7 @@ def raster_components_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     found exactly the planted components with pixel-exact extents."""
     import numpy as np
 
-    from activity_files_spark.operators.raster import raster_components
+    from activity_files_spark.operators.raster import raster_components_kernel
 
     w, h = 32, 24
 
@@ -5765,10 +5795,10 @@ def raster_components_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             img[y0 : y0 + rh, x0 : x0 + rw] = 200
         return {"image_id": f"u{i}", "bytes": img.tobytes(), "w": w, "h": h}
 
-    imgs = _per_user_rows(
-        spark, sf_dir, image, "image_id string, bytes binary, w int, h int"
+    comps = _per_user_rows(
+        spark, sf_dir, image, "image_id string, bytes binary, w int, h int",
+        then=[raster_components_kernel(threshold=128)],
     )
-    comps = raster_components(imgs, threshold=128)
     return comps.select(
         _user_id_of("image_id"),
         "comp", "area", "min_x", "min_y", "max_x", "max_y", "cx", "cy",

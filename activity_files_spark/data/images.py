@@ -12,12 +12,15 @@ Every value is a pure function of the row index ``i`` — no wall clock, no
 unseeded RNG — so checkpoint/resume tests stay deterministic and the
 validation stage can regenerate the expected pixels from ``image_id`` alone.
 
-Generation happens executor-side via ``mapInPandas`` over ``spark.range``:
+Generation happens executor-side via ``mapInPandas`` over ``spark.range``
+(the body is :func:`synth_images_kernel`):
 at 10^12 design scale the generator is just a stand-in for an Iceberg scan,
 but the pipeline shape (partitioned source -> Arrow batches) is identical.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -25,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from activity_files_spark.codecs.image import decode, encode, phash64
 from activity_files_spark.functions.quadkey import quadkey_py
+from activity_files_spark.operators.kernels import Kernel, map_kernels
 
 W_CYCLE = (16, 32, 64)
 H_CYCLE = (16, 32, 48)
@@ -132,14 +136,27 @@ def image_index(image_id: str) -> int:
 
 
 def synth_images(
-    spark: SparkSession, n: int, partitions: int = 32, dims: list | None = None
+    spark: SparkSession,
+    n: int,
+    partitions: int = 32,
+    dims: list | None = None,
+    then: Sequence[Kernel] = (),
 ) -> DataFrame:
     """Distributed deterministic image table: n rows, executor-side encode.
-    ``dims`` as in :func:`make_image_row`."""
+    ``dims`` as in :func:`make_image_row`. ``then``: kernels that consume
+    the rows in the generator's own mapInPandas (operators/kernels.py), so
+    a decode or validate step costs no second Python worker."""
+    return map_kernels(
+        spark.range(n, numPartitions=partitions), synth_images_kernel(dims), *then
+    )
+
+
+def synth_images_kernel(dims: list | None = None) -> Kernel:
+    """IMAGE_SCHEMA rows from a frame of row indices ``id``."""
 
     def gen(batches):
         for pdf in batches:
             rows = [make_image_row(int(i), dims=dims) for i in pdf["id"]]
             yield pd.DataFrame(rows)
 
-    return spark.range(n, numPartitions=partitions).mapInPandas(gen, IMAGE_SCHEMA)
+    return Kernel(gen, IMAGE_SCHEMA)

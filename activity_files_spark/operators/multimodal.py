@@ -25,6 +25,15 @@ Schemas:
 
 Raw codecs ("rawpcm16" / "rawrgb") are REAL in the sense that the bytes
 are exactly the samples/frames — so offset math is fully exercised.
+
+Kernel/wrapper split: each per-clip operator is a ``<name>_kernel``
+factory returning a :class:`~activity_files_spark.operators.kernels.Kernel`
+(the mapInPandas body and its output schema: ``audio_features_kernel``,
+``mp3_container_stats_kernel``, ``sample_frames_kernel``,
+``frame_stats_kernel``) and a one-line DataFrame wrapper,
+``map_kernels(df, <name>_kernel(...))``. A query whose generator feeds a
+kernel directly (sample_frames into frame_stats) passes the whole chain
+to ``map_kernels``, so it runs in one Python worker per task.
 """
 
 from __future__ import annotations
@@ -34,6 +43,8 @@ import struct
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from activity_files_spark.operators.kernels import Kernel, map_kernels
 
 AUDIO_SCHEMA = (
     "clip_id string, bytes binary, sample_rate int, n_samples long, "
@@ -342,8 +353,14 @@ def synth_video(spark: SparkSession, n: int, w: int = 8, h: int = 6, n_frames: i
 
 
 def audio_features(audio: DataFrame) -> DataFrame:
-    """Per-clip features (rms, peak, zero-crossing rate) via an Arrow kernel.
-    The numpy body is exactly what a real decoder would feed."""
+    """Per-clip features (rms, peak, zero-crossing rate) of AUDIO_SCHEMA
+    rows: :func:`audio_features_kernel` in one mapInPandas."""
+    return map_kernels(audio, audio_features_kernel())
+
+
+def audio_features_kernel() -> Kernel:
+    """Decode each clip and reduce it to (clip_id, rms, peak, zcr). The
+    numpy body is exactly what a real decoder would feed."""
 
     schema = "clip_id string, rms double, peak int, zcr double"
 
@@ -358,12 +375,18 @@ def audio_features(audio: DataFrame) -> DataFrame:
                 rows.append({"clip_id": r.clip_id, "rms": rms, "peak": peak, "zcr": zc})
             yield pd.DataFrame(rows)
 
-    return audio.mapInPandas(kernel, schema)
+    return Kernel(kernel, schema)
 
 
 def mp3_container_stats(clips: DataFrame) -> DataFrame:
-    """Per-clip MPEG audio (MP3) frame-layer metadata via an Arrow kernel
-    over codecs/mp3.py's real frame walk — the route/slice/duration index a
+    """Per-clip MP3 frame-layer metadata of AUDIO_SCHEMA rows:
+    :func:`mp3_container_stats_kernel` in one mapInPandas."""
+    return map_kernels(clips, mp3_container_stats_kernel())
+
+
+def mp3_container_stats_kernel() -> Kernel:
+    """Per-clip MPEG audio (MP3) frame-layer metadata from
+    codecs/mp3.py's real frame walk — the route/slice/duration index a
     100 TB media pipeline needs before spending payload-decode cycles.
     All-integer outputs so a SQL oracle can replay every field exactly."""
 
@@ -401,10 +424,16 @@ def mp3_container_stats(clips: DataFrame) -> DataFrame:
                 })
             yield pd.DataFrame(rows)
 
-    return clips.mapInPandas(kernel, schema)
+    return Kernel(kernel, schema)
 
 
 def frame_stats(frames: DataFrame) -> DataFrame:
+    """Per-sampled-frame channel sums of :func:`sample_frames` rows:
+    :func:`frame_stats_kernel` in one mapInPandas."""
+    return map_kernels(frames, frame_stats_kernel())
+
+
+def frame_stats_kernel() -> Kernel:
     """Per-sampled-frame channel sums over the decoded RGB pixels
     (clip_id, frame_idx, sum_r, sum_g, sum_b) — exact integer reductions,
     so a SQL oracle can replay them from the pixel formula."""
@@ -424,10 +453,16 @@ def frame_stats(frames: DataFrame) -> DataFrame:
                 })
             yield pd.DataFrame(rows)
 
-    return frames.mapInPandas(kernel, schema)
+    return Kernel(kernel, schema)
 
 
 def sample_frames(video: DataFrame, every: int = 2) -> DataFrame:
+    """Sampled frames of VIDEO_SCHEMA rows: :func:`sample_frames_kernel`
+    in one mapInPandas."""
+    return map_kernels(video, sample_frames_kernel(every))
+
+
+def sample_frames_kernel(every: int = 2) -> Kernel:
     """Explode each clip into sampled frames (frame index % every == 0):
     (clip_id, frame_idx, frame_bytes, w, h). Offset math on the raw bytes —
     the exact plumbing a real frame extractor uses."""
@@ -506,4 +541,4 @@ def sample_frames(video: DataFrame, every: int = 2) -> DataFrame:
                     })
             yield pd.DataFrame(rows)
 
-    return video.mapInPandas(kernel, schema)
+    return Kernel(kernel, schema)

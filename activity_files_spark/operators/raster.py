@@ -25,7 +25,12 @@ from a thresholded image mask (two-pass run-based union-find, the classic
 CCL algorithm, vectorized per row) and emits vector features (bbox, area,
 centroid) per component — the building block for "find labeled regions in
 rasters, join them back to geometry" pipelines. Components come out in
-deterministic (min_y, min_x) order so downstream keys are stable.
+deterministic (min_y, min_x) order so downstream keys are stable. The
+labeler body is :func:`raster_components_kernel` (a
+:class:`~activity_files_spark.operators.kernels.Kernel`: mapInPandas body
+plus output schema); ``raster_components`` is its one-line DataFrame
+wrapper, and a query that generates its rasters in Python chains the
+kernel behind its generator to keep one Python worker per task.
 
 The reference engine has neither direction (it is a per-file track
 parser); both exist for the north-rule tiling axis, like
@@ -44,6 +49,7 @@ from activity_files_spark.functions.quadkey import (
     tile_xy_col,
 )
 from activity_files_spark.operators.grouped import grouped_apply
+from activity_files_spark.operators.kernels import Kernel, map_kernels
 
 
 def rasterize_points(
@@ -565,6 +571,12 @@ def raster_components(
     threshold: int = 128,
     id_col: str = "image_id",
 ) -> DataFrame:
+    """Raster→vector over ``images``: :func:`raster_components_kernel` in
+    one mapInPandas."""
+    return map_kernels(images, raster_components_kernel(threshold, id_col))
+
+
+def raster_components_kernel(threshold: int = 128, id_col: str = "image_id") -> Kernel:
     """Raster→vector: threshold each image's luma plane (mean of RGB,
     integer floor) at ``threshold`` and extract 4-connected components as
     vector features -> (id, comp int, area long, min_x int, min_y int,
@@ -597,4 +609,4 @@ def raster_components(
                          "max_x", "max_y", "cx", "cy"],
             )
 
-    return images.mapInPandas(kernel, schema)
+    return Kernel(kernel, schema)

@@ -8,8 +8,9 @@ Stages:
   the plan stays in whole-stage codegen.
 - :func:`validate_images` — per-row invariants (input_hint): decoded-pixel
   allclose (exact for lossless fmts, PSNR >= 40 dB for lossy), caption
-  equality, phash equality. Runs as a mapInPandas Arrow kernel (numpy
-  decode, no per-row Python driver logic).
+  equality, phash equality. The numpy decode body is
+  :func:`validate_images_kernel`; ``validate_images`` wraps it in one
+  mapInPandas (no per-row Python driver logic).
 - :func:`salted_repartition` — explicit skew handling for dense cells:
   appends a deterministic salt derived from a uniqueness column and
   repartitions on (key, salt); AQE skew-join config in session.py is the
@@ -17,6 +18,13 @@ Stages:
 
 At 10^12 rows the tile_assign output is written partitioned by
 (zoom, cell prefix) so downstream PIP/kNN joins are co-located.
+
+Kernel/wrapper split: ``validate_images`` and ``image_channel_stats`` are
+one-line DataFrame wrappers, ``map_kernels(df, <name>_kernel(...))``, over
+:class:`~activity_files_spark.operators.kernels.Kernel` factories. A query
+that decodes rows straight out of a Python generator (data/images.py's
+``synth_images(..., then=[...])``) chains the kernel behind it, so
+generator and validator share one Python worker per task.
 """
 
 from __future__ import annotations
@@ -25,6 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from activity_files_spark.codecs.image import LOSSLESS_FMTS, decode, phash64, psnr_db
 from activity_files_spark.functions.quadkey import (
@@ -32,6 +41,7 @@ from activity_files_spark.functions.quadkey import (
     quadkey_from_cell_id_col,
     tile_index_col,
 )
+from activity_files_spark.operators.kernels import Kernel, map_kernels
 
 PSNR_GATE_DB = 40.0
 
@@ -83,9 +93,15 @@ def tile_assign(
 
 
 def validate_images(images: DataFrame, passthrough: tuple = ()) -> DataFrame:
-    """Per-row invariant check (input_hint): returns a diagnostics DataFrame
-    (image_id, fmt, psnr_db, pixels_ok, caption_ok, phash_ok, ok
-    [, passthrough...]).
+    """Per-row invariant check (input_hint): :func:`validate_images_kernel`
+    over ``images`` in one mapInPandas."""
+    return map_kernels(images, validate_images_kernel(images.schema, passthrough))
+
+
+def validate_images_kernel(input_schema, passthrough: tuple = ()) -> Kernel:
+    """Per-row invariant check of image rows with ``input_schema`` (a
+    StructType or DDL string): yields diagnostics (image_id, fmt, psnr_db,
+    pixels_ok, caption_ok, phash_ok, ok [, passthrough...]).
 
     Arrow kernel: regenerates the expected pixels from the row index encoded
     in image_id, decodes `bytes`, and checks exact equality (lossless) or
@@ -100,17 +116,19 @@ def validate_images(images: DataFrame, passthrough: tuple = ()) -> DataFrame:
         pixels_for,
     )
 
-    missing = [c for c in passthrough if c not in images.columns]
+    if isinstance(input_schema, str):
+        input_schema = StructType.fromDDL(input_schema)
+    missing = [c for c in passthrough if c not in input_schema.names]
     if missing:
         raise ValueError(
             f"validate_images passthrough columns not on the input: {missing} "
-            f"(have {images.columns})"
+            f"(have {input_schema.names})"
         )
     extra = list(passthrough)
     schema = (
         "image_id string, fmt string, psnr_db double, pixels_ok boolean, "
         "caption_ok boolean, phash_ok boolean, ok boolean"
-        + "".join(f", {c} {images.schema[c].dataType.simpleString()}" for c in extra)
+        + "".join(f", {c} {input_schema[c].dataType.simpleString()}" for c in extra)
     )
 
     def kernel(batches):
@@ -142,10 +160,16 @@ def validate_images(images: DataFrame, passthrough: tuple = ()) -> DataFrame:
                 recs.append(rec)
             yield pd.DataFrame(recs)
 
-    return images.mapInPandas(kernel, schema)
+    return Kernel(kernel, schema)
 
 
 def image_channel_stats(images: DataFrame) -> DataFrame:
+    """Per-(image, channel) histogram statistics of image rows:
+    :func:`image_channel_stats_kernel` in one mapInPandas."""
+    return map_kernels(images, image_channel_stats_kernel())
+
+
+def image_channel_stats_kernel() -> Kernel:
     """Per-(image, channel) histogram statistics from DECODED pixels:
     (image_id, channel, n_px, n_distinct, val_sum, min_val, max_val,
     mode_val, mode_n) — mode ties break to the smallest value so the row
@@ -188,7 +212,7 @@ def image_channel_stats(images: DataFrame) -> DataFrame:
                 "min_val", "max_val", "mode_val", "mode_n",
             ])
 
-    return images.mapInPandas(kernel, schema)
+    return Kernel(kernel, schema)
 
 
 def gif_roundtrip_stats(ids: DataFrame, id_col: str = "i") -> DataFrame:

@@ -2,18 +2,28 @@
 writes prune partitions. Plus deep-cut parity: FIT set/length messages,
 GPX multi-track."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from activity_files_spark.plans.layout import write_bucketed, write_cell_partitioned
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
+def _fresh_tables(spark, *names):
+    """Drop each managed table and clear its warehouse location: a crashed
+    or earlier run can leave the directory behind without catalog
+    metadata, and saveAsTable then refuses the name."""
     import shutil
 
-    spark.sql("DROP TABLE IF EXISTS pts_b")
-    spark.sql("DROP TABLE IF EXISTS ch_b")
-    shutil.rmtree("/tmp/spark_test_warehouse", ignore_errors=True)
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    for t in names:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
+
+
+def test_bucketed_join_has_no_shuffle(spark, tmp_path):
+    _fresh_tables(spark, "pts_b", "ch_b")
     pts = spark.range(1000).select(
         F.col("id").alias("activity_id"), (F.col("id") % 7).alias("x")
     )
@@ -46,8 +56,7 @@ def test_bucketed_asof_cogroup_has_no_shuffle(spark):
     snap_channels_to_points run through it."""
     from activity_files_spark.operators.asof import asof_channels_wide
 
-    for t in ("pts_asof_b", "ch_asof_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    _fresh_tables(spark, "pts_asof_b", "ch_asof_b")
     pts = spark.range(1000).select(
         (F.col("id") % 50).cast("string").alias("activity_id"),
         F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
@@ -524,14 +533,9 @@ def test_s2_bucketed_rollup_and_join_have_no_shuffle(spark):
     id exists at corpus scale): a table bucketed on s2_id aggregates AND
     self-joins on the cell with zero Exchange — spatial rollups and
     cell-local joins run at scan speed on a 10^12-row layout."""
-    import shutil
-
     from activity_files_spark.functions.s2 import with_s2_cellid
 
-    spark.sql("DROP TABLE IF EXISTS ev_s2_b")
-    # a crashed earlier run can leave the managed location behind without
-    # catalog metadata; saveAsTable then refuses the name
-    shutil.rmtree("/tmp/spark_test_warehouse/ev_s2_b", ignore_errors=True)
+    _fresh_tables(spark, "ev_s2_b")
     pts = spark.range(2000).select(
         F.col("id").alias("event_id"),
         (F.lit(40.0) + (F.col("id") % 97).cast("double") * F.lit(0.01)).alias("lat"),

@@ -15,9 +15,16 @@ formatted physical plan must contain:
 
 The explicitly-labeled brute-force pytest oracles (cosine_dup_pairs,
 knn_join_brute) are not driver queries, so nothing here needs an allowlist.
+
+It must also run at most one Python node per task of a stage: every Python
+node in one task is one more Python worker (about 130 MB each) and one
+more Arrow round trip through the JVM. A generator feeding a kernel chains
+both into one mapInPandas (operators/kernels.py::map_kernels). The shapes
+that still chain are listed in ``CHAINED_PYTHON``, each with its reason.
 """
 
 import os
+import re
 import sys
 
 import pytest
@@ -34,19 +41,71 @@ FORBIDDEN = (
     "BatchEvalPython",  # row-at-a-time Python UDF; Arrow nodes are fine
 )
 
+# MapInPandas, MapInArrow, ArrowEvalPython, FlatMap*InPandas*, ...
+PYTHON_NODE = re.compile(r"InPandas|InArrow|Python")
+
+# query -> (Python nodes one task of its worst stage runs, why they stay)
+_ROUND_TRIP = (2, "record round trip (encode kernel -> decode kernel): "
+                  "ROADMAP direction 1 rewrites all five")
+CHAINED_PYTHON = {
+    "csv_roundtrip_stats": _ROUND_TRIP,
+    "fit_roundtrip_stats": _ROUND_TRIP,
+    "geojson_roundtrip_stats": _ROUND_TRIP,
+    "gpx_roundtrip_stats": _ROUND_TRIP,
+    "tcx_roundtrip_stats": _ROUND_TRIP,
+}
+
 _QUERY_NAMES = sorted(E.queries())
 
 
 @pytest.fixture(scope="module")
-def plans(spark):
-    """Build every driver query once and capture its formatted plan."""
-    out = {}
-    for name, fn in E.queries().items():
-        df = fn(spark, SF_DIR)
-        out[name] = spark._jvm.PythonSQLUtils.explainString(
+def built(spark):
+    """Build every driver query once."""
+    return {name: fn(spark, SF_DIR) for name, fn in E.queries().items()}
+
+
+@pytest.fixture(scope="module")
+def plans(spark, built):
+    """Every driver query's formatted plan."""
+    return {
+        name: spark._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-    return out
+        for name, df in built.items()
+    }
+
+
+def python_nodes_per_task(spark, df) -> int:
+    """The most Python nodes one task of any stage of ``df`` runs.
+
+    Under AQE the executed plan is one AdaptiveSparkPlan leaf; its
+    ``inputPlan`` holds the physical plan before the stage split, and
+    EnsureRequirements adds the Exchanges the stages are cut at. A task
+    runs every node of its stage down to the Exchanges and leaf scans
+    (checkpoints are leaf scans too), except that a Union task runs one
+    child: Union takes the max over its children, every other node the
+    sum."""
+    jvm = spark._jvm
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        ensure = jvm.org.apache.spark.sql.execution.exchange.EnsureRequirements(
+            True, jvm.scala.Option.empty()
+        )
+        plan = ensure.apply(plan.inputPlan())
+    worst = 0
+
+    def walk(node) -> int:
+        nonlocal worst
+        kids = node.children()
+        counts = [walk(kids.apply(i)) for i in range(kids.size())]
+        if "Exchange" in node.nodeName():
+            worst = max([worst, *counts])
+            return 0
+        here = max(counts) if node.nodeName() == "Union" else sum(counts)
+        return here + bool(PYTHON_NODE.search(node.nodeName()))
+
+    top = walk(plan)
+    return max(worst, top)
 
 
 @pytest.mark.parametrize("name", _QUERY_NAMES)
@@ -64,3 +123,15 @@ def test_query_surface_has_not_shrunk(plans):
     # fixed table, so comparing two calls of it can never fail — instead pin
     # the current surface size so an accidental deregistration trips the gate
     assert len(plans) >= 114
+
+
+@pytest.mark.parametrize("name", _QUERY_NAMES)
+def test_at_most_one_python_node_per_stage(spark, built, name):
+    allowed, why = CHAINED_PYTHON.get(name, (1, None))
+    n = python_nodes_per_task(spark, built[name])
+    assert n <= allowed, (
+        f"{name}: one task runs {n} Python nodes in a stage; chain the "
+        f"kernels with operators/kernels.py::map_kernels"
+    )
+    # the allow-list names only shapes that still chain
+    assert n == allowed or why is None, f"{name}: stale CHAINED_PYTHON entry ({why})"
