@@ -61,7 +61,8 @@ def _bracket(
 
     Plan shape: target columns ride THROUGH the union (source rows carry
     nulls), so the whole join is one shuffle on ``key`` and one sort; each
-    column adds four running windows over that sort — no join-back.
+    column adds four running windows to the one Window node over that sort
+    — no join-back.
     """
     u = targets.withColumn("_side", F.lit(1)).unionByName(
         sources.withColumn("_side", F.lit(0)), allowMissingColumns=True
@@ -72,21 +73,26 @@ def _bracket(
     )
     wb = Window.partitionBy(key).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
     wf = Window.partitionBy(key).orderBy(*order).rowsBetween(0, Window.unboundedFollowing)
+    # gate each column's axis and value in one projection, take every
+    # running window in the next one and pick in a third: a projection per
+    # column between windows would keep CollapseWindow from merging them,
+    # and windows inside ``pick`` would be computed once per use
+    gated, runs = [], []
     for c in cols:
         has_v = (F.col("_side") == 0) & F.col(c).isNotNull()
-        src_a = F.when(has_v, F.col(axis))
-        src_v = F.when(has_v, F.col(c))
-        u = (
-            u.withColumn("_pa", F.last(src_a, ignorenulls=True).over(wb))
-            .withColumn("_na", F.first(src_a, ignorenulls=True).over(wf))
-            .withColumn("_pv", F.last(src_v, ignorenulls=True).over(wb))
-            .withColumn("_nv", F.first(src_v, ignorenulls=True).over(wf))
-            .withColumn(
-                c, pick(F.col("_pa"), F.col("_pv"), F.col("_na"), F.col("_nv"), F.col(axis))
-            )
-            .drop("_pa", "_na", "_pv", "_nv")
-        )
-    return u.filter(F.col("_side") == 1)
+        gated += [F.when(has_v, F.col(axis)).alias(f"_a_{c}"),
+                  F.when(has_v, F.col(c)).alias(f"_v_{c}")]
+        runs += [F.last(f"_a_{c}", ignorenulls=True).over(wb).alias(f"_pa_{c}"),
+                 F.last(f"_v_{c}", ignorenulls=True).over(wb).alias(f"_pv_{c}"),
+                 F.first(f"_a_{c}", ignorenulls=True).over(wf).alias(f"_na_{c}"),
+                 F.first(f"_v_{c}", ignorenulls=True).over(wf).alias(f"_nv_{c}")]
+    picked = {
+        c: pick(*(F.col(f"_{w}_{c}") for w in ("pa", "pv", "na", "nv")), F.col(axis)).alias(c)
+        for c in cols
+    }
+    return u.select("*", *gated).select("*", *runs).select(
+        *(picked.get(n, F.col(n)) for n in u.columns)
+    ).filter(F.col("_side") == 1)
 
 
 def _lerp_pick(pa: Column, pv: Column, na: Column, nv: Column, a: Column) -> Column:

@@ -1,5 +1,10 @@
 """FIT binary source + sink (pure python/numpy — no external libs).
 
+``FIT_PROFILE`` is the one place that holds the message layouts (field
+numbers, base types, scales, attr/meta keys and record columns). Both
+encoders, both record decode paths and the per-message decoders read it;
+small hooks hold only what the table cannot say.
+
 Decoder semantics from the reference (lib/src/parse/fit_parser.dart):
 - 12/14-byte header with data_size + ".FIT" magic + optional header CRC;
   trailing file CRC-16 (the public FIT SDK checksum; the engine's
@@ -35,17 +40,15 @@ units of parallelism (the reference caps payloads at 64 MB).
 from __future__ import annotations
 
 import struct
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from activity_files_spark.codecs.crc import fit_crc16
+from activity_files_spark.functions.geo import FIT_EPOCH_UNIX, FIT_TS_MAX, SEMICIRCLE_DEG
 from activity_files_spark.operators.grouped import grouped_apply
-
-FIT_EPOCH_UNIX = 631_065_600
-FIT_TS_MAX = 1_924_992_000
-SEMI_TO_DEG = 180.0 / 2_147_483_648.0
 
 # FIT CRC-16 nibble table (public FIT SDK algorithm; fit_crc.dart:7-46),
 # kept as the reference twin of codecs.crc.fit_crc16
@@ -87,27 +90,14 @@ BASE_TYPES = {
     0x8F: ("Q", 8, 0xFFFFFFFFFFFFFFFF),  # uint64
     0x90: ("Q", 8, 0x0),           # uint64z
 }
-
-# record (msg 20) fields with dedicated decoding: 253 ts, 0/1 position,
-# 2 altitude, 3 hr, 4 cadence, 5 distance, 6 speed, 7 power, 13 temp,
-# 8 compressed speed/distance, 78 grade (scale 100), 120 left_right_balance
-# (fit_parser.dart:410-512); every other numeric native field becomes a
-# fit_field_<n> channel with its RAW value so no sensor data is silently
-# dropped (fit_parser.dart:1024-1031, e.g. running dynamics)
-_RECORD_DEDICATED = frozenset({253, 0, 1, 2, 3, 4, 5, 6, 7, 13, 8, 78, 120})
-
-# globals with dedicated handlers — never rerouted through the fallback
-# record heuristic (fit_parser.dart:1096-1107: a lap's 253/0/1 fields would
-# otherwise be misread as a GPS record). Deliberate superset: the reference
-# set omits 206, so a field_description whose definition happened to
-# declare 253 would be hijacked as a record there and its developer-field
-# registration silently lost — 206 is protected here.
-_EXPLICIT_GLOBALS = frozenset({0, 18, 19, 20, 21, 23, 34, 49, 101, 206, 225})
+ENUM, SINT8, UINT8, UINT16, SINT32, UINT32 = 0x00, 0x01, 0x02, 0x84, 0x85, 0x86
+STRING, FLOAT64, UINT32Z, BYTE = 0x07, 0x89, 0x8C, 0x0D
 
 SPORTS = {
     0: "generic", 1: "running", 2: "cycling", 5: "swimming",
     11: "walking", 17: "hiking", 4: "fitness_equipment",
 }
+SPORT_IDS_INV = {v: k for k, v in SPORTS.items()}
 
 # FIT wire order 0-6 (reference models.dart:14-22)
 SWIM_STROKES = {
@@ -116,11 +106,162 @@ SWIM_STROKES = {
 }
 
 
-# struct char -> numpy format char (fast-path run decode)
-_NP_FMT = {
-    "B": "u1", "b": "i1", "H": "u2", "h": "i2", "I": "u4", "i": "i4",
-    "q": "i8", "f": "f4", "d": "f8",
-}
+class Field(NamedTuple):
+    """One profile field. ``key`` is the attr/meta key (after the
+    message's prefix), row column or record channel the field maps to;
+    None marks a field that is known (never kept as a raw ``extra.*``) but
+    not surfaced. Wire = (value + offset) * scale, value = wire / scale -
+    offset; scale None is semicircles (degrees / SEMICIRCLE_DEG). Column
+    keys ending in ``ts`` are FIT timestamps."""
+
+    num: int
+    btype: int
+    key: str | None
+    scale: float | None = 1
+    offset: float = 0
+    col: bool = False    # a row column or hook value, not an attrs entry
+    write: bool = True   # written by the encoders
+    trunc: bool = False  # the encoders truncate instead of rounding
+
+
+class Message(NamedTuple):
+    num: int           # global message number
+    local: int | None  # local type the encoders write it under
+    name: str          # record kind of span messages
+    fields: tuple
+    prefix: str = ""   # of its attrs / meta keys
+
+
+F = Field
+# encoded field order keeps this engine's historical byte layout (the
+# reference's writeSession/writeLap order, fit_encoder.dart:159-320,
+# re-ordered so older prefixes stay stable); lap 8/25 are supersets
+FIT_PROFILE = (
+    Message(0, 0, "file_id", (
+        F(0, ENUM, "type", col=True),  # written as 4 (activity)
+        F(1, UINT16, "manufacturer", trunc=True),
+        F(2, UINT16, "product", trunc=True),
+        F(3, UINT32Z, "serial", write=False),
+    ), "device."),
+    Message(20, 1, "record", (  # fit_parser.dart:410-512
+        F(253, UINT32, "ts", col=True),
+        F(0, SINT32, "lat", None, col=True),
+        F(1, SINT32, "lon", None, col=True),
+        F(2, UINT16, "ele", 5, 500, col=True),
+        F(3, UINT8, "heart_rate"),
+        F(4, UINT8, "cadence"),
+        F(5, UINT32, "distance", 100),
+        F(6, UINT16, "speed", 1000),
+        F(7, UINT16, "power"),
+        F(13, SINT8, "temperature"),
+        F(78, UINT16, "grade", 100, write=False),
+        F(120, UINT8, "left_right_balance", write=False),
+        F(8, BYTE, None, write=False),  # compressed speed/distance, 3 bytes
+    )),
+    Message(19, 2, "lap", (  # fit_parser.dart:620-656
+        F(253, UINT32, "end_ts", col=True),
+        F(2, UINT32, "start_ts", col=True),
+        F(7, UINT32, "total_elapsed_s", 1000),
+        F(8, UINT32, "total_timer_s", 1000),
+        F(9, UINT32, "distance_m", 100, col=True),
+        F(25, ENUM, "sport", col=True),
+        F(0, ENUM, "event"), F(1, ENUM, "event_type"),
+        F(11, UINT16, "calories"),
+        F(13, UINT16, "avg_speed_mps", 1000), F(14, UINT16, "max_speed_mps", 1000),
+        F(15, UINT8, "avg_hr"), F(16, UINT8, "max_hr"),
+        F(17, UINT8, "avg_cadence"), F(18, UINT8, "max_cadence"),
+        F(19, UINT16, "avg_power"), F(20, UINT16, "max_power"),
+        F(38, ENUM, "swim_stroke"),
+        F(40, UINT16, "num_active_lengths"),
+        F(254, UINT16, None, write=False),  # message_index
+    )),
+    Message(101, 3, "length", (  # fit_parser.dart:675-699
+        F(253, UINT32, "end_ts", col=True),
+        F(2, UINT32, "start_ts", col=True),
+        F(3, UINT32, "total_elapsed_s", 1000),
+        F(5, UINT16, "total_strokes", trunc=True),
+        F(6, UINT16, "avg_speed_mps", 1000),
+        F(7, ENUM, "swim_stroke", trunc=True),
+        F(12, ENUM, "length_type", trunc=True),  # 0 idle / 1 active
+    )),
+    Message(225, 4, "set", (  # fit_parser.dart:700-729
+        F(254, UINT32, "end_ts", col=True),
+        F(6, UINT32, "start_ts", col=True),
+        F(0, UINT32, "duration_s", 1000),
+        F(5, UINT8, "set_type", trunc=True),  # 0 rest / 1 active
+        F(3, UINT16, "repetitions", trunc=True),
+        F(4, UINT16, "weight_kg", 16),
+        F(7, UINT16, "category", trunc=True),
+    )),
+    Message(21, 5, "event", (
+        F(253, UINT32, "ts", col=True),
+        F(0, ENUM, "event", col=True, trunc=True),
+        F(1, ENUM, "event_type", col=True),
+        F(3, UINT32, "data", col=True),
+    )),
+    Message(207, 6, "developer_data_id", (
+        F(3, UINT8, "developer_data_index", col=True),
+    )),
+    Message(206, 7, "field_description", (  # fit_parser.dart:805-835
+        F(0, UINT8, "developer_data_index", col=True),
+        F(1, UINT8, "field_definition_number", col=True),
+        F(2, UINT8, "fit_base_type_id", col=True),
+        F(3, STRING, "field_name", col=True),
+        F(6, UINT8, "scale", col=True, write=False),
+        F(7, SINT8, "offset", col=True, write=False),
+    )),
+    Message(18, 8, "session", (  # fit_parser.dart:557-601
+        F(253, UINT32, "timestamp", col=True),
+        F(5, ENUM, "sport", col=True),
+        F(6, ENUM, "sub_sport"),
+        F(7, UINT32, "total_elapsed_s", 1000),
+        F(8, UINT32, "total_timer_s", 1000),
+        F(9, UINT32, "total_distance_m", 100),
+        F(10, UINT32, "total_cycles"),
+        F(11, UINT16, "calories"),
+        F(14, UINT16, "avg_speed_mps", 1000), F(15, UINT16, "max_speed_mps", 1000),
+        F(16, UINT8, "avg_hr"), F(17, UINT8, "max_hr"),
+        F(18, UINT8, "avg_cadence"), F(19, UINT8, "max_cadence"),
+        F(20, UINT16, "avg_power"), F(21, UINT16, "max_power"),
+        F(41, UINT16, "avg_stroke_count", 10),
+        F(43, ENUM, "swim_stroke"),
+        F(44, UINT16, "pool_length_m", 100),
+        F(47, UINT16, "num_active_lengths"),
+        F(254, UINT16, None, write=False),  # message_index
+    ), "session."),
+    Message(34, 9, "activity", (  # fit_parser.dart:769-776
+        F(253, UINT32, "timestamp", col=True),
+        F(0, UINT32, "total_timer_s", 1000),
+        F(1, UINT16, "num_sessions", trunc=True),
+        F(5, UINT32, "local_timestamp", col=True),  # device-local FIT seconds
+    ), "activity."),
+    Message(23, None, "device_info", (  # fit_parser.dart:730-768
+        F(0, UINT8, "device_index", col=True),
+        F(2, UINT16, "manufacturer"),
+        F(4, UINT16, "product"),
+        F(3, UINT32Z, "serial"),
+        F(5, UINT16, "software_version", 100),
+        F(27, STRING, "product_name"),
+    ), "device."),
+    Message(49, None, "file_creator", (  # fit_parser.dart:777-804
+        F(0, UINT16, "software_version"),
+        F(1, UINT8, "hardware_version"),
+    ), "creator."),
+)
+del F
+
+_MSG = {m.num: m for m in FIT_PROFILE}
+_RECORD = _MSG[20]
+_REC = {f.key: f for f in _RECORD.fields if f.key}
+# record channels: every keyed non-column field; every other native record
+# field becomes a fit_field_<n> channel with its RAW value so no sensor
+# data is silently dropped (fit_parser.dart:1024-1031, e.g. running
+# dynamics)
+_REC_CHANNELS = tuple(f for f in _RECORD.fields if f.key and not f.col)
+_REC_KNOWN = frozenset(f.num for f in _RECORD.fields)
+# channels with a native record-message field (everything else is re-emitted
+# as a float64 developer field, matching fit_encoder.dart:473-516)
+_NATIVE_CHANNELS = frozenset(f.key for f in _REC_CHANNELS if f.write)
 
 
 def _fast_plan(d: dict, dev_fields: dict) -> dict | None:
@@ -177,11 +318,11 @@ def _fast_plan(d: dict, dev_fields: dict) -> dict | None:
             name = f"f{fnum}"
         ch, unit, invalid = bt
         names.append(name)
-        formats.append(endian + _NP_FMT[ch])
+        formats.append(endian + ch)
         offsets.append(off)
         sentinels[name] = (
             None if invalid is None
-            else int(np.array(invalid).astype(np.dtype(endian + _NP_FMT[ch])).astype(np.int64))
+            else int(np.array(invalid).astype(np.dtype(endian + ch)).astype(np.int64))
         )
         off += fsize
     dtype = np.dtype({
@@ -215,31 +356,16 @@ def _emit_g20_run(
         s = plan["sent"][name]
         return v, (np.ones(n, dtype=bool) if s is None else v != s)
 
-    def miss_diags(count: int):
-        if ctx["silent"]:
-            return
-        for _ in range(count):
-            out.append({
-                "activity_id": activity_id, "kind": "diag",
-                "attrs": _diag_attrs("fit.record.missing_timestamp",
-                                     "warning",
-                                     "Record without timestamp skipped."),
-            })
+    def diags(code: str, count: int):
+        if not ctx["silent"]:
+            out.extend({"activity_id": activity_id, "kind": "diag",
+                        "attrs": _diag_attrs(code, "warning")}
+                       for _ in range(count))
 
     def recover_diags(count: int):
         budget = max(0, 5 - ctx["recovered"])
         ctx["recovered"] += count
-        if ctx["silent"]:
-            return
-        for _ in range(min(count, budget)):
-            out.append({
-                "activity_id": activity_id, "kind": "diag",
-                "attrs": _diag_attrs("fit.record.recovered_timestamp",
-                                     "warning",
-                                     "Record timestamp missing; reused recent "
-                                     "timestamp context for best-effort "
-                                     "extraction."),
-            })
+        diags("fit.record.recovered_timestamp", min(count, budget))
 
     # timestamp semantics mirror the scalar path exactly: any NUMERIC 253
     # (plausible or not) updates the per-local context as the run is
@@ -247,12 +373,12 @@ def _emit_g20_run(
     # (forward-fill within the run; the incoming context before the first
     # numeric row); only context-less records are skipped with a diag
     incoming = ctx["last_ts"].get(local, ctx["last_known"])
-    ts_raw, ts_has = col("f253")
+    ts_raw, ts_has = col(f"f{_REC['ts'].num}")
     if ts_raw is None:
         # no timestamp field in the definition: every record recovers to
         # the incoming context (or is skipped when there is none)
         if incoming is None:
-            miss_diags(n)
+            diags("fit.record.missing_timestamp", n)
             return seq
         recover_diags(n)
         ts_eff = np.full(n, int(incoming), dtype=np.int64)
@@ -275,21 +401,20 @@ def _emit_g20_run(
         else:
             has_eff = np.ones(n, dtype=bool)
             ts_eff = np.where(idx_last >= 0, ffilled, int(incoming))
-        miss_diags(int(n - has_eff.sum()))
+        diags("fit.record.missing_timestamp", int(n - has_eff.sum()))
         recover_diags(int((has_eff & ~plausible).sum()))
         if not has_eff.any():
             return seq
-    ts_ok = has_eff
     ts_all = pd.to_datetime(ts_eff + FIT_EPOCH_UNIX, unit="s")
 
     # points: ts + lat + lon all valid (G2 semicircle scale + range gate)
-    lat_raw, lat_has = col("f0")
-    lon_raw, lon_has = col("f1")
+    lat_raw, lat_has = col(f"f{_REC['lat'].num}")
+    lon_raw, lon_has = col(f"f{_REC['lon'].num}")
     if lat_raw is not None and lon_raw is not None:
-        lat = lat_raw * SEMI_TO_DEG
-        lon = lon_raw * SEMI_TO_DEG
+        lat = lat_raw * SEMICIRCLE_DEG
+        lon = lon_raw * SEMICIRCLE_DEG
         mpt = (
-            ts_ok
+            has_eff
             & lat_has & (lat_raw != -0x80000000) & (np.abs(lat) <= 180.0)
             & lon_has & (lon_raw != -0x80000000) & (np.abs(lon) <= 180.0)
         )
@@ -297,9 +422,10 @@ def _emit_g20_run(
         if len(idx):
             # altitude: field 2 only (78 is the grade channel —
             # fit_parser.dart:414, 481)
-            alt_v, alt_m = col("f2")
+            ef = _REC["ele"]
+            alt_v, alt_m = col(f"f{ef.num}")
             if alt_v is not None:
-                ele = alt_v / 5.0 - 500.0
+                ele = alt_v / ef.scale - ef.offset
                 ele_l = [
                     e if m else None
                     for e, m in zip(ele[idx].tolist(), alt_m[idx].tolist())
@@ -314,83 +440,71 @@ def _emit_g20_run(
                             "ele": el, "attrs": None})
             seq += len(idx)
 
-    def emit(cname, v, m, scale=None):
+    def emit(cname, v, m, scale=1):
         if v is None:
             return
-        mk = ts_ok & m
+        mk = has_eff & m
         cidx = np.nonzero(mk)[0]
         if not len(cidx):
             return
-        vals = v[cidx].astype(np.float64)
-        if scale is not None:
-            vals = vals / scale
+        vals = v[cidx].astype(np.float64) / scale
         for t, val in zip(ts_all[cidx].tolist(), vals.tolist()):
             out.append({"activity_id": activity_id, "kind": "channel",
                         "channel": cname, "ts": t, "value": val})
 
-    emit("heart_rate", *col("f3"))
-    emit("cadence", *col("f4"))
-    emit("power", *col("f7"))
-    emit("temperature", *col("f13"))
-    emit("left_right_balance", *col("f120"))
-    emit("grade", *col("f78"), scale=100.0)
-    emit("speed", *col("f6"), scale=1000.0)
-    emit("distance", *col("f5"), scale=100.0)
+    for f in _REC_CHANNELS:
+        emit(f.key, *col(f"f{f.num}"), f.scale)
     # unknown native record fields -> fit_field_<n> channels, raw values
     for name in names:
-        if name.startswith("f") and not name.startswith("fit"):
-            fnum = int(name[1:])
-            if fnum not in _RECORD_DEDICATED:
-                emit(f"fit_field_{fnum}", *col(name))
+        if name[0] == "f" and int(name[1:]) not in _REC_KNOWN:  # not dev_*
+            emit(f"fit_field_{name[1:]}", *col(name))
     for name, didx, fnum in plan["dev"]:
         desc = dev_fields[(didx, fnum)]
         v, m = col(name)
-        if v is not None and (desc.get("scale") or desc.get("offset")):
-            v = v.astype(np.float64)
-            if desc.get("scale"):
-                v = v / desc["scale"]
-            if desc.get("offset"):
-                v = v - desc["offset"]
-        emit(desc["channel"], v, m)
+        emit(desc["channel"], None if v is None else _dev_scaled(desc, v.astype(np.float64)), m)
     return seq
+
+
+def _dev_scaled(desc: dict, v):
+    """field_description scale/offset (spec formula raw / scale - offset;
+    fit_parser.dart:490-496), on floats and numpy arrays alike."""
+    if desc.get("scale"):
+        v = v / desc["scale"]
+    if desc.get("offset"):
+        v = v - desc["offset"]
+    return v
 
 
 def _read_def_at(payload: bytes, p: int, end: int):
     """Parse one definition record starting at the header byte ``p``;
-    returns (local, def-dict, position-after) or None when it does not fit
-    within ``end`` or declares zero fields. Pure (no diags) — used by the
-    stream-resync scan."""
+    returns (local, def-dict, position-after), or the reason it does not
+    fit within ``end``. Pure (no diags) — the main walk and the
+    stream-resync scan both read definitions through it."""
     h = payload[p]
-    has_dev = bool(h & 0x20)
-    local = h & 0xF
     if p + 6 > end:
-        return None
-    arch = payload[p + 2]
-    endian = ">" if arch == 1 else "<"
+        return f"at byte {p + 1}"
+    endian = ">" if payload[p + 2] == 1 else "<"
     global_num = struct.unpack_from(endian + "H", payload, p + 3)[0]
-    n_fields = payload[p + 5]
-    if n_fields == 0:
-        return None
     q = p + 6
     fields = []
-    for _ in range(n_fields):
+    for _ in range(payload[p + 5]):
         if q + 3 > end:
-            return None
+            return "field table truncated"
         fields.append((payload[q], payload[q + 1], payload[q + 2], False, None))
         q += 3
-    if has_dev:
+    if h & 0x20:  # developer fields
         if q >= end:
-            return None
+            return "dev field count missing"
         n_dev = payload[q]
         q += 1
         for _ in range(n_dev):
             if q + 3 > end:
-                return None
+                return "dev field table truncated"
             fields.append((payload[q], payload[q + 1], 0x0D, True, payload[q + 2]))
             q += 3
     d = {"endian": endian, "global": global_num, "fields": fields,
          "size": sum(f[1] for f in fields)}
-    return local, d, q
+    return h & 0xF, d, q
 
 
 def _try_resync(
@@ -409,7 +523,7 @@ def _try_resync(
             cursor += 1
             continue
         parsed = _read_def_at(payload, cursor, end)
-        if parsed is not None:
+        if not isinstance(parsed, str) and parsed[1]["fields"]:
             local, d, new_pos = parsed
             defs[local] = d
             return new_pos
@@ -426,19 +540,19 @@ def _scalar(raw):
 
 
 def _fit_ts(raw):
+    """Integer FIT seconds inside the plausibility window -> Timestamp
+    (0 and the 0xFFFFFFFF sentinel fall outside it)."""
     raw = _scalar(raw)
-    if raw is None or not isinstance(raw, int):
-        return None
-    if raw == 0 or raw == 0xFFFFFFFF or not (1 <= raw <= FIT_TS_MAX):
+    if not isinstance(raw, int) or not 1 <= raw <= FIT_TS_MAX:
         return None
     return pd.Timestamp(raw + FIT_EPOCH_UNIX, unit="s")
 
 
 def _semi_deg(raw):
     raw = _scalar(raw)
-    if raw is None or not isinstance(raw, int) or raw in (0x7FFFFFFF, -0x80000000):
+    if not isinstance(raw, int) or raw in (0x7FFFFFFF, -0x80000000):
         return None
-    deg = raw * SEMI_TO_DEG
+    deg = raw * SEMICIRCLE_DEG
     return deg if abs(deg) <= 180.0 else None
 
 
@@ -450,38 +564,6 @@ def _num(raw):
 
 INTEGRITY_MODES = ("strict", "report", "silent")
 
-# Field numbers with dedicated handling per message; every other native
-# numeric field is preserved raw (fit_parser.dart:1036-1089 — scalars into
-# extra.{f}, arrays into extra_array.{f}) for lossless FIT -> FIT.
-# Supersets of the reference sets: lap 8 (total_timer_time) and 25 (sport)
-# surface as named attrs here instead of raw extras.
-_SESSION_DEDICATED = frozenset(
-    {253, 254, 5, 6, 7, 8, 9, 10, 11, 14, 15, 16, 17, 18, 19, 20, 21,
-     41, 43, 44, 47}
-)
-_LAP_DEDICATED = frozenset(
-    {253, 254, 0, 1, 2, 7, 8, 9, 11, 13, 14, 15, 16, 17, 18, 19, 20,
-     25, 38, 40}
-)
-
-
-def _capture_extras(values: dict, dedicated: frozenset) -> tuple[dict, dict]:
-    """(scalars {f: float}, arrays {f: [float]}) over non-dedicated native
-    fields — fit_parser.dart _extraFitFields/_extraFitArrays. Null array
-    elements (invalid sentinels / padding) are dropped."""
-    scal: dict = {}
-    arrs: dict = {}
-    for f, v in values.items():
-        if f in dedicated:
-            continue
-        if isinstance(v, (int, float)):
-            scal[f] = float(v)
-        elif isinstance(v, list):
-            nums = [float(x) for x in v if isinstance(x, (int, float))]
-            if nums:
-                arrs[f] = nums
-    return scal, arrs
-
 
 def _num_str(v: float) -> str:
     """Integral floats print as ints (attr-map convention), else repr."""
@@ -489,60 +571,209 @@ def _num_str(v: float) -> str:
     return str(int(fv)) if fv.is_integer() else repr(fv)
 
 
-# (field, attr suffix, scale) for the session (18) summary fields beyond
-# sport/elapsed/timer/distance — fit_parser.dart:557-601
-_SESSION_SUMMARY_FIELDS = (
-    (10, "total_cycles", 1), (11, "calories", 1),
-    (14, "avg_speed_mps", 1000), (15, "max_speed_mps", 1000),
-    (16, "avg_hr", 1), (17, "max_hr", 1),
-    (18, "avg_cadence", 1), (19, "max_cadence", 1),
-    (20, "avg_power", 1), (21, "max_power", 1),
-    (41, "avg_stroke_count", 10), (44, "pool_length_m", 100),
-    (47, "num_active_lengths", 1),
-)
+def _col_decoder(f: Field):
+    if f.key.endswith("ts"):
+        return _fit_ts
+    if f.key == "sport":
+        return lambda raw: SPORTS.get(_scalar(raw))
+    if f.scale is None:
+        return _semi_deg
 
-# lap (19) summary fields beyond start/end/elapsed/timer/distance/sport —
-# fit_parser.dart:620-656
-_LAP_SUMMARY_FIELDS = (
-    (0, "event", 1), (1, "event_type", 1), (11, "calories", 1),
-    (13, "avg_speed_mps", 1000), (14, "max_speed_mps", 1000),
-    (15, "avg_hr", 1), (16, "max_hr", 1),
-    (17, "avg_cadence", 1), (18, "max_cadence", 1),
-    (19, "avg_power", 1), (20, "max_power", 1),
-    (40, "num_active_lengths", 1),
-)
+    def scaled(raw):
+        v = _num(raw)
+        return None if v is None else v / f.scale - f.offset
+    return scaled
 
+
+# each message's column fields with their decoders: timestamps, sport
+# names, semicircle degrees, else raw / scale - offset
+_COLS = {
+    m.num: tuple((f.num, f.key, _col_decoder(f)) for f in m.fields if f.col)
+    for m in FIT_PROFILE
+}
+
+
+def _cols(msg: Message, values: dict) -> dict:
+    return {key: decode(values.get(num)) for num, key, decode in _COLS[msg.num]}
+
+
+def _attrs(msg: Message, values: dict) -> dict:
+    """attrs/meta entries of one message's keyed non-column fields, in one
+    format: strings as they are, numbers by _num_str at scale 1 and
+    repr(v / scale) otherwise; swim strokes also by name."""
+    out = {}
+    for f in msg.fields:
+        if f.key is None or f.col:
+            continue
+        v = _scalar(values.get(f.num))
+        if v is None:
+            continue
+        key = msg.prefix + f.key
+        out[key] = (v if isinstance(v, str)
+                    else _num_str(v) if f.scale == 1 else repr(v / f.scale))
+        if f.key == "swim_stroke" and v in SWIM_STROKES:
+            out[key + "_name"] = SWIM_STROKES[v]
+    return out
+
+
+def _extras(msg: Message, values: dict) -> dict:
+    """Every native field outside the profile, kept raw for lossless
+    FIT -> FIT (fit_parser.dart:1036-1089 _extraFitFields/_extraFitArrays):
+    scalars as extra.{f}, arrays as extra_array.{f} with null (invalid or
+    padding) elements dropped."""
+    known = {f.num for f in msg.fields}
+    out = {}
+    for f, v in values.items():
+        if f in known:
+            continue
+        if isinstance(v, (int, float)):
+            out[f"{msg.prefix}extra.{f}"] = _num_str(v)
+        elif isinstance(v, list):
+            nums = [x for x in v if isinstance(x, (int, float))]
+            if nums:
+                out[f"{msg.prefix}extra_array.{f}"] = ",".join(map(_num_str, nums))
+    return out
+
+
+def _decode_span(st: dict, msg: Message, values: dict) -> None:
+    """lap (19) / length (101) / set (225): one row of its column fields
+    and attrs."""
+    row = _cols(msg, values)
+    attrs = _attrs(msg, values)
+    if msg.name == "lap":
+        row["lap_id"] = st["lap_id"]
+        st["lap_id"] += 1
+        attrs.update(_extras(msg, values))
+    elif msg.name == "set" and 254 not in values:  # no 254: ends at 253
+        row["end_ts"] = _fit_ts(values.get(253))
+    elif msg.name == "length" and row["end_ts"] is None:
+        # reference falls back to start + elapsed (fit_parser.dart:682-686)
+        elapsed = _num(values.get(3))  # total_elapsed_time, ms
+        if row["start_ts"] is not None and elapsed is not None:
+            row["end_ts"] = row["start_ts"] + pd.Timedelta(seconds=elapsed / 1000.0)
+    st["out"].append({"activity_id": st["aid"], "kind": msg.name, **row,
+                      "attrs": attrs or None})
+
+
+def _decode_event(st: dict, msg: Message, values: dict) -> None:
+    c = _cols(msg, values)
+    if c["ts"] is not None:
+        st["out"].append({"activity_id": st["aid"], "kind": "channel",
+                          "channel": "event", "ts": c["ts"],
+                          "value": float(c["event"] or 0)})
+
+
+def _decode_meta(st: dict, msg: Message, values: dict) -> None:
+    """file_id / file_creator / activity: the first message wins per key."""
+    for k, v in _attrs(msg, values).items():
+        st["meta"].setdefault(k, v)
+
+
+def _decode_session(st: dict, msg: Message, values: dict) -> None:
+    meta = st["meta"]
+    # session count feeds lossy accounting (additional sessions are only
+    # representable in FIT — facade.dart:352-360)
+    meta["session.count"] = str(int(meta.get("session.count", "0")) + 1)
+    sport = _cols(msg, values)["sport"]
+    if sport:
+        meta.setdefault("sport", sport)
+    attrs = {**_attrs(msg, values), **_extras(msg, values)}
+    if attrs.get("session.sub_sport") == "0":  # 0 = generic -> omitted
+        del attrs["session.sub_sport"]
+    # first session wins via setdefault (primarySessionSeen semantics)
+    for k, v in attrs.items():
+        meta.setdefault(k, v)
+
+
+def _decode_activity(st: dict, msg: Message, values: dict) -> None:
+    # The reference's case-34 handler decodes ONLY field 0
+    # (total_timer_time) as a timer-time fallback — the primary session's
+    # value wins regardless of message order (fit_parser.dart:609-612,
+    # 773). num_sessions and local_timestamp (minus the UTC timestamp it
+    # yields the UTC offset) are surfaced as extra activity.* attrs — a
+    # documented superset of the reference.
+    _decode_meta(st, msg, values)
+    ts_raw = _scalar(values.get(253))
+    lt_raw = _scalar(values.get(5))
+    if (isinstance(ts_raw, int) and isinstance(lt_raw, int)
+            and 1 <= ts_raw <= FIT_TS_MAX and 1 <= lt_raw <= FIT_TS_MAX):
+        st["meta"].setdefault("activity.local_ts_offset_s", str(lt_raw - ts_raw))
+
+
+def _decode_device_info(st: dict, msg: Message, values: dict) -> None:
+    # device_index 0 is the recording head unit ("creator"); a paired
+    # sensor (device_index != 0) must not overwrite its identity. Messages
+    # without a device_index are treated as the creator (some watches omit
+    # it). Later creator messages OVERWRITE per field (the reference merges
+    # latest-non-null).
+    if _cols(msg, values)["device_index"] in (None, 0):
+        st["meta"].update(_attrs(msg, values))
+
+
+def _decode_field_description(st: dict, msg: Message, values: dict) -> None:
+    kv = {f.key: _scalar(values.get(f.num)) for f in msg.fields}
+    didx, fnum = kv["developer_data_index"], kv["field_definition_number"]
+    if didx is None or fnum is None:
+        return
+    # scale / offset per the reference's gating (fit_parser.dart:828-835):
+    # scale only when > 0 and != 1, offset only when != 0
+    scale, offset = _num(kv["scale"]), _num(kv["offset"])
+    name = kv["field_name"] or f"fit_dev_{didx}_{fnum}"
+    st["dev_fields"][(didx, fnum)] = {
+        "base_type": kv["fit_base_type_id"],
+        "channel": _sanitize_dev_name(str(name), didx, fnum),
+        "scale": float(scale) if scale is not None and scale > 0 and scale != 1 else None,
+        "offset": float(offset) if offset is not None and offset != 0 else None,
+    }
+    st["dev_version"] += 1  # bumped on EVERY registration, incl. overwrites
+
+
+_DECODERS = {
+    0: _decode_meta, 18: _decode_session, 19: _decode_span, 21: _decode_event,
+    23: _decode_device_info, 34: _decode_activity, 49: _decode_meta,
+    101: _decode_span, 206: _decode_field_description, 225: _decode_span,
+}
+
+# globals with dedicated handlers — never rerouted through the fallback
+# record heuristic (fit_parser.dart:1096-1107: a lap's 253/0/1 fields would
+# otherwise be misread as a GPS record). Deliberate superset: the reference
+# set omits 206, so a field_description whose definition happened to
+# declare 253 would be hijacked as a record there and its developer-field
+# registration silently lost — 206 is protected here.
+_EXPLICIT_GLOBALS = frozenset(_DECODERS) | {_RECORD.num}
 
 
 # Diagnostic metadata twin of the reference's ParseDiagnostic surface
 # (fit_parser.dart: node path, suggestedFix, priority). Priorities mirror
 # the reference exactly where the code exists there (0 = file-fatal,
 # 1 = CRC verification, 2 = stream recovery, 3 = per-record recovery);
-# fix text is paraphrased guidance, not copied.
-_DIAG_META: dict[str, tuple[int, str]] = {
-    "fit.header.too_short": (0, "The file is incomplete; re-export it from the source device."),
-    "fit.header.bad_magic": (0, "Not a FIT payload; check the file or pass the correct format."),
-    "fit.header.crc_mismatch": (1, "Re-export the file; if otherwise valid, parse with integrity='silent' to recover data."),
-    "fit.trailer.truncated": (0, "The file is likely cut short; re-download and verify the full transfer."),
-    "fit.trailer.crc_mismatch": (1, "Data may be corrupted; re-download, or parse with integrity='silent' for best-effort recovery."),
-    "fit.def.truncated": (0, "Definition record cut mid-table; the file is truncated at this offset."),
-    "fit.data.truncated": (0, "Data record extends past the payload; the file is truncated at this offset."),
-    "fit.data.unknown_definition": (2, "Stream resynchronization was attempted; decoded data before and after the damage is kept."),
-    "fit.data.unknown_definition.summary": (2, "Multiple unknown-definition messages were skipped during resynchronization."),
-    "fit.data.resync_failed": (2, "No parseable definition found nearby; bytes are skipped one at a time."),
-    "fit.record.missing_timestamp": (2, "The record has no timestamp and no usable context; it was skipped."),
-    "fit.record.recovered_timestamp": (3, "A recent timestamp context was reused; verify ordering if precision matters."),
+# fix text is paraphrased guidance, not copied. The third entry is the
+# message of codes whose text does not vary.
+_DIAG_META: dict[str, tuple[int, str, str | None]] = {
+    "fit.header.too_short": (0, "The file is incomplete; re-export it from the source device.", None),
+    "fit.header.bad_magic": (0, "Not a FIT payload; check the file or pass the correct format.", None),
+    "fit.header.crc_mismatch": (1, "Re-export the file; if otherwise valid, parse with integrity='silent' to recover data.", None),
+    "fit.trailer.truncated": (0, "The file is likely cut short; re-download and verify the full transfer.", None),
+    "fit.trailer.crc_mismatch": (1, "Data may be corrupted; re-download, or parse with integrity='silent' for best-effort recovery.", None),
+    "fit.def.truncated": (0, "Definition record cut mid-table; the file is truncated at this offset.", None),
+    "fit.data.truncated": (0, "Data record extends past the payload; the file is truncated at this offset.", None),
+    "fit.data.unknown_definition": (2, "Stream resynchronization was attempted; decoded data before and after the damage is kept.", None),
+    "fit.data.unknown_definition.summary": (2, "Multiple unknown-definition messages were skipped during resynchronization.", None),
+    "fit.data.resync_failed": (2, "No parseable definition found nearby; bytes are skipped one at a time.", None),
+    "fit.record.missing_timestamp": (2, "The record has no timestamp and no usable context; it was skipped.", "Record without timestamp skipped."),
+    "fit.record.recovered_timestamp": (3, "A recent timestamp context was reused; verify ordering if precision matters.", "Record timestamp missing; reused recent timestamp context for best-effort extraction."),
 }
 
 
-def _diag_attrs(code: str, severity: str, message: str) -> dict:
+def _diag_attrs(code: str, severity: str, message: str | None = None) -> dict:
     """attrs map for one FIT parse diagnostic; adds the reference's
     priority + suggested-fix fields when the code is known, and the
     node path derived from the code prefix (fit.header / fit.trailer /
-    fit.data / fit.record)."""
-    attrs = {"code": code, "severity": severity, "message": message,
-             "node": ".".join(code.split(".")[:2])}
+    fit.data / fit.record). ``message`` defaults to the code's own text."""
     meta = _DIAG_META.get(code)
+    attrs = {"code": code, "severity": severity,
+             "message": message if message is not None else meta[2],
+             "node": ".".join(code.split(".")[:2])}
     if meta is not None:
         attrs["priority"] = str(meta[0])
         attrs["fix"] = meta[1]
@@ -616,13 +847,14 @@ def parse_fit(
     unknown_defs = 0
     resync_fails = 0
     resync_clean_until = 0  # scans proved def-free up to here (linearity)
-    dev_version = 0  # bumped on EVERY field_description (incl. overwrites)
     pos = hdr_size
     seq = 0
-    lap_id = 0
     meta: dict[str, str] = {"format": "fit"}
+    # what the per-message decoders read and update
+    st = {"aid": activity_id, "out": out, "meta": meta, "lap_id": 0,
+          "dev_fields": dev_fields, "dev_version": 0}
 
-    def parse_diag(code: str, message: str) -> None:
+    def parse_diag(code: str, message: str | None = None) -> None:
         """Best-effort parse diagnostic: unlike diag(), never aborts —
         strict mode fail-fasts only on INTEGRITY issues (CRC, truncation,
         malformed structure), matching the reference where unknown-def
@@ -660,45 +892,11 @@ def parse_fit(
             local = hdr & 0xF
 
         if not compressed and (hdr & 0x40):  # definition record
-            has_dev = bool(hdr & 0x20)
-            if pos + 5 > end:
-                diag("fit.def.truncated", "error", f"at byte {pos}")
+            parsed = _read_def_at(payload, pos - 1, end)
+            if isinstance(parsed, str):
+                diag("fit.def.truncated", "error", parsed)
                 break
-            arch = payload[pos + 1]
-            endian = ">" if arch == 1 else "<"
-            global_num = struct.unpack_from(endian + "H", payload, pos + 2)[0]
-            n_fields = payload[pos + 4]
-            pos += 5
-            fields = []
-            ok = True
-            for _ in range(n_fields):
-                if pos + 3 > end:
-                    ok = False
-                    break
-                fnum, fsize, btype = payload[pos], payload[pos + 1], payload[pos + 2]
-                fields.append((fnum, fsize, btype, False, None))
-                pos += 3
-            if not ok:
-                diag("fit.def.truncated", "error", "field table truncated")
-                break
-            if has_dev:
-                if pos >= end:
-                    diag("fit.def.truncated", "error", "dev field count missing")
-                    break
-                n_dev = payload[pos]
-                pos += 1
-                for _ in range(n_dev):
-                    if pos + 3 > end:
-                        ok = False
-                        break
-                    fnum, fsize, didx = payload[pos], payload[pos + 1], payload[pos + 2]
-                    fields.append((fnum, fsize, 0x0D, True, didx))
-                    pos += 3
-                if not ok:
-                    diag("fit.def.truncated", "error", "dev field table truncated")
-                    break
-            defs[local] = {"endian": endian, "global": global_num, "fields": fields,
-                           "size": sum(f[1] for f in fields)}
+            local, defs[local], pos = parsed
             continue
 
         # data record
@@ -750,13 +948,13 @@ def parse_fit(
         # the run extends while that byte repeats at the record stride.
         # Compressed-timestamp records and odd layouts (strings, arrays,
         # the 3-byte field 8) take the general per-record path below.
-        if not compressed and d["global"] == 20:
+        if not compressed and d["global"] == _RECORD.num:
             # keyed on a registration VERSION, not len(dev_fields): a
             # field_description that re-registers an existing (didx, fnum)
             # with a new type/name must invalidate the cached plan
-            if d.get("_plan_devv") != dev_version:
+            if d.get("_plan_devv") != st["dev_version"]:
                 d["_plan"] = _fast_plan(d, dev_fields)
-                d["_plan_devv"] = dev_version
+                d["_plan_devv"] = st["dev_version"]
             plan = d["_plan"]
             if plan is not None:
                 p0 = pos - 1
@@ -781,7 +979,11 @@ def parse_fit(
         for fnum, fsize, btype, is_dev, didx in d["fields"]:
             raw = payload[pos : pos + fsize]
             pos += fsize
-            if not is_dev:
+            if is_dev:  # decoded by its registered base type (default byte)
+                if (didx, fnum) not in dev_fields:
+                    continue
+                btype = dev_fields[(didx, fnum)].get("base_type") or 0x0D
+            else:
                 raw_fields[fnum] = raw
             bt = BASE_TYPES.get(btype & 0xFF)
             if bt is None:
@@ -797,9 +999,7 @@ def parse_fit(
                 vals = [None if (invalid is not None and v == invalid) else v for v in vals]
                 val = vals[0] if n == 1 else list(vals)
             if is_dev:
-                key = (didx, fnum)
-                if key in dev_fields:
-                    dev_values[key] = _decode_dev(dev_fields[key], raw, endian)
+                dev_values[(didx, fnum)] = val
             else:
                 values[fnum] = val
 
@@ -824,296 +1024,88 @@ def parse_fit(
         if "_fallback_rec" not in d:
             d["_fallback_rec"] = (
                 g not in _EXPLICIT_GLOBALS
-                and {253, 0, 1} <= {f[0] for f in d["fields"]}
+                and {_REC[k].num for k in ("ts", "lat", "lon")}
+                <= {f[0] for f in d["fields"]}
             )
-        if g == 20 or d["_fallback_rec"]:  # record
-            ts = _fit_ts(values.get(253))
-            if ts is None:
-                # best-effort recovery (fit_parser.dart:355-380): reuse the
-                # most recent timestamp context; only records with no
-                # context at all are skipped (missing-timestamp diag)
-                rec_raw = ctx["last_ts"].get(local, ctx["last_known"])
-                if rec_raw is not None:
-                    ts = pd.Timestamp(int(rec_raw) + FIT_EPOCH_UNIX, unit="s")
-                    ctx["recovered"] += 1
-                    if ctx["recovered"] <= 5:
-                        parse_diag(
-                            "fit.record.recovered_timestamp",
-                            "Record timestamp missing; reused recent "
-                            "timestamp context for best-effort extraction.",
-                        )
-                else:
-                    parse_diag("fit.record.missing_timestamp",
-                               "Record without timestamp skipped.")
-                    continue
-            lat = _semi_deg(values.get(0))
-            lon = _semi_deg(values.get(1))
-            if d["_fallback_rec"] and (lat is None or lon is None):
-                continue  # heuristic records must carry a position
-            ele = None
-            alt_raw = _num(values.get(2))
-            if alt_raw is not None:
-                ele = alt_raw / 5.0 - 500.0
-            if lat is not None and lon is not None:
-                out.append({"activity_id": activity_id, "kind": "point",
-                            "seq": seq, "ts": ts, "lat": lat, "lon": lon,
-                            "ele": ele, "attrs": None})
-                seq += 1
-            chans = {
-                "heart_rate": _num(values.get(3)),
-                "cadence": _num(values.get(4)),
-                "power": _num(values.get(7)),
-                "temperature": _num(values.get(13)),
-                "left_right_balance": _num(values.get(120)),
-            }
-            g78 = _num(values.get(78))
-            if g78 is not None:
-                chans["grade"] = g78 / 100.0
-            sp = _num(values.get(6))
-            if sp is not None:
-                chans["speed"] = sp / 1000.0
-            di = _num(values.get(5))
-            if di is not None:
-                chans["distance"] = di / 100.0
-            # unknown native record fields -> fit_field_<n> channels
-            # with raw values (fit_parser.dart:507-512)
-            for fnum, fv in values.items():
-                if fnum not in _RECORD_DEDICATED:
-                    nv = _num(fv)
-                    if nv is not None:
-                        chans[f"fit_field_{fnum}"] = nv
-            # G7: compressed speed/distance (record field 8, 3 bytes):
-            # 12-bit speed (/100 m/s) + 12-bit wrapping distance
-            # accumulator (/16 m); explicit fields win
-            # (fit_parser.dart:448-472)
-            raw8 = raw_fields.get(8)
-            if (
-                raw8 is not None
-                and len(raw8) >= 3
-                and not (raw8[0] == 0xFF and raw8[1] == 0xFF and raw8[2] == 0xFF)
-            ):
-                b0, b1, b2 = raw8[0], raw8[1], raw8[2]
-                speed_raw = b0 | ((b1 & 0x0F) << 8)
-                dist_raw = ((b1 >> 4) & 0x0F) | (b2 << 4)
-                # the accumulator advances on EVERY CSD-bearing record
-                # (gated only by the all-0xFF check above) and starts at 0 —
-                # distance-since-start, not first-raw-seeded
-                # (fit_parser.dart:459-463)
-                if csd_state.get("seen"):
-                    csd_state["accum"] = (
-                        csd_state.get("accum", 0)
-                        + ((dist_raw - csd_state["last"]) & 0xFFF)
-                    )
-                csd_state["last"] = dist_raw
-                csd_state["seen"] = True
-                if "speed" not in chans and speed_raw != 0xFFF:
-                    chans["speed"] = speed_raw / 100.0
-                if "distance" not in chans:
-                    # emitted whenever the explicit field is absent — no
-                    # 0xFFF gate on the distance nibble (fit_parser.dart:467)
-                    chans["distance"] = csd_state.get("accum", 0) / 16.0
-            for cname, v in chans.items():
-                if v is not None:
-                    out.append({"activity_id": activity_id, "kind": "channel",
-                                "channel": cname, "ts": ts, "value": float(v)})
-            for key, v in dev_values.items():
-                if v is not None:
-                    desc = dev_fields[key]
-                    fv = float(v)
-                    # field_description scale/offset (spec formula
-                    # raw / scale - offset; fit_parser.dart:490-496)
-                    if desc.get("scale"):
-                        fv = fv / desc["scale"]
-                    if desc.get("offset"):
-                        fv = fv - desc["offset"]
-                    out.append({"activity_id": activity_id, "kind": "channel",
-                                "channel": desc["channel"], "ts": ts,
-                                "value": fv})
-        elif g == 19:  # lap
-            start = _fit_ts(values.get(2))
-            end_ts = _fit_ts(values.get(253))
-            attrs = {}
-            if _num(values.get(7)) is not None:
-                attrs["total_elapsed_s"] = repr(_num(values[7]) / 1000.0)
-            if _num(values.get(8)) is not None:
-                attrs["total_timer_s"] = repr(_num(values[8]) / 1000.0)
-            for f, key, scale in _LAP_SUMMARY_FIELDS:
-                v = _num(values.get(f))
-                if v is not None:
-                    attrs[key] = repr(v / scale) if scale != 1 else _num_str(v)
-            stroke = _scalar(values.get(38))
-            if isinstance(stroke, int):
-                attrs["swim_stroke"] = str(stroke)
-                if stroke in SWIM_STROKES:
-                    attrs["swim_stroke_name"] = SWIM_STROKES[stroke]
-            scal, arrs = _capture_extras(values, _LAP_DEDICATED)
-            for f, v in scal.items():
-                attrs[f"extra.{f}"] = _num_str(v)
-            for f, vals in arrs.items():
-                attrs[f"extra_array.{f}"] = ",".join(_num_str(x) for x in vals)
-            dist = _num(values.get(9))
-            out.append({"activity_id": activity_id, "kind": "lap", "lap_id": lap_id,
-                        "start_ts": start, "end_ts": end_ts,
-                        "distance_m": dist / 100.0 if dist is not None else None,
-                        "sport": SPORTS.get(_scalar(values.get(25))),
-                        "attrs": attrs or None})
-            lap_id += 1
-        elif g == 18:  # session
-            # session count feeds lossy accounting (additional sessions are
-            # only representable in FIT — facade.dart:352-360)
-            meta["session.count"] = str(int(meta.get("session.count", "0")) + 1)
-            sport = SPORTS.get(_scalar(values.get(5)))
-            if sport:
-                meta.setdefault("sport", sport)
-            if _num(values.get(9)) is not None:
-                meta.setdefault("session.total_distance_m", repr(_num(values[9]) / 100.0))
-            if _num(values.get(7)) is not None:
-                meta.setdefault("session.total_elapsed_s", repr(_num(values[7]) / 1000.0))
-            if _num(values.get(8)) is not None:  # total_timer_time, scale 1000
-                meta.setdefault("session.total_timer_s", repr(_num(values[8]) / 1000.0))
-            # full summary surface (fit_parser.dart:557-601); first session
-            # wins via setdefault (primarySessionSeen semantics)
-            for f, key, scale in _SESSION_SUMMARY_FIELDS:
-                v = _num(values.get(f))
-                if v is not None:
-                    meta.setdefault(
-                        f"session.{key}",
-                        repr(v / scale) if scale != 1 else _num_str(v),
-                    )
-            sub = _scalar(values.get(6))
-            if isinstance(sub, int) and sub != 0:  # 0 = generic -> omitted
-                meta.setdefault("session.sub_sport", str(sub))
-            stroke = _scalar(values.get(43))
-            if isinstance(stroke, int):
-                meta.setdefault("session.swim_stroke", str(stroke))
-                if stroke in SWIM_STROKES:
-                    meta.setdefault("session.swim_stroke_name", SWIM_STROKES[stroke])
-            scal, arrs = _capture_extras(values, _SESSION_DEDICATED)
-            for f, v in scal.items():
-                meta.setdefault(f"session.extra.{f}", _num_str(v))
-            for f, vals in arrs.items():
-                meta.setdefault(
-                    f"session.extra_array.{f}", ",".join(_num_str(x) for x in vals)
+        if g != _RECORD.num and not d["_fallback_rec"]:
+            decoder = _DECODERS.get(g)
+            if decoder is not None:
+                decoder(st, _MSG[g], values)
+            continue
+        rec = _cols(_RECORD, values)  # ts, lat, lon, ele
+        ts = rec["ts"]
+        if ts is None:
+            # best-effort recovery (fit_parser.dart:355-380): reuse the
+            # most recent timestamp context; only records with no
+            # context at all are skipped (missing-timestamp diag)
+            rec_raw = ctx["last_ts"].get(local, ctx["last_known"])
+            if rec_raw is None:
+                parse_diag("fit.record.missing_timestamp")
+                continue
+            ts = pd.Timestamp(int(rec_raw) + FIT_EPOCH_UNIX, unit="s")
+            ctx["recovered"] += 1
+            if ctx["recovered"] <= 5:
+                parse_diag("fit.record.recovered_timestamp")
+        lat, lon = rec["lat"], rec["lon"]
+        if d["_fallback_rec"] and (lat is None or lon is None):
+            continue  # heuristic records must carry a position
+        if lat is not None and lon is not None:
+            out.append({"activity_id": activity_id, "kind": "point",
+                        "seq": seq, "ts": ts, "lat": lat, "lon": lon,
+                        "ele": rec["ele"], "attrs": None})
+            seq += 1
+        chans = {}
+        for f in _REC_CHANNELS:
+            v = _num(values.get(f.num))
+            if v is not None:
+                chans[f.key] = v / f.scale
+        # unknown native record fields -> fit_field_<n> channels
+        # with raw values (fit_parser.dart:507-512)
+        for fnum, fv in values.items():
+            if fnum not in _REC_KNOWN:
+                nv = _num(fv)
+                if nv is not None:
+                    chans[f"fit_field_{fnum}"] = nv
+        # G7: compressed speed/distance (record field 8, 3 bytes):
+        # 12-bit speed (/100 m/s) + 12-bit wrapping distance
+        # accumulator (/16 m); explicit fields win
+        # (fit_parser.dart:448-472)
+        raw8 = raw_fields.get(8)
+        if (
+            raw8 is not None
+            and len(raw8) >= 3
+            and not (raw8[0] == 0xFF and raw8[1] == 0xFF and raw8[2] == 0xFF)
+        ):
+            b0, b1, b2 = raw8[0], raw8[1], raw8[2]
+            speed_raw = b0 | ((b1 & 0x0F) << 8)
+            dist_raw = ((b1 >> 4) & 0x0F) | (b2 << 4)
+            # the accumulator advances on EVERY CSD-bearing record
+            # (gated only by the all-0xFF check above) and starts at 0 —
+            # distance-since-start, not first-raw-seeded
+            # (fit_parser.dart:459-463)
+            if csd_state.get("seen"):
+                csd_state["accum"] = (
+                    csd_state.get("accum", 0)
+                    + ((dist_raw - csd_state["last"]) & 0xFFF)
                 )
-        elif g == 34:  # activity (fit_parser.dart:769-776)
-            # The reference's case-34 handler decodes ONLY field 0
-            # (total_timer_time, ms scale 1000) as a timer-time fallback —
-            # the primary session's value wins regardless of message order
-            # (fit_parser.dart:609-612, 773). num_sessions (1) and
-            # local_timestamp (5, device-local FIT seconds; minus the UTC
-            # timestamp 253 it yields the UTC offset) are surfaced as extra
-            # activity.* attrs — a documented superset of the reference.
-            if _num(values.get(0)) is not None:
-                meta.setdefault("activity.total_timer_s", repr(_num(values[0]) / 1000.0))
-            if _num(values.get(1)) is not None:
-                meta.setdefault("activity.num_sessions", str(int(_num(values[1]))))
-            ts_raw = _scalar(values.get(253))
-            lt_raw = _scalar(values.get(5))
-            if (isinstance(ts_raw, int) and isinstance(lt_raw, int)
-                    and 1 <= ts_raw <= FIT_TS_MAX and 1 <= lt_raw <= FIT_TS_MAX):
-                meta.setdefault("activity.local_ts_offset_s", str(lt_raw - ts_raw))
-        elif g == 0:  # file_id (1 manufacturer, 2 product, 3 serial)
-            if _scalar(values.get(1)) is not None:
-                meta.setdefault("device.manufacturer", str(_scalar(values[1])))
-            if _scalar(values.get(2)) is not None:
-                meta.setdefault("device.product", str(_scalar(values[2])))
-            if _num(values.get(3)) is not None:
-                meta.setdefault("device.serial", str(int(_num(values[3]))))
-        elif g == 21:  # event
-            ts = _fit_ts(values.get(253))
-            if ts is not None:
+            csd_state["last"] = dist_raw
+            csd_state["seen"] = True
+            if "speed" not in chans and speed_raw != 0xFFF:
+                chans["speed"] = speed_raw / 100.0
+            if "distance" not in chans:
+                # emitted whenever the explicit field is absent — no
+                # 0xFFF gate on the distance nibble (fit_parser.dart:467)
+                chans["distance"] = csd_state.get("accum", 0) / 16.0
+        for cname, v in chans.items():
+            out.append({"activity_id": activity_id, "kind": "channel",
+                        "channel": cname, "ts": ts, "value": float(v)})
+        for key, v in dev_values.items():
+            v = _num(v)  # first element of an array; strings dropped
+            if v is not None and v == v:  # NaN is the float invalid value
+                desc = dev_fields[key]
                 out.append({"activity_id": activity_id, "kind": "channel",
-                            "channel": "event", "ts": ts,
-                            "value": float(_num(values.get(0)) or 0)})
-        elif g == 23:  # device_info (fit_parser.dart:730-768)
-            # device_index 0 is the recording head unit ("creator"); a
-            # paired sensor (device_index != 0) must not overwrite its
-            # identity. Messages without a device_index are treated as the
-            # creator (some watches omit it). Later creator messages
-            # OVERWRITE per-field (reference merges latest-non-null).
-            dev_idx = _num(values.get(0))
-            if dev_idx is None or int(dev_idx) == 0:
-                if _scalar(values.get(2)) is not None:
-                    meta["device.manufacturer"] = str(_scalar(values[2]))
-                if _scalar(values.get(4)) is not None:
-                    meta["device.product"] = str(_scalar(values[4]))
-                if _num(values.get(3)) is not None:
-                    meta["device.serial"] = str(int(_num(values[3])))
-                if _num(values.get(5)) is not None:
-                    meta["device.software_version"] = repr(
-                        _num(values[5]) / 100.0  # scale 100 (G4)
-                    )
-                if _scalar(values.get(27)) is not None:
-                    meta["device.product_name"] = str(_scalar(values[27]))
-        elif g == 49:  # file_creator (fit_parser.dart:777-804)
-            if _num(values.get(0)) is not None:
-                meta.setdefault("creator.software_version", str(_num(values[0])))
-            if _num(values.get(1)) is not None:
-                meta.setdefault("creator.hardware_version", str(_num(values[1])))
-        elif g == 101:  # swim length (fit_parser.dart:675-699)
-            # profile fields: 253 timestamp(end), 2 start, 3 elapsed (ms),
-            # 5 total_strokes, 6 avg_speed (scale 1000), 7 swim_stroke,
-            # 12 length_type (0 idle / 1 active)
-            start = _fit_ts(values.get(2))
-            elapsed = _num(values.get(3))
-            ts = _fit_ts(values.get(253))
-            if ts is None and start is not None and elapsed is not None:
-                # reference falls back to start + elapsed (fit_parser.dart:682-686)
-                ts = start + pd.Timedelta(seconds=elapsed / 1000.0)
-            attrs = {}
-            if elapsed is not None:
-                attrs["total_elapsed_s"] = repr(elapsed / 1000.0)
-            if _num(values.get(5)) is not None:
-                attrs["total_strokes"] = str(_num(values[5]))
-            if _num(values.get(6)) is not None:
-                attrs["avg_speed_mps"] = repr(_num(values[6]) / 1000.0)
-            stroke = _scalar(values.get(7))
-            if stroke is not None:
-                attrs["swim_stroke"] = str(stroke)
-                if stroke in SWIM_STROKES:
-                    attrs["swim_stroke_name"] = SWIM_STROKES[stroke]
-            ltype = _scalar(values.get(12))
-            if ltype is not None:
-                attrs["length_type"] = str(ltype)
-            out.append({"activity_id": activity_id, "kind": "length",
-                        "start_ts": start, "end_ts": ts, "attrs": attrs or None})
-        elif g == 225:  # strength set (fit_parser.dart:700-729)
-            # profile fields: 254 timestamp(end), 6 start, 0 duration (ms),
-            # 5 set_type (0 rest / 1 active), 3 repetitions,
-            # 4 weight (kg, scale 16), 7 category
-            ts = _fit_ts(values.get(254, values.get(253)))
-            start = _fit_ts(values.get(6))
-            attrs = {}
-            if _num(values.get(3)) is not None:
-                attrs["repetitions"] = str(_num(values[3]))
-            if _num(values.get(4)) is not None:
-                attrs["weight_kg"] = repr(_num(values[4]) / 16.0)  # scale 16 (G4)
-            if _num(values.get(0)) is not None:
-                attrs["duration_s"] = repr(_num(values[0]) / 1000.0)
-            if _num(values.get(5)) is not None:
-                attrs["set_type"] = str(_num(values[5]))
-            if _num(values.get(7)) is not None:
-                attrs["category"] = str(_num(values[7]))
-            out.append({"activity_id": activity_id, "kind": "set",
-                        "start_ts": start, "end_ts": ts, "attrs": attrs or None})
-        elif g == 206:  # developer field description
-            didx = _scalar(values.get(0))
-            fnum = _scalar(values.get(1))
-            btype = _scalar(values.get(2))
-            name = _scalar(values.get(3)) or f"fit_dev_{didx}_{fnum}"
-            if didx is not None and fnum is not None:
-                # scale (6) / offset (7) per the reference's gating
-                # (fit_parser.dart:828-835): scale only when > 0 and != 1,
-                # offset only when != 0
-                scale = _num(values.get(6))
-                offset = _num(values.get(7))
-                dev_fields[(didx, fnum)] = {
-                    "base_type": btype,
-                    "channel": _sanitize_dev_name(str(name), didx, fnum),
-                    "scale": float(scale) if scale is not None and scale > 0 and scale != 1 else None,
-                    "offset": float(offset) if offset is not None and offset != 0 else None,
-                }
-                dev_version += 1
+                            "channel": desc["channel"], "ts": ts,
+                            "value": _dev_scaled(desc, float(v))})
     if unknown_defs > 5:
         parse_diag(
             "fit.data.unknown_definition.summary",
@@ -1132,23 +1124,6 @@ def parse_fit(
     out.append({"activity_id": activity_id, "kind": "meta",
                 "sport": meta.get("sport"), "attrs": meta})
     return out
-
-
-def _decode_dev(desc, raw: bytes, endian: str):
-    bt = BASE_TYPES.get((desc.get("base_type") or 0x0D) & 0xFF)
-    if bt is None:
-        return None
-    ch, unit, invalid = bt
-    if ch == "s":
-        return None
-    if len(raw) < unit:
-        return None
-    v = struct.unpack_from(endian + ch, raw)[0]
-    if invalid is not None and v == invalid:
-        return None
-    if isinstance(v, float) and v != v:
-        return None  # NaN is the float invalid sentinel (absent dev value)
-    return v
 
 
 def _sanitize_dev_name(name: str, didx: int, fnum: int) -> str:
@@ -1178,94 +1153,6 @@ def _def_record(
             bytes([f, s, d]) for f, s, d in dev_fields
         )
     return head + body
-
-
-REC_DEF = [
-    (253, 4, 0x86),  # timestamp uint32
-    (0, 4, 0x85),    # lat sint32
-    (1, 4, 0x85),    # lon sint32
-    (2, 2, 0x84),    # altitude uint16
-    (3, 1, 0x02),    # heart_rate uint8
-    (4, 1, 0x02),    # cadence uint8
-    (5, 4, 0x86),    # distance uint32
-    (6, 2, 0x84),    # speed uint16
-    (7, 2, 0x84),    # power uint16
-    (13, 1, 0x01),   # temperature sint8
-]
-
-# full lap layout (fit_encoder.dart:261-320 writeLap order, re-ordered to
-# keep this engine's historical prefix stable; 8/25 are supersets)
-LAP_DEF = [
-    (253, 4, 0x86),  # end timestamp
-    (2, 4, 0x86),    # start_time
-    (7, 4, 0x86),    # total_elapsed_time ms
-    (8, 4, 0x86),    # total_timer_time ms
-    (9, 4, 0x86),    # total_distance cm
-    (25, 1, 0x00),   # sport enum
-    (0, 1, 0x00),    # event
-    (1, 1, 0x00),    # event_type
-    (11, 2, 0x84),   # total_calories
-    (13, 2, 0x84),   # avg_speed (scale 1000)
-    (14, 2, 0x84),   # max_speed (scale 1000)
-    (15, 1, 0x02),   # avg_heart_rate
-    (16, 1, 0x02),   # max_heart_rate
-    (17, 1, 0x02),   # avg_cadence
-    (18, 1, 0x02),   # max_cadence
-    (19, 2, 0x84),   # avg_power
-    (20, 2, 0x84),   # max_power
-    (38, 1, 0x00),   # swim_stroke enum
-    (40, 2, 0x84),   # num_active_lengths
-]
-
-# full session summary layout (fit_encoder.dart:159-230 writeSession order,
-# re-ordered to keep this engine's historical prefix stable): every field
-# the parser reads back; absent values are invalid sentinels
-SESSION_DEF = [
-    (253, 4, 0x86),  # timestamp
-    (5, 1, 0x00),    # sport enum
-    (6, 1, 0x00),    # sub_sport enum
-    (7, 4, 0x86),    # total_elapsed_time ms
-    (8, 4, 0x86),    # total_timer_time ms
-    (9, 4, 0x86),    # total_distance cm
-    (10, 4, 0x86),   # total_cycles
-    (11, 2, 0x84),   # total_calories
-    (14, 2, 0x84),   # avg_speed (scale 1000)
-    (15, 2, 0x84),   # max_speed (scale 1000)
-    (16, 1, 0x02),   # avg_heart_rate
-    (17, 1, 0x02),   # max_heart_rate
-    (18, 1, 0x02),   # avg_cadence
-    (19, 1, 0x02),   # max_cadence
-    (20, 2, 0x84),   # avg_power
-    (21, 2, 0x84),   # max_power
-    (41, 2, 0x84),   # avg_stroke_count (scale 10)
-    (43, 1, 0x00),   # swim_stroke enum
-    (44, 2, 0x84),   # pool_length (m, scale 100)
-    (47, 2, 0x84),   # num_active_lengths
-]
-
-
-# out-of-range values CLAMP below the invalid sentinel, mirroring the
-# reference's write helpers (fit_encoder.dart:853-875 value.clamp(0,
-# 0xFE/0xFFFE/0xFFFFFFFE)) — neither silent wrap-around nor a crash, and
-# a clamped value can never alias "absent"
-def _u8(v) -> int:
-    return 0xFF if v is None else min(max(int(round(v)), 0), 0xFE)
-
-
-def _u16(v) -> int:
-    return 0xFFFF if v is None else min(max(int(round(v)), 0), 0xFFFE)
-
-
-def _u32(v) -> int:
-    return 0xFFFFFFFF if v is None else min(max(int(round(v)), 0), 0xFFFFFFFE)
-
-
-def _i8(v) -> int:
-    return 0x7F if v is None else min(max(int(round(v)), -0x80), 0x7E)
-
-
-def _i32(v) -> int:
-    return 0x7FFFFFFF if v is None else min(max(int(round(v)), -0x80000000), 0x7FFFFFFE)
 
 
 def _extra_encode_plan(attr_maps: list[dict], prefix: str = "") -> tuple[list, list]:
@@ -1304,25 +1191,13 @@ def _extra_def_fields(scal: list, arrs: list) -> list[tuple[int, int, int]]:
 
 def _extra_pack(attrs: dict, scal: list, arrs: list, prefix: str = "") -> bytes:
     out = bytearray()
-    attrs = attrs or {}
     for f, signed in scal:
-        v = attrs.get(f"{prefix}extra.{f}")
-        try:
-            iv = int(round(float(v))) if v is not None else None
-        except (TypeError, ValueError):
-            iv = None
-        if signed:
-            # full-range clamp per _writeRawInt32 (fit_encoder.dart:885-890)
-            out += struct.pack(
-                "<i",
-                0x7FFFFFFF if iv is None
-                else min(max(iv, -0x80000000), 0x7FFFFFFF),
-            )
-        else:
-            out += struct.pack(
-                "<I",
-                0xFFFFFFFF if iv is None else min(max(iv, 0), 0xFFFFFFFF),
-            )
+        v = _attr_num(attrs, f"{prefix}extra.{f}")
+        # full-range clamp per _writeRawInt32 (fit_encoder.dart:885-890);
+        # absent writes the sentinel, which is the top of the range
+        lo, hi = (-0x80000000, 0x7FFFFFFF) if signed else (0, 0xFFFFFFFF)
+        out += struct.pack("<i" if signed else "<I",
+                           hi if v is None or v != v else round(min(max(v, lo), hi)))
     for f, n in arrs:
         v = attrs.get(f"{prefix}extra_array.{f}")
         vals: list = []
@@ -1331,64 +1206,85 @@ def _extra_pack(attrs: dict, scal: list, arrs: list, prefix: str = "") -> bytes:
                 vals = [int(round(float(x))) for x in str(v).split(",")]
             except (TypeError, ValueError):
                 vals = []
-        vals = (vals + [None] * n)[:n]
-        for x in vals:
-            out += struct.pack("<I", _u32(x))
+        for x in (vals + [None] * n)[:n]:
+            out += struct.pack("<I", 0xFFFFFFFF if x is None else min(max(x, 0), 0xFFFFFFFE))
     return bytes(out)
 
-ACTIVITY_DEF = [
-    (253, 4, 0x86),  # timestamp (UTC)
-    (0, 4, 0x86),    # total_timer_time ms
-    (1, 2, 0x84),    # num_sessions
-    (5, 4, 0x86),    # local_timestamp (device-local FIT seconds)
-]
 
-LENGTH_DEF = [
-    (253, 4, 0x86),  # timestamp (end)
-    (2, 4, 0x86),    # start_time
-    (3, 4, 0x86),    # total_elapsed_time ms
-    (5, 2, 0x84),    # total_strokes
-    (6, 2, 0x84),    # avg_speed (scale 1000)
-    (7, 1, 0x00),    # swim_stroke
-    (12, 1, 0x00),   # length_type (0 idle / 1 active)
-]
-
-SET_DEF = [
-    (254, 4, 0x86),  # timestamp (set end)
-    (6, 4, 0x86),    # start_time
-    (0, 4, 0x86),    # duration ms
-    (5, 1, 0x02),    # set_type (0 rest / 1 active)
-    (3, 2, 0x84),    # repetitions
-    (4, 2, 0x84),    # weight (kg, scale 16)
-    (7, 2, 0x84),    # category
-]
-
-EVENT_DEF = [
-    (253, 4, 0x86),  # timestamp
-    (0, 1, 0x00),    # event
-    (1, 1, 0x00),    # event_type
-    (3, 4, 0x86),    # data
-]
-
-# channels with a native record-message field (everything else is re-emitted
-# as a float64 developer field, matching fit_encoder.dart:473-516)
-NATIVE_RECORD_CHANNELS = frozenset(
-    {"heart_rate", "cadence", "power", "temperature", "speed", "distance"}
-)
-
-SPORT_IDS_INV = {v: k for k, v in SPORTS.items()}
+# integer base type -> (lo, hi, invalid): out-of-range values CLAMP below
+# the invalid sentinel, mirroring the reference's write helpers
+# (fit_encoder.dart:853-875 value.clamp(0, 0xFE/0xFFFE/0xFFFFFFFE)) —
+# neither silent wrap-around nor a crash, and a clamped value can never
+# alias "absent"
+_BOUNDS = {
+    t: ((-inv - 1 if ch.islower() else 0), inv - 1, inv)
+    for t, (ch, _, inv) in BASE_TYPES.items() if inv
+}
+# each message's written fields, unpacked for _pack's per-record loop:
+# (field, key, attr key, col, scale, offset, trunc, lo, hi, invalid)
+_WRITTEN = {
+    m.num: tuple(
+        (f, f.key, m.prefix + f.key, f.col, f.scale, f.offset, f.trunc, *_BOUNDS[f.btype])
+        for f in m.fields if f.write and f.btype != STRING
+    )
+    for m in FIT_PROFILE if m.local is not None
+}
+_STRUCTS = {
+    num: struct.Struct("<" + "".join(BASE_TYPES[s[0].btype][0] for s in spec))
+    for num, spec in _WRITTEN.items()
+}
 
 
-def _fit_secs(ts) -> int:
-    return int(pd.Timestamp(ts).timestamp()) - FIT_EPOCH_UNIX
+def _to_wire(scale, offset, v):
+    """Unrounded wire number of a value (floats and numpy arrays alike):
+    (v + offset) * scale, or degrees -> semicircles when scale is None."""
+    if scale is None:
+        return v / SEMICIRCLE_DEG
+    return (v + offset) * scale if offset else v * scale
 
 
-def _fit_secs_or(ts, invalid: int = 0xFFFFFFFF) -> int:
-    """NaT/None-safe FIT seconds (pandas nulls arrive as NaT through
+def _attr_num(attrs: dict | None, key: str):
+    if not attrs or key not in attrs or attrs[key] is None:
+        return None
+    try:
+        return float(attrs[key])
+    except (TypeError, ValueError):
+        return None
+
+
+def _pack(msg: Message, attrs: dict, cols: dict) -> bytes:
+    """One data message: the header byte, then each written field from
+    ``cols`` when its key is there (row columns, hook overrides), else
+    from ``attrs`` under the message's prefix — scaled, rounded (or
+    truncated) and clamped below the base type's invalid sentinel."""
+    vals = []
+    for _, key, akey, col, scale, offset, trunc, lo, hi, invalid in _WRITTEN[msg.num]:
+        v = cols.get(key, cols)  # cols itself marks "not there"
+        if v is cols:
+            v = None if col or akey not in attrs else _attr_num(attrs, akey)
+        if v is None or v != v:
+            vals.append(invalid)
+            continue
+        w = _to_wire(scale, offset, v)
+        w = lo if w < lo else hi if w > hi else w
+        vals.append(int(w) if trunc else round(w))
+    return bytes([msg.local]) + _STRUCTS[msg.num].pack(*vals)
+
+
+def _msg_def(msg: Message, extra: list = (), dev_fields=None, str_size: int = 1) -> bytes:
+    """Definition record of ``msg``'s written fields (+ raw extras)."""
+    return _def_record(msg.local, msg.num, [
+        (f.num, str_size if f.btype == STRING else BASE_TYPES[f.btype][1], f.btype)
+        for f in msg.fields if f.write
+    ] + list(extra), dev_fields)
+
+
+def _fit_secs(ts) -> int | None:
+    """FIT seconds, None for None/NaT (pandas nulls arrive as NaT through
     to_dict('records'), which `is not None` does not catch)."""
     if ts is None or pd.isna(ts):
-        return invalid
-    return _fit_secs(ts)
+        return None
+    return int(pd.Timestamp(ts).timestamp()) - FIT_EPOCH_UNIX
 
 
 def utf8_truncate(s: str, max_bytes: int = 63) -> bytes:
@@ -1404,88 +1300,47 @@ def utf8_truncate(s: str, max_bytes: int = 63) -> bytes:
     return b[:cut]
 
 
-def _attr_num(attrs: dict | None, key: str):
-    if not attrs or key not in attrs or attrs[key] is None:
-        return None
-    try:
-        return float(attrs[key])
-    except (TypeError, ValueError):
-        return None
-
-
 def _encode_prefix(
-    body: bytearray, meta: dict, dev_channels: list[str], first_ts_raw: int
+    body: bytearray, meta: dict, dev_channels: list[str], first_ts_raw: int | None
 ) -> None:
     """file_id -> session -> developer defs (207/206) -> record definition
     — the message prefix shared by the scalar and vectorized encoders."""
-
-    def _meta_uint(key, invalid):
-        try:
-            v = int(float(meta[key]))
-            return v if 0 <= v < invalid else invalid
-        except (KeyError, TypeError, ValueError):
-            return invalid
-
-    # file_id: type, manufacturer, product
-    body += _def_record(0, 0, [(0, 1, 0x00), (1, 2, 0x84), (2, 2, 0x84)])
-    body += bytes([0x00, 4]) + struct.pack(
-        "<HH",
-        _meta_uint("device.manufacturer", 0xFFFF),
-        _meta_uint("device.product", 0xFFFF),
-    )
+    # file_id: an out-of-range manufacturer/product id writes the invalid
+    # sentinel rather than a clamped (wrong) id
+    fid = _MSG[0]
+    ids = {"type": 4}  # activity file
+    for _, key, akey, col, *_, invalid in _WRITTEN[0]:
+        if not col:
+            v = _attr_num(meta, akey)
+            ids[key] = v if v is not None and -1 < v < invalid else None
+    body += _msg_def(fid) + _pack(fid, meta, ids)
 
     # session: sport + the FULL activity summary (fit_encoder.dart:144-248
     # writeSession) + preserved raw extras — absent values are invalid
     # sentinels so they round-trip as null
-    sport_id = SPORT_IDS_INV.get(meta.get("sport"), 0xFF)
-    if sport_id != 0xFF or any(k.startswith("session.") for k in meta):
-        def sc(key: str, k: float = 1.0):
-            v = _attr_num(meta, "session." + key)
-            return None if v is None else v * k
-
-        scal, arrs = _extra_encode_plan([meta], prefix="session.")
-        body += _def_record(8, 18, SESSION_DEF + _extra_def_fields(scal, arrs))
-        body += bytes([0x08]) + struct.pack(
-            "<IBBIIIIHHHBBBBHHHBHH",
-            first_ts_raw,
-            sport_id,
-            _u8(sc("sub_sport")),
-            _u32(sc("total_elapsed_s", 1000.0)),
-            _u32(sc("total_timer_s", 1000.0)),
-            _u32(sc("total_distance_m", 100.0)),
-            _u32(sc("total_cycles")),
-            _u16(sc("calories")),
-            _u16(sc("avg_speed_mps", 1000.0)),
-            _u16(sc("max_speed_mps", 1000.0)),
-            _u8(sc("avg_hr")),
-            _u8(sc("max_hr")),
-            _u8(sc("avg_cadence")),
-            _u8(sc("max_cadence")),
-            _u16(sc("avg_power")),
-            _u16(sc("max_power")),
-            _u16(sc("avg_stroke_count", 10.0)),
-            _u8(sc("swim_stroke")),
-            _u16(sc("pool_length_m", 100.0)),
-            _u16(sc("num_active_lengths")),
-        ) + _extra_pack(meta, scal, arrs, prefix="session.")
+    sport_id = SPORT_IDS_INV.get(meta.get("sport"))
+    if sport_id is not None or any(k.startswith("session.") for k in meta):
+        ses = _MSG[18]
+        scal, arrs = _extra_encode_plan([meta], prefix=ses.prefix)
+        body += _msg_def(ses, _extra_def_fields(scal, arrs))
+        body += _pack(ses, meta, {"timestamp": first_ts_raw, "sport": sport_id})
+        body += _extra_pack(meta, scal, arrs, prefix=ses.prefix)
 
     # developer-field descriptions must precede the record definition that
     # references them (fit_encoder.dart:479-516)
     if dev_channels:
-        body += _def_record(6, 207, [(3, 1, 0x02)])  # developer_data_id
-        body += bytes([0x06, 0])  # developer_data_index 0
+        body += _msg_def(_MSG[207]) + _pack(_MSG[207], {}, {"developer_data_index": 0})
+        fd = _MSG[206]
         for i, name in enumerate(dev_channels):
             nb = utf8_truncate(name)  # G18: 63-byte cap at char boundary
-            body += _def_record(
-                7, 206,
-                [(0, 1, 0x02), (1, 1, 0x02), (2, 1, 0x02), (3, len(nb) + 1, 0x07)],
-            )
-            body += bytes([0x07, 0, i, 0x89]) + nb + b"\x00"
+            # _pack writes the fixed-size fields; the name, the last field,
+            # follows NUL-terminated
+            body += _msg_def(fd, str_size=len(nb) + 1) + _pack(fd, {}, {
+                "developer_data_index": 0, "field_definition_number": i,
+                "fit_base_type_id": FLOAT64,
+            }) + nb + b"\x00"
 
-    body += _def_record(
-        1, 20, REC_DEF,
-        dev_fields=[(i, 8, 0) for i in range(len(dev_channels))],
-    )
+    body += _msg_def(_RECORD, dev_fields=[(i, 8, 0) for i in range(len(dev_channels))])
 
 
 def encode_fit(
@@ -1510,55 +1365,32 @@ def encode_fit(
     session.total_*, device.*)."""
     from activity_files_spark.sources.gpx import _ts_key
 
-    lengths = lengths or []
-    sets = sets or []
-    events = events or []
     meta = meta or {}
 
     # developer channels: every channel without a native record field,
     # in deterministic name order (write-back per fit_encoder.dart:477-516)
     dev_channels = sorted(
-        {c for ch in channels_by_ts.values() for c in ch} - NATIVE_RECORD_CHANNELS
+        {c for ch in channels_by_ts.values() for c in ch} - _NATIVE_CHANNELS
     )
 
     body = bytearray()
-    _encode_prefix(
-        body, meta, dev_channels,
-        # _or variant: an all-NaT point list maps to the invalid sentinel,
-        # matching the vectorized _encode_activity_pdf path byte-for-byte
-        _fit_secs_or(points[0]["ts"]) if points else 0xFFFFFFFF,
-    )
+    # an all-NaT point list maps to the invalid sentinel, matching the
+    # vectorized _encode_activity_pdf path byte-for-byte
+    _encode_prefix(body, meta, dev_channels, _fit_secs(points[0]["ts"]) if points else None)
     for p in points:
-        if p.get("ts") is None or pd.isna(p["ts"]):
+        ts_raw = _fit_secs(p.get("ts"))
+        if ts_raw is None:
             continue  # a record message is keyed by its timestamp
-        ts_raw = _fit_secs(p["ts"])
         ch = channels_by_ts.get(_ts_key(p["ts"])) or {}
-        lat = p.get("lat")
-        lon = p.get("lon")
-        lat_ok = lat is not None and lat == lat
-        lon_ok = lon is not None and lon == lon
-        # out-of-range values clamp (reference write helpers), never raise
-        lat_semi = _i32(lat / SEMI_TO_DEG) if lat_ok else 0x7FFFFFFF
-        lon_semi = _i32(lon / SEMI_TO_DEG) if lon_ok else 0x7FFFFFFF
-        ele = p.get("ele")
-        alt_raw = _u16((ele + 500.0) * 5.0) if ele is not None and ele == ele else 0xFFFF
-        hr = _u8(ch.get("heart_rate")) if "heart_rate" in ch else 0xFF
-        cad = _u8(ch.get("cadence")) if "cadence" in ch else 0xFF
-        dist = _u32(ch["distance"] * 100.0) if "distance" in ch else 0xFFFFFFFF
-        speed = _u16(ch["speed"] * 1000.0) if "speed" in ch else 0xFFFF
-        power = _u16(ch.get("power")) if "power" in ch else 0xFFFF
-        temp = _i8(ch.get("temperature")) if "temperature" in ch else 0x7F
-        body += bytes([0x01]) + struct.pack(
-            "<IiiHBBIHHb", ts_raw, lat_semi, lon_semi, alt_raw, hr, cad,
-            dist, speed, power, temp,
-        )
+        body += _pack(_RECORD, ch, {"ts": ts_raw, "lat": p.get("lat"),
+                                    "lon": p.get("lon"), "ele": p.get("ele")})
         for name in dev_channels:
             v = ch.get(name)
             body += struct.pack("<d", float(v) if v is not None else float("nan"))
 
     return _encode_suffix(
         body, laps, lengths, sets, events, meta,
-        _fit_secs_or(points[-1]["ts"]) if points else 0xFFFFFFFF,
+        _fit_secs(points[-1]["ts"]) if points else None,
     )
 
 
@@ -1569,130 +1401,61 @@ def _encode_suffix(
     sets: list[dict],
     events: list[dict],
     meta: dict,
-    last_ts_raw: int,
+    last_ts_raw: int | None,
 ) -> bytes:
     """laps -> lengths -> sets -> events -> activity + header/CRC framing —
     the message suffix shared by the scalar and vectorized encoders."""
     if laps:
+        lap_msg = _MSG[19]
         lap_attr_maps = [lap.get("attrs") or {} for lap in laps]
         scal, arrs = _extra_encode_plan(lap_attr_maps)
-        body += _def_record(2, 19, LAP_DEF + _extra_def_fields(scal, arrs))
+        body += _msg_def(lap_msg, _extra_def_fields(scal, arrs))
         for lap, attrs in zip(laps, lap_attr_maps):
-            s = _fit_secs_or(lap.get("start_ts"))
-            e = _fit_secs_or(lap.get("end_ts"))
-            el = _attr_num(attrs, "total_elapsed_s")
-            if el is not None:
-                elapsed_ms = int(round(el * 1000.0))
-            else:
-                elapsed_ms = (
-                    max(0, (e - s) * 1000) if 0xFFFFFFFF not in (s, e) else 0xFFFFFFFF
-                )
-            dm = lap.get("distance_m")
-            dist_cm = int(round(dm * 100.0)) if dm is not None and dm == dm else 0xFFFFFFFF
+            s = _fit_secs(lap.get("start_ts"))
+            e = _fit_secs(lap.get("end_ts"))
+            cols = {"start_ts": s, "end_ts": e, "distance_m": lap.get("distance_m"),
+                    "sport": SPORT_IDS_INV.get(lap.get("sport"))}
+            if _attr_num(attrs, "total_elapsed_s") is None:
+                # elapsed falls back to end - start
+                cols["total_elapsed_s"] = None if None in (s, e) else max(0, e - s)
+            body += _pack(lap_msg, attrs, cols) + _extra_pack(attrs, scal, arrs)
 
-            def la(key: str, k: float = 1.0):
-                v = _attr_num(attrs, key)
-                return None if v is None else v * k
-
-            body += bytes([0x02]) + struct.pack(
-                "<IIIIIBBBHHHBBBBHHBH",
-                e, s, elapsed_ms,
-                _u32(la("total_timer_s", 1000.0)),
-                dist_cm,
-                SPORT_IDS_INV.get(lap.get("sport"), 0xFF),
-                _u8(la("event")),
-                _u8(la("event_type")),
-                _u16(la("calories")),
-                _u16(la("avg_speed_mps", 1000.0)),
-                _u16(la("max_speed_mps", 1000.0)),
-                _u8(la("avg_hr")),
-                _u8(la("max_hr")),
-                _u8(la("avg_cadence")),
-                _u8(la("max_cadence")),
-                _u16(la("avg_power")),
-                _u16(la("max_power")),
-                _u8(la("swim_stroke")),
-                _u16(la("num_active_lengths")),
-            ) + _extra_pack(attrs, scal, arrs)
-
-    if lengths:
-        body += _def_record(3, 101, LENGTH_DEF)
-        for ln in lengths:
-            a = ln.get("attrs") or {}
-            elapsed = _attr_num(a, "total_elapsed_s")
-            strokes = _attr_num(a, "total_strokes")
-            avg_sp = _attr_num(a, "avg_speed_mps")
-            stroke = a.get("swim_stroke")
-            ltype = _attr_num(a, "length_type")
-            body += bytes([0x03]) + struct.pack(
-                "<IIIHHBB",
-                _fit_secs_or(ln.get("end_ts")),
-                _fit_secs_or(ln.get("start_ts")),
-                int(round(elapsed * 1000.0)) if elapsed is not None else 0xFFFFFFFF,
-                int(strokes) if strokes is not None else 0xFFFF,
-                int(round(avg_sp * 1000.0)) if avg_sp is not None else 0xFFFF,
-                int(stroke) if stroke is not None else 0xFF,
-                int(ltype) if ltype is not None else 0xFF,
-            )
-
-    if sets:
-        body += _def_record(4, 225, SET_DEF)
-        for st in sets:
-            a = st.get("attrs") or {}
-            dur = _attr_num(a, "duration_s")
-            stype = _attr_num(a, "set_type")
-            reps = _attr_num(a, "repetitions")
-            wkg = _attr_num(a, "weight_kg")
-            cat = _attr_num(a, "category")
-            body += bytes([0x04]) + struct.pack(
-                "<IIIBHHH",
-                _fit_secs_or(st.get("end_ts")),
-                _fit_secs_or(st.get("start_ts")),
-                int(round(dur * 1000.0)) if dur is not None else 0xFFFFFFFF,
-                int(stype) if stype is not None else 0xFF,
-                int(reps) if reps is not None else 0xFFFF,
-                int(round(wkg * 16.0)) if wkg is not None else 0xFFFF,
-                int(cat) if cat is not None else 0xFFFF,
-            )
+    for msg, spans in ((_MSG[101], lengths), (_MSG[225], sets)):
+        if spans:
+            body += _msg_def(msg)
+            for sp in spans:
+                body += _pack(msg, sp.get("attrs") or {}, {
+                    "start_ts": _fit_secs(sp.get("start_ts")),
+                    "end_ts": _fit_secs(sp.get("end_ts")),
+                })
 
     if events:
-        body += _def_record(5, 21, EVENT_DEF)
+        body += _msg_def(_MSG[21])
         for ev in events:
-            if ev.get("ts") is None or pd.isna(ev["ts"]):
+            ts_raw = _fit_secs(ev.get("ts"))
+            if ts_raw is None:
                 continue
             v = ev.get("value")
             # event id is a 1-byte enum: null/NaN/out-of-range -> invalid
-            # sentinel rather than a silently wrapped id
-            eid = int(v) if (v is not None and v == v and 0 <= v <= 254) else 0xFF
-            body += bytes([0x05]) + struct.pack(
-                "<IBBI",
-                _fit_secs(ev["ts"]),
-                eid,
-                0,  # event_type: start
-                0xFFFFFFFF,
-            )
+            # sentinel rather than a clamped id
+            body += _pack(_MSG[21], {}, {
+                "ts": ts_raw, "event_type": 0, "data": None,  # event_type: start
+                "event": v if v is not None and 0 <= v <= 254 else None,
+            })
 
     # activity (34) — re-emitted when decode surfaced activity.* attrs:
     # total_timer_time (the reference's timer fallback), num_sessions, and
     # local_timestamp (UTC ts + stored offset) round-trip losslessly
-    act_timer = _attr_num(meta, "activity.total_timer_s")
-    act_sessions = _attr_num(meta, "activity.num_sessions")
-    act_offset = _attr_num(meta, "activity.local_ts_offset_s")
-    if act_timer is not None or act_sessions is not None or act_offset is not None:
-        ts_raw = last_ts_raw
-        local_raw = (
-            ts_raw + int(act_offset)
-            if act_offset is not None and ts_raw != 0xFFFFFFFF
-            else 0xFFFFFFFF
-        )
-        body += _def_record(9, 34, ACTIVITY_DEF)
-        body += bytes([0x09]) + struct.pack(
-            "<IIHI",
-            ts_raw,
-            int(round(act_timer * 1000.0)) if act_timer is not None else 0xFFFFFFFF,
-            int(act_sessions) if act_sessions is not None else 0xFFFF,
-            local_raw,
-        )
+    act = _MSG[34]
+    offset = _attr_num(meta, "activity.local_ts_offset_s")
+    if offset is not None or any(
+        _attr_num(meta, act.prefix + f.key) is not None for f in act.fields if not f.col
+    ):
+        local = None
+        if offset is not None and np.isfinite(offset) and last_ts_raw is not None:
+            local = last_ts_raw + int(offset)
+        body += _msg_def(act) + _pack(act, meta, {"timestamp": last_ts_raw,
+                                                  "local_timestamp": local})
 
     header = struct.pack("<BBHI4s", 14, 0x20, 2140, len(body), b".FIT")
     header += struct.pack("<H", fit_crc16(header))
@@ -1702,51 +1465,30 @@ def _encode_suffix(
 
 def _record_block_vec(ts_raw: np.ndarray, cols: dict, dev_channels: list[str]) -> bytes:
     """Vectorized record-message block: one numpy structured array row per
-    record (header byte + REC_DEF fields + float64 developer fields),
-    written with a single ``.tobytes()`` instead of per-record struct.pack.
-    Bit-identical to the scalar loop: same round-half-even, scales, and
-    invalid sentinels. ``ts_raw``: int64 FIT seconds per record; ``cols``:
-    float64 arrays (NaN = absent) keyed by lat/lon/ele/channel name."""
+    record (header byte + the record's written fields + float64 developer
+    fields), written with a single ``.tobytes()`` instead of per-record
+    struct.pack. Bit-identical to the scalar _pack: same round-half-even,
+    scales, clamps and invalid sentinels. ``ts_raw``: int64 FIT seconds per
+    record; ``cols``: float64 arrays (NaN = absent) keyed by lat/lon/ele/
+    channel name."""
     n = len(ts_raw)
+    spec = _WRITTEN[_RECORD.num]
     dtype = np.dtype(
-        [("h", "u1"), ("ts", "<u4"), ("lat", "<i4"), ("lon", "<i4"),
-         ("alt", "<u2"), ("hr", "u1"), ("cad", "u1"), ("dist", "<u4"),
-         ("speed", "<u2"), ("power", "<u2"), ("temp", "<i1")]
+        [("h", "u1")]
+        + [(f"f{s[0].num}", "<" + BASE_TYPES[s[0].btype][0]) for s in spec]
         + [(f"dv{i}", "<f8") for i in range(len(dev_channels))]
     )
     arr = np.zeros(n, dtype)
-    arr["h"] = 0x01
-    arr["ts"] = ts_raw
-
-    _nan = np.full(n, np.nan)
-
-    def scaled(name, scale, sentinel, lo, hi, pre=None):
-        """Rounded+scaled with the reference's sentinel-preserving CLAMP
-        (fit_encoder.dart:853-875) — numpy's unsafe cast would otherwise
-        silently wrap out-of-range values where the scalar path clamps."""
-        v = cols.get(name, _nan)
-        if pre is not None:
-            v = pre(v)
-        return np.where(
-            ~np.isnan(v),
-            np.clip(np.round(v * scale), float(lo), float(hi)),
-            float(sentinel),
-        )
-
-    arr["lat"] = scaled("lat", 1.0, 0x7FFFFFFF, -0x80000000, 0x7FFFFFFE,
-                        pre=lambda v: v / SEMI_TO_DEG)
-    arr["lon"] = scaled("lon", 1.0, 0x7FFFFFFF, -0x80000000, 0x7FFFFFFE,
-                        pre=lambda v: v / SEMI_TO_DEG)
-    arr["alt"] = scaled("ele", 1.0, 0xFFFF, 0, 0xFFFE,
-                        pre=lambda v: (v + 500.0) * 5.0)
-    arr["hr"] = scaled("heart_rate", 1.0, 0xFF, 0, 0xFE)
-    arr["cad"] = scaled("cadence", 1.0, 0xFF, 0, 0xFE)
-    arr["dist"] = scaled("distance", 100.0, 0xFFFFFFFF, 0, 0xFFFFFFFE)
-    arr["speed"] = scaled("speed", 1000.0, 0xFFFF, 0, 0xFFFE)
-    arr["power"] = scaled("power", 1.0, 0xFFFF, 0, 0xFFFE)
-    arr["temp"] = scaled("temperature", 1.0, 0x7F, -0x80, 0x7E)
+    arr["h"] = _RECORD.local
+    cols = dict(cols, ts=ts_raw.astype(np.float64))
+    nan = np.full(n, np.nan)
+    for f, *_, lo, hi, invalid in spec:
+        v = cols.get(f.key, nan)
+        w = _to_wire(f.scale, f.offset, v)
+        w = np.trunc(w) if f.trunc else np.round(w)
+        arr[f"f{f.num}"] = np.where(np.isnan(v), float(invalid), np.clip(w, float(lo), float(hi)))
     for i, name in enumerate(dev_channels):
-        arr[f"dv{i}"] = cols.get(name, _nan)  # NaN = absent (round-trips null)
+        arr[f"dv{i}"] = cols.get(name, nan)  # NaN = absent (round-trips null)
     return arr.tobytes()
 
 
@@ -1762,10 +1504,7 @@ def _ts_us(col) -> np.ndarray:
 def _span_records(masked: dict, idx: np.ndarray, cols: list[str]) -> list[dict]:
     """list-of-dicts for lap/length/set rows at ``idx`` — column-wise
     construction (no intermediate DataFrame slice/sort machinery)."""
-    if len(idx) == 0:
-        return []
-    series = [masked[c][idx] for c in cols]
-    lists = [s.tolist() for s in series]
+    lists = [masked[c][idx].tolist() for c in cols]
     return [dict(zip(cols, vals)) for vals in zip(*lists)]
 
 
@@ -1789,8 +1528,7 @@ def _encode_activity_pdf(aid: str, pdf: pd.DataFrame) -> bytes:
     # --- points: sort by (ts, seq), drop NaT (a record is keyed by its ts)
     pmask = kind == "point"
     p_idx = np.nonzero(pmask)[0]
-    ts_all = _ts_us(col["ts"])  # NaT -> INT64_MIN
-    events: list[dict]
+    ts_all = _ts_us(col["ts"])  # NaT -> INT64_MAX
     if len(p_idx):
         p_ts = ts_all[p_idx]
         p_seq = col["seq"].to_numpy(dtype=np.float64)[p_idx]
@@ -1825,7 +1563,7 @@ def _encode_activity_pdf(aid: str, pdf: pd.DataFrame) -> bytes:
                 for t, v in zip(e_ts[eo].tolist(), e_vals[eo].tolist())
             ]
             uniq.remove("event")
-        dev_channels = [c for c in uniq if c not in NATIVE_RECORD_CHANNELS]
+        dev_channels = [c for c in uniq if c not in _NATIVE_CHANNELS]
         if len(p_ts):
             # unique point timestamps: duplicate point ts share a sample;
             # later channel rows overwrite earlier ones (last wins)
@@ -1875,7 +1613,7 @@ def _encode_activity_pdf(aid: str, pdf: pd.DataFrame) -> bytes:
         ts_raw = p_ts // 1_000_000 - FIT_EPOCH_UNIX
         first_raw, last_raw = int(ts_raw[0]), int(ts_raw[-1])
     else:
-        first_raw = last_raw = 0xFFFFFFFF
+        first_raw = last_raw = None
     _encode_prefix(body, meta, dev_channels, first_raw)
     if len(p_ts):
         cols = dict(ch_cols)

@@ -95,6 +95,25 @@ def test_resample_linear(spark):
     assert out["2024-03-01 10:00:20"] == 20.0  # end-inclusive
 
 
+def test_resample_two_columns_plan_one_window_node(spark):
+    """_bracket gates every column in one projection and takes all running
+    windows in one select, so CollapseWindow leaves one Window node over the
+    one sort, not four per column."""
+    pts = spark.createDataFrame(
+        [("a", ts("2024-03-01T10:00:00"), 40.0, 1600.0),
+         ("a", ts("2024-03-01T10:00:05"), None, 1601.0),
+         ("a", ts("2024-03-01T10:00:09"), 40.1, None)],
+        "activity_id string, ts timestamp, lat double, ele double",
+    )
+    out = resample_linear(pts, 2, ["lat", "ele"])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert sum(ln.lstrip(" :+-").startswith("Window ") for ln in plan.splitlines()) == 1
+    got = {str(r["ts"]): (r["lat"], r["ele"]) for r in out.collect()}
+    # the null lat at 10:00:05 lends no time: lat lerps 0 s -> 9 s
+    assert got["2024-03-01 10:00:04"] == (pytest.approx(40.0 + 0.1 * 4 / 9), pytest.approx(1600.8))
+    assert got["2024-03-01 10:00:08"] == (pytest.approx(40.0 + 0.1 * 8 / 9), 1601.0)  # ele held
+
+
 # ---------------------------------------------------------------- spatial
 
 RECT = [(-105.0008, 40.0002), (-105.0002, 40.0002), (-105.0002, 40.0008), (-105.0008, 40.0008)]
