@@ -256,12 +256,12 @@ _REC = {f.key: f for f in _RECORD.fields if f.key}
 # record channels: every keyed non-column field; every other native record
 # field becomes a fit_field_<n> channel with its RAW value so no sensor
 # data is silently dropped (fit_parser.dart:1024-1031, e.g. running
-# dynamics)
-_REC_CHANNELS = tuple(f for f in _RECORD.fields if f.key and not f.col)
+# dynamics); (num, channel, scale) for the per-record loops
+_REC_CHANNELS = tuple((f.num, f.key, f.scale) for f in _RECORD.fields if f.key and not f.col)
 _REC_KNOWN = frozenset(f.num for f in _RECORD.fields)
 # channels with a native record-message field (everything else is re-emitted
 # as a float64 developer field, matching fit_encoder.dart:473-516)
-_NATIVE_CHANNELS = frozenset(f.key for f in _REC_CHANNELS if f.write)
+_NATIVE_CHANNELS = frozenset(f.key for f in _RECORD.fields if f.write and not f.col)
 
 
 def _fast_plan(d: dict, dev_fields: dict) -> dict | None:
@@ -452,8 +452,8 @@ def _emit_g20_run(
             out.append({"activity_id": activity_id, "kind": "channel",
                         "channel": cname, "ts": t, "value": val})
 
-    for f in _REC_CHANNELS:
-        emit(f.key, *col(f"f{f.num}"), f.scale)
+    for num, key, scale in _REC_CHANNELS:
+        emit(key, *col(f"f{num}"), scale)
     # unknown native record fields -> fit_field_<n> channels, raw values
     for name in names:
         if name[0] == "f" and int(name[1:]) not in _REC_KNOWN:  # not dev_*
@@ -1055,10 +1055,10 @@ def parse_fit(
                         "ele": rec["ele"], "attrs": None})
             seq += 1
         chans = {}
-        for f in _REC_CHANNELS:
-            v = _num(values.get(f.num))
+        for num, key, scale in _REC_CHANNELS:
+            v = _num(values.get(num))
             if v is not None:
-                chans[f.key] = v / f.scale
+                chans[key] = v / scale
         # unknown native record fields -> fit_field_<n> channels
         # with raw values (fit_parser.dart:507-512)
         for fnum, fv in values.items():
