@@ -1586,10 +1586,10 @@ def _encode_activity_pdf(aid: str, pdf: pd.DataFrame) -> bytes:
         c: col[c].to_numpy()
         for c in ("lap_id", "start_ts", "end_ts", "distance_m", "sport", "attrs")
     }
-    lap_cols = ["lap_id", "start_ts", "end_ts", "distance_m", "sport"]
     span_cols = ["start_ts", "end_ts", "attrs"]
     laps = _span_records(
-        masked, sorted_kind_idx(pdf, kind, "lap", ["lap_id", "start_ts"]), lap_cols
+        masked, sorted_kind_idx(pdf, kind, "lap", ["lap_id", "start_ts"]),
+        ["lap_id", "distance_m", "sport", *span_cols],
     )
     lengths = _span_records(
         masked, sorted_kind_idx(pdf, kind, "length", ["start_ts", "end_ts"]),

@@ -395,6 +395,30 @@ def test_cli_convert_every_format_reads_back(spark, tmp_path, fmt):
         assert g[:3] == pytest.approx(e[:3], abs=1e-6) and g[3] == e[3]
 
 
+def test_cli_convert_fit_to_fit_keeps_lap_summaries(spark, tmp_path):
+    """A FIT -> FIT convert writes each lap's summary fields back."""
+    from activity_files_spark.cli import main
+    from activity_files_spark.sources.decode import decode_records
+    from activity_files_spark.sources.fit import encode_fit
+    from tests.test_fit_detect import PTS, mk_channels
+
+    summary = {"total_timer_s": "61.5", "avg_hr": "150", "max_speed_mps": "4.25",
+               "extra.33": "7"}
+    laps = [{"lap_id": 0, "start_ts": PTS[0]["ts"], "end_ts": PTS[-1]["ts"],
+             "distance_m": 123.4, "sport": "running", "attrs": summary}]
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "a.fit").write_bytes(encode_fit(PTS, mk_channels(), laps))
+    out = str(tmp_path / "out")
+    rc = main(["convert", "--input", str(d), "--from", "fit", "--to", "fit",
+               "--output", out])
+    assert rc == 0
+    back = decode_records(spark.read.parquet(out), fmt="fit", payload_col="payload")
+    lap = back.filter(F.col("kind") == "lap").collect()
+    assert len(lap) == 1
+    assert summary.items() <= dict(lap[0]["attrs"]).items()
+
+
 def test_cli_loader_reads_each_file_once(spark, tmp_path):
     """The CLI loader scans its input once and decodes every file in one
     Python pass: one binaryFile scan, one MapInPandas, no per-column Arrow

@@ -19,6 +19,7 @@ import struct
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from activity_files_spark.sources.fit import (
     _def_record,
@@ -30,8 +31,8 @@ from activity_files_spark.sources.fit import (
 from activity_files_spark.sources.gpx import _ts_key
 from activity_files_spark.sources.records import records_frame
 
-ENCODE_SHA256 = "48850f6591afaf549518fdceb97b4efde4188c76337348ce88402c8e51026b70"
-PARSE_SHA256 = "70bbdc9d420aeb7c833b24159cbf570aa167f9c8eade75d9061ebe30f2986bb9"
+ENCODE_SHA256 = "b07788c1cb4b45686618dc9f5ef13c5287d92411eb019579d3d57209a3bdd5cc"
+PARSE_SHA256 = "d80b4bfab9087fb688eca156fecaaed661b9293f3933bbb9b22add8e2d7ceccf"
 
 T0 = 1_000_000_000  # FIT seconds (2021)
 REC3 = [(253, 4, 0x86), (0, 4, 0x85), (1, 4, 0x85)]
@@ -312,6 +313,16 @@ def _digest(parts) -> str:
         h.update(p if isinstance(p, bytes) else p.encode())
         h.update(b"\x00")
     return h.hexdigest()
+
+
+@pytest.mark.parametrize("seed", range(24))
+def test_record_stream_encode_equals_scalar_encode(seed):
+    """fit_encode_records' kernel writes the same bytes as encode_fit,
+    lap summaries included."""
+    a = _activity(seed)
+    assert _encode_activity_pdf("a", _frame(a)) == encode_fit(
+        a["points"], a["channels"], a["laps"], a["lengths"], a["sets"],
+        a["events"], a["meta"])
 
 
 def test_encode_bytes_are_pinned():
