@@ -67,7 +67,6 @@ _TRACK_TYPE = 0x83
 _FLAG_LACING = 0x9C
 _DEFAULT_DURATION = 0x23E383
 _CODEC_ID = 0x86
-_CODEC_PRIVATE = 0x63A2
 _VIDEO = 0xE0
 _PIXEL_WIDTH = 0xB0
 _PIXEL_HEIGHT = 0xBA
@@ -77,7 +76,6 @@ _CLUSTER_TIMESTAMP = 0xE7
 _SIMPLE_BLOCK = 0xA3
 _BLOCK_GROUP = 0xA0
 _BLOCK = 0xA1
-_BLOCK_DURATION = 0x9B
 _CUES = 0x1C53BB6B
 _CHAPTERS = 0x1043A770
 _TAGS = 0x1254C367

@@ -22,8 +22,6 @@ from pyspark.sql import functions as F
 
 from activity_files_spark.functions.time import ts_seconds
 
-DIAG_SCHEMA = "activity_id string, code string, severity string, detail string"
-
 
 def _diag(df: DataFrame, key, code: str, severity: str, detail) -> DataFrame:
     return df.select(

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 FIXED_COLS = ["timestamp", "latitude", "longitude", "elevation"]
 KNOWN_CHANNELS = ["heart_rate", "cadence", "power", "temperature", "distance", "speed"]
-CSV_HEADER = FIXED_COLS + KNOWN_CHANNELS + ["sport"]
 from activity_files_spark.operators.grouped import grouped_apply
 
 
