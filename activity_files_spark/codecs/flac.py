@@ -6,9 +6,12 @@ covers what the overwhelming majority of real FLAC files use — constant /
 verbatim / fixed-predictor (orders 0-4) / LPC subframes, 4- and 5-bit rice
 residual coding with escape partitions, wasted bits, and all four channel
 assignments (independent, left/side, right/side, mid/side). The encoder
-emits constant, verbatim, and fixed-predictor subframes with rice coding
+emits constant, verbatim, fixed-predictor and LPC subframes with rice coding
 (partition order 0) in independent, left/side, or mid/side stereo — enough
-to exercise every decoder path through lossless round-trips.
+to exercise every decoder path through lossless round-trips. It writes
+every header and subframe through the shared collecting bit writer
+(:class:`codecs.bits.BitWriter`), packed once per frame; a subframe's whole
+rice-coded residual run is one array of fields, not a per-sample loop.
 
 Reference parity note: the reference repo (activity_files) has NO audio
 codecs at all; this file exists for the multimodal-pipeline axis of the
@@ -26,6 +29,7 @@ import struct
 
 import numpy as np
 
+from activity_files_spark.codecs.bits import BitWriter
 from activity_files_spark.codecs.crc import flac_crc8, flac_crc16
 
 _FIXED_COEFS = {
@@ -38,7 +42,7 @@ _FIXED_COEFS = {
 
 
 # ---------------------------------------------------------------------------
-# Bit I/O
+# Bit reader
 # ---------------------------------------------------------------------------
 
 
@@ -138,37 +142,6 @@ class _BitReader:
         return np.where(u & 1 == 0, u >> 1, -((u + 1) >> 1))
 
 
-class _BitWriter:
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.buf)
-
-
 # ---------------------------------------------------------------------------
 # Rice coding
 # ---------------------------------------------------------------------------
@@ -180,13 +153,13 @@ def _zigzag(res: np.ndarray) -> np.ndarray:
     return np.where(r >= 0, r << 1, (-r << 1) - 1)
 
 
-def _rice_write_z(w: _BitWriter, z: np.ndarray, param: int) -> None:
-    """Write already-zigzagged residuals (computed once per subframe)."""
-    for u in z:
-        u = int(u)
-        w.write_unary(u >> param)
-        if param:
-            w.write(u & ((1 << param) - 1), param)
+def _rice_fields(z: np.ndarray, param: int) -> tuple[np.ndarray, np.ndarray]:
+    """Already-zigzagged residuals (computed once per subframe) as bit
+    fields: quotient zeros, the unary stop bit and the ``param`` low bits
+    of each residual are one field, the value ``(1 << param) | low`` in
+    ``q + 1 + param`` bits."""
+    z = np.asarray(z, dtype=np.int64)
+    return (1 << param) | (z & ((1 << param) - 1)), (z >> param) + 1 + param
 
 
 def _best_rice_param_z(z: np.ndarray, max_param: int = 14) -> int:
@@ -522,7 +495,7 @@ def _lpc_candidates(x: np.ndarray, bps: int, orders=(2, 4, 8)):
         yield (bits, order, z, param, q, shift)
 
 
-def _encode_subframe(w: _BitWriter, x: np.ndarray, bps: int) -> None:
+def _encode_subframe(w: BitWriter, x: np.ndarray, bps: int) -> None:
     """Best-of constant / fixed(0-4)+rice / LPC(2,4,8)+rice / verbatim for
     one channel block — the emission set now covers every decoder subframe
     family except wasted-bits packing."""
@@ -557,8 +530,7 @@ def _encode_subframe(w: _BitWriter, x: np.ndarray, bps: int) -> None:
         w.write(0, 1)
         w.write(1, 6)  # verbatim
         w.write(0, 1)
-        for v in x:
-            w.write(int(v), bps)
+        w.write_array(x, bps)
         return
     kind, order, z, param = best[1], best[2], best[3], best[4]
     w.write(0, 1)
@@ -567,18 +539,16 @@ def _encode_subframe(w: _BitWriter, x: np.ndarray, bps: int) -> None:
     else:
         w.write(32 + order - 1, 6)  # LPC, order
     w.write(0, 1)  # no wasted bits
-    for v in x[:order]:
-        w.write(int(v), bps)
+    w.write_array(x[:order], bps)
     if kind == "lpc":
         q, shift = best[5], best[6]
         w.write(_LPC_PRECISION - 1, 4)
         w.write(shift, 5)
-        for c in q:
-            w.write(int(c), _LPC_PRECISION)
+        w.write_array(q, _LPC_PRECISION)
     w.write(0, 2)   # residual method: 4-bit rice
     w.write(0, 4)   # partition order 0
     w.write(param, 4)  # _best_rice_param_z caps at 14 (15 is the escape)
-    _rice_write_z(w, z, param)
+    w.write_array(*_rice_fields(z, param))
 
 
 def _write_utf8_code(out: bytearray, val: int) -> None:
@@ -626,7 +596,7 @@ def streaminfo_block(
     import hashlib
 
     md5 = hashlib.md5(samples.astype("<i2").tobytes()).digest()
-    si = _BitWriter()
+    si = BitWriter()
     si.write(block_size, 16)
     si.write(block_size, 16)
     si.write(0, 24)
@@ -663,7 +633,7 @@ def encode_frames(samples: np.ndarray, block_size: int, stereo_mode: str):
         if bn == 0:
             break
         # frame header
-        hdr = _BitWriter()
+        hdr = BitWriter()
         hdr.write(0b11111111111110, 14)
         hdr.write(0, 1)
         hdr.write(0, 1)  # fixed blocksize stream
@@ -703,7 +673,7 @@ def encode_frames(samples: np.ndarray, block_size: int, stereo_mode: str):
         hb += (bn - 1).to_bytes(2, "big")
         hb.append(flac_crc8(bytes(hb)))
 
-        w = _BitWriter()
+        w = BitWriter()
         if ch == 1 or mode == "independent":
             for c in range(ch):
                 _encode_subframe(w, blk[:, c], bps)

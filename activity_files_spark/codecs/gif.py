@@ -12,7 +12,8 @@ rejected rather than silently degraded.
 Encoder
 -------
 Two valid-LZW strategies, both producing streams ANY standard decoder
-accepts:
+accepts. Each collects its codes and their widths and packs them once,
+LSB-first, through the shared packer (:func:`codecs.bits.pack`):
 
 - ``compress=True`` (default for fixtures): the real GIF-variant LZW —
   dictionary build, variable 9->12-bit codes, early-change width bumps,
@@ -20,9 +21,8 @@ accepts:
 - ``compress=False`` (the Arrow-batch fast path): the classic
   "uncompressed GIF" technique — every pixel a literal 9-bit code with a
   CLEAR every 253 literals so the dictionary never assigns a code that
-  would widen past 9 bits. The whole bitstream is then FIXED-width, so
-  the pack is one vectorized numpy ``packbits`` (bit-reversed per byte
-  for GIF's LSB-first order) — no per-pixel python at all.
+  would widen past 9 bits. The code stream is then built by array
+  slicing alone — no per-pixel python at all.
 
 Decoder
 -------
@@ -43,72 +43,33 @@ import struct
 
 import numpy as np
 
-_CLEAR_BASE = 256  # for 8-bit min code size
+from activity_files_spark.codecs.bits import pack
+
 _MAX_CODE = 4095  # 12-bit GIF LZW ceiling
-
-
-# ------------------------------------------------------------------ bits
-
-def _pack_lsb(codes: np.ndarray, width: int) -> bytes:
-    """Pack fixed-width codes LSB-first (GIF bit order), vectorized."""
-    n = codes.shape[0]
-    bits = np.zeros((n, width), dtype=np.uint8)
-    for b in range(width):
-        bits[:, b] = (codes >> b) & 1
-    flat = bits.reshape(-1)
-    pad = (-flat.shape[0]) % 8
-    if pad:
-        flat = np.concatenate([flat, np.zeros(pad, dtype=np.uint8)])
-    # packbits is MSB-first per byte; GIF wants LSB-first -> reverse each 8
-    return np.packbits(flat.reshape(-1, 8)[:, ::-1], axis=1).tobytes()
-
-
-class _BitWriter:
-    """Variable-width LSB-first bit accumulator for the real-LZW path."""
-
-    def __init__(self) -> None:
-        self._acc = 0
-        self._nbits = 0
-        self._out = bytearray()
-
-    def put(self, code: int, width: int) -> None:
-        self._acc |= code << self._nbits
-        self._nbits += width
-        while self._nbits >= 8:
-            self._out.append(self._acc & 0xFF)
-            self._acc >>= 8
-            self._nbits -= 8
-
-    def done(self) -> bytes:
-        if self._nbits:
-            self._out.append(self._acc & 0xFF)
-            self._acc = 0
-            self._nbits = 0
-        return bytes(self._out)
 
 
 # ------------------------------------------------------------------ LZW
 
 def _lzw_encode(indices: np.ndarray, min_code_size: int = 8) -> bytes:
-    """Real GIF-variant LZW over palette indices (python dict loop)."""
+    """Real GIF-variant LZW over palette indices (python dict loop); the
+    codes and their widths are collected and packed once."""
     clear = 1 << min_code_size
     eoi = clear + 1
-    bw = _BitWriter()
     width = min_code_size + 1
     table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
     nxt = eoi + 1
-    bw.put(clear, width)
+    codes, widths = [clear], [width]
     data = indices.tobytes()
     if not data:
-        bw.put(eoi, width)
-        return bw.done()
+        return pack([clear, eoi], [width, width], lsb_first=True)
     run = data[0:1]
     for i in range(1, len(data)):
         c = data[i : i + 1]
         if run + c in table:
             run += c
             continue
-        bw.put(table[run], width)
+        codes.append(table[run])
+        widths.append(width)
         table[run + c] = nxt
         # early-change: the width that can hold code `nxt` applies to the
         # NEXT emitted code as soon as `nxt` is assigned
@@ -116,19 +77,20 @@ def _lzw_encode(indices: np.ndarray, min_code_size: int = 8) -> bytes:
             width += 1
         nxt += 1
         if nxt > _MAX_CODE:
-            bw.put(clear, width)
+            codes.append(clear)
+            widths.append(width)
             table = {bytes([j]): j for j in range(clear)}
             nxt = eoi + 1
             width = min_code_size + 1
         run = c
-    bw.put(table[run], width)
-    bw.put(eoi, width)
-    return bw.done()
+    codes += [table[run], eoi]
+    widths += [width, width]
+    return pack(codes, widths, lsb_first=True)
 
 
 def _lzw_encode_literal(indices: np.ndarray, min_code_size: int = 8) -> bytes:
     """'Uncompressed GIF': all-literal codes with periodic CLEARs so the
-    code width stays fixed at min_code_size+1 — one vectorized pack."""
+    code width stays fixed at min_code_size+1 — no per-pixel python."""
     clear = 1 << min_code_size
     eoi = clear + 1
     width = min_code_size + 1
@@ -137,15 +99,10 @@ def _lzw_encode_literal(indices: np.ndarray, min_code_size: int = 8) -> bytes:
     # eoi+1; (2^width - 1) - (eoi + 1) + 1 = 253 symbols keep every
     # assigned code (and the widths they imply) strictly below 1<<width
     chunk = (1 << width) - eoi - 2
-    n = flat.shape[0]
-    n_chunks = (n + chunk - 1) // chunk if n else 0
-    parts = [np.array([clear], dtype=np.uint16)]
-    for k in range(n_chunks):
-        if k:
-            parts.append(np.array([clear], dtype=np.uint16))
-        parts.append(flat[k * chunk : (k + 1) * chunk])
-    parts.append(np.array([eoi], dtype=np.uint16))
-    return _pack_lsb(np.concatenate(parts), width)
+    # a CLEAR opens the stream and every chunk; an EOI closes it
+    codes = np.insert(flat, np.arange(0, max(len(flat), 1), chunk), clear)
+    codes = np.append(codes, eoi)
+    return pack(codes, np.full(len(codes), width), lsb_first=True)
 
 
 def _lzw_decode(data: bytes, min_code_size: int, n_expected: int) -> np.ndarray:

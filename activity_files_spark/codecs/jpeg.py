@@ -12,8 +12,9 @@ directions are implemented from the public spec:
   DQT payload in SQL), zigzag, DC-difference + AC run-length coding with
   the Annex-K Huffman tables, and a fully **vectorized bit-packer**: every
   (codeword, amplitude) pair in the scan becomes one (value, bitlength)
-  entry; a ragged-arange expansion + ``np.packbits`` emits the entropy
-  stream without a per-symbol python loop. Optional restart intervals
+  field, and the shared packer (:func:`codecs.bits.pack`, MSB-first, pad
+  bit 1) emits the entropy stream without a per-symbol python loop; byte
+  stuffing stays here. Optional restart intervals
   (DRI/RSTn) segment the scan exactly as the spec prescribes.
 - **Decoder** (:func:`decode_jpeg`): marker walk (APPn/COM tolerated, DQT /
   DHT / SOF0 / DRI / SOS), canonical Huffman tables expanded into 16-bit
@@ -42,6 +43,7 @@ from functools import lru_cache
 import numpy as np
 
 from . import _native
+from .bits import pack
 
 # ------------------------------------------------------------- constants
 # Zigzag order: position k in the scan -> row-major coefficient index.
@@ -343,21 +345,9 @@ def _stream_indices(geo, mx):
 
 # ---------------------------------------------------------------- encode
 
-def _pack_bits(vals: np.ndarray, lens: np.ndarray) -> bytes:
-    """Vectorized MSB-first bit packing + 1-padding + 0xFF byte stuffing."""
-    total = int(lens.sum())
-    if total == 0:
-        return b""
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    vrep = np.repeat(vals, lens)
-    j = np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
-    lrep = np.repeat(lens, lens)
-    bits = ((vrep >> (lrep - 1 - j)) & 1).astype(np.uint8)
-    pad = (-total) % 8
-    if pad:
-        bits = np.concatenate([bits, np.ones(pad, dtype=np.uint8)])
-    by = np.packbits(bits)
+def _scan_segment(val: np.ndarray, ln: np.ndarray) -> bytes:
+    """Entropy-coded segment: MSB-first, 1-padded, 0xFF byte-stuffed."""
+    by = np.frombuffer(pack(val, ln, pad=1), dtype=np.uint8)
     stuff = np.flatnonzero(by == 0xFF)
     if len(stuff):
         by = np.insert(by, stuff + 1, 0)
@@ -507,13 +497,13 @@ def encode_jpeg(
         pieces = []
         start = 0
         for i, b in enumerate(list(bounds) + [len(val)]):
-            pieces.append(_pack_bits(val[start:b], ln[start:b]))
+            pieces.append(_scan_segment(val[start:b], ln[start:b]))
             if b < len(val):
                 pieces.append(bytes([0xFF, 0xD0 + (i % 8)]))
             start = b
         scan = b"".join(pieces)
     else:
-        scan = _pack_bits(val, ln)
+        scan = _scan_segment(val, ln)
 
     # ---- headers
     out = [b"\xff\xd8"]  # SOI

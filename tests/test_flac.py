@@ -14,8 +14,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from activity_files_spark.codecs.bits import BitWriter
 from activity_files_spark.codecs.flac import (
-    _BitWriter,
     _write_utf8_code,
     _zigzag,
     encode_flac,
@@ -87,12 +87,12 @@ def test_compression_is_real():
 # ---------------------------------------------------------------------------
 
 
-def _stream_with_frame(frame_payload_bits: _BitWriter, n: int, ch: int,
+def _stream_with_frame(frame_payload_bits: BitWriter, n: int, ch: int,
                        chan_code: int | None = None) -> bytes:
     """Wrap subframe bits into a full single-frame FLAC stream (16-bit,
     8 kHz) with correct CRCs."""
     out = bytearray(b"fLaC")
-    si = _BitWriter()
+    si = BitWriter()
     si.write(n, 16)
     si.write(n, 16)
     si.write(0, 24)
@@ -107,7 +107,7 @@ def _stream_with_frame(frame_payload_bits: _BitWriter, n: int, ch: int,
     out += len(body).to_bytes(3, "big")
     out += body
 
-    hdr = _BitWriter()
+    hdr = BitWriter()
     hdr.write(0b11111111111110, 14)
     hdr.write(0, 2)
     hdr.write(7, 4)  # 16-bit blocksize-1 follows
@@ -126,14 +126,14 @@ def _stream_with_frame(frame_payload_bits: _BitWriter, n: int, ch: int,
     return bytes(out) + frame + struct.pack(">H", flac_crc16(frame))
 
 
-def _write_rice_residual(w: _BitWriter, res, param, plen=4, po=0):
+def _write_rice_residual(w: BitWriter, res, param, plen=4, po=0):
     w.write(0 if plen == 4 else 1, 2)
     w.write(po, 4)
     for part_res in res if po else [res]:
         w.write(param, plen)
         for u in _zigzag(np.asarray(part_res, dtype=np.int64)):
             u = int(u)
-            w.write_unary(u >> param)
+            w.write(1, (u >> param) + 1)
             if param:
                 w.write(u & ((1 << param) - 1), param)
 
@@ -147,7 +147,7 @@ def test_lpc_subframe_decodes():
     shift = 5
     res = [int(x[i]) - ((c0 * int(x[i - 1]) + c1 * int(x[i - 2])) >> shift)
            for i in range(2, n)]
-    w = _BitWriter()
+    w = BitWriter()
     w.write(0, 1)
     w.write(32 + (2 - 1), 6)  # LPC order 2
     w.write(0, 1)
@@ -167,7 +167,7 @@ def test_wasted_bits_shift_back():
     back (every sample a multiple of 4)."""
     n = 32
     x = (np.arange(n) * 4 - 64).astype(np.int64)
-    w = _BitWriter()
+    w = BitWriter()
     w.write(0, 1)
     w.write(1, 6)   # verbatim
     w.write(1, 1)   # wasted-bits flag
@@ -184,7 +184,7 @@ def test_rice2_partitions_with_escape():
     n = 32
     res1 = list(range(-8, 8))          # 16 residuals, first partition
     res2 = [200, -200] * 8             # second partition, raw 9-bit
-    w = _BitWriter()
+    w = BitWriter()
     w.write(0, 1)
     w.write(8, 6)  # fixed order 0 -> residuals ARE the samples
     w.write(0, 1)
@@ -193,7 +193,7 @@ def test_rice2_partitions_with_escape():
     w.write(3, 5)   # partition 1: param 3
     for u in _zigzag(np.asarray(res1, dtype=np.int64)):
         u = int(u)
-        w.write_unary(u >> 3)
+        w.write(1, (u >> 3) + 1)
         w.write(u & 7, 3)
     w.write(31, 5)  # partition 2: escape
     w.write(9, 5)   # 9 raw bits per residual
@@ -209,7 +209,7 @@ def test_right_side_channel_assignment():
     n = 16
     right = (np.arange(n) * 3 - 20).astype(np.int64)
     side = np.full(n, 5, dtype=np.int64)
-    w = _BitWriter()
+    w = BitWriter()
     # side subframe FIRST (bps+1), constant 5
     w.write(0, 1)
     w.write(0, 6)
