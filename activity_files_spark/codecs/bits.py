@@ -25,18 +25,21 @@ def pack(vals, lens, lsb_first: bool = False, pad: int = 0) -> bytes:
         return b""
     # fields of up to 32 bits only need each value's low 32 bits: int32
     # halves the memory traffic of the per-bit arrays
-    dt = np.int32 if lens.max() <= 32 and total < 2**31 else np.int64
+    wide = lens.max() > 32 or total >= 2**31
+    dt = np.int64 if wide else np.int32
     ends = np.cumsum(lens, dtype=dt)
     k = np.arange(total, dtype=dt)
     if lsb_first:
         shift = np.subtract(k, np.repeat(ends - lens.astype(dt), lens), out=k)
     else:
         shift = np.subtract(np.repeat(ends - 1, lens), k, out=k)
-    np.minimum(shift, np.iinfo(dt).bits - 1, out=shift)  # past the top: sign
+    if wide:
+        np.minimum(shift, 63, out=shift)  # past bit 63: the sign bit
     v = np.repeat(np.asarray(vals, dtype=np.int64).astype(dt), lens)
     np.right_shift(v, shift, out=v)
-    bits = np.full(total + (-total % 8), pad, dtype=np.uint8)
+    bits = np.empty(total + (-total % 8), dtype=np.uint8)
     np.bitwise_and(v, 1, out=bits[:total], casting="unsafe")
+    bits[total:] = pad
     return np.packbits(bits, bitorder="little" if lsb_first else "big").tobytes()
 
 

@@ -153,15 +153,6 @@ def _zigzag(res: np.ndarray) -> np.ndarray:
     return np.where(r >= 0, r << 1, (-r << 1) - 1)
 
 
-def _rice_fields(z: np.ndarray, param: int) -> tuple[np.ndarray, np.ndarray]:
-    """Already-zigzagged residuals (computed once per subframe) as bit
-    fields: quotient zeros, the unary stop bit and the ``param`` low bits
-    of each residual are one field, the value ``(1 << param) | low`` in
-    ``q + 1 + param`` bits."""
-    z = np.asarray(z, dtype=np.int64)
-    return (1 << param) | (z & ((1 << param) - 1)), (z >> param) + 1 + param
-
-
 def _best_rice_param_z(z: np.ndarray, max_param: int = 14) -> int:
     total = int(z.sum())
     n = max(1, len(z))
@@ -548,7 +539,8 @@ def _encode_subframe(w: BitWriter, x: np.ndarray, bps: int) -> None:
     w.write(0, 2)   # residual method: 4-bit rice
     w.write(0, 4)   # partition order 0
     w.write(param, 4)  # _best_rice_param_z caps at 14 (15 is the escape)
-    w.write_array(*_rice_fields(z, param))
+    # one field per residual: q zeros, the unary stop bit, the param low bits
+    w.write_array((1 << param) | (z & ((1 << param) - 1)), (z >> param) + 1 + param)
 
 
 def _write_utf8_code(out: bytearray, val: int) -> None:
