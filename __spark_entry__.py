@@ -4064,7 +4064,7 @@ def fit_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       set    for event_id % 7 == 0: reps = event_id % 20,
                                     weight = (event_id % 160) / 16
     """
-    from activity_files_spark.sources.decode import decode_records
+    from activity_files_spark.sources.decode import decode_records_kernel
     from activity_files_spark.sources.fit import fit_encode_records
     from activity_files_spark.sources.records import as_records
 
@@ -4092,7 +4092,7 @@ def fit_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("attrs"),
     ), "set")
     recs = _metric_track(ev).unionByName(lengths).unionByName(sets)
-    back = decode_records(fit_encode_records(recs), fmt="fit")
+    back = fit_encode_records(recs, then=[decode_records_kernel("fit")])
     agg = back.groupBy("activity_id").agg(
         *_metric_aggs(),
         F.count(F.when(F.col("kind") == "length", 1)).alias("n_lengths"),
@@ -4426,7 +4426,7 @@ def gpx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     significant digits -> %g prints and float() reparses bit-exactly);
     waypoint for event_id % 9 == 0; route point for event_id % 6 == 0.
     """
-    from activity_files_spark.sources.decode import decode_records
+    from activity_files_spark.sources.decode import decode_records_kernel
     from activity_files_spark.sources.gpx import gpx_encode_records
     from activity_files_spark.sources.records import as_records
 
@@ -4445,8 +4445,8 @@ def gpx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.create_map(F.lit("name"), F.lit("planned")).alias("attrs"),
     ), "route")
     recs = _metric_track(ev).unionByName(wpts).unionByName(rpts).unionByName(routes)
-    xml = gpx_encode_records(recs)
-    back = decode_records(xml, fmt="gpx", payload_col="xml")
+    back = gpx_encode_records(
+        recs, then=[decode_records_kernel("gpx", payload_col="xml")])
     agg = back.groupBy("activity_id").agg(
         *_metric_aggs(),
         F.count(F.when(F.col("kind") == "waypoint", 1)).alias("n_waypoints"),
@@ -5896,7 +5896,7 @@ def tcx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                    <= 6 significant digits so %g prints it exactly)
       lap distance_m = user_id                (int-valued double)
     """
-    from activity_files_spark.sources.decode import decode_records
+    from activity_files_spark.sources.decode import decode_records_kernel
     from activity_files_spark.sources.records import as_records
     from activity_files_spark.sources.tcx import tcx_encode_records
 
@@ -5918,12 +5918,12 @@ def tcx_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts"),
         F.max(F.substring("activity_id", 2, 20).cast("double")).alias("distance_m"),
     )
-    xml = tcx_encode_records(
+    back = tcx_encode_records(
         points.unionByName(as_records(chans, "channel"))
         .unionByName(as_records(laps, "lap")),
         sport="Running",
+        then=[decode_records_kernel("tcx", payload_col="xml")],
     )
-    back = decode_records(xml, fmt="tcx", payload_col="xml")
     agg = back.groupBy("activity_id").agg(
         F.count(F.when(F.col("kind") == "point", 1)).alias("n_points"),
         F.count(F.when((F.col("kind") == "channel")
@@ -5971,7 +5971,7 @@ def csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     float repr), parsed back through the payload parser (decode_records,
     unknown numeric column -> custom channel), and aggregated."""
     from activity_files_spark.sources.csvsrc import csv_encode_text_df
-    from activity_files_spark.sources.decode import decode_records
+    from activity_files_spark.sources.decode import decode_records_kernel
 
     ev = _activity_events(spark, sf_dir)
     metric = _roundtrip_metric()
@@ -5980,8 +5980,8 @@ def csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     chans = ev.select("activity_id", "ts",
                       F.lit("custom_metric").alias("channel"),
                       metric.alias("value"))
-    docs = csv_encode_text_df(points, chans)
-    back = decode_records(docs, fmt="csv", payload_col="text")
+    back = csv_encode_text_df(
+        points, chans, then=[decode_records_kernel("csv", payload_col="text")])
     agg = back.groupBy("activity_id").agg(
         *_metric_aggs(),
         F.count(F.when(F.col("kind") == "diag", 1)).alias("n_diags"),
@@ -6012,7 +6012,7 @@ def geojson_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     A hash match proves both document shapes round-trip: Points recover
     per-point channels, LineStrings recover the track and emit one lap
     (times present on first/last coordinate)."""
-    from activity_files_spark.sources.decode import decode_records
+    from activity_files_spark.sources.decode import decode_records_kernel
     from activity_files_spark.sources.geojson import (
         geojson_encode_points_records,
         geojson_encode_records,
@@ -6024,18 +6024,19 @@ def geojson_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     even = ev.filter(F.col("user_id") % 2 == 0)
     odd = ev.filter(F.col("user_id") % 2 == 1)
     pts_cols = ["activity_id", "ts", "lat", "lon"]
-    even_docs = geojson_encode_points_records(
+    decode = [decode_records_kernel("geojson", payload_col="text")]
+    even_back = geojson_encode_points_records(
         as_records(even.select(*pts_cols), "point").unionByName(as_records(
             even.select("activity_id", "ts",
                         F.lit("custom_metric").alias("channel"),
                         metric.alias("value")),
             "channel",
-        ))
+        )),
+        then=decode,
     )
-    odd_docs = geojson_encode_records(as_records(odd.select(*pts_cols), "point"))
-    back = decode_records(
-        even_docs.unionByName(odd_docs), fmt="geojson", payload_col="text"
-    )
+    odd_back = geojson_encode_records(
+        as_records(odd.select(*pts_cols), "point"), then=decode)
+    back = even_back.unionByName(odd_back)
     agg = back.groupBy("activity_id").agg(
         *_metric_aggs(),
         F.count(F.when(F.col("kind") == "lap", 1)).alias("n_laps"),

@@ -16,18 +16,19 @@ property-tested against this one (``tests/test_jpeg.py`` forces it by
 setting ``_lib = False``).
 
 The .so is cached in the system temp dir keyed by a hash of the C
-source, so the many Spark python workers on one box compile at most
-once and recompile automatically when the kernel changes.  No
-third-party packages are involved (nothing pip/apt-installed) — just
-ctypes + cc.
+source (``activity_files_spark/_tmpcache.py``: loaded only if this uid
+owns it and nobody else may write it), so the many Spark python workers
+on one box compile at most once and recompile automatically when the
+kernel changes.  No third-party packages are involved (nothing
+pip/apt-installed) — just ctypes + cc.
 """
 from __future__ import annotations
 
 import ctypes
 import hashlib
-import os
 import subprocess
-import tempfile
+
+from activity_files_spark._tmpcache import cached
 
 _C_SRC = r"""
 #include <stdint.h>
@@ -129,29 +130,21 @@ int64_t afs_decode_seg(const uint8_t *bits, int64_t total_bits,
 """
 
 _lib = None  # None = not tried, False = unavailable, else CDLL
+SO_NAME = f"afs_jpeg_{hashlib.sha256(_C_SRC.encode()).hexdigest()[:16]}.so"
+
+
+def _compile(so_path: str) -> None:
+    c_path = so_path[:-3] + ".c"
+    with open(c_path, "w") as f:
+        f.write(_C_SRC)
+    subprocess.run(
+        ["cc", "-O3", "-shared", "-fPIC", "-o", so_path, c_path],
+        check=True, capture_output=True, timeout=120,
+    )
 
 
 def _build() -> ctypes.CDLL:
-    tag = hashlib.sha256(_C_SRC.encode()).hexdigest()[:16]
-    so_path = os.path.join(tempfile.gettempdir(), f"afs_jpeg_{tag}.so")
-    if not os.path.exists(so_path):
-        with tempfile.NamedTemporaryFile("w", suffix=".c", delete=False) as f:
-            f.write(_C_SRC)
-            c_path = f.name
-        tmp_so = c_path[:-2] + ".so"
-        try:
-            subprocess.run(
-                ["cc", "-O3", "-shared", "-fPIC", "-o", tmp_so, c_path],
-                check=True, capture_output=True, timeout=120,
-            )
-            os.replace(tmp_so, so_path)  # atomic: concurrent workers race safely
-        finally:
-            for p in (c_path, tmp_so):
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
-    lib = ctypes.CDLL(so_path)
+    lib = ctypes.CDLL(cached(SO_NAME, _compile))
     P64 = ctypes.POINTER(ctypes.c_int64)
     PU16 = ctypes.POINTER(ctypes.c_uint16)
     lib.afs_decode_seg.restype = ctypes.c_int64

@@ -19,13 +19,19 @@ but moves the group loop INSIDE one mapInPandas pass per partition:
 Kernels keep sorting their own group internally (they already did under
 applyInPandas, whose input order is likewise unspecified), so no
 partition-level sort is needed.
+
+``then`` chains consumer kernels behind the group kernel in the same
+``mapInPandas`` (operators/kernels.py::map_kernels), so an encoder and the
+decoder that reads its documents back share one Python worker per task.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
+
+from activity_files_spark.operators.kernels import Kernel, map_kernels
 
 
 def grouped_apply(
@@ -33,10 +39,12 @@ def grouped_apply(
     key: str | list[str],
     kernel: Callable,
     schema: str,
+    then: Sequence[Kernel] = (),
 ) -> DataFrame:
     """Drop-in replacement for ``df.groupBy(key).applyInPandas(lambda _k,
     pdf: kernel(pdf), schema)`` — same per-group frames in, same rows out,
-    one Python/Arrow round-trip per partition instead of per group."""
+    one Python/Arrow round-trip per partition instead of per group.
+    ``then``: kernels that consume those rows in the same node."""
     keys = [key] if isinstance(key, str) else list(key)
     nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
@@ -59,4 +67,4 @@ def grouped_apply(
         if outs:
             yield pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
 
-    return df.repartition(nparts, *keys).mapInPandas(part, schema)
+    return map_kernels(df.repartition(nparts, *keys), Kernel(part, schema), *then)

@@ -4,6 +4,15 @@ Local testing runs on ``local[N]`` but every config choice is made for a
 multi-executor cluster at 100 TB scale: AQE on (dynamic coalescing + skew-join
 splitting), Arrow enabled for the pandas-UDF kernels, and a shuffle-partition
 count that callers override per data scale.
+
+On a local master whose Python workers can import this package (it is found
+in the working directory or on ``$PYTHONPATH``), the workers are forked from
+``activity_files_spark/_daemon.py``: pyspark's daemon run from compiled
+bytecode with numpy, pandas and pyarrow already imported, so a session's
+first Python job does not pay to compile pyspark and to import the Arrow
+stack in every worker. Elsewhere (a cluster, or ``spark-submit --py-files``,
+whose workers receive the package only per task) Spark's own daemon runs.
+``extra_conf`` can set ``spark.python.daemon.module`` either way.
 """
 
 from __future__ import annotations
@@ -18,6 +27,25 @@ def usable_cpus() -> int:
     if hasattr(os, "sched_getaffinity"):
         return len(os.sched_getaffinity(0))
     return os.cpu_count()
+
+
+def _worker_daemon(master: str) -> dict[str, str]:
+    """``spark.python.daemon.module`` for ``master`` when its workers can
+    import the package: a ``local``/``local[N]`` master (its workers run in
+    this JVM's working directory, unlike local-cluster executors), and the
+    package's root is that directory or on ``$PYTHONPATH``, which a JVM
+    launched from this process hands its workers. A JVM that launched this
+    driver (spark-submit) hands them its own ``$PYTHONPATH``, not the
+    driver's."""
+    if not (master == "local" or master.startswith("local[")):
+        return {}
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    dirs = [os.getcwd()]
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        dirs += os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if root not in {os.path.realpath(d) for d in dirs if d}:
+        return {}
+    return {"spark.python.daemon.module": "activity_files_spark._daemon"}
 
 
 def get_spark(
@@ -57,6 +85,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_worker_daemon(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import io
 import warnings
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 FIXED_COLS = ["timestamp", "latitude", "longitude", "elevation"]
 KNOWN_CHANNELS = ["heart_rate", "cadence", "power", "temperature", "distance", "speed"]
 from activity_files_spark.operators.grouped import grouped_apply
+from activity_files_spark.operators.kernels import Kernel
 
 
 def parse_csv(activity_id: str, text: str) -> pd.DataFrame:
@@ -151,7 +153,9 @@ def csv_encode_df(points: DataFrame, channels: DataFrame) -> DataFrame:
     return _csv_wide(points, channels).orderBy("activity_id", "timestamp")
 
 
-def csv_encode_text_df(points: DataFrame, channels: DataFrame) -> DataFrame:
+def csv_encode_text_df(
+    points: DataFrame, channels: DataFrame, then: Sequence[Kernel] = (),
+) -> DataFrame:
     """One CSV document per activity (the reference's per-file text
     contract, csv_encoder.dart:23-93): the wide exact-ts pivot from
     :func:`csv_encode_df` serialized with its header row. Floats print
@@ -166,4 +170,4 @@ def csv_encode_text_df(points: DataFrame, channels: DataFrame) -> DataFrame:
         return pd.DataFrame([{"activity_id": pdf["activity_id"].iloc[0],
                               "text": buf.getvalue()}])
 
-    return grouped_apply(wide, "activity_id", kernel, "activity_id string, text string")
+    return grouped_apply(wide, "activity_id", kernel, "activity_id string, text string", then)

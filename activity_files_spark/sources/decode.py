@@ -17,6 +17,7 @@ import warnings
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from activity_files_spark.operators.kernels import Kernel, map_kernels
 from activity_files_spark.sources.csvsrc import parse_csv
 from activity_files_spark.sources.detect import decode_text, detect_format_py
 from activity_files_spark.sources.fit import parse_fit
@@ -71,6 +72,19 @@ def decode_records(
     extension wins). ``charset``: Python codec for text payloads without a
     BOM. ``payload_col``: binary, or string for text formats (the encoders
     write ``xml``, ``text`` or ``payload``)."""
+    return map_kernels(
+        files.select("activity_id", payload_col),
+        decode_records_kernel(fmt, charset, payload_col),
+    )
+
+
+def decode_records_kernel(
+    fmt: str | None = None,
+    charset: str = "utf-8",
+    payload_col: str = "payload",
+) -> Kernel:
+    """:func:`decode_records` as a kernel, to chain behind the kernel that
+    writes the documents (an encoder's ``then=``); arguments as there."""
     if fmt is not None and fmt not in PARSERS:
         raise ValueError(f"unknown format {fmt!r} (choose from {sorted(PARSERS)})")
 
@@ -96,4 +110,4 @@ def decode_records(
                     pd.concat([f for f in frames if len(f)], ignore_index=True)
                 )
 
-    return files.select("activity_id", payload_col).mapInPandas(kernel, RECORD_SCHEMA)
+    return Kernel(kernel, RECORD_SCHEMA)

@@ -40,6 +40,7 @@ units of parallelism (the reference caps payloads at 64 MB).
 from __future__ import annotations
 
 import struct
+from collections.abc import Sequence
 from typing import NamedTuple
 
 import numpy as np
@@ -49,6 +50,7 @@ from pyspark.sql import DataFrame
 from activity_files_spark.codecs.crc import fit_crc16
 from activity_files_spark.functions.geo import FIT_EPOCH_UNIX, FIT_TS_MAX, SEMICIRCLE_DEG
 from activity_files_spark.operators.grouped import grouped_apply
+from activity_files_spark.operators.kernels import Kernel
 
 # FIT CRC-16 nibble table (public FIT SDK algorithm; fit_crc.dart:7-46),
 # kept as the reference twin of codecs.crc.fit_crc16
@@ -1623,7 +1625,7 @@ def _encode_activity_pdf(aid: str, pdf: pd.DataFrame) -> bytes:
     return _encode_suffix(body, laps, lengths, sets, events, meta, last_raw)
 
 
-def fit_encode_records(records: DataFrame) -> DataFrame:
+def fit_encode_records(records: DataFrame, then: Sequence[Kernel] = ()) -> DataFrame:
     """Unified record stream (RECORD_SCHEMA) -> per-activity FIT payloads.
 
     Encodes the full message set: points + channels (native fields or
@@ -1641,4 +1643,5 @@ def fit_encode_records(records: DataFrame) -> DataFrame:
         aid = pdf["activity_id"].iloc[0]
         return pd.DataFrame([{"activity_id": aid, "payload": _encode_activity_pdf(aid, pdf)}])
 
-    return grouped_apply(records, "activity_id", kernel, "activity_id string, payload binary")
+    return grouped_apply(records, "activity_id", kernel, "activity_id string, payload binary",
+                         then)

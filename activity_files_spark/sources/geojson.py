@@ -22,12 +22,14 @@ regenerated coordinateProperties.times (:84-88) and computed properties
 from __future__ import annotations
 
 import json
+from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from activity_files_spark.sources.gpx import _iso, _parse_time
 from activity_files_spark.operators.grouped import grouped_apply
+from activity_files_spark.operators.kernels import Kernel
 
 
 def parse_geojson(activity_id: str, text: str) -> list[dict]:
@@ -201,7 +203,7 @@ def encode_geojson(points: list[dict], meta: dict | None = None) -> str:
     return json.dumps(doc, sort_keys=True)
 
 
-def geojson_encode_records(records: DataFrame) -> DataFrame:
+def geojson_encode_records(records: DataFrame, then: Sequence[Kernel] = ()) -> DataFrame:
     """Unified record stream (RECORD_SCHEMA) -> per-activity LineString
     documents over the point rows."""
     from activity_files_spark.sources.records import sorted_kind_idx, take_records
@@ -217,7 +219,7 @@ def geojson_encode_records(records: DataFrame) -> DataFrame:
 
     # only the fields the kernel reads cross into Python (see tcx_encode_records)
     used = records.select("activity_id", "kind", "ts", "lat", "lon", "ele")
-    return grouped_apply(used, "activity_id", kernel, "activity_id string, text string")
+    return grouped_apply(used, "activity_id", kernel, "activity_id string, text string", then)
 
 
 def encode_geojson_points(
@@ -244,7 +246,9 @@ def encode_geojson_points(
     return json.dumps({"type": "FeatureCollection", "features": feats}, sort_keys=True)
 
 
-def geojson_encode_points_records(records: DataFrame) -> DataFrame:
+def geojson_encode_points_records(
+    records: DataFrame, then: Sequence[Kernel] = (),
+) -> DataFrame:
     """Unified record stream (RECORD_SCHEMA) -> per-activity Points-variant
     documents (round-trips through the Point-collection parser, including
     channels)."""
@@ -268,4 +272,4 @@ def geojson_encode_points_records(records: DataFrame) -> DataFrame:
     used = records.select(
         "activity_id", "kind", "ts", "lat", "lon", "ele", "channel", "value",
     )
-    return grouped_apply(used, "activity_id", kernel, "activity_id string, text string")
+    return grouped_apply(used, "activity_id", kernel, "activity_id string, text string", then)

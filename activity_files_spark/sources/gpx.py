@@ -29,6 +29,7 @@ import io
 import json
 import math
 import xml.etree.ElementTree as ET
+from collections.abc import Sequence
 from datetime import datetime, timezone
 
 import pandas as pd
@@ -50,6 +51,7 @@ TPX_CHANNELS = {
     "depth": "depth",
 }
 from activity_files_spark.operators.grouped import grouped_apply
+from activity_files_spark.operators.kernels import Kernel
 
 
 def _local(tag: str) -> str:
@@ -504,6 +506,7 @@ def gpx_encode_records(
     version: str = "1.1",
     coord_dp: int = 6,
     ele_dp: int = 2,
+    then: Sequence[Kernel] = (),
 ) -> DataFrame:
     """Unified record stream (RECORD_SCHEMA) -> per-activity GPX documents,
     including waypoints, routes (kind=route/route_point, gpx_parser.dart:
@@ -548,4 +551,5 @@ def gpx_encode_records(
                          version=version, coord_dp=coord_dp, ele_dp=ele_dp)
         return pd.DataFrame([{"activity_id": pdf["activity_id"].iloc[0], "xml": xml}])
 
-    return grouped_apply(records, "activity_id", kernel, "activity_id string, xml string")
+    return grouped_apply(records, "activity_id", kernel, "activity_id string, xml string",
+                         then)

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import io
 import xml.etree.ElementTree as ET
+from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -28,6 +29,7 @@ from activity_files_spark.sources.gpx import _local, _parse_time, _xml_escape
 
 TPX_TCX_CHANNELS = {"speed": "speed", "watts": "power", "runcadence": "cadence"}
 from activity_files_spark.operators.grouped import grouped_apply
+from activity_files_spark.operators.kernels import Kernel
 
 
 def _child_text(el, name: str) -> str | None:
@@ -262,6 +264,7 @@ def encode_tcx(points, channels_by_ts, laps, sport: str = "Running",
 
 def tcx_encode_records(
     records: DataFrame, sport: str = "Running", version: str = "2",
+    then: Sequence[Kernel] = (),
 ) -> DataFrame:
     """Unified record stream (RECORD_SCHEMA) -> per-activity TCX documents:
     points, channels and laps; other record kinds are ignored."""
@@ -292,4 +295,4 @@ def tcx_encode_records(
         "activity_id", "kind", "ts", "lat", "lon", "ele", "channel", "value",
         "start_ts", "end_ts", "distance_m",
     )
-    return grouped_apply(used, "activity_id", kernel, "activity_id string, xml string")
+    return grouped_apply(used, "activity_id", kernel, "activity_id string, xml string", then)

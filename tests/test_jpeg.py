@@ -157,6 +157,36 @@ def _decode_pure_python(data):
         return decode_jpeg(data)
 
 
+def test_planted_cache_file_is_not_loaded(tmp_path, monkeypatch):
+    """A file at the kernel's cache name that anyone may write is never
+    handed to ctypes: the kernel is rebuilt, and decode gives the pixels
+    of the pure-python walk."""
+    import ctypes
+    import tempfile
+
+    from activity_files_spark.codecs import _native
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    planted = tmp_path / _native.SO_NAME
+    planted.write_bytes(b"planted")
+    planted.chmod(0o666)
+    loaded = []
+    real_cdll = ctypes.CDLL
+
+    def cdll(path, *args, **kwargs):
+        with open(path, "rb") as f:
+            loaded.append(f.read(len(b"planted")))
+        return real_cdll(path, *args, **kwargs)
+
+    monkeypatch.setattr(ctypes, "CDLL", cdll)
+    monkeypatch.setattr(_native, "_lib", None)
+    px = np.random.default_rng(7).integers(0, 256, (24, 40, 3), dtype=np.uint8)
+    data = encode_jpeg(px, quality=90)
+    assert np.array_equal(decode_jpeg(data), _decode_pure_python(data))
+    assert _native._lib, "the kernel was not rebuilt"
+    assert loaded and b"planted" not in loaded
+
+
 def test_native_kernel_available():
     # the sandbox ships cc; if this ever fails the fallback still keeps
     # decode correct, but the perf tier should know the kernel vanished

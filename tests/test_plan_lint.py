@@ -45,15 +45,7 @@ FORBIDDEN = (
 PYTHON_NODE = re.compile(r"InPandas|InArrow|Python")
 
 # query -> (Python nodes one task of its worst stage runs, why they stay)
-_ROUND_TRIP = (2, "record round trip (encode kernel -> decode kernel): "
-                  "ROADMAP direction 1 rewrites all five")
-CHAINED_PYTHON = {
-    "csv_roundtrip_stats": _ROUND_TRIP,
-    "fit_roundtrip_stats": _ROUND_TRIP,
-    "geojson_roundtrip_stats": _ROUND_TRIP,
-    "gpx_roundtrip_stats": _ROUND_TRIP,
-    "tcx_roundtrip_stats": _ROUND_TRIP,
-}
+CHAINED_PYTHON: dict[str, tuple[int, str]] = {}
 
 _QUERY_NAMES = sorted(E.queries())
 

@@ -71,6 +71,20 @@ def test_unchanged_archive_is_not_read_again(zipped, monkeypatch):
 
 
 @eager_only
+def test_new_importer_is_read_again_only_when_rewritten(zipped, monkeypatch):
+    # the importer read the archive when it was built, after the backport
+    # was installed: that read counts, so the first invalidation skips it
+    archive, _ = zipped
+    reads = _count_reads(monkeypatch, archive)
+    importlib.invalidate_caches()
+    assert reads == []
+    _write_zip(archive, {"zi_first.py": "VALUE = 1\n", "zi_second.py": "VALUE = 2\n"})
+    importlib.invalidate_caches()
+    assert len(reads) == 1
+    assert importlib.import_module("zi_second").VALUE == 2
+
+
+@eager_only
 def test_rewritten_archive_serves_its_new_member(zipped):
     archive, _ = zipped
     importlib.invalidate_caches()
