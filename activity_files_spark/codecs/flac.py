@@ -153,15 +153,13 @@ def _zigzag(res: np.ndarray) -> np.ndarray:
     return np.where(r >= 0, r << 1, (-r << 1) - 1)
 
 
-def _best_rice_param_z(z: np.ndarray, max_param: int = 14) -> int:
-    total = int(z.sum())
-    n = max(1, len(z))
-    best_p, best_bits = 0, None
-    for p in range(max_param + 1):
-        bits = n * (p + 1) + (total >> p)
-        if best_bits is None or bits < best_bits:
-            best_p, best_bits = p, bits
-    return best_p
+def _rice_size(res: np.ndarray, max_param: int = 14) -> tuple[int, int]:
+    """(bits, param) of the cheapest partition-order-0 rice code of the
+    residuals ``res``, sized without zigzagging them: the zigzag of v is
+    2|v| - (v < 0), so the codes sum to 2*sum|v| - #negatives."""
+    total = 2 * int(np.abs(res).sum()) - int((res < 0).sum())
+    n = max(1, len(res))
+    return min((n * (p + 1) + (total >> p), p) for p in range(max_param + 1))
 
 
 # ---------------------------------------------------------------------------
@@ -435,7 +433,7 @@ def _lpc_candidates(x: np.ndarray, bps: int, orders=(2, 4, 8)):
     """LPC analysis for one block: autocorrelation -> Levinson-Durbin ->
     quantized integer coefficients at each candidate order, with the exact
     integer residuals the decoder will reconstruct from. Yields
-    (bits_estimate, order, z, param, qcoefs, shift) tuples."""
+    (bits_estimate, order, res, param, qcoefs, shift) tuples."""
     n = len(x)
     max_order = max(orders)
     if n <= 2 * max_order:
@@ -477,13 +475,8 @@ def _lpc_candidates(x: np.ndarray, bps: int, orders=(2, 4, 8)):
         for j in range(order):
             pred += q[j] * x[order - 1 - j : n - 1 - j]
         res = x[order:] - (pred >> shift)
-        z = _zigzag(res)
-        param = _best_rice_param_z(z)
-        bits = (
-            order * bps + 4 + 5 + order * _LPC_PRECISION
-            + len(z) * (param + 1) + int(z.sum() >> param)
-        )
-        yield (bits, order, z, param, q, shift)
+        bits, param = _rice_size(res)
+        yield (order * bps + 4 + 5 + order * _LPC_PRECISION + bits, order, res, param, q, shift)
 
 
 def _encode_subframe(w: BitWriter, x: np.ndarray, bps: int) -> None:
@@ -498,24 +491,22 @@ def _encode_subframe(w: BitWriter, x: np.ndarray, bps: int) -> None:
         w.write(0, 1)
         w.write(int(x[0]), bps)
         return
-    # pick the predictor whose rice-coded size estimate is smallest;
-    # zigzag each candidate residual ONCE and reuse it for param choice,
-    # size estimate, and the final write
-    best = None  # (bits_estimate, kind, order, z, param[, qcoefs, shift])
+    # pick the predictor whose rice-coded size estimate is smallest; only
+    # the winner's residuals are zigzagged, for the write
+    best = None  # (bits_estimate, kind, order, res, param[, qcoefs, shift])
     for order, coefs in _FIXED_COEFS.items():
         if n <= order:
             continue
         res = x[order:].copy()
         for j, c in enumerate(coefs):
             res = res - c * x[order - 1 - j : n - 1 - j]
-        z = _zigzag(res)
-        param = _best_rice_param_z(z)
-        bits = order * bps + len(z) * (param + 1) + int(z.sum() >> param)
+        bits, param = _rice_size(res)
+        bits += order * bps
         if best is None or bits < best[0]:
-            best = (bits, "fixed", order, z, param)
-    for bits, order, z, param, q, shift in _lpc_candidates(x, bps):
+            best = (bits, "fixed", order, res, param)
+    for bits, order, res, param, q, shift in _lpc_candidates(x, bps):
         if best is None or bits < best[0]:
-            best = (bits, "lpc", order, z, param, q, shift)
+            best = (bits, "lpc", order, res, param, q, shift)
     verbatim_bits = n * bps
     if best is None or best[0] >= verbatim_bits:
         w.write(0, 1)
@@ -523,7 +514,7 @@ def _encode_subframe(w: BitWriter, x: np.ndarray, bps: int) -> None:
         w.write(0, 1)
         w.write_array(x, bps)
         return
-    kind, order, z, param = best[1], best[2], best[3], best[4]
+    kind, order, z, param = best[1], best[2], _zigzag(best[3]), best[4]
     w.write(0, 1)
     if kind == "fixed":
         w.write(8 + order, 6)
@@ -538,7 +529,7 @@ def _encode_subframe(w: BitWriter, x: np.ndarray, bps: int) -> None:
         w.write_array(q, _LPC_PRECISION)
     w.write(0, 2)   # residual method: 4-bit rice
     w.write(0, 4)   # partition order 0
-    w.write(param, 4)  # _best_rice_param_z caps at 14 (15 is the escape)
+    w.write(param, 4)  # _rice_size caps at 14 (15 is the escape)
     # one field per residual: q zeros, the unary stop bit, the param low bits
     w.write_array((1 << param) | (z & ((1 << param) - 1)), (z >> param) + 1 + param)
 

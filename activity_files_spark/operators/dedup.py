@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from activity_files_spark.operators.materialize import materialize
+from activity_files_spark.operators.similarity import _bucket_pairs
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -81,7 +82,7 @@ def minhash_signature(
 def lsh_candidate_pairs(
     sig: DataFrame, bands: int, rows_per_band: int, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Self-join on equal band signatures -> distinct (id_a < id_b) pairs."""
+    """Self-join on equal band signatures -> distinct (doc_a < doc_b) pairs."""
     band_cols = []
     for b in range(bands):
         parts = [F.col(f"mh{b * rows_per_band + r}").cast("string") for r in range(rows_per_band)]
@@ -89,22 +90,9 @@ def lsh_candidate_pairs(
             F.struct(F.lit(b).alias("band"), F.concat_ws("|", *parts).alias("sig"))
         )
     banded = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bs")
-    ).select(id_col, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .distinct()
-    )
+        F.col(id_col).alias("doc_a"), F.explode(F.array(*band_cols)).alias("bs")
+    ).select("doc_a", "bs.band", "bs.sig")
+    return _bucket_pairs(banded, ["band", "sig"], "doc_a", "doc_b")
 
 
 def jaccard_pairs(
@@ -145,10 +133,13 @@ def near_dup_pairs(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """MinHash -> banded LSH -> exact-Jaccard verify (>= threshold)."""
-    # lazy (r06): the distinct shingle set feeds the signature build AND
-    # three arms of the Jaccard verify — without it the full tokenize+md5
-    # shingling re-executes per reference (4 scans in the r05 plan)
-    sh = materialize(shingles(df, n=n, text_col=text_col, id_col=id_col), eager=False)
+    # the distinct shingle set feeds the signature build AND three arms of
+    # the Jaccard verify — without a checkpoint the full tokenize+md5
+    # shingling re-executes per reference (4 scans in the r05 plan). Eager:
+    # a lazy checkpoint fills while the later job runs, and a JVM GC in
+    # that window drops the source plan's metric accumulators, which the
+    # scheduler then logs as "non-existent accumulator" errors per task
+    sh = materialize(shingles(df, n=n, text_col=text_col, id_col=id_col), eager=True)
     sig = minhash_signature(sh, k=bands * rows_per_band, id_col=id_col)
     cand = lsh_candidate_pairs(sig, bands, rows_per_band, id_col=id_col)
     return jaccard_pairs(cand, sh, id_col=id_col).filter(F.col("jaccard") >= threshold)
@@ -295,7 +286,7 @@ def hamming_near_dup_pairs(
     # on the two doc queries with bit-identical pairs (r06)
     codes = materialize(df.select(F.col(id_col), F.col(code_col)), eager=False)
     bands = codes.select(
-        id_col,
+        F.col(id_col).alias("id_a"),
         F.explode(F.array(*[
             F.struct(
                 F.lit(b).alias("band"),
@@ -304,22 +295,11 @@ def hamming_near_dup_pairs(
             )
             for b in range(n_bands)
         ])).alias("bc"),
-    ).select(id_col, F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk"))
-    a = bands.select(F.col(id_col).alias("id_a"), "band", "chunk")
-    b = bands.select(F.col(id_col).alias("id_b"), "band", "chunk")
-    pairs = (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    ).select("id_a", "bc.band", "bc.chunk")
     ca = codes.select(F.col(id_col).alias("id_a"), F.col(code_col).alias("_ca"))
     cb = codes.select(F.col(id_col).alias("id_b"), F.col(code_col).alias("_cb"))
     return (
-        pairs.join(ca, "id_a").join(cb, "id_b")
-        .select(
-            "id_a", "id_b",
-            hamming64(F.col("_ca"), F.col("_cb")).alias("hamming"),
-        )
+        _bucket_pairs(bands, ["band", "chunk"], "id_a", "id_b", attach=(ca, cb))
+        .select("id_a", "id_b", hamming64(F.col("_ca"), F.col("_cb")).alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )

@@ -1,4 +1,4 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<double>).
 
 - :func:`cosine_topk` — brute-force exact top-k (native aggregate/zip_with
   dot products; broadcast query side). The correctness baseline.
@@ -7,19 +7,22 @@
   — no RNG), bucket equi-join, exact cosine within bucket + multiprobe on
   Hamming-1 neighbors. The scale path: at 10^12 rows the bucket join
   replaces the cross join; recall < 1 is the documented tradeoff.
+- :func:`ivf_topk` — the same candidate-then-rank shape over coarse
+  centroid inverted lists.
 
-PRECONDITION for the approximate paths (lsh/ivf/cosine_dup_pairs_lsh):
-id columns are PRIMARY KEYS of their tables. Candidate pairs dedup on
-bare ids and re-attach vectors by an id equi-join (keeping the wide
-arrays out of the candidate shuffles); a duplicated id would fan each
-pair back out to one scored row per duplicate vector.
+The approximate paths (and the banded MinHash / Hamming miners of
+``dedup.py``) share three private helpers: :func:`_project` (the exact
+integer projection kernel behind the LSH signatures and IVF assignments),
+:func:`_bucket_pairs` (bucket equi-join, then dedup on bare ids, then
+re-attach) and :func:`_topk` (exact cosine, then the one top-k rule).
 
-Both keep vectors as array<double> columns — dot products run as
-F.aggregate folds inside codegen; no Python in the row path.
+Vectors stay array<double> columns — dot products run as F.aggregate folds
+inside codegen; no Python in the row path.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -34,8 +37,80 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
+def _cosine(a, b):
+    """Exact cosine of two array<double> columns: left-to-right folds, the
+    order of the oracles' ``list_dot_product``."""
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
 def as_double_vec(col):
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _sides(queries, items, q_id, i_id, vec, exclude_same_id):
+    """The query and item sides of a top-k search as ``(_qid, _qv)`` and
+    ``(_iid, _iv)`` — internal names, so a self-join of one table has no
+    ambiguous references — and whether pairs of equal ids are dropped
+    (``exclude_same_id``, default: iff the id column names are identical)."""
+    q = queries.select(F.col(q_id).alias("_qid"), F.col(vec).alias("_qv"))
+    it = items.select(F.col(i_id).alias("_iid"), F.col(vec).alias("_iv"))
+    return q, it, q_id == i_id if exclude_same_id is None else exclude_same_id
+
+
+def _rank(scored: DataFrame, k: int, q_id: str, i_id: str) -> DataFrame:
+    """The one top-k rule: per query, ``cos`` descending, ties to the lower
+    item id; keep ``rank <= k``."""
+    w = Window.partitionBy(q_id).orderBy(F.col("cos").desc(), F.col(i_id).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(q_id, i_id, "cos", "rank")
+    )
+
+
+def _topk(cand: DataFrame, k: int, q_id: str, i_id: str) -> DataFrame:
+    """Exact cosine of candidate ``(_qid, _qv, _iid, _iv)`` rows, ranked."""
+    return _rank(cand.select(
+        F.col("_qid").alias(q_id), F.col("_iid").alias(i_id),
+        _cosine(F.col("_qv"), F.col("_iv")).alias("cos"),
+    ), k, q_id, i_id)
+
+
+def _bucket_pairs(
+    a: DataFrame,
+    keys: list[str],
+    id_a: str,
+    id_b: str,
+    b: DataFrame | None = None,
+    exclude_same_id: bool = False,
+    attach: tuple[DataFrame, DataFrame] | None = None,
+) -> DataFrame:
+    """Distinct candidate pairs ``(id_a, id_b)``: the bucket rows of ``a``
+    (``id_a`` and ``keys``) and ``b`` (``id_b`` and ``keys``) that share a
+    bucket key. ``b=None`` self-joins ``a`` and keeps each unordered pair
+    once (``id_a < id_b``); otherwise ``exclude_same_id`` drops equal ids.
+    ``attach`` re-joins a ``(id_a, ...)`` and a ``(id_b, ...)`` frame to
+    the distinct pairs.
+
+    Only ids and bucket keys cross the join and dedup exchanges: a pair
+    colliding in many buckets would otherwise shuffle its vectors or codes
+    once per collision (at 10^12 rows x d=512 they dominate shuffle volume
+    ~100:1), so payloads re-attach once per side after the dedup.
+
+    PRECONDITION: ids are PRIMARY KEYS of their tables. A duplicated id
+    would fan each pair back out at the re-attach, to one row per duplicate
+    payload."""
+    if b is None:
+        b = a.select(*[F.col(c).alias(id_b) if c == id_a else c for c in a.columns])
+        cand = a.join(b, keys).filter(F.col(id_a) < F.col(id_b))
+    else:
+        cand = a.join(b, keys)
+        if exclude_same_id:
+            cand = cand.filter(F.col(id_a) != F.col(id_b))
+    pairs = cand.select(id_a, id_b).dropDuplicates([id_a, id_b])
+    if attach is not None:
+        pairs = pairs.join(attach[0], id_a).join(attach[1], id_b)
+    return pairs
 
 
 def cosine_topk(
@@ -53,25 +128,11 @@ def cosine_topk(
     both sides come from the same table). Defaults to True iff the two id
     column names are identical; pass explicitly when ids share a namespace
     under different column names."""
-    if exclude_same_id is None:
-        exclude_same_id = q_id == i_id
-    # internal renames avoid ambiguous references in the self-join case
-    q = queries.select(F.col(q_id).alias("_qid"), F.col(vec).alias("_qv"))
-    it = items.select(F.col(i_id).alias("_iid"), F.col(vec).alias("_iv"))
+    q, it, exclude_same_id = _sides(queries, items, q_id, i_id, vec, exclude_same_id)
     cand = F.broadcast(q).join(it)
     if exclude_same_id:
         cand = cand.filter(F.col("_qid") != F.col("_iid"))
-    scored = cand.select(
-        F.col("_qid").alias(q_id),
-        F.col("_iid").alias(i_id),
-        (_dot(F.col("_qv"), F.col("_iv")) / (_norm(F.col("_qv")) * _norm(F.col("_iv")))).alias("cos"),
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("cos").desc(), F.col(i_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, i_id, "cos", "rank")
-    )
+    return _topk(cand, k, q_id, i_id)
 
 
 def cosine_topk_kernel(
@@ -90,19 +151,16 @@ def cosine_topk_kernel(
     expression-fold path on wide vectors; results differ from the exact
     left-to-right fold only in the last ulp (pairwise summation).
 
-    ``exclude_same_id`` as in :func:`cosine_topk` (default: only when the id
-    column names coincide).
+    ``exclude_same_id`` as in :func:`cosine_topk`.
 
     The query side is collected to the driver and broadcast — correct only
     for small query sets. ``max_query_rows`` (default 100k) guards the
     collect; for larger query tables use :func:`lsh_topk` / :func:`ivf_topk`,
     whose candidate generation is a distributed equi-join on both sides."""
-    if exclude_same_id is None:
-        exclude_same_id = q_id == i_id
-    import numpy as np
     import pandas as pd
 
-    q_rows = queries.select(q_id, vec).limit(max_query_rows + 1).collect()
+    q, _, exclude_same_id = _sides(queries, items, q_id, i_id, vec, exclude_same_id)
+    q_rows = q.limit(max_query_rows + 1).collect()
     if len(q_rows) > max_query_rows:
         raise ValueError(
             f"cosine_topk_kernel collects the query side to the driver; got "
@@ -110,8 +168,8 @@ def cosine_topk_kernel(
             f"driver can hold them, or use lsh_topk / ivf_topk for large "
             f"query tables."
         )
-    q_ids = np.array([r[q_id] for r in q_rows])
-    qm = np.array([list(r[vec]) for r in q_rows], dtype=np.float64)
+    q_ids = np.array([r["_qid"] for r in q_rows])
+    qm = np.array([list(r["_qv"]) for r in q_rows], dtype=np.float64)
     qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
     spark = items.sparkSession
     bc = spark.sparkContext.broadcast((q_ids, qn))
@@ -136,12 +194,7 @@ def cosine_topk_kernel(
     scored = items.select(i_id, vec).mapInPandas(kernel, schema)
     if exclude_same_id:
         scored = scored.filter(F.col(q_id) != F.col(i_id))
-    w = Window.partitionBy(q_id).orderBy(F.col("cos").desc(), F.col(i_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, i_id, "cos", "rank")
-    )
+    return _rank(scored, k, q_id, i_id)
 
 
 LSH_VEC_SCALE = 1024  # floor-quantization scale for exact integer projections
@@ -166,6 +219,38 @@ def _hyperplanes_int(dim: int, n_planes: int, table: int = 0) -> list[list[int]]
     return planes
 
 
+def _project(df: DataFrame, vec: str, weights: np.ndarray, ddl: str, rows) -> DataFrame:
+    """The exact integer projection kernel: every column of ``df`` plus the
+    ``ddl`` columns. Per Arrow batch the vectors floor-quantize to
+    1/``LSH_VEC_SCALE`` int64, one int matmul against ``weights`` (dim, w)
+    gives exact dot products, and ``rows(dots)`` maps them to one (n, r)
+    array per ``ddl`` column; each input row repeats r times.
+
+    One numpy matmul per batch — the equivalent Column fold tree (dozens of
+    nested 64-term aggregates) blows past whole-stage-codegen limits and
+    runs interpreted, ~50x slower — and exact integer arithmetic, so a SQL
+    oracle replays every output bit-for-bit (no sign flips from float
+    summation order)."""
+    in_cols = df.columns
+    schema = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
+    ) + ", " + ddl
+
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            x = np.array(pdf[vec].tolist(), dtype=np.float64)  # (n, dim)
+            out = rows(np.floor(x * LSH_VEC_SCALE).astype(np.int64) @ weights)
+            reps = next(iter(out.values())).shape[1]  # output rows per input row
+            rep = pdf.loc[pdf.index.repeat(reps)].reset_index(drop=True)
+            for name, vals in out.items():
+                rep[name] = vals.ravel()
+            yield rep[in_cols + list(out)]
+
+    return df.mapInPandas(kernel, schema)
+
+
 def lsh_signature(
     df: DataFrame, vec: str, dim: int, n_planes: int = 4, n_tables: int = 16
 ) -> DataFrame:
@@ -177,44 +262,21 @@ def lsh_signature(
     case) the candidate set grows toward the full set, degrading gracefully
     to exact search instead of losing recall.
 
-    Implementation: one Arrow kernel computing all L*b signed projections
-    as a single numpy matmul per batch — the equivalent Column-expression
-    fold tree (L*b nested 64-term aggregates) blows past whole-stage-codegen
-    limits and runs interpreted, ~50x slower. The projection is EXACT
-    integer arithmetic: vectors floor-quantize to 1/1024 granularity and
-    hyperplane weights are md5-derived ints (:func:`_hyperplanes_int`), so
-    bucket assignments are engine-portable — the DuckDB oracle replays them
-    bit-for-bit (no sign flips from float summation order)."""
-    import numpy as np
-    import pandas as pd
-
+    All L*b signed projections are one :func:`_project` matmul against the
+    md5-derived integer hyperplanes (:func:`_hyperplanes_int`), so bucket
+    assignments are engine-portable — the DuckDB oracle replays them."""
     planes = np.array(
         [_hyperplanes_int(dim, n_planes, t) for t in range(n_tables)], dtype=np.int64
     )  # (L, b, dim)
-    mat = planes.reshape(n_tables * n_planes, dim).T  # (dim, L*b)
-    in_cols = df.columns
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", tbl int, bucket long"
     pows = (1 << np.arange(n_planes, dtype=np.int64))
+    tables = np.arange(n_tables, dtype=np.int32)
 
-    def kernel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            x = np.array(pdf[vec].tolist(), dtype=np.float64)  # (n, dim)
-            xq = np.floor(x * LSH_VEC_SCALE).astype(np.int64)
-            bits = (xq @ mat) > 0  # (n, L*b)
-            buckets = (
-                bits.reshape(n, n_tables, n_planes).astype(np.int64) * pows
-            ).sum(axis=2)  # (n, L)
-            rep = pdf.loc[pdf.index.repeat(n_tables)].reset_index(drop=True)
-            rep["tbl"] = np.tile(np.arange(n_tables, dtype=np.int32), n)
-            rep["bucket"] = buckets.ravel()
-            yield rep[in_cols + ["tbl", "bucket"]]
+    def buckets(dots):  # (n, L*b) -> (n, L)
+        b = ((dots > 0).reshape(len(dots), n_tables, n_planes).astype(np.int64) * pows).sum(axis=2)
+        return {"tbl": np.broadcast_to(tables, b.shape), "bucket": b}
 
-    return df.mapInPandas(kernel, schema)
+    mat = planes.reshape(n_tables * n_planes, dim).T  # (dim, L*b)
+    return _project(df, vec, mat, "tbl int, bucket long", buckets)
 
 
 def lsh_topk(
@@ -246,10 +308,7 @@ def lsh_topk(
     skew-tolerant under AQE's skew-join splitting, but an undersized b
     degenerates the candidate set toward the cross product — size b first,
     lean on AQE second."""
-    if exclude_same_id is None:
-        exclude_same_id = q_id == i_id
-    q_vecs = queries.select(F.col(q_id).alias("_qid"), F.col(vec).alias("_qv"))
-    i_vecs = items.select(F.col(i_id).alias("_iid"), F.col(vec).alias("_iv"))
+    q_vecs, i_vecs, exclude_same_id = _sides(queries, items, q_id, i_id, vec, exclude_same_id)
     qs = lsh_signature(q_vecs, "_qv", dim, n_planes, n_tables)
     if multiprobe:
         flips = F.array(F.lit(0), *[F.lit(1 << j) for j in range(n_planes)])
@@ -257,28 +316,13 @@ def lsh_topk(
             "bucket", F.explode(F.transform(flips, lambda m: F.col("bucket").bitwiseXOR(m)))
         )
     its = lsh_signature(i_vecs, "_iv", dim, n_planes, n_tables)
-    # candidate generation + dedup on BARE id pairs: the wide vector columns
-    # are dropped before the bucket-join and dedup exchanges (at 10^12 rows
-    # x d=512 they would dominate shuffle volume ~100:1 — each candidate
-    # occurs up to L*(b+1) times), then re-attached by one equi-join per
-    # side against the base tables
-    cand = qs.select("tbl", "bucket", "_qid").join(
-        its.select("tbl", "bucket", "_iid"), ["tbl", "bucket"]
+    # each candidate occurs up to L*(b+1) times in the bucket join
+    cand = _bucket_pairs(
+        qs.select("tbl", "bucket", "_qid"), ["tbl", "bucket"], "_qid", "_iid",
+        b=its.select("tbl", "bucket", "_iid"), exclude_same_id=exclude_same_id,
+        attach=(q_vecs, i_vecs),
     )
-    if exclude_same_id:
-        cand = cand.filter(F.col("_qid") != F.col("_iid"))
-    pairs = cand.select("_qid", "_iid").dropDuplicates(["_qid", "_iid"])
-    cand = pairs.join(q_vecs, "_qid").join(i_vecs, "_iid")
-    scored = cand.select(
-        F.col("_qid").alias(q_id), F.col("_iid").alias(i_id),
-        (_dot(F.col("_qv"), F.col("_iv")) / (_norm(F.col("_qv")) * _norm(F.col("_iv")))).alias("cos"),
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("cos").desc(), F.col(i_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, i_id, "cos", "rank")
-    )
+    return _topk(cand, k, q_id, i_id)
 
 
 def ivf_topk(
@@ -311,30 +355,16 @@ def ivf_topk(
     centroid id; recall is tunable via n_probe (n_probe == n_centroids
     degrades to exact search).
     """
-    if exclude_same_id is None:
-        exclude_same_id = q_id == i_id
-
-    q_vecs = queries.select(F.col(q_id).alias("_qid"), F.col(vec).alias("_qv"))
-    i_vecs = items.select(F.col(i_id).alias("_iid"), F.col(vec).alias("_iv"))
+    q_vecs, i_vecs, exclude_same_id = _sides(queries, items, q_id, i_id, vec, exclude_same_id)
     its = ivf_assign(i_vecs, "_iv", dim, n_centroids, 1)
     qs = ivf_assign(q_vecs, "_qv", dim, n_centroids, n_probe)
-    # inverted-list join + dedup on bare id pairs (vectors stripped from
-    # both exchanges — a query occurs n_probe times), then re-attach
-    cand = qs.select("_cid", "_qid").join(its.select("_cid", "_iid"), "_cid")
-    if exclude_same_id:
-        cand = cand.filter(F.col("_qid") != F.col("_iid"))
-    pairs = cand.select("_qid", "_iid").dropDuplicates(["_qid", "_iid"])
-    cand = pairs.join(q_vecs, "_qid").join(i_vecs, "_iid")
-    scored = cand.select(
-        F.col("_qid").alias(q_id), F.col("_iid").alias(i_id),
-        (_dot(F.col("_qv"), F.col("_iv")) / (_norm(F.col("_qv")) * _norm(F.col("_iv")))).alias("cos"),
+    # inverted-list join: a query occurs n_probe times
+    cand = _bucket_pairs(
+        qs.select("_cid", "_qid"), ["_cid"], "_qid", "_iid",
+        b=its.select("_cid", "_iid"), exclude_same_id=exclude_same_id,
+        attach=(q_vecs, i_vecs),
     )
-    w = Window.partitionBy(q_id).orderBy(F.col("cos").desc(), F.col(i_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, i_id, "cos", "rank")
-    )
+    return _topk(cand, k, q_id, i_id)
 
 
 def ivf_assign(
@@ -343,35 +373,17 @@ def ivf_assign(
     """Explode each row to its ``n`` nearest coarse centroids (column
     ``_cid``), nearest = max integer dot product of the floor-quantized
     vector against md5-derived integer centroids (table 99), ties to the
-    LOWER centroid id. One numpy int matmul per Arrow batch (the equivalent
-    16x64-term Column fold blows codegen, like lsh_signature); exact
+    LOWER centroid id. One :func:`_project` matmul per Arrow batch, exact
     integer arithmetic, so a SQL oracle replays every assignment."""
-    import numpy as np
-    import pandas as pd
-
     cents = np.array(
         _hyperplanes_int(dim, n_centroids, table=99), dtype=np.int64
     )  # (C, dim)
-    in_cols = df.columns
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", _cid int"
 
-    def kernel(batches):
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            x = np.array(pdf[vec].tolist(), dtype=np.float64)
-            xq = np.floor(x * LSH_VEC_SCALE).astype(np.int64)
-            dots = xq @ cents.T  # (m, C) exact
-            # stable argsort of -dots: descending dot, ties -> lower cid
-            top = np.argsort(-dots, axis=1, kind="stable")[:, :n]  # (m, n)
-            rep = pdf.loc[pdf.index.repeat(n)].reset_index(drop=True)
-            rep["_cid"] = top.ravel().astype(np.int32)
-            yield rep[in_cols + ["_cid"]]
+    def nearest(dots):  # (m, C) -> (m, n)
+        # stable argsort of -dots: descending dot, ties -> lower cid
+        return {"_cid": np.argsort(-dots, axis=1, kind="stable")[:, :n].astype(np.int32)}
 
-    return df.mapInPandas(kernel, schema)
+    return _project(df, vec, cents.T, "_cid int", nearest)
 
 
 def cosine_dup_pairs(
@@ -385,10 +397,7 @@ def cosine_dup_pairs(
     b = items.select(F.col(i_id).alias("id_b"), F.col(vec).alias("_vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            (_dot(F.col("_va"), F.col("_vb")) / (_norm(F.col("_va")) * _norm(F.col("_vb")))).alias("cos"),
-        )
+        .select("id_a", "id_b", _cosine(F.col("_va"), F.col("_vb")).alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
 
@@ -429,22 +438,8 @@ def cosine_dup_pairs_lsh(
         lsh_signature(a_vecs, "_va", dim, n_planes, n_tables).select("tbl", "bucket", "id_a"),
         eager=False,
     )
-    # bucket self-join + dedup on bare id pairs (vectors stripped from the
-    # candidate exchanges — a pair colliding in many tables would otherwise
-    # shuffle both vectors once per collision), then re-attach per side
-    cand = (
-        sig
-        .join(sig.select("tbl", "bucket", F.col("id_a").alias("id_b")),
-              ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .join(a_vecs, "id_a")
-        .join(b_vecs, "id_b")
-    )
+    cand = _bucket_pairs(sig, ["tbl", "bucket"], "id_a", "id_b", attach=(a_vecs, b_vecs))
     return (
-        cand.select(
-            "id_a", "id_b",
-            (_dot(F.col("_va"), F.col("_vb")) / (_norm(F.col("_va")) * _norm(F.col("_vb")))).alias("cos"),
-        )
+        cand.select("id_a", "id_b", _cosine(F.col("_va"), F.col("_vb")).alias("cos"))
         .filter(F.col("cos") >= threshold)
     )

@@ -64,6 +64,49 @@ def test_near_dup_pairs_finds_planted_pair(docs):
     assert all(p == (0, 1) for p in got)
 
 
+def test_near_dup_pairs_keeps_its_accumulators_under_gc(spark):
+    """A frame checkpointed lazily is filled by the job that reads it; a JVM
+    GC during that job drops its source plan's metric accumulators, and the
+    scheduler logs "non-existent accumulator" for every task update. Run
+    the MinHash pipeline under a System.gc() loop and count those errors
+    with an appender on the scheduler's logger."""
+    import threading
+    import time
+
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    writer = jvm.java.io.StringWriter()
+    layout = core.layout.PatternLayout.newBuilder().withPattern("%m%n").build()
+    appender = core.appender.WriterAppender.createAppender(
+        layout, None, writer, "accumulator-errors", False, True)
+    appender.start()
+    logger = jvm.org.apache.logging.log4j.LogManager.getContext(False).getLogger(
+        "org.apache.spark.scheduler.DAGScheduler")
+    logger.addAppender(appender)
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    corpus = docs.unionByName(docs.select(
+        (F.col("doc_id") + 100000).alias("doc_id"),
+        F.regexp_replace("text", r"^\S+\s*", "").alias("text"),
+    ))
+    stop = threading.Event()
+
+    def collect_garbage():
+        while not stop.is_set():
+            jvm.java.lang.System.gc()
+            time.sleep(0.05)
+
+    gc_loop = threading.Thread(target=collect_garbage)
+    gc_loop.start()
+    try:
+        assert near_dup_pairs(corpus, threshold=0.4).collect()
+    finally:
+        stop.set()
+        gc_loop.join(timeout=30)
+        logger.removeAppender(appender)
+        appender.stop()
+    assert "Failed to update accumulator" not in writer.toString()
+
+
 def test_simhash_near_vs_far(docs):
     hs = {r["doc_id"]: r["simhash"] for r in simhash64(docs).collect()}
     df = docs.sparkSession.createDataFrame(
@@ -265,6 +308,63 @@ def test_ann_candidate_dedup_exchanges_carry_no_vectors(spark):
             pair_ex = [l for l in exchanges
                        if vecs[0] not in l and vecs[1] not in l]
             assert pair_ex, exchanges
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def _shuffles(df):
+    """(input columns, hash-partitioning columns) of every shuffle Exchange
+    in the formatted explain, names without expression ids."""
+    import re
+
+    fmt = df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    def names(text):
+        return {re.sub(r"#\d+L?$", "", c.strip()) for c in text.split(",")}
+
+    return [
+        (names(m.group(1)), names(m.group(2))) for m in re.finditer(
+            r"Exchange\nInput \[\d+\]: \[(.*?)\]\n"
+            r"Arguments: hashpartitioning\((.*), \d+\), ", fmt)
+    ]
+
+
+def test_candidate_and_dedup_exchanges_carry_only_ids_and_keys(spark, docs):
+    """Every caller of the shared bucket join — MinHash bands, Hamming
+    chunks, LSH tables, IVF lists — shuffles its candidate rows on the
+    bucket keys and dedups them on the bare id pair; neither exchange may
+    carry a vector, code or minhash payload column."""
+    from activity_files_spark.operators.dedup import hamming_near_dup_pairs
+    from activity_files_spark.operators.similarity import cosine_dup_pairs_lsh, ivf_topk
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        F.col("vec_id").alias("item_id"), as_double_vec(F.col("embedding")).alias("vec")
+    )
+    qs = emb.filter(F.col("item_id") < 5).select(F.col("item_id").alias("query_id"), "vec")
+    codes = simhash64(docs)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for df, keys, ids in [
+            (near_dup_pairs(docs, threshold=0.4), {"band", "sig"}, {"doc_a", "doc_b"}),
+            (hamming_near_dup_pairs(codes, code_col="simhash"), {"band", "chunk"},
+             {"id_a", "id_b"}),
+            (lsh_topk(qs, emb, k=3, dim=64, exclude_same_id=True), {"tbl", "bucket"},
+             {"_qid", "_iid"}),
+            (ivf_topk(qs, emb, k=3, dim=64, exclude_same_id=True), {"_cid"},
+             {"_qid", "_iid"}),
+            (cosine_dup_pairs_lsh(emb, threshold=0.99, dim=64), {"tbl", "bucket"},
+             {"id_a", "id_b"}),
+        ]:
+            shuffles = _shuffles(df)
+            cand = [cols for cols, part in shuffles if part == keys]
+            assert len(cand) >= 2, shuffles
+            for cols in cand:
+                assert cols <= keys | ids, (keys, cols)
+            # the pair dedup shuffles the bare id pair (a later exchange on
+            # the same pair, such as the Jaccard count, may carry more)
+            assert (ids, ids) in shuffles, shuffles
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
