@@ -15,11 +15,12 @@ whose workers receive the package only per task) Spark's own daemon runs.
 ``extra_conf`` can set ``spark.python.daemon.module`` either way.
 
 On a local master, streaming checkpoints are written through Hadoop's
-``FileSystem`` API instead of ``FileContext``: Hadoop has no native library
-here, so each permission or status call on a local file forks a helper
-process (``chmod``, ``stat``) from the JVM, and ``FileContext`` makes about
-four times as many as ``FileSystem`` (one ``stream_sessionize_users`` run:
-about 204 against 55). Each child briefly counts at the JVM's RSS.
+``FileSystem`` API instead of ``FileContext``. Without Hadoop's native
+library (pip's pyspark ships none), each permission or status call on a
+local file forks a helper process (``chmod``, ``readlink``) from the JVM,
+and ``FileContext`` makes three to four times as many as ``FileSystem``
+(a first ``stream_sessionize_users`` run at sf0.1: 176 against 54). Each
+child briefly counts at the JVM's RSS.
 """
 
 from __future__ import annotations
