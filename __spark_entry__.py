@@ -6064,21 +6064,17 @@ def _geojson_roundtrip_sql() -> str:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: cell-encode the derived trackpoints at sf0.001, PIP-join the
-    broadcast geofence set, roll up per (geofence, cell) — the core tiling +
-    spatial-join pipeline in one plan."""
+    broadcast geofence set through the shared cover join
+    (operators/spatial.rect_pip_join), roll up per (geofence, cell) — the
+    core tiling + spatial-join pipeline in one plan."""
+    from activity_files_spark.operators.spatial import rect_pip_join
+
     sf_dir = "/root/testdata/sf0.001"
     ev = _read(spark, sf_dir, "events").select(
         "event_id", _lat_col().alias("lat"), _lon_col().alias("lon")
     )
-    gf = spark.createDataFrame(
-        GEOFENCES, "geofence_id string, lon_w double, lon_e double, lat_s double, lat_n double"
-    )
     enc = ev.withColumn("cell", quadkey_col(F.col("lat"), F.col("lon"), 12))
-    j = enc.join(
-        F.broadcast(gf),
-        (F.col("lon") >= F.col("lon_w")) & (F.col("lon") <= F.col("lon_e"))
-        & (F.col("lat") >= F.col("lat_s")) & (F.col("lat") <= F.col("lat_n")),
-    )
+    j = rect_pip_join(enc, GEOFENCES, z=12)
     return j.groupBy("geofence_id", "cell").agg(F.count("*").alias("n_points"))
 
 

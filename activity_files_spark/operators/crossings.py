@@ -68,6 +68,57 @@ def proper_cross_pred(p, q, a, b) -> Column:
     return straddle1 & straddle2
 
 
+def _cover_sides(
+    segments: DataFrame, q: int, key: str, seq: str, by: tuple[str, ...]
+) -> tuple[DataFrame, DataFrame, Column]:
+    """Both sides of the crossing cover self-join, and the refine between
+    them.
+
+    Per-segment cover in ONE Arrow pass (segment_cover_rows dedups per
+    input row), with the four endpoint ints carried on each cover row so
+    the refine runs INSIDE the cell-join stage (whole-stage codegen,
+    pre-exchange): on overlapping corpora the candidate multiset is ~20x
+    the crossing set, and a distinct over bare ids first would shuffle all
+    of it. Deduping after the integer refine shuffles only true crossings
+    (x their shared-cell multiplicity, bounded by the 2 cells a generic
+    crossing point touches; lattice-corner crossings touch 4). One window
+    + one kernel pass, no join-back, no cover-dedup exchange (r06 plan
+    restructure).
+
+    The cover is repartitioned on ``by``, the caller's join columns. Side
+    a carries ``seq_a`` and endpoints ``pa``-``pb``, side b ``seq_b`` and
+    ``qa``-``qb``; the route id is ``k`` when it is a join column, else
+    ``key_a`` / ``key_b``.
+    """
+    cov = segment_cover_rows(
+        segments.select(
+            F.col(key).alias("k"), F.col(seq).alias("s"), "x0", "y0", "x1", "y1"
+        ),
+        q,
+        ["k", "s", "x0", "y0", "x1", "y1"],
+    ).repartition(_cell_partitions(segments), *by)
+
+    def side(ab: str, a: str, b: str) -> DataFrame:
+        return cov.select(
+            F.col("k") if "k" in by else F.col("k").alias(f"key_{ab}"),
+            F.col("s").alias(f"seq_{ab}"),
+            "cx",
+            "cy",
+            F.col("x0").alias(f"{a}x"),
+            F.col("y0").alias(f"{a}y"),
+            F.col("x1").alias(f"{b}x"),
+            F.col("y1").alias(f"{b}y"),
+        )
+
+    pred = proper_cross_pred(
+        (F.col("pax"), F.col("pay")),
+        (F.col("pbx"), F.col("pby")),
+        (F.col("qax"), F.col("qay")),
+        (F.col("qbx"), F.col("qby")),
+    )
+    return side("a", "pa", "pb"), side("b", "qa", "qb"), pred
+
+
 def segment_crossings(
     segments: DataFrame,
     q: int = 8,
@@ -96,55 +147,7 @@ def segment_crossings(
     (BIGINT would overflow; Spark ANSI and DuckDB both check rather than
     wrap, so the widening is semantic, not cosmetic).
     """
-    seg = segments.select(
-        F.col(key).alias("key"), F.col(seq).alias("seq"), "x0", "y0", "x1", "y1"
-    )
-    # Per-segment cover in ONE Arrow pass (segment_cover_rows dedups per
-    # input row = the per-(key,seq) dedup the old per-key cover exchange
-    # did), with the four endpoint ints carried on each cover row so the
-    # refine runs INSIDE the cell-join stage (whole-stage codegen,
-    # pre-exchange): on overlapping corpora the candidate multiset is ~20x
-    # the crossing set, and a distinct over bare ids first — the
-    # fat-vector discipline used by the ANN joins — would shuffle all of
-    # it. Deduping after the integer refine shuffles only true crossings
-    # (x their shared-cell multiplicity, bounded by the 2 cells a generic
-    # crossing point touches; lattice-corner crossings touch 4). One
-    # window + one kernel pass, no join-back, no cover-dedup exchange
-    # (r06 plan restructure).
-    cov = segment_cover_rows(
-        seg.select(
-            F.col("key").alias("k"), F.col("seq").alias("s"),
-            "x0", "y0", "x1", "y1",
-        ),
-        q,
-        ["k", "s", "x0", "y0", "x1", "y1"],
-    ).repartition(_cell_partitions(segments), "cx", "cy")
-    left = cov.select(
-        F.col("k").alias("key_a"),
-        F.col("s").alias("seq_a"),
-        "cx",
-        "cy",
-        F.col("x0").alias("pax"),
-        F.col("y0").alias("pay"),
-        F.col("x1").alias("pbx"),
-        F.col("y1").alias("pby"),
-    )
-    right = cov.select(
-        F.col("k").alias("key_b"),
-        F.col("s").alias("seq_b"),
-        "cx",
-        "cy",
-        F.col("x0").alias("qax"),
-        F.col("y0").alias("qay"),
-        F.col("x1").alias("qbx"),
-        F.col("y1").alias("qby"),
-    )
-    pred = proper_cross_pred(
-        (F.col("pax"), F.col("pay")),
-        (F.col("pbx"), F.col("pby")),
-        (F.col("qax"), F.col("qay")),
-        (F.col("qbx"), F.col("qby")),
-    )
+    left, right, pred = _cover_sides(segments, q, key, seq, ("cx", "cy"))
     joined = left.join(right, on=["cx", "cy"], how="inner").where(
         (F.col("key_a") < F.col("key_b")) & pred
     )
@@ -193,48 +196,11 @@ def self_intersections(
     also skips their join rows outright).  Returns
     ``(key, seq_a, seq_b)`` with ``seq_a < seq_b - 1``.
     """
-    seg = segments.select(
-        F.col(key).alias("key"), F.col(seq).alias("seq"), "x0", "y0", "x1", "y1"
-    )
-    # same single-pass Arrow-kernel cover as segment_crossings (r06)
-    cov = segment_cover_rows(
-        seg.select(
-            F.col("key").alias("k"), F.col("seq").alias("s"),
-            "x0", "y0", "x1", "y1",
-        ),
-        q,
-        ["k", "s", "x0", "y0", "x1", "y1"],
-    ).repartition(_cell_partitions(segments), "k", "cx", "cy")
-    left = cov.select(
-        F.col("k").alias("key"),
-        F.col("s").alias("seq_a"),
-        "cx",
-        "cy",
-        F.col("x0").alias("pax"),
-        F.col("y0").alias("pay"),
-        F.col("x1").alias("pbx"),
-        F.col("y1").alias("pby"),
-    )
-    right = cov.select(
-        F.col("k").alias("key"),
-        F.col("s").alias("seq_b"),
-        "cx",
-        "cy",
-        F.col("x0").alias("qax"),
-        F.col("y0").alias("qay"),
-        F.col("x1").alias("qbx"),
-        F.col("y1").alias("qby"),
-    )
-    pred = proper_cross_pred(
-        (F.col("pax"), F.col("pay")),
-        (F.col("pbx"), F.col("pby")),
-        (F.col("qax"), F.col("qay")),
-        (F.col("qbx"), F.col("qby")),
-    )
+    left, right, pred = _cover_sides(segments, q, key, seq, ("k", "cx", "cy"))
     return (
-        left.join(right, on=["key", "cx", "cy"], how="inner")
+        left.join(right, on=["k", "cx", "cy"], how="inner")
         .where((F.col("seq_b") > F.col("seq_a") + 1) & pred)
-        .select("key", "seq_a", "seq_b")
+        .select(F.col("k").alias("key"), "seq_a", "seq_b")
         .dropDuplicates(["key", "seq_a", "seq_b"])
     )
 

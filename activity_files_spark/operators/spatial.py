@@ -1,4 +1,4 @@
-"""Spatial core: res-ladder cell encode, point-in-polygon join, kNN join.
+"""Spatial core: cover joins (point-in-polygon and relatives), kNN join.
 
 The north-rule operators (BASELINE.json) — not present in the reference
 (which stores polygons from GeoJSON, geojson_parser.dart:278-316, but never
@@ -27,14 +27,13 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from activity_files_spark.functions.geo import haversine_m
 from activity_files_spark.functions.quadkey import (
     cell_id_col,
-    quadkey_col,
     quadkey_py,
     tile_xy_col,
     tile_xy_py,
@@ -42,13 +41,6 @@ from activity_files_spark.functions.quadkey import (
 from activity_files_spark.operators.materialize import materialize
 
 EARTH_CIRCUM_M = 40_075_016.686
-
-
-def cell_encode(
-    df: DataFrame, z: int, lat: str = "lat", lon: str = "lon", out: str = "cell"
-) -> DataFrame:
-    """Attach the quadkey cell at zoom ``z`` as a native column expression."""
-    return df.withColumn(out, quadkey_col(F.col(lat), F.col(lon), z))
 
 
 def ring_bbox(ring: list[tuple[float, float]]) -> tuple[float, float, float, float]:
@@ -77,19 +69,10 @@ def polygon_cover_tiles(ring: list[tuple[float, float]], z: int) -> list[tuple[i
     ]
 
 
-def polygon_cover_cells(ring: list[tuple[float, float]], z: int) -> list[str]:
-    """Covering quadkey strings of a polygon at zoom ``z`` (bbox cover)."""
-    cells = []
-    for x, y in polygon_cover_tiles(ring, z):
-        digits = [str(((x >> (i - 1)) & 1) + 2 * ((y >> (i - 1)) & 1)) for i in range(z, 0, -1)]
-        cells.append("".join(digits))
-    return cells
-
-
 def auto_cover_zoom(ring: list[tuple[float, float]], max_cells: int = 64) -> int:
     """Finest zoom whose bbox cover stays under ``max_cells``."""
+    lon_w, lat_s, lon_e, lat_n = ring_bbox(ring)
     for z in range(20, 0, -1):
-        lon_w, lat_s, lon_e, lat_n = ring_bbox(ring)
         x0, y0 = tile_xy_py(lat_n, lon_w, z)
         x1, y1 = tile_xy_py(lat_s, lon_e, z)
         if (abs(x1 - x0) + 1) * (abs(y1 - y0) + 1) <= max_cells:
@@ -128,6 +111,70 @@ def _ray_cast_np(lon: np.ndarray, lat: np.ndarray, ring: np.ndarray) -> np.ndarr
     return (hits.sum(axis=1) % 2).astype(bool)
 
 
+def _cover_join(
+    points: DataFrame,
+    shapes: list[tuple[tuple, list[tuple[float, float]]]],
+    ddl: str,
+    refine: Column,
+    how: str = "inner",
+    z: int | None = None,
+    lat: str = "lat",
+    lon: str = "lon",
+    cell_col: str | None = None,
+) -> DataFrame:
+    """Filter-and-refine join of points against a small driver-side shape
+    set: the ONE implementation of the cover-join shape. :func:`pip_join`,
+    :func:`rect_pip_join`, :func:`snap_to_segments` and
+    :func:`within_radius_join` (and through them the driver queries,
+    ``entry()`` and bench.py's flagship join) differ only in their shapes
+    and their exact ``refine``, so the cover encoding, zoom rule and join
+    policy can't desynchronize.
+
+    ``shapes``: ``(payload, ring)`` pairs. Each ring's bbox is covered with
+    zoom-``z`` tiles (``z`` None: the finest zoom keeping every shape under
+    :func:`auto_cover_zoom`'s cap, 12 for an empty set), one cover row per
+    (shape, tile). ``ddl`` is the cover table's schema: the payload fields
+    in order, with one ``_cover_cell long`` field among them where the
+    packed ``(x << z) | y`` tile goes. Points are cell-encoded at zoom
+    ``z`` (native expression), or pass ``cell_col`` to reuse a packed cell
+    column they already carry (then ``z`` must be its zoom).
+
+    The cover is **broadcast** and equi-joined on cell, then ``refine`` (an
+    exact Column predicate over point and payload columns) restores
+    exactness: ``how='inner'`` applies it as a post-join filter,
+    ``'left_outer'`` folds it INTO the join condition, so a point in no
+    shape keeps null payload (the labeling shape). The plan is a
+    BroadcastHashJoin, never a BroadcastNestedLoopJoin: at 100 TB the work
+    is |points ∩ cover cells| candidate rows, not n_points × n_shapes
+    predicate evaluations. Returns the point columns plus the payload
+    columns; the cell columns are dropped.
+    """
+    if cell_col is not None and z is None:
+        raise ValueError("cell_col requires an explicit z (its zoom)")
+    if z is None:
+        z = min(auto_cover_zoom(ring) for _, ring in shapes) if shapes else 12
+    at = ddl.split("_cover_cell")[0].count(",")  # payload fields before the cell
+    cover = points.sparkSession.createDataFrame(
+        [
+            (*payload[:at], (x << z) | y, *payload[at:])
+            for payload, ring in shapes
+            for x, y in polygon_cover_tiles(ring, z)
+        ],
+        ddl,
+    )
+    pts = points
+    if cell_col is None:
+        pts = points.withColumn("_cell", cell_id_col(F.col(lat), F.col(lon), z))
+    on = pts[cell_col or "_cell"] == cover["_cover_cell"]
+    if how == "inner":
+        j = pts.join(F.broadcast(cover), on, "inner").filter(refine)
+    elif how == "left_outer":
+        j = pts.join(F.broadcast(cover), on & refine, "left_outer")
+    else:
+        raise ValueError(f"unsupported how={how!r}")
+    return j.drop("_cover_cell", *([] if cell_col else ["_cell"]))
+
+
 def pip_join(
     points: DataFrame,
     polygons: list[dict],
@@ -142,26 +189,16 @@ def pip_join(
     (driver-side — geofence sets are small per the north star; at scale they
     arrive as a collected DataFrame). Returns points columns + geofence_id.
 
-    Plan: points are cell-encoded at zoom ``z`` (auto-chosen from polygon
-    sizes if None) with a native expression; the polygon cover (geofence_id,
-    cell) table is broadcast; after the cell equi-join, the exact ray-cast
-    runs as a vectorized pandas UDF over numpy arrays, grouped by geofence
-    inside each Arrow batch; rings live in a broadcast closure dict.
+    Plan: the :func:`_cover_join` of the polygons at zoom ``z`` (auto-chosen
+    from polygon sizes if None); the exact ray-cast refine runs as a
+    vectorized pandas UDF over numpy arrays, grouped by geofence inside
+    each Arrow batch; rings live in a broadcast closure dict. ``how`` is
+    'inner' only: a Python UDF can't sit in an outer join's condition.
     """
-    spark = points.sparkSession
-    if z is None:
-        z = min(auto_cover_zoom(p["ring"]) for p in polygons) if polygons else 12
-
-    cover_rows = []
-    rings: dict[str, list] = {}
-    for p in polygons:
-        rings[p["geofence_id"]] = [(float(a), float(b)) for a, b in p["ring"]]
-        for x, y in polygon_cover_tiles(p["ring"], z):
-            cover_rows.append((p["geofence_id"], (x << z) | y))
-    cover = spark.createDataFrame(cover_rows, "geofence_id string, cell long")
-
-    rings_np = {k: np.asarray(v, dtype=np.float64) for k, v in rings.items()}
-    bc = spark.sparkContext.broadcast(rings_np)
+    if how != "inner":
+        raise ValueError(f"unsupported how={how}")
+    rings_np = {p["geofence_id"]: np.asarray(p["ring"], dtype=np.float64) for p in polygons}
+    bc = points.sparkSession.sparkContext.broadcast(rings_np)
 
     @F.pandas_udf(BooleanType())
     def contains(gid: pd.Series, plon: pd.Series, plat: pd.Series) -> pd.Series:
@@ -177,14 +214,13 @@ def pip_join(
             out[m] = _ray_cast_np(lon_v[m], lat_v[m], ring)
         return pd.Series(out)
 
-    pts = points.withColumn("_cell", cell_id_col(F.col(lat), F.col(lon), z))
-    cand = pts.join(
-        F.broadcast(cover), pts["_cell"] == cover["cell"], "inner"
-    ).drop("cell", "_cell")
-    hit = cand.filter(contains(F.col("geofence_id"), F.col(lon), F.col(lat)))
-    if how == "inner":
-        return hit
-    raise ValueError(f"unsupported how={how}")
+    return _cover_join(
+        points,
+        [((p["geofence_id"],), p["ring"]) for p in polygons],
+        "geofence_id string, _cover_cell long",
+        contains(F.col("geofence_id"), F.col(lon), F.col(lat)),
+        how, z, lat, lon,
+    )
 
 
 def _rect_pip_expr(
@@ -232,25 +268,16 @@ def rect_pip_join(
 ) -> DataFrame:
     """Inclusive axis-aligned rectangle containment as a cell-prefix hash
     join — the rect fast path of :func:`pip_join` with the ray-cast kernel
-    replaced by an exact pure-Column refine. The ONE implementation of the
-    cover-join shape: the driver PIP queries and both bench pipelines
-    (flagship points, fused image pipeline) all call here, so the cover
-    encoding, bounds schema, and predicate can't desynchronize.
+    replaced by an exact pure-Column refine, so the join stays
+    whole-stage-codegen'd. The driver PIP queries, ``entry()`` and both
+    bench pipelines (flagship points, fused image pipeline) call here.
 
-    ``rects``: list of ``(rect_id, lon_w, lon_e, lat_s, lat_n)``. Points are
-    cell-encoded at zoom ``z`` (native expression) — or pass ``cell_col``
-    to reuse a packed ``(x << z) | y`` cell column the pipeline already
-    computes (then ``z`` must be that column's zoom). The broadcast
-    ``(rect_id, cell, bounds)`` bbox cover is equi-joined on cell; the
-    inclusive containment predicate refines candidates exactly. Same rows
-    as the naive theta-join, but the plan is a BroadcastHashJoin instead of
-    a BroadcastNestedLoopJoin: at 100 TB the work is |points ∩ cover cells|
-    candidate rows, not n_points × n_rects predicate evaluations, and the
-    join stays whole-stage-codegen'd.
-
-    ``how``: 'inner' (containment as a post-join filter) or 'left_outer'
-    (containment folded INTO the join condition, so non-contained points
-    keep a null ``id_col`` — the labeling shape).
+    ``rects``: list of ``(rect_id, lon_w, lon_e, lat_s, lat_n)``. The
+    ``(rect_id, cell, bounds)`` bbox cover is the :func:`_cover_join` of
+    the rects (``z``, ``cell_col`` and ``how`` as there); the inclusive
+    containment predicate is its refine. Same rows as the naive
+    theta-join. ``how='left_outer'`` keeps non-contained points with a
+    null ``id_col``.
 
     Sets of at most ``expr_max_rects`` tuples skip the join entirely: the
     rect table is compiled into a CASE-array projection
@@ -265,54 +292,24 @@ def rect_pip_join(
     decoded images, and decode dominates per-row cost at ANY scale). The
     default 0 keeps the scale-safe cover join; image pipelines opt in.
     """
-    spark = points.sparkSession
-    if cell_col is not None and z is None:
-        raise ValueError("cell_col requires an explicit z (its zoom)")
     if 0 < len(rects) <= expr_max_rects:
         return _rect_pip_expr(points, rects, lat, lon, id_col, how)
     # build per-TUPLE, not per-id: a multi-part geofence may repeat its id
     # across several rects and every part must contribute its own cover
-    rect_rings = [
-        (rid, [(w, s), (e, s), (e, n), (w, n)], w, e, s, n)
+    shapes = [
+        ((rid, w, e, s, n), [(w, s), (e, s), (e, n), (w, n)])
         for rid, w, e, s, n in rects
     ]
-    if z is None:
-        z = min(auto_cover_zoom(r) for _, r, *_ in rect_rings) if rects else 12
-    cover_rows = []
-    for rid, ring, w, e, s, n in rect_rings:
-        for x, y in polygon_cover_tiles(ring, z):
-            cover_rows.append((rid, (x << z) | y, w, e, s, n))
-    cover = spark.createDataFrame(
-        cover_rows,
-        f"{id_col} string, _cover_cell long, lon_w double, lon_e double,"
-        " lat_s double, lat_n double",
-    )
-    if cell_col is None:
-        pts = points.withColumn("_cell", cell_id_col(F.col(lat), F.col(lon), z))
-        cc = "_cell"
-    else:
-        pts = points
-        cc = cell_col
     contained = (
         (F.col(lon) >= F.col("lon_w")) & (F.col(lon) <= F.col("lon_e"))
         & (F.col(lat) >= F.col("lat_s")) & (F.col(lat) <= F.col("lat_n"))
     )
-    drop_cols = ["_cover_cell", "lon_w", "lon_e", "lat_s", "lat_n"]
-    if cell_col is None:
-        drop_cols.append("_cell")
-    if how == "inner":
-        j = pts.join(
-            F.broadcast(cover), pts[cc] == cover["_cover_cell"], "inner"
-        ).filter(contained)
-    elif how == "left_outer":
-        j = pts.join(
-            F.broadcast(cover),
-            (pts[cc] == cover["_cover_cell"]) & contained,
-            "left_outer",
-        )
-    else:
-        raise ValueError(f"unsupported how={how!r}")
-    return j.drop(*drop_cols)
+    return _cover_join(
+        points, shapes,
+        f"{id_col} string, _cover_cell long, lon_w double, lon_e double,"
+        " lat_s double, lat_n double",
+        contained, how, z, lat, lon, cell_col,
+    ).drop("lon_w", "lon_e", "lat_s", "lat_n")
 
 
 def knn_join(
@@ -536,7 +533,6 @@ def snap_to_segments(
     z: int | None = None,
     lat: str = "lat",
     lon: str = "lon",
-    cell_col: str | None = None,
     expr_max_segments: int = 0,
 ) -> DataFrame:
     """Map-matching join: snap every point to the nearest segment of a small
@@ -550,17 +546,17 @@ def snap_to_segments(
       degrees through the SAME planar scales the distance uses, so the
       prune is provably complete: d(p, seg) <= tol implies p lies inside
       the buffered bbox) and covered with zoom-``z`` tiles.
-    - The tiny ``(cell, segment)`` cover is **broadcast**; points carry a
-      native packed-cell column and equi-join on it (BroadcastHashJoin,
-      codegen'd) — at 100 TB the candidate volume is |points near routes| ×
-      avg segments per cell, never n_points × n_segments.
+    - The tiny ``(cell, segment)`` cover is the :func:`_cover_join` of the
+      buffered boxes, refined by ``d <= max_dist_m`` — at 100 TB the
+      candidate volume is |points near routes| × avg segments per cell,
+      never n_points × n_segments.
     - Point-to-segment distance is pure Column arithmetic (project, clamp
       t to [0,1], hypot); the per-point argmin is a groupBy MIN over a
       (dist, route_id, seg_idx, t) struct — map-side partial aggregation
       collapses candidates to one row per point before the exchange, so
       the shuffle moves one row per matched point.
 
-    Returns the input columns (minus helper cells) plus ``route_id``,
+    Returns the input columns plus ``route_id``,
     ``seg_idx``, ``dist_m``, ``t_frac`` for points with at least one
     segment within tolerance (inner semantics).
 
@@ -572,7 +568,6 @@ def snap_to_segments(
     stateless form is also what the streaming twin runs, since it needs
     no watermark or state store.
     """
-    spark = points.sparkSession
     segs = segment_table(routes, ref_lat)
     kx, ky = planar_scales(ref_lat)
     if 0 < len(segs) <= expr_max_segments:
@@ -582,35 +577,14 @@ def snap_to_segments(
         return _snap_expr(points, segs, kx, ky, max_dist_m, lat, lon)
     buf_lon = max_dist_m / kx
     buf_lat = max_dist_m / ky
-    seg_rings = []
-    for route_id, i, a_lon, a_lat, vx, vy, len2 in segs:
+    shapes = []
+    for seg in segs:
+        _, _, a_lon, a_lat, vx, vy, _ = seg
         b_lon = a_lon + vx / kx
         b_lat = a_lat + vy / ky
         w, e = min(a_lon, b_lon) - buf_lon, max(a_lon, b_lon) + buf_lon
         s, n = min(a_lat, b_lat) - buf_lat, max(a_lat, b_lat) + buf_lat
-        seg_rings.append(((route_id, i, a_lon, a_lat, vx, vy, len2),
-                          [(w, s), (e, s), (e, n), (w, n)]))
-    if z is None and cell_col is not None:
-        raise ValueError("cell_col requires an explicit z (its zoom)")
-    if z is None:
-        z = min(auto_cover_zoom(r) for _, r in seg_rings) if seg_rings else 12
-    cover_rows = []
-    for (route_id, i, a_lon, a_lat, vx, vy, len2), ring in seg_rings:
-        for x, y in polygon_cover_tiles(ring, z):
-            cover_rows.append(
-                (route_id, i, (x << z) | y, a_lon, a_lat, vx, vy, len2)
-            )
-    cover = spark.createDataFrame(
-        cover_rows,
-        "route_id string, seg_idx int, _cover_cell long, a_lon double,"
-        " a_lat double, vx double, vy double, len2 double",
-    )
-    if cell_col is None:
-        pts = points.withColumn("_cell", cell_id_col(F.col(lat), F.col(lon), z))
-        cc = "_cell"
-    else:
-        pts = points
-        cc = cell_col
+        shapes.append((seg, [(w, s), (e, s), (e, n), (w, n)]))
     wx = (F.col(lon) - F.col("a_lon")) * F.lit(kx)
     wy = (F.col(lat) - F.col("a_lat")) * F.lit(ky)
     t_raw = (wx * F.col("vx") + wy * F.col("vy")) / F.col("len2")
@@ -618,18 +592,17 @@ def snap_to_segments(
     dx = wx - t * F.col("vx")
     dy = wy - t * F.col("vy")
     d = F.sqrt(dx * dx + dy * dy)
-    keep = [c for c in points.columns if c != cc]
-    cand = (
-        pts.join(F.broadcast(cover), pts[cc] == cover["_cover_cell"], "inner")
-        .withColumn("_d", d)
-        .withColumn("_t", t)
-        .filter(F.col("_d") <= F.lit(max_dist_m))
-    )
-    best = cand.groupBy(*keep).agg(
+    cand = _cover_join(
+        points, shapes,
+        "route_id string, seg_idx int, _cover_cell long, a_lon double,"
+        " a_lat double, vx double, vy double, len2 double",
+        d <= F.lit(max_dist_m), "inner", z, lat, lon,
+    ).withColumn("_d", d).withColumn("_t", t)
+    best = cand.groupBy(*points.columns).agg(
         F.min(F.struct(F.col("_d"), F.col("route_id"), F.col("seg_idx"), F.col("_t"))).alias("_m")
     )
     return best.select(
-        *keep,
+        *points.columns,
         F.col("_m.route_id").alias("route_id"),
         F.col("_m.seg_idx").alias("seg_idx"),
         F.col("_m._d").alias("dist_m"),
@@ -863,9 +836,8 @@ def within_radius_join(
     bounded by a provably-complete lat/lon box — great-circle distance
     satisfies d >= R_earth*|dphi| and d >= R_earth*cos(phi_max)*|dlambda|,
     so ``|dlat| <= radius/ky`` and ``|dlon| <= radius/(ky*cos(band edge))``
-    contain every within-radius point; the box is covered with zoom-``z``
-    tiles, the tiny (cell, poi) table is **broadcast**, points equi-join on
-    their native packed cell, and the exact haversine twin refines. At
+    contain every within-radius point; the boxes are the shapes of a
+    :func:`_cover_join` and the exact haversine twin is its refine. At
     corpus scale the candidate volume is |points near POIs| x POIs per
     cell, never n_points x n_pois.
 
@@ -874,10 +846,8 @@ def within_radius_join(
     """
     from activity_files_spark.functions.geo import EARTH_RADIUS_M
 
-    spark = points.sparkSession
     ky = math.radians(1.0) * EARTH_RADIUS_M  # meters per degree latitude
-    rows = []
-    rings = []
+    shapes = []
     for poi_id, plat, plon in pois:
         buf_lat = radius_m / ky
         band = min(abs(plat) + buf_lat, 89.9)
@@ -888,24 +858,15 @@ def within_radius_join(
             (plon + buf_lon, plat + buf_lat),
             (plon - buf_lon, plat + buf_lat),
         ]
-        rings.append(ring)
-        rows.append((poi_id, plat, plon, ring))
-    if z is None:
-        z = min(auto_cover_zoom(r) for r in rings) if rings else 12
-    cover_rows = []
-    for poi_id, plat, plon, ring in rows:
-        for x, y in polygon_cover_tiles(ring, z):
-            cover_rows.append((poi_id, plat, plon, (x << z) | y))
-    cover = spark.createDataFrame(
-        cover_rows, "poi_id string, _plat double, _plon double, _cell long"
-    )
-    pts = points.withColumn("_cell", cell_id_col(F.col(lat), F.col(lon), z))
-    joined = pts.join(F.broadcast(cover), pts["_cell"] == cover["_cell"], "inner")
+        shapes.append(((poi_id, plat, plon), ring))
     d = haversine_m(F.col(lat), F.col(lon), F.col("_plat"), F.col("_plon"))
     return (
-        joined.withColumn("dist_m", d)
-        .where(F.col("dist_m") <= radius_m)
-        .drop("_cell", "_plat", "_plon")
+        _cover_join(
+            points, shapes, "poi_id string, _plat double, _plon double, _cover_cell long",
+            d <= radius_m, "inner", z, lat, lon,
+        )
+        .withColumn("dist_m", d)
+        .drop("_plat", "_plon")
     )
 
 
@@ -935,9 +896,7 @@ def within_radius_sql(
 
 
 __all__ = [
-    "cell_encode",
     "polygon_cover_tiles",
-    "polygon_cover_cells",
     "auto_cover_zoom",
     "ray_cast_py",
     "pip_join",

@@ -13,11 +13,10 @@ from activity_files_spark.operators.asof import (
     resample_linear,
 )
 from activity_files_spark.operators.spatial import (
-    cell_encode,
     knn_join,
     knn_join_brute,
     pip_join,
-    polygon_cover_cells,
+    polygon_cover_tiles,
     ray_cast_py,
 )
 
@@ -132,10 +131,10 @@ def test_ray_cast_golden():
 
 
 def test_polygon_cover_contains_point_cell():
-    from activity_files_spark.functions.quadkey import quadkey_py
+    from activity_files_spark.functions.quadkey import tile_xy_py
 
-    cells = polygon_cover_cells(RECT, 15)
-    assert quadkey_py(40.0005, -105.0005, 15) in cells
+    tiles = polygon_cover_tiles(RECT, 15)
+    assert tile_xy_py(40.0005, -105.0005, 15) in tiles
 
 
 def test_pip_join_canonical_track(spark):
@@ -204,10 +203,10 @@ def test_knn_join_leaves_no_cache_entries(spark):
 
 
 def test_cell_encode_column(spark):
-    from activity_files_spark.functions.quadkey import quadkey_py
+    from activity_files_spark.functions.quadkey import quadkey_col, quadkey_py
 
     df = spark.createDataFrame([(40.0, -105.0)], "lat double, lon double")
-    got = cell_encode(df, 12).collect()[0]["cell"]
+    got = df.select(quadkey_col(F.col("lat"), F.col("lon"), 12).alias("cell")).collect()[0]["cell"]
     assert got == quadkey_py(40.0, -105.0, 12)
 
 
@@ -313,6 +312,37 @@ def test_rect_pip_expr_path_matches_cover_join(spark):
     assert "Join" not in plan and "Exchange" not in plan
     # and an empty rect set still routes through the (empty-cover) join path
     assert rect_pip_join(pts, [], how="inner").count() == 0
+
+
+def test_rect_pip_join_reuses_cell_col(spark):
+    """``cell_col`` (a packed cell column the points already carry) gives
+    the rows of the self-encoded cover join on both how modes, keeps the
+    caller's column, and needs the column's zoom."""
+    import random
+
+    from activity_files_spark.functions.quadkey import cell_id_col
+    from activity_files_spark.operators.spatial import rect_pip_join
+
+    rng = random.Random(11)
+    pts = spark.createDataFrame(
+        [(i, rng.uniform(39.9, 40.6), rng.uniform(-105.6, -104.9)) for i in range(300)]
+        + [(1000, 40.05, -105.1)],  # exact corner of gf_mid
+        "pid int, lat double, lon double",
+    )
+    enc = pts.withColumn("cell_id", cell_id_col(F.col("lat"), F.col("lon"), 12))
+    rects = [
+        ("gf_west", -105.45, -105.30, 40.10, 40.35),
+        ("gf_mid", -105.25, -105.10, 40.05, 40.45),
+        ("gf_east", -105.08, -105.00, 40.00, 40.49),
+    ]
+    key = lambda r: (r["pid"], r["geofence_id"] or "")
+    for how in ("inner", "left_outer"):
+        plain = rect_pip_join(pts, rects, z=12, how=how)
+        reused = rect_pip_join(enc, rects, z=12, how=how, cell_col="cell_id")
+        assert sorted(map(key, reused.collect())) == sorted(map(key, plain.collect())), how
+        assert reused.columns == [*enc.columns, "geofence_id"], how
+    with pytest.raises(ValueError, match="explicit z"):
+        rect_pip_join(enc, rects, cell_col="cell_id")
 
 
 def _snap_brute_py(pts, routes, tol, ref_lat):

@@ -1,8 +1,8 @@
 """Automated plan lint over the ENTIRE driver surface — turns
 BENCH/PLAN_AUDIT.md's hand-audited global invariants into a regression gate.
 
-For every entry in ``__spark_entry__.queries()`` (built at sf0.001), the
-formatted physical plan must contain:
+For every entry in ``__spark_entry__.queries()`` (built at sf0.001) and
+for the flagship ``entry()``, the formatted physical plan must contain:
 
 - no ``CartesianProduct`` and no ``BroadcastNestedLoopJoin`` — every join in
   the engine is an equi-join, a broadcast hash join, or a cogroup; a nested
@@ -108,6 +108,15 @@ def test_plan_has_no_forbidden_nodes(plans, name):
         f"{name}: forbidden plan node(s) {hits} — PLAN_AUDIT.md global "
         f"invariant violated.\n{plan[:2000]}"
     )
+
+
+def test_entry_plan_has_no_forbidden_nodes(spark):
+    # the flagship is not in queries(), so the parametrized check above
+    # never sees its plan
+    df = E.entry(spark)
+    plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    hits = [tok for tok in FORBIDDEN if tok in plan]
+    assert not hits, f"entry(): forbidden plan node(s) {hits}.\n{plan[:2000]}"
 
 
 def test_query_surface_has_not_shrunk(plans):
