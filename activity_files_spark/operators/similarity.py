@@ -47,14 +47,20 @@ def as_double_vec(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _sides(queries, items, q_id, i_id, vec, exclude_same_id):
+def _sides(queries, items, q_id, i_id, vec):
     """The query and item sides of a top-k search as ``(_qid, _qv)`` and
     ``(_iid, _iv)`` — internal names, so a self-join of one table has no
-    ambiguous references — and whether pairs of equal ids are dropped
-    (``exclude_same_id``, default: iff the id column names are identical)."""
+    ambiguous references. The result holds both id columns, so their names
+    must differ."""
+    if q_id == i_id:
+        raise ValueError(
+            f"q_id and i_id are both {q_id!r}; the result needs two distinct "
+            f"id column names (alias one side, and pass exclude_same_id=True "
+            f"to drop self-matches)"
+        )
     q = queries.select(F.col(q_id).alias("_qid"), F.col(vec).alias("_qv"))
     it = items.select(F.col(i_id).alias("_iid"), F.col(vec).alias("_iv"))
-    return q, it, q_id == i_id if exclude_same_id is None else exclude_same_id
+    return q, it
 
 
 def _rank(scored: DataFrame, k: int, q_id: str, i_id: str) -> DataFrame:
@@ -120,15 +126,14 @@ def cosine_topk(
     q_id: str = "query_id",
     i_id: str = "item_id",
     vec: str = "vec",
-    exclude_same_id: bool | None = None,
+    exclude_same_id: bool = False,
 ) -> DataFrame:
     """Exact brute-force cosine top-k; query side broadcast.
 
     ``exclude_same_id``: drop pairs whose ids are equal (self-matches when
-    both sides come from the same table). Defaults to True iff the two id
-    column names are identical; pass explicitly when ids share a namespace
-    under different column names."""
-    q, it, exclude_same_id = _sides(queries, items, q_id, i_id, vec, exclude_same_id)
+    both sides come from the same table). ``q_id`` and ``i_id`` must be
+    different names: a ``ValueError`` says so otherwise."""
+    q, it = _sides(queries, items, q_id, i_id, vec)
     cand = F.broadcast(q).join(it)
     if exclude_same_id:
         cand = cand.filter(F.col("_qid") != F.col("_iid"))
@@ -142,7 +147,7 @@ def cosine_topk_kernel(
     q_id: str = "query_id",
     i_id: str = "item_id",
     vec: str = "vec",
-    exclude_same_id: bool | None = None,
+    exclude_same_id: bool = False,
     max_query_rows: int = 100_000,
 ) -> DataFrame:
     """Brute-force cosine top-k via a vectorized Arrow kernel: the query
@@ -159,7 +164,7 @@ def cosine_topk_kernel(
     whose candidate generation is a distributed equi-join on both sides."""
     import pandas as pd
 
-    q, _, exclude_same_id = _sides(queries, items, q_id, i_id, vec, exclude_same_id)
+    q, _ = _sides(queries, items, q_id, i_id, vec)
     q_rows = q.limit(max_query_rows + 1).collect()
     if len(q_rows) > max_query_rows:
         raise ValueError(
@@ -289,7 +294,7 @@ def lsh_topk(
     q_id: str = "query_id",
     i_id: str = "item_id",
     vec: str = "vec",
-    exclude_same_id: bool | None = None,
+    exclude_same_id: bool = False,
     multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate top-k: multi-table bucket equi-join, dedup candidates,
@@ -308,7 +313,7 @@ def lsh_topk(
     skew-tolerant under AQE's skew-join splitting, but an undersized b
     degenerates the candidate set toward the cross product — size b first,
     lean on AQE second."""
-    q_vecs, i_vecs, exclude_same_id = _sides(queries, items, q_id, i_id, vec, exclude_same_id)
+    q_vecs, i_vecs = _sides(queries, items, q_id, i_id, vec)
     qs = lsh_signature(q_vecs, "_qv", dim, n_planes, n_tables)
     if multiprobe:
         flips = F.array(F.lit(0), *[F.lit(1 << j) for j in range(n_planes)])
@@ -335,7 +340,7 @@ def ivf_topk(
     q_id: str = "query_id",
     i_id: str = "item_id",
     vec: str = "vec",
-    exclude_same_id: bool | None = None,
+    exclude_same_id: bool = False,
 ) -> DataFrame:
     """IVF-flat approximate top-k: items are assigned to the coarse
     centroid maximizing the INTEGER dot product of the floor-quantized
@@ -355,7 +360,7 @@ def ivf_topk(
     centroid id; recall is tunable via n_probe (n_probe == n_centroids
     degrades to exact search).
     """
-    q_vecs, i_vecs, exclude_same_id = _sides(queries, items, q_id, i_id, vec, exclude_same_id)
+    q_vecs, i_vecs = _sides(queries, items, q_id, i_id, vec)
     its = ivf_assign(i_vecs, "_iv", dim, n_centroids, 1)
     qs = ivf_assign(q_vecs, "_qv", dim, n_centroids, n_probe)
     # inverted-list join: a query occurs n_probe times

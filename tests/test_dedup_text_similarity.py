@@ -444,6 +444,37 @@ def test_cosine_topk_kernel_query_cap(spark):
     assert out.count() == 9
 
 
+def test_topk_rejects_equal_id_names(spark):
+    """Each top-k result holds a query id and an item id column, so one
+    name for both is refused up front (it used to fail in analysis with an
+    ambiguous reference); self-matches are dropped only when asked."""
+    from activity_files_spark.operators.similarity import (
+        cosine_topk_kernel,
+        ivf_topk,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        F.col("vec_id").alias("id"), as_double_vec(F.col("embedding")).alias("vec")
+    ).filter(F.col("id") < 20)
+    for topk, kw in (
+        (cosine_topk, {}),
+        (cosine_topk_kernel, {}),
+        (lsh_topk, {"dim": 64}),
+        (ivf_topk, {"dim": 64}),
+    ):
+        with pytest.raises(ValueError, match="distinct"):
+            topk(emb, emb, k=3, q_id="id", i_id="id", **kw)
+    qs = emb.select(F.col("id").alias("query_id"), "vec")
+    items = emb.select(F.col("id").alias("item_id"), "vec")
+    pairs = lambda **kw: {
+        (r["query_id"], r["item_id"]) for r in cosine_topk(qs, items, k=20, **kw).collect()
+    }
+    same = {(i, i) for i in range(20)}
+    kept = pairs()
+    assert len(kept) == 400 and same <= kept
+    assert pairs(exclude_same_id=True) == kept - same
+
+
 def test_downsample_time_channel_snap(spark):
     """W7 channel half: samples keep/drop by nearest-retained-time within
     step/2 (raw_editor.dart:529-563). Canonical fixture: points 0..6s,
