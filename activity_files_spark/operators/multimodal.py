@@ -55,7 +55,6 @@ VIDEO_SCHEMA = (
 )
 
 STUB_AUDIO_FMTS = {"mp3"}  # still-stubbed compressed codecs
-STUB_VIDEO_FMTS: set[str] = set()
 # flac moved OUT of the stub set in round 5: codecs/flac.py is a real
 # pure-python RFC 9639 decoder/encoder (the format is fully public).
 # ogg followed within the round: codecs/ogg.py demuxes RFC 3533 pages and
@@ -295,12 +294,6 @@ def decode_video_frame(data: bytes, fmt: str, w: int, h: int, frame: int) -> np.
 
         frames, _meta = parse_mkv(bytes(data))
         return frames[frame]
-    if fmt in STUB_VIDEO_FMTS:
-        raise NotImplementedError(
-            f"video codec {fmt!r} needs an ffmpeg binding (not in this "
-            "container); 'y4m', 'mp4' ('raw ' RGB payloads), 'mkv'/'webm' "
-            "(V_UNCOMPRESSED I420), and 'rawrgb' are decodable here"
-        )
     if fmt != "rawrgb":
         raise ValueError(f"unknown video fmt {fmt!r}")
     frame_bytes = w * h * 3
