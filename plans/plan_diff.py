@@ -11,7 +11,7 @@ dumps of one commit are identical, so a diff of two commits' dumps shows
 only what the change did to the plans.
 
 Usage (from the root of the checkout to dump):
-    python plans/plan_diff.py dump OUT.json --sf DIR [name ...]
+    python plans/plan_diff.py dump SF_DIR OUT.json [name ...]
     python plans/plan_diff.py diff A.json B.json
 """
 import argparse
@@ -66,8 +66,8 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     sub = ap.add_subparsers(dest="cmd", required=True)
     d = sub.add_parser("dump")
+    d.add_argument("sf", help="table directory, e.g. the sf0.001 tier")
     d.add_argument("out")
-    d.add_argument("--sf", required=True, help="table directory, e.g. the sf0.001 tier")
     d.add_argument("names", nargs="*")
     c = sub.add_parser("diff")
     c.add_argument("a")
